@@ -570,22 +570,6 @@ def main():
     BENCH_QUERIES["pq_query_served"] = bench_pq_query_served
     BENCH_QUERIES["label_prop_ivf_served"] = bench_label_prop_ivf_served
 
-    # staged round-12 queries (queries/pending_r12.py) — benched
-    # pre-registration so their perf trend starts now, like the r8-r11
-    # blocks (the r11 block is registered now and rides dict(QUERIES))
-    from pdtable_spark.queries.pending_r12 import PENDING_R12 as _PENDING_R12
-
-    for _name, (_fn, _sql) in _PENDING_R12.items():
-        BENCH_QUERIES.setdefault(_name, _fn)
-
-    # staged round-14 queries (queries/pending_r14.py) — benched
-    # pre-registration so their perf trend starts now, same discipline
-    # (the r13 block is registered now and rides dict(QUERIES))
-    from pdtable_spark.queries.pending_r14 import PENDING_R14 as _PENDING_R14
-
-    for _name, (_fn, _sql) in _PENDING_R14.items():
-        BENCH_QUERIES.setdefault(_name, _fn)
-
     # the suite's containment row runs EXACT mode (no df-cut — the oracle
     # spelling); this row prices the PRODUCTION path, where max_doc_freq
     # bounds the k² posting expansion — the 100 TB configuration

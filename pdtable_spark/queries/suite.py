@@ -1,6 +1,25 @@
-"""Declared query suite: TPC-H-ish relational coverage + LLM-pipeline
-operators, each entry a Spark DataFrame builder with (where expressible) a
-DuckDB-equivalent ANSI-SQL oracle.
+"""Registry core of the declared query suite.
+
+Every query is a Spark DataFrame builder ``fn(spark, sf_dir) -> DataFrame``
+registered with ``@q(name, oracle_sql)`` at its definition; the oracle is a
+DuckDB-equivalent ANSI-SQL string with matching column aliases.  ``@q`` is
+the only way a query enters ``QUERIES``/``ORACLES``.
+
+Filing rule: a query lives in the module named by its name prefix —
+
+- ``relational``: ``q*`` (TPC-H-ish and events analytics);
+- ``text``: ``text_*`` and ``doc_*``;
+- ``dedup``: ``dedup_*``, ``minhash_*``, ``simhash_*``, ``ngram_*``;
+- ``embedding``: ``embedding_*`` and ``hybrid_*``;
+- ``multimodal``: ``multimodal_*``;
+- ``lake``: ``lake_*``;
+- ``stream``: ``stream_*``;
+- ``pipeline``: ``pipeline_*``.
+
+This module keeps what every family shares: ``q``, ``QUERIES``,
+``ORACLES``, ``load``, ``scratch_dir``, ``dsum`` and the SQL fragments used
+by more than one family.  It imports the family modules last, for their
+registration side effect only.
 
 Cross-engine determinism rules used throughout (the reason these hash-match):
 
@@ -39,13 +58,12 @@ window tricks, digest-only dedup shuffles.
 
 from __future__ import annotations
 
+import weakref as _weakref
 from typing import Callable, Dict
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdtable_spark.operators import dedup, multimodal, similarity, text
-from pdtable_spark.operators.asof import asof_join
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
@@ -108,7 +126,7 @@ def scratch_dir(name: str) -> str:
 #: discipline as the serving rows, which keep their index DataFrame
 #: across query batches).  Scratch-dir reads (mutable lakes) do NOT go
 #: through load() and stay uncached.
-import weakref as _weakref
+
 
 #: Weakly keyed on the session (ADVICE r14): a stopped/dropped session's
 #: handles become collectable instead of leaking for the process
@@ -148,1308 +166,6 @@ def _sql_dsum(expr: str, alias: str, prec: str = "DECIMAL(18,4)") -> str:
     return f"CAST(SUM(CAST({expr} AS {prec})) AS DOUBLE) AS {alias}"
 
 
-# =============================================================================
-# Relational suite (TPC-H-ish) — R1-R19 exercised at scale
-# =============================================================================
-
-@q(
-    "q1_pricing_summary",
-    f"""
-    SELECT l_returnflag, l_linestatus,
-           {_sql_dsum('l_quantity', 'sum_qty')},
-           {_sql_dsum('l_extendedprice', 'sum_base_price')},
-           {_sql_dsum('l_extendedprice * (1.0 - l_discount)', 'sum_disc_price', 'DECIMAL(18,6)')},
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_qty,
-           COUNT(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def q1_pricing_summary(spark, sf_dir):
-    """TPC-H Q1 family: scan + filter + hash aggregate.  One shuffle on the
-    (tiny) group key; partial aggregation map-side; filter pushed to parquet."""
-    li = load(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-01 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            dsum("l_quantity", "sum_qty"),
-            dsum("l_extendedprice", "sum_base_price"),
-            dsum(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")),
-                "sum_disc_price",
-                "decimal(18,6)",
-            ),
-            (F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double") / F.count(F.lit(1)))
-            .alias("avg_qty"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-@q(
-    "q3_shipping_priority",
-    f"""
-    SELECT o.o_orderkey, o.o_orderdate, o.o_orderpriority,
-           {_sql_dsum('l.l_extendedprice * (1.0 - l.l_discount)', 'revenue', 'DECIMAL(18,6)')}
-    FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-      AND o.o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-      AND l.l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-    GROUP BY o.o_orderkey, o.o_orderdate, o.o_orderpriority
-    ORDER BY revenue DESC, o_orderkey
-    LIMIT 10
-    """,
-)
-def q3_shipping_priority(spark, sf_dir):
-    """TPC-H Q3 family: selective dim filter → join → agg → top-k.
-    customer is broadcast (dimension); orders⋈lineitem shuffles on orderkey;
-    top-k is sort+limit (TakeOrderedAndProject, no full sort)."""
-    c = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = load(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    l = load(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    return (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(l, l.l_orderkey == o.o_orderkey)
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            dsum(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")),
-                "revenue",
-                "decimal(18,6)",
-            )
-        )
-        .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
-        .limit(10)
-    )
-
-
-@q(
-    "q5_region_volume",
-    f"""
-    SELECT n.n_name,
-           {_sql_dsum('l.l_extendedprice * (1.0 - l.l_discount)', 'revenue', 'DECIMAL(18,6)')}
-    FROM region r JOIN nation n ON n.n_regionkey = r.r_regionkey
-    JOIN customer c ON c.c_nationkey = n.n_nationkey
-    JOIN orders o ON o.o_custkey = c.c_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE r.r_name = 'ASIA'
-      AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o.o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
-    GROUP BY n.n_name
-    """,
-)
-def q5_region_volume(spark, sf_dir):
-    """TPC-H Q5 family: star join.  nation/region carry explicit broadcast
-    hints (bounded-size dimensions, safe at any scale); the customer-derived
-    ``dims`` side is deliberately UNhinted — AQE broadcasts it while it fits
-    and falls back to a shuffle join when customers outgrow the threshold at
-    100× (an explicit hint there would force a driver-OOM-sized broadcast
-    instead; `tests/test_plans.py::test_q5_broadcast_fallback_still_correct`
-    pins the fallback)."""
-    r = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n = load(spark, sf_dir, "nation")
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
-    )
-    l = load(spark, sf_dir, "lineitem")
-    dims = (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .select("c_custkey", "n_name")
-    )
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(dims, o.o_custkey == dims.c_custkey)
-        .groupBy("n_name")
-        .agg(
-            dsum(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")),
-                "revenue",
-                "decimal(18,6)",
-            )
-        )
-    )
-
-
-@q(
-    "q6_forecast_revenue",
-    """
-    SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))) AS DOUBLE)
-             AS revenue,
-           COUNT(*) AS n_lines
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1997-01-01 00:00:00'
-      AND l_discount BETWEEN 0.05 AND 0.07
-      AND l_quantity < 24.0
-    """,
-)
-def q6_forecast_revenue(spark, sf_dir):
-    """TPC-H Q6 family: pure filter + global aggregate — every predicate
-    reaches the parquet scan (PushedFilters), zero shuffles, one row out."""
-    l = load(spark, sf_dir, "lineitem")
-    return (
-        l.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24.0)
-        )
-        .agg(
-            dsum(
-                F.col("l_extendedprice") * F.col("l_discount"), "revenue", "decimal(18,6)"
-            ),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
-
-
-@q(
-    "q14_promo_share",
-    """
-    SELECT CAST(SUM(CAST(CASE WHEN p.p_type LIKE 'PROMO%'
-                              THEN l.l_extendedprice * (1.0 - l.l_discount)
-                              ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE)
-           / CAST(SUM(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-                           AS DECIMAL(18,6))) AS DOUBLE) AS promo_share
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-    WHERE l.l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
-      AND l.l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
-    """,
-)
-def q14_promo_share(spark, sf_dir):
-    """TPC-H Q14 family: conditional aggregation over a broadcast dim join."""
-    l = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-03-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
-    )
-    p = load(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    promo = F.when(F.col("p_type").like("PROMO%"), rev).otherwise(F.lit(0.0))
-    return (
-        l.join(p, l.l_partkey == p.p_partkey)
-        .agg(
-            (
-                F.sum(promo.cast("decimal(18,6)")).cast("double")
-                / F.sum(rev.cast("decimal(18,6)")).cast("double")
-            ).alias("promo_share")
-        )
-    )
-
-
-@q(
-    "q18_large_orders",
-    f"""
-    SELECT o.o_orderkey, o.o_custkey, o.o_totalprice,
-           {_sql_dsum('l.l_quantity', 'total_qty')}
-    FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    GROUP BY o.o_orderkey, o.o_custkey, o.o_totalprice
-    HAVING SUM(CAST(l.l_quantity AS DECIMAL(18,4))) > 250
-    ORDER BY o_totalprice DESC, o_orderkey
-    LIMIT 100
-    """,
-)
-def q18_large_orders(spark, sf_dir):
-    """TPC-H Q18 family: big-order detection — join, agg, HAVING, top-k."""
-    o = load(spark, sf_dir, "orders")
-    l = load(spark, sf_dir, "lineitem")
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .groupBy("o_orderkey", "o_custkey", "o_totalprice")
-        .agg(
-            dsum("l_quantity", "total_qty"),
-            F.sum(F.col("l_quantity").cast("decimal(18,4)")).alias("__qty_dec"),
-        )
-        .filter(F.col("__qty_dec") > 250)
-        .drop("__qty_dec")
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(100)
-    )
-
-
-@q(
-    "q13_order_count_distribution",
-    """
-    WITH per_cust AS (
-      SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
-      FROM customer c LEFT JOIN orders o
-        ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '1-URGENT'
-      GROUP BY c.c_custkey
-    )
-    SELECT c_count, COUNT(*) AS custdist
-    FROM per_cust GROUP BY c_count
-    """,
-)
-def q13_order_count_distribution(spark, sf_dir):
-    """TPC-H Q13 family: two-level aggregation over an outer join with a
-    join-side predicate (customers with zero qualifying orders count as 0)."""
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "1-URGENT")
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy(c.c_custkey)
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
-
-
-@q(
-    "q15_top_supplier",
-    f"""
-    WITH rev AS (
-      SELECT l_suppkey,
-             {_sql_dsum('l_extendedprice * (1.0 - l_discount)', 'total_revenue', 'DECIMAL(18,6)')}
-      FROM lineitem
-      WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
-      GROUP BY l_suppkey
-    )
-    SELECT s.s_suppkey, s.s_name, r.total_revenue
-    FROM supplier s JOIN rev r ON s.s_suppkey = r.l_suppkey
-    WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM rev)
-    """,
-)
-def q15_top_supplier(spark, sf_dir):
-    """TPC-H Q15 family: aggregate 'view' + scalar-subquery max filter —
-    expressed as a rank-1 window over the aggregated side (one extra tiny
-    shuffle instead of a recompute-the-view self-join)."""
-    l = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
-    )
-    rev = l.groupBy("l_suppkey").agg(
-        dsum(
-            F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")),
-            "total_revenue",
-            "decimal(18,6)",
-        )
-    )
-    top = rev.withColumn(
-        "rnk", F.rank().over(Window.orderBy(F.desc("total_revenue")))
-    ).filter(F.col("rnk") == 1)
-    s = load(spark, sf_dir, "supplier")
-    return s.join(F.broadcast(top), s.s_suppkey == top.l_suppkey).select(
-        "s_suppkey", "s_name", "total_revenue"
-    )
-
-
-@q(
-    "q17_small_quantity_revenue",
-    """
-    WITH avg_qty AS (
-      SELECT l_partkey,
-             0.5 * (CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*))
-               AS half_avg
-      FROM lineitem GROUP BY l_partkey
-    )
-    SELECT CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / 7.0
-             AS avg_yearly,
-           COUNT(*) AS n_lines
-    FROM lineitem l JOIN avg_qty a ON l.l_partkey = a.l_partkey
-    WHERE l.l_quantity < a.half_avg
-    """,
-)
-def q17_small_quantity_revenue(spark, sf_dir):
-    """TPC-H Q17 family: correlated average via aggregate-then-join-back.
-    Both sides spell the per-part average as an exact decimal sum divided by
-    the count, so the `quantity < half_avg` predicate is layout- and
-    partitioning-independent (tested with perturbed shuffle partitions)."""
-    l = load(spark, sf_dir, "lineitem")
-    avg_qty = (
-        load(spark, sf_dir, "lineitem")
-        .groupBy(F.col("l_partkey").alias("a_partkey"))
-        .agg(
-            (
-                F.lit(0.5)
-                * (
-                    F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double")
-                    / F.count(F.lit(1))
-                )
-            ).alias("half_avg")
-        )
-    )
-    j = l.join(avg_qty, l.l_partkey == avg_qty.a_partkey).filter(
-        F.col("l_quantity") < F.col("half_avg")
-    )
-    return j.agg(
-        (F.sum(F.col("l_extendedprice").cast("decimal(18,4)")).cast("double") / 7.0)
-        .alias("avg_yearly"),
-        F.count(F.lit(1)).alias("n_lines"),
-    )
-
-
-@q(
-    "q19_discounted_revenue",
-    f"""
-    SELECT {_sql_dsum('l.l_extendedprice * (1.0 - l.l_discount)', 'revenue', 'DECIMAL(18,6)')},
-           COUNT(*) AS n_lines
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-    WHERE (p.p_brand = 'Brand#1' AND l.l_quantity BETWEEN 1 AND 11 AND p.p_size BETWEEN 1 AND 5)
-       OR (p.p_brand = 'Brand#2' AND l.l_quantity BETWEEN 10 AND 20 AND p.p_size BETWEEN 1 AND 10)
-       OR (p.p_brand = 'Brand#3' AND l.l_quantity BETWEEN 20 AND 30 AND p.p_size BETWEEN 1 AND 15)
-    """,
-)
-def q19_discounted_revenue(spark, sf_dir):
-    """TPC-H Q19 family: disjunctive multi-branch predicate across the join
-    — Catalyst pushes the common l_quantity/p_size bounds below the join."""
-    l = load(spark, sf_dir, "lineitem")
-    p = load(spark, sf_dir, "part")
-    cond = (
-        ((F.col("p_brand") == "Brand#1") & F.col("l_quantity").between(1, 11) & F.col("p_size").between(1, 5))
-        | ((F.col("p_brand") == "Brand#2") & F.col("l_quantity").between(10, 20) & F.col("p_size").between(1, 10))
-        | ((F.col("p_brand") == "Brand#3") & F.col("l_quantity").between(20, 30) & F.col("p_size").between(1, 15))
-    )
-    return (
-        l.join(p, l.l_partkey == p.p_partkey)
-        .filter(cond)
-        .agg(
-            dsum(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")),
-                "revenue",
-                "decimal(18,6)",
-            ),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
-
-
-@q(
-    "q_top_orders_per_customer",
-    """
-    SELECT o_custkey, o_orderkey, o_totalprice, rn FROM (
-        SELECT o_custkey, o_orderkey, o_totalprice,
-               ROW_NUMBER() OVER (PARTITION BY o_custkey
-                                  ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        FROM orders) t
-    WHERE rn <= 3
-    """,
-)
-def q_top_orders_per_customer(spark, sf_dir):
-    """Window top-n per group: ONE shuffle on the partition key; rank runs
-    inside each partition (no global sort)."""
-    o = load(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
-    )
-
-
-@q(
-    "q_orders_by_month",
-    f"""
-    SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS order_month,
-           COUNT(*) AS n_orders,
-           {_sql_dsum('o_totalprice', 'revenue')}
-    FROM orders GROUP BY 1
-    """,
-)
-def q_orders_by_month(spark, sf_dir):
-    """Time bucketing via date_trunc — pure hash aggregate."""
-    o = load(spark, sf_dir, "orders")
-    return o.groupBy(F.date_trunc("month", F.col("o_orderdate")).alias("order_month")).agg(
-        F.count(F.lit(1)).alias("n_orders"), dsum("o_totalprice", "revenue")
-    )
-
-
-@q(
-    "q_part_brand_stats",
-    f"""
-    SELECT p_brand, COUNT(*) AS n_parts,
-           CAST(SUM(CAST(p_retailprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_price,
-           MAX(p_size) AS max_size, MIN(p_size) AS min_size
-    FROM part GROUP BY p_brand
-    """,
-)
-def q_part_brand_stats(spark, sf_dir):
-    p = load(spark, sf_dir, "part")
-    return p.groupBy("p_brand").agg(
-        F.count(F.lit(1)).alias("n_parts"),
-        (F.sum(F.col("p_retailprice").cast("decimal(18,4)")).cast("double") / F.count(F.lit(1)))
-        .alias("avg_price"),
-        F.max("p_size").alias("max_size"),
-        F.min("p_size").alias("min_size"),
-    )
-
-
-@q(
-    "q_rollup_returns",
-    f"""
-    SELECT l_returnflag, l_linestatus, COUNT(*) AS n, {_sql_dsum('l_quantity', 'sum_qty')}
-    FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-    """,
-)
-def q_rollup_returns(spark, sf_dir):
-    """Grouping sets / rollup — free in Spark (R-extension; absent in the
-    reference, SURVEY §2.4 note)."""
-    li = load(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.count(F.lit(1)).alias("n"), dsum("l_quantity", "sum_qty")
-    )
-
-
-@q(
-    "q_pivot_order_status",
-    """
-    SELECT o_orderpriority,
-           COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS status_f,
-           COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS status_o,
-           COUNT(*) FILTER (WHERE o_orderstatus = 'P') AS status_p
-    FROM orders GROUP BY o_orderpriority
-    """,
-)
-def q_pivot_order_status(spark, sf_dir):
-    """Pivot (R16) with explicit pivot values — avoids the extra distinct
-    scan Spark runs to discover them."""
-    o = load(spark, sf_dir, "orders")
-    piv = (
-        o.groupBy("o_orderpriority")
-        .pivot("o_orderstatus", ["F", "O", "P"])
-        .agg(F.count(F.lit(1)))
-    )
-    return piv.select(
-        "o_orderpriority",
-        F.coalesce(F.col("F"), F.lit(0)).alias("status_f"),
-        F.coalesce(F.col("O"), F.lit(0)).alias("status_o"),
-        F.coalesce(F.col("P"), F.lit(0)).alias("status_p"),
-    )
-
-
-@q(
-    "q_unpivot_measures",
-    f"""
-    SELECT 'l_quantity' AS measure, {_sql_dsum('l_quantity', 'total')} FROM lineitem
-    UNION ALL
-    SELECT 'l_discount' AS measure, {_sql_dsum('l_discount', 'total')} FROM lineitem
-    UNION ALL
-    SELECT 'l_tax' AS measure, {_sql_dsum('l_tax', 'total')} FROM lineitem
-    """,
-)
-def q_unpivot_measures(spark, sf_dir):
-    """Melt / unpivot (R17) then aggregate."""
-    li = load(spark, sf_dir, "lineitem")
-    melted = li.melt(
-        ids=["l_orderkey"],
-        values=["l_quantity", "l_discount", "l_tax"],
-        variableColumnName="measure",
-        valueColumnName="value",
-    )
-    return melted.groupBy("measure").agg(dsum("value", "total"))
-
-
-@q(
-    "q_customers_without_orders",
-    """
-    SELECT c_custkey FROM customer
-    EXCEPT
-    SELECT o_custkey AS c_custkey FROM orders
-    """,
-)
-def q_customers_without_orders(spark, sf_dir):
-    """Set op (EXCEPT) — distinct anti-semantics, one shuffle."""
-    c = load(spark, sf_dir, "customer").select("c_custkey")
-    o = load(spark, sf_dir, "orders").select(F.col("o_custkey").alias("c_custkey"))
-    return c.subtract(o)
-
-
-@q(
-    "q_top_suppliers",
-    f"""
-    SELECT s.s_name,
-           {_sql_dsum('l.l_extendedprice * (1.0 - l.l_discount)', 'revenue', 'DECIMAL(18,6)')}
-    FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
-    GROUP BY s.s_name
-    ORDER BY revenue DESC, s_name
-    LIMIT 5
-    """,
-)
-def q_top_suppliers(spark, sf_dir):
-    """Broadcast-join fact→dim + top-k."""
-    l = load(spark, sf_dir, "lineitem")
-    s = load(spark, sf_dir, "supplier")
-    return (
-        l.join(s, l.l_suppkey == s.s_suppkey)
-        .groupBy("s_name")
-        .agg(
-            dsum(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")),
-                "revenue",
-                "decimal(18,6)",
-            )
-        )
-        .orderBy(F.desc("revenue"), F.asc("s_name"))
-        .limit(5)
-    )
-
-
-@q(
-    "q4_order_priority",
-    """
-    SELECT o.o_orderpriority, COUNT(*) AS order_count
-    FROM orders o
-    WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND o.o_orderdate <  TIMESTAMP '1996-04-01 00:00:00'
-      AND EXISTS (SELECT 1 FROM lineitem l
-                  WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
-    GROUP BY o.o_orderpriority
-    """,
-)
-def q4_order_priority(spark, sf_dir):
-    """TPC-H Q4 family: EXISTS → left-semi join (no row duplication, the
-    semi-join short-circuits per key) then a tiny hash aggregate."""
-    o = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
-    )
-    late = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    return (
-        o.join(late, o.o_orderkey == late.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
-
-
-@q(
-    "q_idle_customers",
-    """
-    SELECT c.c_custkey, c.c_acctbal
-    FROM customer c
-    WHERE c.c_acctbal > 1000.0
-      AND NOT EXISTS (
-        SELECT 1 FROM orders o
-        WHERE o.o_custkey = c.c_custkey
-          AND o.o_orderdate >= TIMESTAMP '1998-01-01 00:00:00')
-    """,
-)
-def q_idle_customers(spark, sf_dir):
-    """TPC-H Q22 family: NOT EXISTS → left-anti join."""
-    c = load(spark, sf_dir, "customer").filter(F.col("c_acctbal") > 1000.0)
-    recent = load(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp")
-    )
-    return c.join(recent, c.c_custkey == recent.o_custkey, "left_anti").select(
-        "c_custkey", "c_acctbal"
-    )
-
-
-@q(
-    "q22_idle_customers",
-    """
-    WITH pool AS (
-      SELECT c_custkey, c_nationkey, c_acctbal,
-             CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) AS cents
-      FROM customer WHERE c_nationkey IN (1, 3, 5, 7, 9, 11, 13)
-    ),
-    scal AS (
-      SELECT SUM(cents) AS s, COUNT(*) AS n FROM pool WHERE c_acctbal > 0.0
-    ),
-    cand AS (
-      SELECT p.* FROM pool p CROSS JOIN scal WHERE p.cents * scal.n > scal.s
-    ),
-    idle AS (
-      SELECT * FROM cand
-      WHERE NOT EXISTS (
-        SELECT 1 FROM orders o
-        WHERE o.o_custkey = cand.c_custkey
-          AND o.o_orderdate >= TIMESTAMP '2000-06-01 00:00:00')
-    )
-    SELECT n.n_name AS nation, CAST(COUNT(*) AS BIGINT) AS numcust,
-           CAST(SUM(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE) AS totacctbal
-    FROM idle JOIN nation n ON n.n_nationkey = idle.c_nationkey
-    GROUP BY n.n_name
-    """,
-)
-def q22_idle_customers(spark, sf_dir):
-    """The full TPC-H Q22 analog (VERDICT r9 task #6): "country code"
-    membership filter (the testdata has no ``c_phone``, so the 7-code
-    prefix set maps to 7 nationkeys), balance above the POSITIVE-balance
-    average of that pool (the correlated scalar subquery), customers
-    with no recent orders (anti-join; the testdata generator gives EVERY
-    customer orders, so the literal no-orders-at-all spelling is empty
-    by construction at every SF — the date window keeps the value gate
-    non-vacuous without changing the plan shape, just adding a pushed
-    filter on the anti side), rolled up per nation.
-
-    The above-average threshold compares EXACT INTEGER CENTS cross-
-    multiplied against the pool's (sum, count) — ``cents·n > Σcents`` —
-    instead of a floating AVG, so a boundary-balance customer cannot
-    flip membership on engine-specific double summation order.
-
-    Scale shape: the scalar aggregate is one broadcast row; the
-    anti-join shuffles on custkey like every Q22 at scale (orders is the
-    big side — Spark builds the hash side from the FILTERED candidate
-    pool under AQE); the nation rollup broadcasts the 25-row dim."""
-    cents = F.floor(F.col("c_acctbal") * 100 + F.lit(0.5)).cast("long")
-    pool = (
-        load(spark, sf_dir, "customer")
-        .filter(F.col("c_nationkey").isin([1, 3, 5, 7, 9, 11, 13]))
-        .select("c_custkey", "c_nationkey", "c_acctbal", cents.alias("__cents"))
-    )
-    scal = pool.filter(F.col("c_acctbal") > 0.0).agg(
-        F.sum("__cents").alias("__s"), F.count(F.lit(1)).alias("__n")
-    )
-    cand = pool.crossJoin(F.broadcast(scal)).filter(
-        F.col("__cents") * F.col("__n") > F.col("__s")
-    )
-    orders = (
-        load(spark, sf_dir, "orders")
-        .filter(
-            F.col("o_orderdate")
-            >= F.lit("2000-06-01 00:00:00").cast("timestamp")
-        )
-        .select("o_custkey")
-    )
-    idle = cand.join(orders, cand.c_custkey == orders.o_custkey, "left_anti")
-    nation = load(spark, sf_dir, "nation")
-    return (
-        idle.join(
-            F.broadcast(nation), idle.c_nationkey == nation.n_nationkey
-        )
-        .groupBy(F.col("n_name").alias("nation"))
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            dsum("c_acctbal", "totacctbal"),
-        )
-    )
-
-
-@q(
-    "q_min_price_supplier",
-    """
-    WITH mn AS (
-      SELECT l_partkey, MIN(l_extendedprice) AS min_price
-      FROM lineitem GROUP BY l_partkey
-    )
-    SELECT l.l_partkey, l.l_suppkey, l.l_extendedprice AS price
-    FROM lineitem l JOIN mn ON l.l_partkey = mn.l_partkey
-                           AND l.l_extendedprice = mn.min_price
-    """,
-)
-def q_min_price_supplier(spark, sf_dir):
-    """TPC-H Q2 family shape: group-min then join back on (key, min) —
-    the aggregate side is small post-agg, AQE turns the join broadcast."""
-    l = load(spark, sf_dir, "lineitem").alias("l")
-    mn = (
-        load(spark, sf_dir, "lineitem")
-        .groupBy(F.col("l_partkey").alias("mn_partkey"))
-        .agg(F.min("l_extendedprice").alias("min_price"))
-    )
-    return (
-        l.join(
-            mn,
-            (F.col("l.l_partkey") == F.col("mn_partkey"))
-            & (F.col("l.l_extendedprice") == F.col("min_price")),
-        )
-        .select(
-            F.col("l.l_partkey").alias("l_partkey"),
-            F.col("l.l_suppkey").alias("l_suppkey"),
-            F.col("l.l_extendedprice").alias("price"),
-        )
-    )
-
-
-@q(
-    "q_cube_returns",
-    f"""
-    SELECT l_returnflag, l_linestatus, COUNT(*) AS n, {_sql_dsum('l_quantity', 'sum_qty')}
-    FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-    """,
-)
-def q_cube_returns(spark, sf_dir):
-    """CUBE grouping sets (superset of rollup; all 4 grouping combinations)."""
-    li = load(spark, sf_dir, "lineitem")
-    return li.cube("l_returnflag", "l_linestatus").agg(
-        F.count(F.lit(1)).alias("n"), dsum("l_quantity", "sum_qty")
-    )
-
-
-@q(
-    "q_both_status_customers",
-    """
-    SELECT o_custkey AS c_custkey FROM orders WHERE o_orderstatus = 'F'
-    INTERSECT
-    SELECT o_custkey AS c_custkey FROM orders WHERE o_orderstatus = 'O'
-    """,
-)
-def q_both_status_customers(spark, sf_dir):
-    """Set op (INTERSECT) — distinct semantics, single shuffle per side."""
-    o = load(spark, sf_dir, "orders")
-    f_side = o.filter(F.col("o_orderstatus") == "F").select(F.col("o_custkey").alias("c_custkey"))
-    o_side = o.filter(F.col("o_orderstatus") == "O").select(F.col("o_custkey").alias("c_custkey"))
-    return f_side.intersect(o_side)
-
-
-@q(
-    "q_string_funcs",
-    """
-    SELECT p_partkey,
-           upper(p_name) AS name_upper,
-           substr(p_name, 1, 8) AS name_prefix,
-           length(p_name) AS name_len,
-           p_brand || '/' || p_type AS brand_type,
-           CASE WHEN p_name LIKE '%cold%' THEN 1 ELSE 0 END AS has_cold,
-           replace(p_type, ' ', '_') AS type_snake
-    FROM part
-    WHERE p_name LIKE '%ol%'
-    """,
-)
-def q_string_funcs(spark, sf_dir):
-    """Scalar string-function coverage (R-extension; pandas supplies these in
-    the reference) — all JVM-side, whole-stage codegen."""
-    p = load(spark, sf_dir, "part").filter(F.col("p_name").like("%ol%"))
-    return p.select(
-        "p_partkey",
-        F.upper("p_name").alias("name_upper"),
-        F.substring("p_name", 1, 8).alias("name_prefix"),
-        F.length("p_name").cast("bigint").alias("name_len"),
-        F.concat_ws("/", "p_brand", "p_type").alias("brand_type"),
-        # '%cold%' is MIXED under the '%ol%' filter ('cold *' rows hit,
-        # '* bolt' rows miss); the original '%green%' could never match —
-        # the fixture adjective vocabulary has no 'green' at any SF, so
-        # the true-branch was dead in the oracle (constant-column audit)
-        F.when(F.col("p_name").like("%cold%"), 1).otherwise(0).alias("has_cold"),
-        F.regexp_replace("p_type", " ", "_").alias("type_snake"),
-    )
-
-
-@q(
-    "q_math_funcs",
-    """
-    SELECT l_orderkey, l_linenumber,
-           sqrt(l_extendedprice) AS price_sqrt,
-           abs(l_discount - 0.05) AS disc_dev,
-           floor((l_extendedprice * 0.1) * 100.0 + 0.5) / 100.0 AS price_tithe,
-           floor(l_quantity / 7.0) AS qty_floor7,
-           CAST(l_orderkey % 97 AS BIGINT) AS key_mod
-    FROM lineitem
-    WHERE l_linenumber = 1 AND l_orderkey % 10 = 0
-    """,
-)
-def q_math_funcs(spark, sf_dir):
-    """Scalar math coverage restricted to IEEE-exact ops (sqrt/abs/floor/
-    mod) so both engines produce identical bits.  Rounding is spelled
-    binary-faithfully as floor(x·100 + 0.5)/100 on BOTH sides: native
-    round() disagrees across engines at .005 boundaries (Spark rounds the
-    shortest decimal repr of the double, DuckDB the binary value — found at
-    sf0.1 where one lineitem hits such a boundary)."""
-    l = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_linenumber") == 1) & (F.col("l_orderkey") % 10 == 0)
-    )
-    return l.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.sqrt("l_extendedprice").alias("price_sqrt"),
-        F.abs(F.col("l_discount") - 0.05).alias("disc_dev"),
-        (F.floor((F.col("l_extendedprice") * 0.1) * 100.0 + 0.5) / 100.0).alias(
-            "price_tithe"
-        ),
-        F.floor(F.col("l_quantity") / 7.0).cast("double").alias("qty_floor7"),
-        (F.col("l_orderkey") % 97).cast("bigint").alias("key_mod"),
-    )
-
-
-@q(
-    "q_big_spenders_having",
-    f"""
-    SELECT o_custkey, COUNT(*) AS n_orders, {_sql_dsum('o_totalprice', 'spend')}
-    FROM orders
-    GROUP BY o_custkey
-    HAVING COUNT(*) >= 8
-    """,
-)
-def q_big_spenders_having(spark, sf_dir):
-    """GROUP BY + HAVING (post-aggregation filter)."""
-    o = load(spark, sf_dir, "orders")
-    return (
-        o.groupBy("o_custkey")
-        .agg(F.count(F.lit(1)).alias("n_orders"), dsum("o_totalprice", "spend"))
-        .filter(F.col("n_orders") >= 8)
-    )
-
-
-@q(
-    "q_nation_customer_counts",
-    """
-    SELECT n.n_name, COUNT(c.c_custkey) AS n_customers
-    FROM nation n LEFT JOIN customer c ON c.c_nationkey = n.n_nationkey
-    GROUP BY n.n_name
-    """,
-)
-def q_nation_customer_counts(spark, sf_dir):
-    """LEFT OUTER join preserving empty groups (COUNT(col) skips nulls)."""
-    n = load(spark, sf_dir, "nation")
-    c = load(spark, sf_dir, "customer")
-    return (
-        n.join(c, c.c_nationkey == n.n_nationkey, "left")
-        .groupBy("n_name")
-        .agg(F.count("c_custkey").alias("n_customers"))
-    )
-
-
-@q(
-    "q_running_spend",
-    """
-    SELECT o_custkey, o_orderkey,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
-                OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-             AS running_spend
-    FROM orders
-    WHERE o_custkey % 50 = 0
-    """,
-)
-def q_running_spend(spark, sf_dir):
-    """Cumulative window sum — one shuffle on the partition key; decimal
-    accumulation keeps the running prefix sums bit-identical cross-engine."""
-    o = load(spark, sf_dir, "orders").filter(F.col("o_custkey") % 50 == 0)
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.sum(F.col("o_totalprice").cast("decimal(18,4)")).over(w).cast("double")
-        .alias("running_spend"),
-    )
-
-
-@q(
-    "q_distinct_ship_modes",
-    """
-    SELECT l_returnflag,
-           COUNT(DISTINCT l_linestatus) AS n_statuses,
-           COUNT(DISTINCT l_suppkey) AS n_suppliers
-    FROM lineitem GROUP BY l_returnflag
-    """,
-)
-def q_distinct_ship_modes(spark, sf_dir):
-    """Multi-column DISTINCT aggregation (expand + two-phase agg in Spark)."""
-    l = load(spark, sf_dir, "lineitem")
-    return l.groupBy("l_returnflag").agg(
-        F.countDistinct("l_linestatus").alias("n_statuses"),
-        F.countDistinct("l_suppkey").alias("n_suppliers"),
-    )
-
-
-@q(
-    "q10_returned_revenue",
-    f"""
-    SELECT c.c_custkey, c.c_name,
-           {_sql_dsum('l.l_extendedprice * (1.0 - l.l_discount)', 'revenue', 'DECIMAL(18,6)')}
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE l.l_returnflag = 'R'
-    GROUP BY c.c_custkey, c.c_name
-    ORDER BY revenue DESC, c_custkey
-    LIMIT 20
-    """,
-)
-def q10_returned_revenue(spark, sf_dir):
-    """TPC-H Q10 family: returned-item revenue per customer, top 20."""
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders")
-    l = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .groupBy("c_custkey", "c_name")
-        .agg(
-            dsum(
-                F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")),
-                "revenue",
-                "decimal(18,6)",
-            )
-        )
-        .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(20)
-    )
-
-
-@q(
-    "q_table_facade_units",
-    f"""
-    SELECT l_returnflag,
-           {_sql_dsum('l_quantity * 1000.0', 'total_qty_g', 'DECIMAL(22,4)')},
-           COUNT(*) AS n
-    FROM lineitem
-    WHERE l_quantity * 1000.0 > 5000.0
-    GROUP BY l_returnflag
-    """,
-)
-def q_table_facade_units(spark, sf_dir):
-    """The Table facade in the graded path: wrap the scan with StarTable
-    units, convert kg→g (R20 — converter resolved driver-side, executed as
-    a column expression), filter and aggregate through the unit-checked
-    wrapper.  The returned plan is identical to raw DataFrame code —
-    metadata bookkeeping costs nothing at runtime."""
-    from pdtable_spark.frame import attach_units
-    from pdtable_spark.table import Table
-    from pdtable_spark.units import simple_converter
-
-    df = load(spark, sf_dir, "lineitem").select("l_returnflag", "l_quantity")
-    t = Table(
-        attach_units(df, unit_map={"l_quantity": "kg", "l_returnflag": "text"}),
-        name="lineitem",
-    )
-    t = t.convert_units({"l_quantity": "g"}, converter=simple_converter)
-    assert t["l_quantity"].unit == "g"
-    t = t.filter(F.col("l_quantity") > 5000.0)
-    g = t.group_by("l_returnflag").agg(
-        dsum("l_quantity", "total_qty_g", "decimal(22,4)"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    return g.df.select("l_returnflag", "total_qty_g", "n")
-
-
-@q(
-    "q_sql_grouping_sets",
-    f"""
-    SELECT l_returnflag, l_linestatus, COUNT(*) AS n, {_sql_dsum('l_quantity', 'sum_qty')}
-    FROM lineitem
-    GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-    """,
-)
-def q_sql_grouping_sets(spark, sf_dir):
-    """Explicit GROUPING SETS — exercised through the ``spark.sql`` entry
-    point over a registered temp view (the SQL-text API surface, same
-    Catalyst plan as the DataFrame spelling)."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_qty
-        FROM v_lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
-    )
-
-
-@q(
-    "q_order_gaps",
-    """
-    SELECT o_custkey, o_orderkey,
-           lag(o_orderkey) OVER w AS prev_orderkey,
-           lead(o_orderkey) OVER w AS next_orderkey,
-           date_diff('day', lag(o_orderdate) OVER w, o_orderdate) AS days_since_prev
-    FROM orders
-    WHERE o_custkey % 100 = 0
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-    """,
-)
-def q_order_gaps(spark, sf_dir):
-    """lead/lag navigation — one shuffle on the partition key."""
-    o = load(spark, sf_dir, "orders").filter(F.col("o_custkey") % 100 == 0)
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    prev_date = F.lag("o_orderdate").over(w)
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.lag("o_orderkey").over(w).alias("prev_orderkey"),
-        F.lead("o_orderkey").over(w).alias("next_orderkey"),
-        F.datediff(F.col("o_orderdate"), prev_date).cast("long").alias("days_since_prev"),
-    )
-
-
-@q(
-    "q_range_frame_spend",
-    """
-    SELECT o_custkey, o_orderkey,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4)))
-                OVER (PARTITION BY o_custkey ORDER BY epoch(o_orderdate)
-                      RANGE BETWEEN 7776000 PRECEDING AND CURRENT ROW) AS DOUBLE)
-             AS trailing_90d_spend
-    FROM orders
-    WHERE o_custkey % 100 = 0
-    """,
-)
-def q_range_frame_spend(spark, sf_dir):
-    """RANGE-frame window: trailing-90-day spend per customer — value-based
-    frame bounds (all orders within 90 days), not row counts."""
-    o = load(spark, sf_dir, "orders").filter(F.col("o_custkey") % 100 == 0)
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy(F.unix_timestamp("o_orderdate"))
-        .rangeBetween(-90 * 86400, Window.currentRow)
-    )
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.sum(F.col("o_totalprice").cast("decimal(18,4)")).over(w).cast("double")
-        .alias("trailing_90d_spend"),
-    )
-
-
-# =============================================================================
-# Events (stream-shaped table): time windows, sessionization, as-of join
-# =============================================================================
-
-@q(
-    "q_events_hourly",
-    f"""
-    SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type,
-           COUNT(*) AS n, {_sql_dsum('value', 'total_value')}
-    FROM events GROUP BY 1, 2
-    """,
-)
-def q_events_hourly(spark, sf_dir):
-    """Tumbling-window aggregation (batch spelling; streaming variant in
-    pdtable_spark.streaming uses the same grouping with a watermark)."""
-    e = load(spark, sf_dir, "events")
-    return e.groupBy(
-        F.date_trunc("hour", F.col("ts")).alias("hour"), F.col("event_type")
-    ).agg(F.count(F.lit(1)).alias("n"), dsum("value", "total_value"))
-
-
-@q(
-    "q_events_sliding",
-    f"""
-    WITH panes AS (
-      SELECT e.event_type, e.value,
-             to_timestamp(
-               (CAST(floor(epoch(e.ts) / 900) AS BIGINT) - i) * 900
-             ) AS win_start
-      FROM events e, generate_series(0, 3) t(i)
-      WHERE (CAST(floor(epoch(e.ts) / 900) AS BIGINT) - i) * 900 + 3600 > epoch(e.ts)
-    )
-    SELECT CAST(win_start AS TIMESTAMP) AS win_start, event_type,
-           COUNT(*) AS n, {_sql_dsum('value', 'total_value')}
-    FROM panes GROUP BY 1, 2
-    """,
-)
-def q_events_sliding(spark, sf_dir):
-    """Sliding-window aggregation (1h window, 15min slide) in batch mode —
-    each event lands in window/slide = 4 panes; the oracle expands panes
-    with generate_series.  Same grouping runs incrementally under
-    readStream (streaming/windows.stream_sliding_counts)."""
-    e = load(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour", "15 minutes").alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), dsum("value", "total_value"))
-        .select(
-            F.col("win.start").alias("win_start"), "event_type", "n", "total_value"
-        )
-    )
-
-
-@q(
-    "q_events_sessions",
-    """
-    WITH g AS (
-      SELECT user_id, ts,
-             CASE WHEN lag(ts) OVER w IS NULL
-                       OR date_diff('second', lag(ts) OVER w, ts) > 1800
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    )
-    SELECT user_id, CAST(SUM(new_session) AS BIGINT) AS n_sessions, COUNT(*) AS n_events
-    FROM g GROUP BY user_id
-    """,
-)
-def q_events_sessions(spark, sf_dir):
-    """Sessionization via gap detection: ONE shuffle on user_id; the
-    cumulative trick avoids any self-join."""
-    e = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("ts").over(w)
-    new_s = F.when(
-        prev.isNull() | ((F.unix_timestamp("ts") - F.unix_timestamp(prev)) > 1800), 1
-    ).otherwise(0)
-    return (
-        e.withColumn("new_session", new_s)
-        .groupBy("user_id")
-        .agg(
-            F.sum("new_session").cast("long").alias("n_sessions"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
-
-
-@q(
-    "q_purchase_last_click",
-    """
-    WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-         c AS (SELECT user_id, ts FROM events WHERE event_type = 'click')
-    SELECT p.event_id, p.user_id, p.ts, c.ts AS click_ts
-    FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND c.ts <= p.ts
-    """,
-)
-def q_purchase_last_click(spark, sf_dir):
-    """As-of join (operator Spark lacks — pdtable_spark.operators.asof):
-    every purchase gets the user's most recent prior click.  Union+window
-    implementation: one shuffle on user_id, no range-explosion."""
-    e = load(spark, sf_dir, "events")
-    purchases = e.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    clicks = e.filter(F.col("event_type") == "click").select("user_id", "ts")
-    out = asof_join(purchases, clicks, on="ts", by="user_id", right_cols=[])
-    return out.select("event_id", "user_id", "ts", F.col("ts_right").alias("click_ts"))
-
-
-@q(
-    "q_events_in_windows",
-    f"""
-    WITH iv AS (
-      SELECT CAST(i AS INT) AS win_id,
-             TIMESTAMP '2024-01-01 02:00:00' + i * INTERVAL 1 DAY AS start,
-             TIMESTAMP '2024-01-01 06:00:00' + i * INTERVAL 1 DAY AS "end"
-      FROM generate_series(0, 29) t(i)
-    )
-    SELECT iv.win_id, COUNT(*) AS n_events, {_sql_dsum('e.value', 'total_value')}
-    FROM events e JOIN iv ON e.ts >= iv.start AND e.ts < iv."end"
-    GROUP BY iv.win_id
-    """,
-)
-def q_events_in_windows(spark, sf_dir):
-    """Point-in-interval join (operators/range_join): events bucketed into
-    daily 02:00-06:00 maintenance windows.  The bucketing turns Spark's
-    would-be nested-loop range join into an equi-join on the grain id."""
-    from pdtable_spark.operators.range_join import interval_join
-
-    e = load(spark, sf_dir, "events")
-    iv = spark.range(30).select(
-        F.col("id").cast("int").alias("win_id"),
-        F.timestamp_seconds(
-            F.unix_timestamp(F.lit("2024-01-01 02:00:00").cast("timestamp"))
-            + F.col("id") * 86400
-        ).alias("start"),
-        F.timestamp_seconds(
-            F.unix_timestamp(F.lit("2024-01-01 06:00:00").cast("timestamp"))
-            + F.col("id") * 86400
-        ).alias("end"),
-    )
-    joined = interval_join(e, iv, "ts", grain_seconds=4 * 3600)
-    return joined.groupBy("win_id").agg(
-        F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value")
-    )
-
-
-@q(
-    "q_events_props_json",
-    """
-    SELECT event_type,
-           COUNT(*) AS n,
-           CAST(SUM(CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT) AS sum_k,
-           CAST(MAX(CAST(json_extract_string(props, '$.k') AS INT)) AS INT) AS max_k
-    FROM events GROUP BY event_type
-    """,
-)
-def q_events_props_json(spark, sf_dir):
-    """Semi-structured columns: JSON path extraction inside codegen
-    (get_json_object), then plain aggregation — no schema declaration
-    needed, the common shape for event `props` payloads."""
-    e = load(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("int")
-    return e.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(k).cast("bigint").alias("sum_k"),
-        F.max(k).alias("max_k"),
-    )
-
-
-@q(
-    "q_quantity_percentiles",
-    """
-    SELECT l_returnflag,
-           quantile_cont(l_quantity, 0.5) AS p50,
-           quantile_cont(l_quantity, 0.9) AS p90
-    FROM lineitem GROUP BY l_returnflag
-    """,
-)
-def q_quantity_percentiles(spark, sf_dir):
-    """Exact interpolated percentiles (Spark `percentile` == DuckDB
-    `quantile_cont`: same linear-interpolation definition, deterministic on
-    identical multisets).  The approximate scale path is
-    `approx_percentile` (t-digest) — kept out of the oracle-checked suite
-    because sketches are engine-specific."""
-    l = load(spark, sf_dir, "lineitem")
-    return l.groupBy("l_returnflag").agg(
-        F.percentile("l_quantity", F.lit(0.5)).alias("p50"),
-        F.percentile("l_quantity", F.lit(0.9)).alias("p90"),
-    )
-
-
-@q(
-    "q_purchase_nearest_click",
-    """
-    WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-         c AS (SELECT user_id, ts AS click_ts FROM events WHERE event_type = 'click'),
-         ranked AS (
-           SELECT p.event_id, p.user_id, p.ts, c.click_ts,
-                  ROW_NUMBER() OVER (
-                    PARTITION BY p.event_id
-                    ORDER BY abs(epoch(p.ts) - epoch(c.click_ts)),
-                             CASE WHEN c.click_ts <= p.ts THEN 0 ELSE 1 END,
-                             c.click_ts) AS rn
-           FROM p JOIN c ON p.user_id = c.user_id
-         )
-    SELECT event_id, user_id, ts, click_ts FROM ranked WHERE rn = 1
-    """,
-)
-def q_purchase_nearest_click(spark, sf_dir):
-    """As-of join, direction='nearest': each purchase matched to the
-    user's temporally closest click (backward wins exact-distance ties).
-    The oracle brute-forces argmin over the per-user cross join; our
-    operator does it in one shuffle with dual window passes.  Purchases
-    with no clicks at all drop (oracle inner-joins), hence the inner
-    filter."""
-    e = load(spark, sf_dir, "events")
-    purchases = e.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    clicks = e.filter(F.col("event_type") == "click").select("user_id", "ts")
-    out = asof_join(purchases, clicks, on="ts", by="user_id", right_cols=[], direction="nearest")
-    return out.filter(F.col("ts_right").isNotNull()).select(
-        "event_id", "user_id", "ts", F.col("ts_right").alias("click_ts")
-    )
-
-
-# =============================================================================
-# LLM-pipeline: dedup / text analysis / similarity
-# =============================================================================
-
-@q(
-    "dedup_exact",
-    """
-    WITH der AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 19 = 0
-                  THEN 'boilerplate notice from ' || source
-                  ELSE text END AS text
-      FROM documents
-    )
-    SELECT md5(text) AS text_md5, MIN(doc_id) AS keep_id, COUNT(*) AS n_dups
-    FROM der GROUP BY md5(text)
-    """,
-)
-def dedup_exact(spark, sf_dir):
-    """Exact dedup groups on the 16-byte digest, not the body (SURVEY ext).
-
-    Derived %19 boilerplate slice (shared with pipeline_source_stats):
-    the raw fixtures contain ZERO exact-duplicate texts, so every group
-    had n_dups = 1 and the oracle never saw a multi-row group — group
-    sizes now vary per source at every SF."""
-    docs = load(spark, sf_dir, "documents").withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 19 == 0,
-            F.concat(F.lit("boilerplate notice from "), F.col("source")),
-        ).otherwise(F.col("text")),
-    )
-    return dedup.exact_dedup(docs)
-
-
 _SQL_TOKS = r"regexp_split_to_array(trim(text), '\s+')"
 _SQL_SHINGLES = (
     f"list_distinct(CASE WHEN len({_SQL_TOKS}) >= 5 THEN "
@@ -1459,789 +175,11 @@ _SQL_SHINGLES = (
 )
 
 
-@q(
-    "text_token_count",
-    f"""
-    SELECT doc_id, CAST(len({_SQL_TOKS}) AS BIGINT) AS n_tokens,
-           CAST(length(text) AS BIGINT) AS n_chars_computed
-    FROM documents
-    """,
-)
-def text_token_count(spark, sf_dir):
-    d = load(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        text.token_count(F.col("text")).cast("long").alias("n_tokens"),
-        F.length("text").cast("long").alias("n_chars_computed"),
-    )
-
-
-def _sql_stopword_count(words) -> str:
-    lst = ", ".join(f"'{w}'" for w in words)
-    return f"CAST(len(list_filter({_SQL_TOKS}, x -> list_contains([{lst}], x))) AS BIGINT)"
-
-
-@q(
-    "text_lang_id",
-    f"""
-    WITH c AS (
-      SELECT doc_id,
-             {_sql_stopword_count(text.LANG_STOPWORDS['en'])} AS c_en,
-             {_sql_stopword_count(text.LANG_STOPWORDS['fr'])} AS c_fr,
-             {_sql_stopword_count(text.LANG_STOPWORDS['de'])} AS c_de,
-             {_sql_stopword_count(text.LANG_STOPWORDS['es'])} AS c_es,
-             {_sql_stopword_count(text.LANG_STOPWORDS['zh'])} AS c_zh
-      FROM documents
-    )
-    SELECT doc_id,
-           CASE WHEN c_en > 0 AND c_en = greatest(c_en, c_fr, c_de, c_es, c_zh) THEN 'en'
-                WHEN c_fr > 0 AND c_fr = greatest(c_en, c_fr, c_de, c_es, c_zh) THEN 'fr'
-                WHEN c_de > 0 AND c_de = greatest(c_en, c_fr, c_de, c_es, c_zh) THEN 'de'
-                WHEN c_es > 0 AND c_es = greatest(c_en, c_fr, c_de, c_es, c_zh) THEN 'es'
-                WHEN c_zh > 0 AND c_zh = greatest(c_en, c_fr, c_de, c_es, c_zh) THEN 'zh'
-                ELSE 'und' END AS lang_pred
-    FROM c
-    """,
-)
-def text_lang_id(spark, sf_dir):
-    d = load(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        text.lang_id(F.col("text"), ["en", "fr", "de", "es", "zh"]).alias("lang_pred"),
-    )
-
-
-@q(
-    "text_fingerprint",
-    f"""
-    SELECT doc_id,
-           list_aggregate(list_transform({_SQL_SHINGLES}, s -> md5(s)), 'min') AS fingerprint
-    FROM documents
-    """,
-)
-def text_fingerprint(spark, sf_dir):
-    d = load(spark, sf_dir, "documents")
-    return d.select("doc_id", text.fingerprint("text", 5).alias("fingerprint"))
-
-
-@q(
-    "text_quality",
-    f"""
-    WITH s AS (
-      SELECT doc_id,
-             CAST(len({_SQL_TOKS}) AS DOUBLE) AS n_tok,
-             CAST(length(text) AS DOUBLE) AS n_chars,
-             CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE) AS punct,
-             CAST({_sql_stopword_count(text.LANG_STOPWORDS['en'])} AS DOUBLE) AS sw
-      FROM documents
-    )
-    SELECT doc_id,
-           0.4 * (CASE WHEN n_tok >= 10 AND n_tok <= 1000 THEN 1.0
-                       WHEN n_tok > 0 THEN 0.5 ELSE 0.0 END)
-         + 0.3 * (1.0 - (CASE WHEN n_chars > 0 THEN punct / n_chars ELSE 1.0 END))
-         + 0.3 * (CASE WHEN (CASE WHEN n_tok > 0 THEN sw / n_tok ELSE 0.0 END) >= 0.01
-                        AND (CASE WHEN n_tok > 0 THEN sw / n_tok ELSE 0.0 END) <= 0.6
-                       THEN 1.0 ELSE 0.5 END) AS quality
-    FROM s
-    """,
-)
-def text_quality(spark, sf_dir):
-    d = load(spark, sf_dir, "documents")
-    return d.select("doc_id", text.quality_score(F.col("text")).alias("quality"))
-
-
-@q(
-    "text_bpe_count",
-    f"""
-    SELECT doc_id,
-           CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS BIGINT)
-             AS n_bpe_ish
-    FROM documents
-    """,
-)
-def text_bpe_count(spark, sf_dir):
-    """Sub-word-ish token counting (BPE approximation via regex runs)."""
-    d = load(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id", text.bpe_ish_token_count(F.col("text")).cast("long").alias("n_bpe_ish")
-    )
-
-
-#: PII patterns shared by the Spark query and the oracle — RE2/Java-regex
-#: common subset (no backrefs, no lookaround).
-_PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-_PII_PHONE = r"\d{3}[-. ]\d{3}[-. ]\d{4}"
-
-
-@q(
-    "text_pii_redact",
-    f"""
-    WITH der AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 5 = 0
-                    THEN text || ' contact u' || CAST(doc_id AS VARCHAR)
-                         || '@mail.example for access'
-                  WHEN doc_id % 7 = 0
-                    THEN text || ' call 555-013-4122 or 555.018.8233'
-                  ELSE text END AS text
-      FROM documents
-    )
-    SELECT doc_id,
-           regexp_replace(regexp_replace(text, '{_PII_EMAIL}', '[EMAIL]', 'g'),
-                          '{_PII_PHONE}', '[PHONE]', 'g') AS clean_text,
-           CAST(len(regexp_extract_all(text, '{_PII_EMAIL}')) AS BIGINT) AS n_emails,
-           CAST(len(regexp_extract_all(text, '{_PII_PHONE}')) AS BIGINT) AS n_phones
-    FROM der
-    """,
-)
-def text_pii_redact(spark, sf_dir):
-    """PII scrubbing — the standard pre-training redaction pass: emails and
-    phone-shaped digit runs replaced with placeholder tags, plus per-doc
-    match counts for pipeline accounting.  Pure codegen regex (RE2/Java
-    common subset), no shuffle.
-
-    Derived corpus (the c4/gopher trick): the raw fixtures contain NO
-    email- or phone-shaped strings, so both counting paths sat at a
-    constant 0 in the value oracle (found by the round-8 constant-column
-    audit) — deterministic contacts are appended to the %5/%7 doc slices
-    so redaction and counting take non-trivial values at every SF."""
-    d = load(spark, sf_dir, "documents")
-    t = (
-        F.when(
-            F.col("doc_id") % 5 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" contact u"),
-                F.col("doc_id").cast("string"),
-                F.lit("@mail.example for access"),
-            ),
-        )
-        .when(
-            F.col("doc_id") % 7 == 0,
-            F.concat(F.col("text"), F.lit(" call 555-013-4122 or 555.018.8233")),
-        )
-        .otherwise(F.col("text"))
-    )
-    return d.select(
-        "doc_id",
-        F.regexp_replace(
-            F.regexp_replace(t, _PII_EMAIL, "[EMAIL]"), _PII_PHONE, "[PHONE]"
-        ).alias("clean_text"),
-        F.size(F.regexp_extract_all(t, F.lit(_PII_EMAIL), F.lit(0))).cast("long").alias("n_emails"),
-        F.size(F.regexp_extract_all(t, F.lit(_PII_PHONE), F.lit(0))).cast("long").alias("n_phones"),
-    )
-
-
-@q(
-    "text_repetition",
-    f"""
-    SELECT doc_id,
-           1.0 - CAST(len(list_distinct({_SQL_TOKS})) AS DOUBLE)
-                   / CAST(len({_SQL_TOKS}) AS DOUBLE) AS repetition_ratio
-    FROM documents
-    """,
-)
-def text_repetition(spark, sf_dir):
-    """Token-repetition ratio (1 − distinct/total) — the cheap boilerplate /
-    spam signal of a training-data quality stack; codegen-only."""
-    d = load(spark, sf_dir, "documents")
-    toks = text.tokens(F.col("text"))
-    return d.select(
-        "doc_id",
-        (
-            F.lit(1.0)
-            - F.size(F.array_distinct(toks)).cast("double") / F.size(toks).cast("double")
-        ).alias("repetition_ratio"),
-    )
-
-
-def _sql_drift_counts(side_filter: str, out: str) -> str:
-    return f"""
-      SELECT 'source' AS dim, CAST(source AS VARCHAR) AS value,
-             COUNT(*) AS {out}
-      FROM documents WHERE {side_filter} GROUP BY 2
-      UNION ALL
-      SELECT 'lang', CAST(lang AS VARCHAR), COUNT(*)
-      FROM documents WHERE {side_filter} GROUP BY 2
-    """
-
-
-_SQL_DRIFT_REPORT = f"""
-    WITH oc AS ({_sql_drift_counts("doc_id % 2 = 0", "n_old")}),
-    nc AS ({_sql_drift_counts("doc_id % 2 = 1", "n_new")}),
-    t AS (SELECT COUNT(*) FILTER (doc_id % 2 = 0) AS t_old,
-                 COUNT(*) FILTER (doc_id % 2 = 1) AS t_new
-          FROM documents),
-    j AS (
-      SELECT COALESCE(oc.dim, nc.dim) AS dim,
-             COALESCE(oc.value, nc.value) AS value,
-             COALESCE(oc.n_old, 0) AS n_old,
-             COALESCE(nc.n_new, 0) AS n_new
-      FROM oc FULL OUTER JOIN nc
-        ON nc.dim = oc.dim AND nc.value IS NOT DISTINCT FROM oc.value
-    ),
-    m AS (
-      SELECT dim, value,
-             CAST(n_old AS BIGINT) AS n_old, CAST(n_new AS BIGINT) AS n_new,
-             CASE WHEN t_old > 0
-                  THEN CAST(n_old AS DOUBLE) / CAST(t_old AS DOUBLE)
-                  ELSE 0.0 END AS share_old,
-             CASE WHEN t_new > 0
-                  THEN CAST(n_new AS DOUBLE) / CAST(t_new AS DOUBLE)
-                  ELSE 0.0 END AS share_new
-      FROM j CROSS JOIN t
-    )
-    SELECT *, share_new - share_old AS delta,
-           abs(share_new - share_old) AS abs_delta
-    FROM m
-"""
-
-
-@q("pipeline_drift_report", _SQL_DRIFT_REPORT)
-def pipeline_drift_report(spark, sf_dir):
-    """Composition drift between two corpus snapshots (here the even- vs
-    odd-id halves) along source and lang: per category value, exact
-    counts, integer-ratio shares, and the share delta — the standing
-    alarm that catches a crawler or filter regression by distribution
-    shift long before any single document looks wrong."""
-    from pdtable_spark.operators.monitor import corpus_drift_report
-
-    docs = load(spark, sf_dir, "documents")
-    return corpus_drift_report(
-        docs.filter(F.col("doc_id") % 2 == 0),
-        docs.filter(F.col("doc_id") % 2 == 1),
-        ["source", "lang"],
-    )
-
-
-@q(
-    "pipeline_drift_tvd",
-    f"""
-    WITH rep AS ({_SQL_DRIFT_REPORT})
-    SELECT dim, CAST(COUNT(*) AS BIGINT) AS n_values,
-           CAST(SUM(CAST(FLOOR(abs_delta * 1e9) AS BIGINT)) AS DOUBLE)
-             / 1e9 / 2.0 AS tvd
-    FROM rep GROUP BY dim
-    """,
-)
-def pipeline_drift_tvd(spark, sf_dir):
-    """The one-number drift alarm: per-dimension total-variation distance
-    between the snapshot halves, in quantize=1e9 mode so the Σ|delta| is
-    an exact integer sum on both engines (the suite's double-sum
-    determinism recipe)."""
-    from pdtable_spark.operators.monitor import corpus_drift_tvd
-
-    docs = load(spark, sf_dir, "documents")
-    return corpus_drift_tvd(
-        docs.filter(F.col("doc_id") % 2 == 0),
-        docs.filter(F.col("doc_id") % 2 == 1),
-        ["source", "lang"],
-        quantize=1e9,
-    )
-
-
-_BLOCKLIST = ["dup", "slow", "vector", "zzz_absent"]
-_BLOCKLIST_SQL = "['" + "','".join(sorted(set(_BLOCKLIST))) + "']"
-
-
-@q(
-    "text_blocklist_filter",
-    f"""
-    WITH t AS (
-      SELECT doc_id,
-             list_filter({_BLOCKLIST_SQL},
-               b -> list_contains(
-                 list_transform(regexp_split_to_array(trim(text), '\\s+'),
-                                w -> lower(w)), b)) AS hits
-      FROM documents
-    )
-    SELECT doc_id,
-           CAST(len(hits) AS BIGINT) AS n_blocked_terms,
-           CASE WHEN len(hits) > 0 THEN hits[1] END AS blocked_sample,
-           CAST(len(hits) <= 0 AS INT) AS pass_blocklist
-    FROM t
-    """,
-)
-def text_blocklist_filter(spark, sf_dir):
-    """Term-blocklist screening (C4's bad-words rule / takedown lists):
-    distinct whole-token case-insensitive hits against a driver-side term
-    list compiled into the codegen stage — zero shuffles.  The fixture
-    list mixes present and absent vocabulary so counts, the audit sample,
-    and the pass flag all take non-trivial values."""
-    docs = load(spark, sf_dir, "documents")
-    return text.blocklist_filter(docs, _BLOCKLIST)
-
-
-#: Derived corpus for the C4-rule oracle, by the same literal-replace
-#: technique as the Gopher one: ' dup'→' lorem ipsum' (placeholder
-#: boilerplate), ' vector'→' {' (code marker), ' sort'→'.'+newline
-#: (sentence-terminated line breaks), ' merge'→newline (unterminated
-#: line breaks) — every C4 rule takes non-trivial values.
-_C4_DER_SQL = (
-    "replace(replace(replace(replace(text, ' dup', ' lorem ipsum'),"
-    " ' vector', ' {'), ' sort', '.' || chr(10)), ' merge', chr(10))"
-)
 _C4_KEPT_SQL = (
     "list_filter(regexp_split_to_array(der, '\\n'),"
     " x -> regexp_matches(trim(x), '[.!?\"]\\r?$')"
     " AND len(regexp_split_to_array(trim(x), '\\s+')) >= 5)"
 )
-
-
-@q(
-    "text_c4_rules",
-    f"""
-    WITH t AS (SELECT doc_id, {_C4_DER_SQL} AS der FROM documents),
-    m AS (
-      SELECT doc_id,
-             -- COALESCE: DuckDB's array_to_string of an EMPTY list is NULL
-             -- where Spark's array_join is '' — align on ''
-             COALESCE(array_to_string({_C4_KEPT_SQL}, chr(10)), '') AS clean_text,
-             CAST(len(regexp_split_to_array(der, '\\n')) AS BIGINT) AS n_lines,
-             CAST(len({_C4_KEPT_SQL}) AS BIGINT) AS n_kept_lines,
-             CAST(len(regexp_extract_all(
-                 COALESCE(array_to_string({_C4_KEPT_SQL}, chr(10)), ''),
-                 '[.!?]')) AS BIGINT) AS n_sentences,
-             CAST(contains(lower(der), 'lorem ipsum') AS INT) AS has_lorem,
-             CAST(contains(der, '{{') AS INT) AS has_brace
-      FROM t
-    )
-    SELECT *,
-           CAST(n_sentences >= 3 AND has_lorem = 0 AND has_brace = 0 AS INT)
-             AS pass_c4
-    FROM m
-    """,
-)
-def text_c4_rules(spark, sf_dir):
-    """C4's rule-based page cleaning (arXiv:1910.10683 §2.2 — keep
-    punctuation-terminated ≥5-word lines; drop pages under 3 sentences,
-    with braces, or with 'lorem ipsum') on a derived corpus where each
-    rule has real positives (see ``_C4_DER_SQL``).  Zero-shuffle column
-    expressions; the kept-lines transform and every flag value-oracled."""
-    docs = load(spark, sf_dir, "documents").withColumn(
-        "text",
-        F.replace(
-            F.replace(
-                F.replace(
-                    F.replace(F.col("text"), F.lit(" dup"), F.lit(" lorem ipsum")),
-                    F.lit(" vector"),
-                    F.lit(" {"),
-                ),
-                F.lit(" sort"),
-                F.lit(".\n"),
-            ),
-            F.lit(" merge"),
-            F.lit("\n"),
-        ),
-    )
-    return text.c4_quality(docs)
-
-
-_REP_TOP_N = 2
-_REP_DUP_N = 5
-#: Derived corpus for the repetition-signal oracle: each document gets its
-#: own first 8 words appended (the footer-boilerplate shape the duplicate
-#: n-gram rule exists to catch) — the raw synthetic corpus has no natural
-#: duplicate 5-grams, which would leave the coverage path identically zero.
-_REP_DER_SQL = (
-    "text || ' ' || array_to_string(list_slice("
-    "regexp_split_to_array(trim(text), '\\s+'), 1, 8), ' ')"
-)
-
-
-@q(
-    "text_repetition_signals",
-    f"""
-    WITH t AS (
-      SELECT doc_id,
-             regexp_split_to_array(trim({_REP_DER_SQL}), '\\s+') AS ws
-      FROM documents
-    ),
-    w AS (SELECT doc_id, unnest(ws) AS word,
-                 unnest(generate_series(1, len(ws))) AS pos FROM t),
-    g AS (
-      SELECT doc_id, pos, word,
-             CASE WHEN lead(word, {_REP_TOP_N - 1}) OVER wdoc IS NOT NULL
-                  THEN concat_ws(' ', word, lead(word, 1) OVER wdoc)
-             END AS gram_top,
-             CASE WHEN lead(word, {_REP_DUP_N - 1}) OVER wdoc IS NOT NULL
-                  THEN concat_ws(' ', word, lead(word, 1) OVER wdoc,
-                                 lead(word, 2) OVER wdoc, lead(word, 3) OVER wdoc,
-                                 lead(word, 4) OVER wdoc)
-             END AS gram_dup
-      FROM w WINDOW wdoc AS (PARTITION BY doc_id ORDER BY pos)
-    ),
-    c AS (
-      SELECT *, CASE WHEN gram_dup IS NOT NULL
-                     THEN COUNT(*) OVER (PARTITION BY doc_id, gram_dup) END AS cnt_dup
-      FROM g
-    ),
-    cov AS (
-      SELECT *, MAX(CASE WHEN cnt_dup >= 2 THEN 1 ELSE 0 END)
-                  OVER (PARTITION BY doc_id ORDER BY pos
-                        ROWS BETWEEN {_REP_DUP_N - 1} PRECEDING AND CURRENT ROW)
-                AS covered
-      FROM c
-    ),
-    agg AS (
-      SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_words,
-             CAST(SUM(length(word)) AS BIGINT) AS n_word_chars,
-             CAST(SUM(length(word) * covered) AS BIGINT) AS dup_chars
-      FROM cov GROUP BY doc_id
-    ),
-    tc AS (SELECT doc_id, gram_top, COUNT(*) AS c FROM g
-           WHERE gram_top IS NOT NULL GROUP BY 1, 2),
-    top AS (SELECT doc_id, gram_top, c FROM (
-              SELECT *, row_number() OVER (PARTITION BY doc_id
-                                           ORDER BY c DESC, gram_top) AS rn
-              FROM tc) WHERE rn = 1),
-    m AS (
-      SELECT a.doc_id, a.n_words, a.n_word_chars,
-             top.gram_top AS top_ngram,
-             CAST(COALESCE(top.c, 0) AS BIGINT) AS top_ngram_count,
-             COALESCE(CASE WHEN a.n_word_chars > 0 THEN
-                        CAST(top.c AS DOUBLE)
-                        * CAST(length(replace(top.gram_top, ' ', '')) AS DOUBLE)
-                        / CAST(a.n_word_chars AS DOUBLE)
-                      ELSE 0.0 END, 0.0) AS top_ngram_char_frac,
-             CASE WHEN a.n_word_chars > 0 THEN
-               CAST(a.dup_chars AS DOUBLE) / CAST(a.n_word_chars AS DOUBLE)
-             ELSE 0.0 END AS dup_ngram_char_frac
-      FROM agg a LEFT JOIN top ON top.doc_id = a.doc_id
-    )
-    SELECT *,
-           CAST(top_ngram_char_frac <= 0.20 AS INT) AS pass_top_ngram,
-           CAST(dup_ngram_char_frac <= 0.15 AS INT) AS pass_dup_ngram
-    FROM m
-    """,
-)
-def text_repetition_signals(spark, sf_dir):
-    """Gopher's word-level repetition rules (top-2-gram character fraction,
-    overlap-aware duplicate-5-gram character coverage) over a derived
-    corpus where every document carries its own first-8-words as appended
-    boilerplate — the duplication shape the rule exists to catch, making
-    both signals non-trivial under the value oracle."""
-    docs = load(spark, sf_dir, "documents")
-    der = docs.withColumn(
-        "text",
-        F.concat(
-            F.col("text"),
-            F.lit(" "),
-            F.array_join(F.slice(text.tokens(F.col("text")), 1, 8), " "),
-        ),
-    )
-    return text.repetition_signals(der, top_n=_REP_TOP_N, dup_n=_REP_DUP_N)
-
-
-@q(
-    "pipeline_decontaminate",
-    f"""
-    WITH base AS (SELECT doc_id, source = 'src0' AS is_bench, {_SQL_SHINGLES} AS sh
-                  FROM documents),
-    bench AS (SELECT doc_id AS bench_id, len(sh) AS bench_size, unnest(sh) AS g
-              FROM base WHERE is_bench),
-    train AS (SELECT doc_id AS train_id, unnest(sh) AS g FROM base WHERE NOT is_bench),
-    m AS (
-      SELECT train_id, bench_id, bench_size, COUNT(*) AS n_common
-      FROM train JOIN bench USING (g) GROUP BY 1, 2, 3
-    )
-    SELECT train_id, bench_id, CAST(n_common AS BIGINT) AS n_common,
-           CAST(n_common AS DOUBLE) / CAST(bench_size AS DOUBLE) AS containment
-    FROM m
-    WHERE CAST(n_common AS DOUBLE) / CAST(bench_size AS DOUBLE) >= 0.3
-    """,
-)
-def pipeline_decontaminate(spark, sf_dir):
-    """Eval-set decontamination: training docs whose shingle overlap CONTAINS
-    a benchmark doc (here: source='src0' plays the eval set) at >= 0.3
-    containment.  Benchmark postings broadcast; one scan of the corpus."""
-    d = load(spark, sf_dir, "documents")
-    return dedup.contamination_report(
-        d, F.col("source") == "src0", shingle_n=5, min_containment=0.3
-    ).select(
-        F.col("train_id"), F.col("bench_id"), F.col("n_common"), F.col("containment")
-    )
-
-
-@q(
-    "pipeline_source_overlap",
-    f"""
-    WITH posts AS (
-      SELECT DISTINCT src, g FROM (
-        SELECT source AS src, unnest({_SQL_SHINGLES}) AS g FROM documents
-      )
-    ),
-    sizes AS (SELECT src, COUNT(*) AS n FROM posts GROUP BY src),
-    common AS (
-      SELECT a.src AS source_a, b.src AS source_b, COUNT(*) AS n_common
-      FROM posts a JOIN posts b ON a.g = b.g AND a.src < b.src
-      GROUP BY 1, 2
-    )
-    SELECT c.source_a, c.source_b, CAST(c.n_common AS BIGINT) AS n_common,
-           CAST(sa.n AS BIGINT) AS n_a, CAST(sb.n AS BIGINT) AS n_b,
-           CAST(c.n_common AS DOUBLE) / CAST(sa.n + sb.n - c.n_common AS DOUBLE)
-             AS jaccard
-    FROM common c
-    JOIN sizes sa ON sa.src = c.source_a
-    JOIN sizes sb ON sb.src = c.source_b
-    """,
-)
-def pipeline_source_overlap(spark, sf_dir):
-    """Cross-source leakage matrix: distinct-shingle Jaccard between every
-    pair of ingest sources — the curation diagnostic for 'which of my
-    sources duplicate each other'.  One corpus-sized shuffle (per-shingle
-    collect_set over a bounded source domain); all downstream stages are
-    vocabulary- or n_sources²-sized.  md5_60 mode for the value oracle."""
-    d = load(spark, sf_dir, "documents")
-    return dedup.source_overlap(d, shingle_n=5, hash_fn="md5_60")
-
-
-@q(
-    "doc_chunks",
-    f"""
-    WITH t AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
-    meta AS (SELECT doc_id, toks, len(toks) AS L,
-                    1 + CAST(floor((greatest(len(toks) - 50, 0) + 39) / 40) AS INT) AS n
-             FROM t),
-    ch AS (SELECT doc_id, unnest(generate_series(0, n - 1)) AS chunk_idx, toks, L
-           FROM meta)
-    SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
-           array_to_string(list_slice(toks, chunk_idx*40 + 1, chunk_idx*40 + 50), ' ')
-             AS chunk_text,
-           CAST(least(L - chunk_idx*40, 50) AS BIGINT) AS chunk_n_tokens
-    FROM ch
-    """,
-)
-def doc_chunks(spark, sf_dir):
-    """Context-window packing: 50-token chunks, 10-token overlap (stride
-    40), one row per chunk — pure codegen sequence/slice fan-out."""
-    d = load(spark, sf_dir, "documents")
-    return text.chunk_documents(d, chunk_tokens=50, overlap=10)
-
-
-@q(
-    "pipeline_train_split",
-    """
-    SELECT doc_id,
-           CAST(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 100
-                AS INT) AS split_bucket,
-           CASE WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 100 < 90
-                THEN 'train' ELSE 'val' END AS split
-    FROM documents
-    """,
-)
-def pipeline_train_split(spark, sf_dir):
-    """Deterministic hash-based train/val split (content-stable across
-    re-runs and engines — reproducible eval sets, no RNG, no shuffle)."""
-    d = load(spark, sf_dir, "documents")
-    return text.hash_split(d, train_pct=90).select("doc_id", "split_bucket", "split")
-
-
-@q(
-    "pipeline_apply_mixture",
-    f"""
-    WITH tgt(source, share) AS (
-      VALUES ('src0', 0.5), ('src1', 0.3), ('src2', 0.2)
-    ),
-    cnt AS (SELECT source, COUNT(*) AS n FROM documents GROUP BY source),
-    j AS (SELECT c.source, c.n, t.share FROM cnt c JOIN tgt t USING (source)),
-    tt AS (SELECT MIN(n / share) AS t FROM j),
-    frac AS (
-      SELECT j.source, LEAST(1.0, j.share * tt.t / j.n) AS f FROM j, tt
-    )
-    SELECT d.doc_id, d.source FROM documents d JOIN frac ON frac.source = d.source
-    WHERE CAST(CAST('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-               % 100000 AS DOUBLE) < f * 100000
-    """,
-)
-def pipeline_apply_mixture(spark, sf_dir):
-    """Realize a 50/30/20 target mixture over three sources: the binding
-    source keeps everything, the rest downsample via the content-stable
-    hash test — deterministic mixture materialization, fully lazy (no
-    driver collect)."""
-    from pdtable_spark.operators import sampling
-
-    d = load(spark, sf_dir, "documents")
-    return sampling.apply_mixture(
-        d, {"src0": 0.5, "src1": 0.3, "src2": 0.2}
-    ).select("doc_id", "source")
-
-
-@q(
-    "pipeline_leakage_safe_split",
-    None,  # assigned below — wraps the dedup_clusters closure oracle
-)
-def pipeline_leakage_safe_split(spark, sf_dir):
-    """Train/val split hashed on the near-dup CLUSTER id, so paraphrase
-    cliques never straddle the split — the leakage-safe composition of
-    cluster closure + content-stable hash split."""
-    from pdtable_spark.operators import dedup as _dedup
-    from pdtable_spark.operators import sampling
-
-    d = load(spark, sf_dir, "documents")
-    pairs = _dedup.ngram_jaccard_pairs(d, shingle_n=5, threshold=0.5).select(
-        "id_a", "id_b"
-    )
-    comp = _dedup.connected_components(pairs, d.select(F.col("doc_id").alias("id")))
-    return sampling.leakage_safe_split(d.select("doc_id", "source"), comp)
-
-
-@q(
-    "pipeline_clean_corpus",
-    f"""
-    WITH scored AS (
-      SELECT doc_id, text, lang,
-             CAST(len({_SQL_TOKS}) AS BIGINT) AS n_tokens,
-             md5(text) AS digest
-      FROM documents
-    ),
-    kept AS (
-      SELECT * FROM scored
-      WHERE n_tokens >= 10
-        AND doc_id = (SELECT MIN(s2.doc_id) FROM scored s2 WHERE s2.digest = scored.digest)
-    )
-    SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
-    FROM kept GROUP BY lang
-    """,
-)
-def pipeline_clean_corpus(spark, sf_dir):
-    """A composed training-data pipeline stage: length filter → exact dedup
-    (keep min doc_id) → per-language corpus stats.  Window-based dedup: one
-    shuffle on the digest, no join back."""
-    d = load(spark, sf_dir, "documents")
-    scored = d.select(
-        "doc_id",
-        "lang",
-        text.token_count(F.col("text")).cast("long").alias("n_tokens"),
-        F.md5("text").alias("digest"),
-    ).filter(F.col("n_tokens") >= 10)
-    w = Window.partitionBy("digest")
-    kept = (
-        scored.withColumn("keep_id", F.min("doc_id").over(w))
-        .filter(F.col("doc_id") == F.col("keep_id"))
-    )
-    return kept.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").cast("bigint").alias("total_tokens"),
-    )
-
-
-@q(
-    "ngram_jaccard_pairs",
-    f"""
-    WITH base AS (SELECT doc_id, {_SQL_SHINGLES} AS sh FROM documents),
-    sized AS (SELECT doc_id, len(sh) AS sz, sh FROM base),
-    posts AS (SELECT doc_id, sz, unnest(sh) AS g FROM sized),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.sz AS size_a, b.sz AS size_b,
-             COUNT(*) AS n_common
-      FROM posts a JOIN posts b ON a.g = b.g AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id, a.sz, b.sz
-    )
-    SELECT id_a, id_b,
-           CAST(n_common AS DOUBLE) / CAST(size_a + size_b - n_common AS DOUBLE) AS jaccard
-    FROM inter
-    WHERE CAST(n_common AS DOUBLE) / CAST(size_a + size_b - n_common AS DOUBLE) >= 0.5
-    """,
-)
-def ngram_jaccard_pairs(spark, sf_dir):
-    """Exact near-dup pairs via shingle inverted index (no O(n²) cross join)."""
-    d = load(spark, sf_dir, "documents")
-    return dedup.ngram_jaccard_pairs(d, shingle_n=5, threshold=0.5)
-
-
-@q(
-    "q7_nation_volume",
-    f"""
-    SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-           CAST(year(l.l_shipdate) AS INT) AS l_year,
-           {_sql_dsum('l.l_extendedprice * (1.0 - l.l_discount)', 'revenue', 'DECIMAL(18,6)')}
-    FROM lineitem l
-    JOIN supplier s ON s.s_suppkey = l.l_suppkey
-    JOIN orders o ON o.o_orderkey = l.l_orderkey
-    JOIN customer c ON c.c_custkey = o.o_custkey
-    JOIN nation n1 ON n1.n_nationkey = s.s_nationkey
-    JOIN nation n2 ON n2.n_nationkey = c.c_nationkey
-    WHERE ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-        OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
-      AND l.l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-      AND l.l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-    GROUP BY 1, 2, 3
-    """,
-)
-def q7_nation_volume(spark, sf_dir):
-    """TPC-H Q7 family: cross-nation shipping volume.  The fact table
-    shuffles twice (orderkey join, custkey via orders); supplier and both
-    nation sides broadcast; the nation filter prunes BEFORE the big joins
-    (Catalyst pushes the disjunction into the dimension scans)."""
-    l = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    s = load(spark, sf_dir, "supplier")
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation")
-    n1 = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation"))
-    n2 = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation"))
-    j = (
-        l.join(s, l.l_suppkey == s.s_suppkey)
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
-        .filter(
-            ((F.col("supp_nation") == "NATION_1") & (F.col("cust_nation") == "NATION_2"))
-            | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
-        )
-    )
-    return j.groupBy(
-        "supp_nation", "cust_nation", F.year("l_shipdate").cast("int").alias("l_year")
-    ).agg(
-        dsum(
-            F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")),
-            "revenue",
-            "decimal(18,6)",
-        )
-    )
-
-
-@q(
-    "q9_product_profit",
-    f"""
-    SELECT n.n_name AS nation, CAST(year(o.o_orderdate) AS INT) AS o_year,
-           {_sql_dsum('l.l_extendedprice * (1.0 - l.l_discount) - 0.5 * p.p_retailprice * l.l_quantity', 'sum_profit', 'DECIMAL(18,6)')}
-    FROM lineitem l
-    JOIN part p ON p.p_partkey = l.l_partkey
-    JOIN supplier s ON s.s_suppkey = l.l_suppkey
-    JOIN orders o ON o.o_orderkey = l.l_orderkey
-    JOIN nation n ON n.n_nationkey = s.s_nationkey
-    WHERE p.p_name LIKE '%widget%'
-    GROUP BY 1, 2
-    """,
-)
-def q9_product_profit(spark, sf_dir):
-    """TPC-H Q9 family: product-line profit by supplier nation and year
-    (testdata has no partsupp, so supply cost is proxied at half retail).
-    The part-name filter prunes the part dimension before its broadcast;
-    lineitem shuffles once on orderkey."""
-    l = load(spark, sf_dir, "lineitem")
-    p = load(spark, sf_dir, "part").filter(F.col("p_name").like("%widget%"))
-    s = load(spark, sf_dir, "supplier")
-    o = load(spark, sf_dir, "orders")
-    n = load(spark, sf_dir, "nation")
-    j = (
-        l.join(p, l.l_partkey == p.p_partkey)
-        .join(s, l.l_suppkey == s.s_suppkey)
-        .join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-    )
-    profit = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) - F.lit(
-        0.5
-    ) * F.col("p_retailprice") * F.col("l_quantity")
-    return j.groupBy(
-        F.col("n_name").alias("nation"), F.year("o_orderdate").cast("int").alias("o_year")
-    ).agg(dsum(profit, "sum_profit", "decimal(18,6)"))
 
 
 # --- MinHash / SimHash with FULL value oracles -----------------------------
@@ -2254,628 +192,6 @@ def q9_product_profit(spark, sf_dir):
 # value-checked end-to-end; bench.py keeps timing the xxhash64 path.
 
 _SQL_MD5_60 = "CAST('0x' || substr(md5({x}), 1, 15) AS BIGINT)"
-
-
-def _sql_minhash_pairs(num_hashes: int, bands: int, threshold: float) -> str:
-    rpb = num_hashes // bands
-    h1 = _SQL_MD5_60.format(x="s")
-    h2 = _SQL_MD5_60.format(x="'x' || s")
-    return f"""
-    WITH base AS (SELECT doc_id, {_SQL_SHINGLES} AS sh FROM documents),
-    hp AS (
-      SELECT doc_id, sh,
-             list_transform(sh, s -> struct_pack(
-               h1 := {h1}, h2 := ({h2}) % {1 << 52})) AS pairs
-      FROM base
-    ),
-    mh AS (
-      SELECT doc_id, seed,
-             list_aggregate(list_transform(pairs, p -> (p.h1 + seed * p.h2) % {1 << 60}),
-                            'min') AS mh
-      FROM hp, (SELECT unnest(generate_series(0, {num_hashes - 1})) AS seed) seeds
-    ),
-    bands AS (
-      SELECT doc_id, seed // {rpb} AS band,
-             string_agg(CAST(mh AS VARCHAR), ',' ORDER BY seed) AS bucket
-      FROM mh GROUP BY doc_id, seed // {rpb}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
-    ver AS (
-      SELECT cand.id_a, cand.id_b,
-             CAST(len(list_intersect(ba.sh, bb.sh)) AS DOUBLE)
-               / CAST(len(ba.sh) + len(bb.sh) - len(list_intersect(ba.sh, bb.sh)) AS DOUBLE)
-               AS jaccard
-      FROM cand
-      JOIN base ba ON ba.doc_id = cand.id_a
-      JOIN base bb ON bb.doc_id = cand.id_b
-    )
-    SELECT id_a, id_b, jaccard FROM ver WHERE jaccard >= {threshold}
-    """
-
-
-@q(
-    "dedup_clusters",
-    f"""
-    WITH RECURSIVE
-    base AS (SELECT doc_id, {_SQL_SHINGLES} AS sh FROM documents),
-    sized AS (SELECT doc_id, len(sh) AS sz, sh FROM base),
-    posts AS (SELECT doc_id, sz, unnest(sh) AS g FROM sized),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.sz AS size_a, b.sz AS size_b,
-             COUNT(*) AS n_common
-      FROM posts a JOIN posts b ON a.g = b.g AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id, a.sz, b.sz
-    ),
-    pairs AS (
-      SELECT id_a, id_b FROM inter
-      WHERE CAST(n_common AS DOUBLE) / CAST(size_a + size_b - n_common AS DOUBLE) >= 0.5
-    ),
-    edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-              UNION ALL SELECT id_b, id_a FROM pairs),
-    walk(id, comp) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT e.b, w.comp FROM walk w JOIN edges e ON e.a = w.id
-    )
-    SELECT id AS doc_id, MIN(comp) AS component,
-           (MIN(comp) = id) AS is_root
-    FROM walk GROUP BY id
-    """,
-)
-def dedup_clusters(spark, sf_dir):
-    """Dedup CLUSTERING: near-dup pairs (exact n-gram Jaccard >= 0.5) →
-    connected components via iterative min-label propagation; survivors =
-    component roots.  The oracle computes the same closure with a recursive
-    CTE — an iterative Spark algorithm value-checked end-to-end."""
-    d = load(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(d, shingle_n=5, threshold=0.5).select("id_a", "id_b")
-    comp = dedup.connected_components(
-        pairs, d.select(F.col("doc_id").alias("id"))
-    )
-    return comp.select(
-        F.col("id").alias("doc_id"),
-        F.col("component"),
-        (F.col("component") == F.col("id")).alias("is_root"),
-    )
-
-
-@q("minhash_candidates", _sql_minhash_pairs(num_hashes=16, bands=4, threshold=0.5))
-def minhash_candidates(spark, sf_dir):
-    """MinHash-LSH near-dup pairs (banded signature buckets + exact-Jaccard
-    verification), in md5_60 verification mode so the whole pipeline —
-    shingling, per-seed minima, band bucketing, verification — hash-matches
-    the DuckDB oracle.  Production corpora run hash_fn="xxhash64"."""
-    d = load(spark, sf_dir, "documents")
-    return dedup.minhash_dedup(
-        d, num_hashes=16, bands=4, jaccard_threshold=0.5, hash_fn="md5_60"
-    )
-
-
-_SIMHASH_BITS = 60  # md5_60 provides 60 hash bits
-
-
-def _sql_simhash(bits: int = _SIMHASH_BITS) -> str:
-    tok_hash = _SQL_MD5_60.format(x="tok")
-    bit_sums = ", ".join(
-        f"SUM(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS b{i}" for i in range(bits)
-    )
-    assemble = " + ".join(
-        f"(CASE WHEN b{i} > 0 THEN CAST({2 ** i} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for i in range(bits)
-    )
-    return f"""
-      SELECT doc_id, CAST({assemble} AS BIGINT) AS simhash FROM (
-        SELECT doc_id, {bit_sums}
-        FROM (SELECT doc_id, {tok_hash} AS h
-              FROM (SELECT doc_id, unnest({_SQL_TOKS}) AS tok FROM documents))
-        GROUP BY doc_id
-      )
-    """
-
-
-@q("simhash_fingerprints", f"SELECT doc_id, simhash FROM ({_sql_simhash()})")
-def simhash_fingerprints(spark, sf_dir):
-    """60-bit SimHash per document (md5_60 verification mode; production is
-    64-bit xxhash64).  Sign-aggregated token-hash bits, one partial-agg
-    shuffle of doc_count×bits sums."""
-    return dedup.simhash(
-        load(spark, sf_dir, "documents"), bits=_SIMHASH_BITS, hash_fn="md5_60"
-    )
-
-
-@q(
-    "simhash_near_dups",
-    f"""
-    WITH sims AS ({_sql_simhash()})
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-    FROM sims a JOIN sims b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.simhash, b.simhash)) <= 6
-    """,
-)
-def simhash_near_dups_q(spark, sf_dir):
-    """ALL SimHash pairs with Hamming <= 6 — pigeonhole multi-block LSH
-    (max_hamming+1 blocks: any qualifying pair agrees on a full block, so
-    recall is exactly 100%) + bit_count verification.  The oracle is the
-    brute-force all-pairs join: identical output, bucket-join cost."""
-    return dedup.simhash_near_dups(
-        load(spark, sf_dir, "documents"),
-        max_hamming=6,
-        bits=_SIMHASH_BITS,
-        hash_fn="md5_60",
-    )
-
-
-@q(
-    "q_custkey_median_pandas",
-    """
-    SELECT o_custkey, COUNT(*) AS n_orders,
-           quantile_cont(o_totalprice, 0.5) AS median_price,
-           MAX(o_totalprice) AS max_price
-    FROM orders GROUP BY o_custkey
-    """,
-)
-def q_custkey_median_pandas(spark, sf_dir):
-    """Grouped-map Pandas path (applyInPandas): per-customer order stats
-    computed in pandas per Arrow batch.  Deliberately restricted to
-    order-insensitive statistics (count/max/interpolated median) so the
-    result is bit-identical to the SQL oracle — the point is proving the
-    grouped Arrow plumbing, the same shape a custom per-group model-feature
-    UDF would use.  One shuffle on the group key."""
-    import pandas as pd
-
-    o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-
-    def stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        # even-count median spelled EXACTLY as DuckDB's quantile_cont
-        # evaluates it at frac=0.5 — (lo + hi)·0.5.  Both numpy's quantile
-        # (upper-end lerp b − diff·(1−t)) and the textbook lo + (hi−lo)·frac
-        # differ from it in the last ulp on some pairs — found at sf0.1.
-        s = sorted(pdf["o_totalprice"].values)
-        n = len(s)
-        med = (s[n // 2 - 1] + s[n // 2]) * 0.5 if n % 2 == 0 else float(s[n // 2])
-        return pd.DataFrame(
-            {
-                "o_custkey": [pdf["o_custkey"].iloc[0]],
-                "n_orders": [len(pdf)],
-                "median_price": [med],
-                "max_price": [float(s[-1])],
-            }
-        )
-
-    return o.groupBy("o_custkey").applyInPandas(
-        stats,
-        schema="o_custkey long, n_orders long, median_price double, max_price double",
-    )
-
-
-# =============================================================================
-# Streaming (Structured Streaming; non-SQL-expressible → rows-only checks).
-# Each entry runs the watermarked streaming plan to completion on the file
-# source with trigger(availableNow) and returns the sink table — the same
-# plan incrementalizes over Kafka/file feeds in production.
-# =============================================================================
-
-_STREAM_SEQ = [0]
-
-
-def _events_stream(spark, sf_dir):
-    import shutil
-
-    from pdtable_spark.streaming import read_events_stream
-
-    d = scratch_dir("stream")
-    shutil.copy(f"{sf_dir}/events.parquet", f"{d}/part-000.parquet")
-    return read_events_stream(spark, d)
-
-
-@q(
-    "stream_hourly_counts",
-    f"""
-    SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type,
-           COUNT(*) AS n, {_sql_dsum('value', 'total_value')}
-    FROM events GROUP BY 1, 2
-    """,
-)
-def stream_hourly_counts(spark, sf_dir):
-    """Watermarked tumbling-window aggregation, run incrementally.  With
-    trigger(availableNow) + complete output the streaming result equals the
-    batch grouping exactly (decimal-accumulated sums are fold-order
-    independent), so this streaming operator carries a FULL value oracle."""
-    from pdtable_spark.streaming import run_to_memory, stream_hourly_by_type
-
-    _STREAM_SEQ[0] += 1
-    name = f"q_stream_hourly_{_STREAM_SEQ[0]}"
-    q_ = run_to_memory(
-        stream_hourly_by_type(_events_stream(spark, sf_dir)), name, output_mode="complete"
-    )
-    q_.stop()
-    return spark.table(name)
-
-
-@q(
-    "stream_attribution",
-    """
-    WITH p AS (SELECT event_id AS purchase_id, user_id, ts AS purchase_ts
-               FROM events WHERE event_type = 'purchase'),
-         c AS (SELECT user_id, ts AS click_ts FROM events WHERE event_type = 'click')
-    SELECT p.purchase_id, p.user_id, p.purchase_ts, c.click_ts
-    FROM p JOIN c ON p.user_id = c.user_id
-                 AND c.click_ts <= p.purchase_ts
-                 AND c.click_ts >= p.purchase_ts - INTERVAL 1 HOUR
-    """,
-)
-def stream_attribution(spark, sf_dir):
-    """Stream-stream time-range join (watermark-bounded state on both
-    sides), run incrementally with availableNow — the emitted matches equal
-    the batch join, so this streaming operator gets a FULL value oracle."""
-    from pdtable_spark.streaming import run_to_memory, stream_attribution_join
-
-    _STREAM_SEQ[0] += 1
-    name = f"q_stream_attrib_{_STREAM_SEQ[0]}"
-    s = _events_stream(spark, sf_dir)
-    s_p = s.filter(F.col("event_type") == "purchase")
-    s_c = s.filter(F.col("event_type") == "click")
-    q_ = run_to_memory(stream_attribution_join(s_p, s_c), name, output_mode="append")
-    q_.stop()
-    return spark.table(name)
-
-
-@q(
-    "stream_sessionize_stateful",
-    """
-    WITH e AS (SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-    mx AS (SELECT MAX(ts) AS m FROM e),
-    g AS (
-      SELECT user_id, event_id, ts, value,
-             CASE WHEN lag(ts) OVER w IS NULL
-                       OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-                  THEN 1 ELSE 0 END AS new_session
-      FROM e
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    s AS (
-      SELECT user_id, event_id, ts, value,
-             SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS sid
-      FROM g
-    ),
-    sess AS (
-      SELECT user_id, MIN(ts) AS session_start, MAX(ts) AS session_end,
-             COUNT(*) AS n_events,
-             list_sum(list(value ORDER BY ts, event_id)) AS total_value
-      FROM s GROUP BY user_id, sid
-    ),
-    ranked AS (
-      SELECT sess.*,
-             ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY session_end DESC) AS rk
-      FROM sess
-    )
-    SELECT user_id, session_start, session_end, n_events, total_value
-    FROM ranked, mx
-    WHERE rk > 1
-       OR epoch_ms(session_end) + 1800000 < epoch_ms(m) - 7200000
-    """,
-)
-def stream_sessionize_stateful(spark, sf_dir):
-    """applyInPandasWithState custom sessionizer.
-
-    Emission semantics (what the oracle reproduces): a session is emitted
-    when the next event of the same user opens a new session (gap-closed —
-    with availableNow all gap-closed sessions emit in the data batch), or
-    when the event-time timeout fires: last_event_ms + gap_ms strictly below
-    the final watermark (max_event_ms − 2 h).  Each user's final session
-    inside the watermark horizon stays open in the state store — exactly the
-    rows the oracle's WHERE clause excludes.  Per-session ``total_value``
-    folds doubles in event-time order on both engines (pandas ts-sorted
-    accumulation ≡ DuckDB ``list_sum(list(... ORDER BY ts))``)."""
-    from pdtable_spark.streaming import run_to_memory, sessionize_with_state
-
-    _STREAM_SEQ[0] += 1
-    name = f"q_stream_sessions_{_STREAM_SEQ[0]}"
-    q_ = run_to_memory(sessionize_with_state(_events_stream(spark, sf_dir)), name)
-    q_.stop()
-    return spark.table(name)
-
-
-@q(
-    "stream_sliding_counts",
-    """
-    WITH panes AS (
-      SELECT e.event_type,
-             to_timestamp(
-               (CAST(floor(epoch(e.ts) / 900) AS BIGINT) - i) * 900
-             ) AS win_start
-      FROM events e, generate_series(0, 3) t(i)
-      WHERE (CAST(floor(epoch(e.ts) / 900) AS BIGINT) - i) * 900 + 3600 > epoch(e.ts)
-    )
-    SELECT CAST(win_start AS TIMESTAMP) AS win_start,
-           CAST(win_start AS TIMESTAMP) + INTERVAL 1 HOUR AS win_end,
-           event_type, COUNT(*) AS n
-    FROM panes GROUP BY 1, 2, 3
-    """,
-)
-def stream_sliding_counts_q(spark, sf_dir):
-    """Sliding-window counts (1 h window / 15 min slide) run incrementally —
-    each event lands in 4 panes; availableNow + complete output equals the
-    batch pane expansion, so the streaming operator gets a full oracle."""
-    from pdtable_spark.streaming import run_to_memory, stream_sliding_counts
-
-    _STREAM_SEQ[0] += 1
-    name = f"q_stream_sliding_{_STREAM_SEQ[0]}"
-    q_ = run_to_memory(
-        stream_sliding_counts(_events_stream(spark, sf_dir)), name, output_mode="complete"
-    )
-    q_.stop()
-    return spark.table(name)
-
-
-@q(
-    "stream_session_windows",
-    f"""
-    WITH g AS (
-      SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value,
-             CASE WHEN lag(ts) OVER w IS NULL
-                       OR epoch_us(CAST(ts AS TIMESTAMP)) - epoch_us(CAST(lag(ts) OVER w AS TIMESTAMP)) >= 1800000000
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    s AS (
-      SELECT user_id, ts, value,
-             SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts) AS sid
-      FROM g
-    )
-    SELECT user_id, MIN(ts) AS session_start,
-           MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-           COUNT(*) AS n_events, {_sql_dsum('value', 'total_value')}
-    FROM s GROUP BY user_id, sid
-    """,
-)
-def stream_session_windows_q(spark, sf_dir):
-    """Native ``session_window`` sessionization (30 min gap) run
-    incrementally.  Two windows merge only when they OVERLAP, so an event
-    exactly gap seconds after the previous one starts a NEW session (the
-    oracle's ``>=`` gap test); ``session_end`` is last event + gap.  This is
-    the JVM-state scale path; ``stream_sessionize_stateful`` is the custom
-    Pandas-state spelling of the same pipeline stage."""
-    from pdtable_spark.streaming import run_to_memory, stream_session_windows
-
-    _STREAM_SEQ[0] += 1
-    name = f"q_stream_sesswin_{_STREAM_SEQ[0]}"
-    q_ = run_to_memory(
-        stream_session_windows(_events_stream(spark, sf_dir)), name, output_mode="complete"
-    )
-    q_.stop()
-    return spark.table(name)
-
-
-@q(
-    "stream_dedup",
-    """
-    SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props
-    FROM events
-    """,
-)
-def stream_dedup_q(spark, sf_dir):
-    """Streaming exact dedup (``dropDuplicatesWithinWatermark`` on
-    event_id): the source directory holds the events file TWICE, and the
-    deduped stream must equal the single copy — watermark-bounded state, the
-    streaming analog of ``dedup_exact``."""
-    import shutil
-
-    from pdtable_spark.streaming import read_events_stream, run_to_memory, stream_dedup
-
-    d = scratch_dir("stream_dup")
-    shutil.copy(f"{sf_dir}/events.parquet", f"{d}/part-000.parquet")
-    shutil.copy(f"{sf_dir}/events.parquet", f"{d}/part-001.parquet")
-    _STREAM_SEQ[0] += 1
-    name = f"q_stream_dedup_{_STREAM_SEQ[0]}"
-    q_ = run_to_memory(stream_dedup(read_events_stream(spark, d)), name)
-    q_.stop()
-    return spark.table(name)
-
-
-# =============================================================================
-# Multimodal: opaque binary payloads + typed metadata (SURVEY §7.11)
-# =============================================================================
-#
-# The testdata has no blob table, so assets derive DETERMINISTICALLY from
-# `documents`: payload = UTF-8 bytes of the text, modality keyed on doc_id.
-# Codec calls are stubbed (operators/multimodal.py) with sha256-derived
-# fakes — the Spark plumbing (binary columns, mapInPandas batches, fan-out
-# schemas) is the real, graded part, and the fakes keep every step
-# DuckDB-oracle-checkable.
-
-def _assets(spark, sf_dir) -> DataFrame:
-    d = load(spark, sf_dir, "documents")
-    return d.select(
-        F.col("doc_id").alias("asset_id"),
-        F.element_at(
-            F.array(F.lit("image"), F.lit("audio"), F.lit("video")),
-            (F.col("doc_id") % 3 + 1).cast("int"),
-        ).alias("modality"),
-        F.lit(None).cast("string").alias("mime_type"),
-        F.encode("text", "UTF-8").alias("payload"),
-        F.lit(None).cast("string").alias("uri"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        (F.col("n_chars") / 100.0).alias("duration_s"),
-    )
-
-
-_SQL_ASSETS = """
-    SELECT doc_id AS asset_id,
-           (['image','audio','video'])[CAST(doc_id % 3 AS INT) + 1] AS modality,
-           encode(text) AS payload,
-           text AS payload_text,  -- sha256 in DuckDB is VARCHAR-only; UTF-8 bytes identical
-           n_chars / 100.0 AS duration_s
-    FROM documents
-"""
-
-
-@q(
-    "multimodal_asset_stats",
-    f"""
-    WITH assets AS ({_SQL_ASSETS})
-    SELECT modality, COUNT(*) AS n_assets,
-           CAST(SUM(octet_length(payload)) AS BIGINT) AS total_bytes,
-           CAST(SUM(CAST(duration_s AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_duration_s
-    FROM assets GROUP BY modality
-    """,
-)
-def multimodal_asset_stats(spark, sf_dir):
-    """Pure-JVM metadata aggregation over a binary-payload asset table —
-    no decode, no Python; blobs never leave Tungsten rows."""
-    a = _assets(spark, sf_dir)
-    return a.groupBy("modality").agg(
-        F.count(F.lit(1)).alias("n_assets"),
-        F.sum(F.octet_length("payload")).cast("bigint").alias("total_bytes"),
-        (F.sum(F.col("duration_s").cast("decimal(18,4)")).cast("double") / F.count(F.lit(1)))
-        .alias("avg_duration_s"),
-    )
-
-
-@q(
-    "multimodal_features",
-    f"""
-    WITH assets AS ({_SQL_ASSETS})
-    SELECT asset_id,
-           array_to_string(list_transform(generate_series(1, 16),
-               i -> CAST(CAST('0x' || substr(sha256(payload_text), 2*i - 1, 2) AS INT) AS VARCHAR)
-           ), ',') AS feature_sig,
-           16 AS feat_dim
-    FROM assets
-    """,
-)
-def multimodal_features(spark, sf_dir):
-    """Arrow-batched mapInPandas 'decode'→feature pipeline; the stubbed
-    codec emits the first 16 sha256 digest bytes, so the whole distributed
-    path is value-checked against DuckDB.
-
-    The feature vector is emitted as a canonical comma-joined string
-    (``feature_sig``) rather than a raw ``array<float>``: the driver's
-    pandas canonicalizer cannot sort list-valued cells (round-2 red row),
-    and the byte-valued features are integral so the int rendering is
-    exact in both engines."""
-    feats = multimodal.extract_features(_assets(spark, sf_dir), dim=16, fake=True)
-    return feats.select(
-        "asset_id",
-        F.array_join(
-            F.transform(F.col("feature"), lambda x: x.cast("int").cast("string")), ","
-        ).alias("feature_sig"),
-        F.col("feat_dim").cast("int").alias("feat_dim"),
-    )
-
-
-@q(
-    "multimodal_frame_sample",
-    f"""
-    WITH assets AS ({_SQL_ASSETS}),
-    vids AS (SELECT * FROM assets WHERE modality = 'video'),
-    frames AS (
-      SELECT asset_id,
-             unnest(generate_series(0, greatest(CAST(floor(duration_s) AS INT), 1) - 1)) AS frame_idx,
-             payload_text
-      FROM vids
-    )
-    SELECT asset_id, CAST(frame_idx AS INT) AS frame_idx,
-           sha256(payload_text || CAST(frame_idx AS VARCHAR)) AS frame_sha
-    FROM frames
-    """,
-)
-def multimodal_frame_sample(spark, sf_dir):
-    """Frame-sampling fan-out (one row per sampled frame) via mapInPandas
-    yielding more rows than consumed — the video-decode shape, fake codec."""
-    vids = _assets(spark, sf_dir).filter(F.col("modality") == "video")
-    frames = multimodal.sample_frames(vids, every_s=1.0, fake=True)
-    return frames.select(
-        "asset_id",
-        F.col("frame_idx").cast("int").alias("frame_idx"),
-        F.lower(F.hex("frame_payload")).alias("frame_sha"),
-    )
-
-
-# Explicit sequential-fold cosine (NOT list_cosine_similarity: DuckDB's
-# native kernel accumulates in a different order → last-ulp drift vs Spark's
-# aggregate() fold; list_sum over list_transform is element-order sequential
-# and matches Spark bit-for-bit).
-_COSINE_SQL = (
-    "list_sum(list_transform(generate_series(1, len(qa)), i -> qa[i]*ca[i]))"
-    " / sqrt(list_sum(list_transform(generate_series(1, len(qa)), i -> qa[i]*qa[i]))"
-    "      * list_sum(list_transform(generate_series(1, len(ca)), i -> ca[i]*ca[i])))"
-)
-
-
-@q(
-    "embedding_topk",
-    f"""
-    WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qa
-               FROM embeddings WHERE vec_id < 5),
-    c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ca FROM embeddings),
-    scored AS (
-      SELECT q.query_id, c.vec_id, {_COSINE_SQL} AS cosine_sim
-      FROM c CROSS JOIN q
-    ),
-    ranked AS (
-      SELECT query_id, vec_id, cosine_sim,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cosine_sim DESC, vec_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, vec_id, cosine_sim, rank FROM ranked WHERE rank <= 10
-    """,
-)
-def embedding_topk(spark, sf_dir):
-    """Brute-force cosine top-10 for 5 probe vectors — the exact baseline;
-    rhp_lsh_topk is the approximate scale path."""
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return similarity.cosine_topk(emb, queries, k=10)
-
-
-# --- Approximate ANN with FULL value oracles -------------------------------
-#
-# The LSH hyperplanes are generated by a seeded driver-side LCG
-# (similarity._lcg_hyperplanes) and travel into the Spark plan as column
-# literals — so the SAME float literals can be embedded in the oracle SQL at
-# import time, and DuckDB recomputes the identical buckets (both engines
-# fold the dot product sequentially: Spark `aggregate`, DuckDB
-# `list_sum(list_transform(...))`).  The approximate queries are therefore
-# exactly reproducible, not merely "rows-only approximate".
-
-
-def _sql_vec_list(vals) -> str:
-    return "[" + ", ".join(repr(float(v)) for v in vals) + "]"
-
-
-def _sql_dot_plane(vec: str, plane) -> str:
-    return (
-        f"list_sum(list_transform(generate_series(1, {len(plane)}), "
-        f"i -> {vec}[i] * ({_sql_vec_list(plane)})[i]))"
-    )
-
-
-def _sql_rhp_bucket(vec: str, planes) -> str:
-    bits = [
-        f"(CASE WHEN {_sql_dot_plane(vec, p)} >= 0 THEN {2 ** i} ELSE 0 END)"
-        for i, p in enumerate(planes)
-    ]
-    return "(" + " + ".join(bits) + ")"
-
-
-def _sql_cos(a: str, b: str, dim: int = 64) -> str:
-    gs = f"generate_series(1, {dim})"
-    return (
-        f"list_sum(list_transform({gs}, i -> {a}[i]*{b}[i]))"
-        f" / sqrt(list_sum(list_transform({gs}, i -> {a}[i]*{a}[i]))"
-        f" * list_sum(list_transform({gs}, i -> {b}[i]*{b}[i])))"
-    )
 
 
 def _sql_cos_ns(a: str, b: str, dim: int = 64) -> str:
@@ -2897,1399 +213,7 @@ def _sql_dist2(a: str, b: str, dim: int = 64) -> str:
     )
 
 
-def _sql_lsh_topk(
-    k: int, dim: int, bits_per_table: int, num_tables: int, seed: int,
-    corpus_where: str = "",
-) -> str:
-    tables = [
-        similarity._lcg_hyperplanes(dim, bits_per_table, seed + 1000 * t)
-        for t in range(num_tables)
-    ]
-    cb = "\n      UNION ALL ".join(
-        f"SELECT vec_id, {t} AS tbl, {_sql_rhp_bucket('ca', tables[t])} AS bkt FROM c"
-        for t in range(num_tables)
-    )
-    qb = "\n      UNION ALL ".join(
-        f"SELECT query_id, {t} AS tbl, {_sql_rhp_bucket('qa', tables[t])} AS bkt FROM q"
-        for t in range(num_tables)
-    )
-    return f"""
-    WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ca
-               FROM embeddings {corpus_where}),
-    q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qa
-          FROM embeddings WHERE vec_id < 5),
-    cb AS ({cb}),
-    qb AS ({qb}),
-    cand AS (
-      SELECT DISTINCT qb.query_id, cb.vec_id
-      FROM cb JOIN qb ON cb.tbl = qb.tbl AND cb.bkt = qb.bkt
-    ),
-    scored AS (
-      SELECT cand.query_id, cand.vec_id, {_sql_cos('qa', 'ca', dim)} AS cosine_sim
-      FROM cand JOIN c ON c.vec_id = cand.vec_id JOIN q ON q.query_id = cand.query_id
-    ),
-    ranked AS (
-      SELECT query_id, vec_id, cosine_sim,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cosine_sim DESC, vec_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, vec_id, cosine_sim, rank FROM ranked WHERE rank <= {k}
-    """
-
-
-@q("embedding_lsh_topk", _sql_lsh_topk(k=10, dim=64, bits_per_table=8, num_tables=4, seed=42))
-def embedding_lsh_topk(spark, sf_dir):
-    """RHP-LSH bucketed ANN top-k.  Deterministic seeded hyperplanes make
-    the approximate result exactly reproducible — the oracle recomputes the
-    same buckets from the same plane literals and must match value-for-value."""
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return similarity.rhp_lsh_topk(
-        emb, queries, k=10, dim=64, bits_per_table=8, num_tables=4, seed=42
-    )
-
-
 _IVF_CELLS = 16
-_IVF_NPROBE = 4
-
-
-def _sql_ivf_topk(k: int, dim: int = 64) -> str:
-    return f"""
-    WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ca FROM embeddings),
-    q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qa
-          FROM embeddings WHERE vec_id < 5),
-    cent AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS ce
-             FROM embeddings WHERE vec_id < {_IVF_CELLS}),
-    cd AS (
-      SELECT c.vec_id, cent.cid,
-             ROW_NUMBER() OVER (PARTITION BY c.vec_id
-                                ORDER BY {_sql_dist2('ca', 'ce', dim)}, cent.cid) AS rn
-      FROM c CROSS JOIN cent
-    ),
-    cassign AS (SELECT vec_id, cid AS cell FROM cd WHERE rn = 1),
-    qd AS (
-      SELECT q.query_id, cent.cid,
-             ROW_NUMBER() OVER (PARTITION BY q.query_id
-                                ORDER BY {_sql_dist2('qa', 'ce', dim)}, cent.cid) AS rn
-      FROM q CROSS JOIN cent
-    ),
-    qprobe AS (SELECT query_id, cid AS cell FROM qd WHERE rn <= {_IVF_NPROBE}),
-    scored AS (
-      SELECT qprobe.query_id, cassign.vec_id, {_sql_cos('qa', 'ca', dim)} AS cosine_sim
-      FROM cassign JOIN qprobe ON cassign.cell = qprobe.cell
-      JOIN c ON c.vec_id = cassign.vec_id
-      JOIN q ON q.query_id = qprobe.query_id
-    ),
-    ranked AS (
-      SELECT query_id, vec_id, cosine_sim,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cosine_sim DESC, vec_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, vec_id, cosine_sim, rank FROM ranked WHERE rank <= {k}
-    """
-
-
-@q("embedding_ivf_topk", _sql_ivf_topk(k=10))
-def embedding_ivf_topk(spark, sf_dir):
-    """IVF ANN top-k: cell assignment + nprobe probing + exact cosine
-    re-rank — the partition-pruned scale path for similarity search.
-
-    The suite runs IVF-flat with FIXED seed centroids (the first
-    ``_IVF_CELLS`` corpus vectors, FAISS-style sampled init without Lloyd
-    refinement) so cell assignment is deterministic and the oracle can
-    recompute it; production training uses pyspark.ml KMeans
-    (``centroids=None``)."""
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    cents = [
-        list(r["v"])
-        for r in emb.filter(F.col("vec_id") < _IVF_CELLS)
-        .orderBy("vec_id")
-        .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-        .collect()
-    ]
-    return similarity.ivf_topk(
-        emb, queries, k=10, n_cells=_IVF_CELLS, nprobe=_IVF_NPROBE, centroids=cents
-    )
-
-
-def _sql_near_dups(threshold: float, bits: int, seed: int, dim: int = 64) -> str:
-    planes = similarity._lcg_hyperplanes(dim, bits, seed)
-    return f"""
-    WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ca FROM embeddings),
-    b AS (SELECT vec_id, ca, {_sql_rhp_bucket('ca', planes)} AS bkt FROM c)
-    SELECT id_a, id_b, cosine_sim FROM (
-      SELECT x.vec_id AS id_a, y.vec_id AS id_b,
-             {_sql_cos_ns('x.ca', 'y.ca', dim)} AS cosine_sim
-      FROM b x JOIN b y ON x.bkt = y.bkt AND x.vec_id < y.vec_id
-    )
-    WHERE cosine_sim >= CAST({threshold!r} AS DOUBLE)
-    """
-
-
-@q("embedding_near_dups", _sql_near_dups(threshold=0.3, bits=6, seed=7))
-def embedding_near_dups_q(spark, sf_dir):
-    """Embedding-cosine near-duplicate pairs (bucketed, exact-verified).
-    Seeded hyperplanes → deterministic buckets → full value oracle.
-    Threshold tuned to the synthetic corpus (random-ish vectors: pairwise
-    cosine tops out ≈0.44)."""
-    emb = load(spark, sf_dir, "embeddings")
-    return similarity.embedding_near_dups(emb, threshold=0.3, bits=6, seed=7)
-
-
-# =============================================================================
-# Round-2b: completing the 22 TPC-H query families (adapted to the testdata
-# schema — no partsupp table, no shipmode/commit/receipt columns; each query
-# keeps the family's *shape*: the joins, correlation pattern, and agg form).
-# =============================================================================
-
-@q(
-    "q8_market_share",
-    f"""
-    SELECT CAST(year(o.o_orderdate) AS INT) AS o_year,
-           CAST(SUM(CAST(CASE WHEN ns.n_name = 'NATION_3'
-                     THEN l.l_extendedprice * (1.0 - l.l_discount) ELSE 0.0 END
-                     AS DECIMAL(18,6))) AS DOUBLE)
-             / CAST(SUM(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-                     AS DECIMAL(18,6))) AS DOUBLE) AS mkt_share,
-           {_sql_dsum('l.l_extendedprice * (1.0 - l.l_discount)', 'total_revenue', 'DECIMAL(18,6)')}
-    FROM lineitem l
-    JOIN orders o    ON l.l_orderkey = o.o_orderkey
-    JOIN customer c  ON o.o_custkey = c.c_custkey
-    JOIN nation nc   ON c.c_nationkey = nc.n_nationkey
-    JOIN region r    ON nc.n_regionkey = r.r_regionkey
-    JOIN supplier s  ON l.l_suppkey = s.s_suppkey
-    JOIN nation ns   ON s.s_nationkey = ns.n_nationkey
-    WHERE r.r_name = 'EUROPE'
-    GROUP BY year(o.o_orderdate)
-    """,
-)
-def q8_market_share(spark, sf_dir):
-    """TPC-H Q8 family: national market share — the revenue fraction supplied
-    by one nation, per year, among customers of one region.  Both nation legs
-    and region broadcast; the only shuffles are the orderkey fact join and the
-    tiny per-year aggregate.  Numerator/denominator are decimal-accumulated
-    then divided as doubles (order-independent on both engines)."""
-    l = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    s = load(spark, sf_dir, "supplier")
-    cust_dim = (
-        c.join(F.broadcast(n.alias("nc")), c.c_nationkey == F.col("nc.n_nationkey"))
-        .join(F.broadcast(r), F.col("nc.n_regionkey") == r.r_regionkey)
-        .select("c_custkey")
-    )
-    supp_dim = s.join(F.broadcast(n.alias("ns")), s.s_nationkey == F.col("ns.n_nationkey")).select(
-        "s_suppkey", F.col("ns.n_name").alias("supp_nation")
-    )
-    rev = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(cust_dim, o.o_custkey == cust_dim.c_custkey)
-        .join(supp_dim, l.l_suppkey == supp_dim.s_suppkey)
-        .groupBy(F.year("o_orderdate").cast("int").alias("o_year"))
-        .agg(
-            (
-                F.sum(
-                    F.when(F.col("supp_nation") == "NATION_3", rev)
-                    .otherwise(F.lit(0.0))
-                    .cast("decimal(18,6)")
-                ).cast("double")
-                / F.sum(rev.cast("decimal(18,6)")).cast("double")
-            ).alias("mkt_share"),
-            dsum(rev, "total_revenue", "decimal(18,6)"),
-        )
-    )
-
-
-@q(
-    "q11_part_value",
-    """
-    WITH pv AS (
-      SELECT l.l_partkey,
-             CAST(SUM(CAST(l.l_extendedprice * l.l_quantity AS DECIMAL(18,4))) AS DOUBLE)
-               AS part_value
-      FROM lineitem l
-      JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      JOIN nation n   ON s.s_nationkey = n.n_nationkey
-      WHERE n.n_regionkey = 3
-      GROUP BY l.l_partkey
-    )
-    SELECT l_partkey, part_value
-    FROM pv
-    WHERE part_value > (SELECT CAST(SUM(CAST(part_value AS DECIMAL(18,4))) AS DOUBLE)
-                               * 0.001 FROM pv)
-    """,
-)
-def q11_part_value(spark, sf_dir):
-    """TPC-H Q11 family: per-part inventory value restricted to one region's
-    suppliers, HAVING value above a fraction of the global total (correlated
-    scalar subquery → broadcast cross-join of a 1-row aggregate).  The
-    threshold compares doubles derived from exact decimal sums, so the
-    boundary is bit-identical across engines."""
-    l = load(spark, sf_dir, "lineitem")
-    s = load(spark, sf_dir, "supplier")
-    n = load(spark, sf_dir, "nation").filter(F.col("n_regionkey") == 3)
-    supp = s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey).select("s_suppkey")
-    pv = (
-        l.join(supp, l.l_suppkey == supp.s_suppkey)
-        .groupBy("l_partkey")
-        .agg(
-            F.sum((F.col("l_extendedprice") * F.col("l_quantity")).cast("decimal(18,4)"))
-            .cast("double")
-            .alias("part_value")
-        )
-    )
-    total = pv.agg(
-        (F.sum(F.col("part_value").cast("decimal(18,4)")).cast("double") * F.lit(0.001)).alias(
-            "threshold"
-        )
-    )
-    return pv.join(F.broadcast(total)).filter(F.col("part_value") > F.col("threshold")).select(
-        "l_partkey", "part_value"
-    )
-
-
-@q(
-    "q12_latency_priority",
-    """
-    SELECT CAST(date_diff('day', o.o_orderdate, l.l_shipdate) // 30 AS BIGINT)
-             AS latency_bucket,
-           CAST(SUM(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-           CAST(SUM(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                    THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-    FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    WHERE l.l_shipdate >= o.o_orderdate
-    GROUP BY 1
-    """,
-)
-def q12_latency_priority(spark, sf_dir):
-    """TPC-H Q12 family: shipping-latency buckets (the schema has no
-    l_shipmode, so the categorical axis is days-to-ship // 30) × conditional
-    priority counts.  Single orderkey shuffle join, then a tiny aggregate;
-    CASE counts are integers — no float ordering concerns at all."""
-    l = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders")
-    hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .filter(F.col("l_shipdate") >= F.col("o_orderdate"))
-        .groupBy(
-            F.floor(F.datediff(F.col("l_shipdate"), F.col("o_orderdate")) / 30)
-            .cast("long")
-            .alias("latency_bucket")
-        )
-        .agg(
-            F.sum(F.when(hi, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(hi, 0).otherwise(1)).alias("low_line_count"),
-        )
-    )
-
-
-@q(
-    "q16_supplier_part_counts",
-    """
-    SELECT p.p_brand, p.p_size, COUNT(DISTINCT l.l_suppkey) AS supplier_cnt
-    FROM lineitem l
-    JOIN part p ON p.p_partkey = l.l_partkey
-    WHERE p.p_brand <> 'Brand#1'
-      AND p.p_size IN (1, 2, 3, 4, 5)
-      AND l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0.0)
-    GROUP BY p.p_brand, p.p_size
-    """,
-)
-def q16_supplier_part_counts(spark, sf_dir):
-    """TPC-H Q16 family: distinct supplier counts per (brand, size), with a
-    NOT IN supplier exclusion (→ broadcast left-anti join; the reference's
-    partsupp is played by lineitem's (partkey, suppkey) pairs).  The distinct
-    agg is Spark's two-phase partial-distinct — one shuffle."""
-    l = load(spark, sf_dir, "lineitem")
-    p = load(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#1") & F.col("p_size").isin(1, 2, 3, 4, 5)
-    )
-    bad = load(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0.0).select("s_suppkey")
-    return (
-        l.join(bad, l.l_suppkey == bad.s_suppkey, "left_anti")
-        .join(p, l.l_partkey == p.p_partkey)
-        .groupBy("p_brand", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
-
-
-@q(
-    "q20_excess_suppliers",
-    """
-    WITH sq AS (
-      SELECT l_partkey, l_suppkey,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS supp_qty
-      FROM lineitem GROUP BY l_partkey, l_suppkey
-    ),
-    pt AS (
-      SELECT l_partkey,
-             CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS part_qty
-      FROM lineitem GROUP BY l_partkey
-    )
-    SELECT DISTINCT s.s_suppkey, s.s_name
-    FROM sq
-    JOIN pt ON sq.l_partkey = pt.l_partkey
-    JOIN supplier s ON sq.l_suppkey = s.s_suppkey
-    JOIN nation n   ON s.s_nationkey = n.n_nationkey
-    WHERE sq.supp_qty > 0.12 * pt.part_qty
-      AND n.n_regionkey = 2
-    """,
-)
-def q20_excess_suppliers(spark, sf_dir):
-    """TPC-H Q20 family: suppliers in one region who moved >12% of any
-    part's total quantity.  Both aggregates share the same grouping parent
-    (partkey), so the sq⋈pt join is AQE-broadcast after the agg shrinks the
-    pt side; the supplier/nation legs broadcast.  Quantities are
-    decimal-accumulated; the >0.12× comparison is double-deterministic."""
-    l = load(spark, sf_dir, "lineitem")
-    s = load(spark, sf_dir, "supplier")
-    n = load(spark, sf_dir, "nation").filter(F.col("n_regionkey") == 2)
-    dq = F.sum(F.col("l_quantity").cast("decimal(18,4)")).cast("double")
-    sq = l.groupBy("l_partkey", "l_suppkey").agg(dq.alias("supp_qty"))
-    pt = l.groupBy(F.col("l_partkey").alias("pt_partkey")).agg(dq.alias("part_qty"))
-    sup = s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey).select("s_suppkey", "s_name")
-    return (
-        sq.join(pt, sq.l_partkey == pt.pt_partkey)
-        .filter(F.col("supp_qty") > F.lit(0.12) * F.col("part_qty"))
-        .join(sup, sq.l_suppkey == sup.s_suppkey)
-        .select("s_suppkey", "s_name")
-        .distinct()
-    )
-
-
-@q(
-    "q21_late_sole_supplier",
-    """
-    WITH lo AS (
-      SELECT l.l_orderkey, l.l_suppkey,
-             (l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY) AS is_late
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-      WHERE o.o_orderstatus = 'F'
-    ),
-    per AS (
-      SELECT l_orderkey,
-             COUNT(DISTINCT l_suppkey) AS n_supp,
-             COUNT(DISTINCT CASE WHEN is_late THEN l_suppkey END) AS n_late
-      FROM lo GROUP BY l_orderkey
-    )
-    SELECT s.s_name, COUNT(DISTINCT lo.l_orderkey) AS numwait
-    FROM lo
-    JOIN per ON lo.l_orderkey = per.l_orderkey
-    JOIN supplier s ON lo.l_suppkey = s.s_suppkey
-    WHERE lo.is_late AND per.n_supp > 1 AND per.n_late = 1
-    GROUP BY s.s_name
-    ORDER BY numwait DESC, s_name
-    LIMIT 20
-    """,
-)
-def q21_late_sole_supplier(spark, sf_dir):
-    """TPC-H Q21 family: the EXISTS/NOT-EXISTS double-correlation —
-    finished orders with ≥2 suppliers where exactly ONE shipped late
-    (late := shipdate > orderdate + 60 days; the schema has no
-    commit/receipt dates).  Expressed as one per-order distinct-count
-    aggregate joined back to the late rows: two orderkey shuffles total,
-    no correlated subquery re-scans.  Counts only → fully deterministic."""
-    l = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    s = load(spark, sf_dir, "supplier")
-    lo = l.join(o, l.l_orderkey == o.o_orderkey).select(
-        "l_orderkey",
-        "l_suppkey",
-        (F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")).alias(
-            "is_late"
-        ),
-    )
-    per = lo.groupBy(F.col("l_orderkey").alias("p_orderkey")).agg(
-        F.countDistinct("l_suppkey").alias("n_supp"),
-        F.countDistinct(F.when(F.col("is_late"), F.col("l_suppkey"))).alias("n_late"),
-    )
-    return (
-        lo.filter(F.col("is_late"))
-        .join(per, (F.col("l_orderkey") == F.col("p_orderkey")))
-        .filter((F.col("n_supp") > 1) & (F.col("n_late") == 1))
-        .join(s, F.col("l_suppkey") == s.s_suppkey)
-        .groupBy("s_name")
-        .agg(F.countDistinct("l_orderkey").alias("numwait"))
-        .orderBy(F.desc("numwait"), F.asc("s_name"))
-        .limit(20)
-    )
-
-
-# =============================================================================
-# Round-2b: pipeline operators — TF-IDF, corpus n-grams, deterministic
-# sampling, per-source corpus stats, decimal-moment correlation.
-# =============================================================================
-
-from pdtable_spark.operators import sampling  # noqa: E402
-
-
-@q(
-    "text_tfidf_keywords",
-    f"""
-    WITH toks AS (
-      SELECT doc_id, unnest({_SQL_TOKS}) AS term FROM documents
-    ),
-    tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY doc_id, term),
-    dfx AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM toks GROUP BY term),
-    n AS (SELECT COUNT(*) AS n_docs FROM documents),
-    scored AS (
-      SELECT tf.doc_id, tf.term, tf.tf, dfx.df,
-             round(CAST(tf.tf AS DOUBLE)
-                   * ln(CAST(n.n_docs AS DOUBLE) / CAST(dfx.df AS DOUBLE)), 9) AS score
-      FROM tf JOIN dfx ON tf.term = dfx.term CROSS JOIN n
-    )
-    SELECT doc_id, term, tf, df, score, CAST(rank AS INT) AS rank FROM (
-      SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rank
-      FROM scored
-    ) WHERE rank <= 3
-    """,
-)
-def text_tfidf_keywords(spark, sf_dir):
-    """Per-doc top-3 TF-IDF keywords in round_digits=9 verification mode:
-    JVM Math.log and libm log differ in the last ulp, so the score is rounded
-    (and ranked) at 9 decimals on both engines.  Rank ties break on term
-    (total order).  Pins ``df_mode="window"`` — the opt-in small-corpus
-    fast path — so BOTH document-frequency spellings stay under the value
-    oracle (`text_tfidf_agg` covers the default)."""
-    return text.tfidf_keywords(
-        load(spark, sf_dir, "documents"), k=3, round_digits=9, df_mode="window"
-    )
-
-
-@q("text_tfidf_agg", None)  # oracle assigned below (shared with the window spelling)
-def text_tfidf_agg(spark, sf_dir):
-    """TF-IDF through the DEFAULT df_mode (= "aggregate" as of round 6):
-    the skew-safe document-frequency spelling a caller gets without reading
-    any docstring (see operators/text.py) — pinned to the same full value
-    oracle as the window spelling end-to-end."""
-    return text.tfidf_keywords(load(spark, sf_dir, "documents"), k=3, round_digits=9)
-
-
-# the two df spellings are semantically identical; the aggregate query
-# reuses the window query's oracle verbatim
-ORACLES["text_tfidf_agg"] = ORACLES["text_tfidf_keywords"]
-
-
-_SQL_BIGRAMS = (
-    f"list_distinct(CASE WHEN len({_SQL_TOKS}) >= 2 THEN "
-    f"list_transform(generate_series(1, greatest(len({_SQL_TOKS}) - 1, 1)), "
-    f"i -> array_to_string(list_slice({_SQL_TOKS}, i, i + 1), ' ')) "
-    f"ELSE [array_to_string({_SQL_TOKS}, ' ')] END)"
-)
-
-
-@q(
-    "text_top_bigrams",
-    f"""
-    SELECT ngram, COUNT(*) AS doc_freq FROM (
-      SELECT doc_id, unnest({_SQL_BIGRAMS}) AS ngram FROM documents
-    )
-    GROUP BY ngram
-    ORDER BY doc_freq DESC, ngram
-    LIMIT 50
-    """,
-)
-def text_top_bigrams(spark, sf_dir):
-    """Corpus top-50 bigrams by document frequency (the boilerplate-detection
-    scan of a crawl pipeline).  Per-doc dedup happens inside the shingle
-    expression, so the count after explode IS the doc frequency."""
-    return text.ngram_doc_freq(load(spark, sf_dir, "documents"), n=2, top=50)
-
-
-@q(
-    "pipeline_stratified_sample",
-    """
-    SELECT doc_id, lang,
-           CAST(CAST('0x' || substr(md5('mix1' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-                % 1000 AS INT) AS sample_bucket
-    FROM documents
-    WHERE CAST('0x' || substr(md5('mix1' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) % 1000
-          < CASE lang WHEN 'en' THEN 250 WHEN 'zh' THEN 900 ELSE 500 END
-    """,
-)
-def pipeline_stratified_sample(spark, sf_dir):
-    """Deterministic per-language sampling (data-mixing): en down to 25%,
-    zh up to 90%, everything else 50%.  Content-stable md5 buckets — the
-    same rows survive on every engine and partitioning; zero shuffles."""
-    d = load(spark, sf_dir, "documents")
-    return sampling.stratified_hash_sample(
-        d,
-        strata_col="lang",
-        rates={"en": 0.25, "zh": 0.9},
-        default_rate=0.5,
-        salt="mix1",
-    ).select("doc_id", "lang", "sample_bucket")
-
-
-@q(
-    "pipeline_source_stats",
-    f"""
-    WITH der AS (
-      SELECT doc_id, source,
-             CASE WHEN doc_id % 19 = 0
-                  THEN 'boilerplate notice from ' || source
-                  ELSE text END AS text
-      FROM documents
-    )
-    SELECT source,
-           COUNT(*) AS n_docs,
-           COUNT(DISTINCT md5(text)) AS n_unique,
-           CAST(COUNT(*) - COUNT(DISTINCT md5(text)) AS DOUBLE) / COUNT(*) AS dup_ratio,
-           {_sql_dsum(f'len({_SQL_TOKS})', 'total_tokens', 'DECIMAL(18,0)')},
-           CAST(SUM(CAST(len({_SQL_TOKS}) AS DECIMAL(18,0))) AS DOUBLE) / COUNT(*)
-             AS avg_tokens
-    FROM der
-    GROUP BY source
-    """,
-)
-def pipeline_source_stats(spark, sf_dir):
-    """Per-source corpus health: doc counts, exact-dup ratio (distinct md5
-    digests — 16 B/doc shuffle, never bodies), token totals.  The per-domain
-    triage report every crawl pipeline starts from."""
-    # the raw fixtures contain ZERO exact-duplicate texts (verified at
-    # every SF), so dup_ratio was a constant 0.0 and the dup-detection
-    # arithmetic dead under the oracle (round-8 constant-column audit):
-    # the %19 slice collapses onto a per-source boilerplate string —
-    # intra-source duplicate groups at every SF
-    d = load(spark, sf_dir, "documents").withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 19 == 0,
-            F.concat(F.lit("boilerplate notice from "), F.col("source")),
-        ).otherwise(F.col("text")),
-    )
-    n_tok = text.token_count(F.col("text")).cast("decimal(18,0)")
-    return d.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct(F.md5("text")).alias("n_unique"),
-        (
-            (F.count(F.lit(1)) - F.countDistinct(F.md5("text"))).cast("double")
-            / F.count(F.lit(1))
-        ).alias("dup_ratio"),
-        F.sum(n_tok).cast("double").alias("total_tokens"),
-        (F.sum(n_tok).cast("double") / F.count(F.lit(1))).alias("avg_tokens"),
-    )
-
-
-@q(
-    "q_corr_stats",
-    """
-    WITH m AS (
-      SELECT l_returnflag,
-             COUNT(*) AS n,
-             CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(19,4))) AS VARCHAR) AS DOUBLE) AS sx,
-             CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(19,4))) AS VARCHAR) AS DOUBLE) AS sy,
-             CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(19,4))
-                      * CAST(l_extendedprice AS DECIMAL(19,4))) AS VARCHAR) AS DOUBLE) AS sxy,
-             CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(19,4))
-                      * CAST(l_quantity AS DECIMAL(19,4))) AS VARCHAR) AS DOUBLE) AS sxx,
-             CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(19,4))
-                      * CAST(l_extendedprice AS DECIMAL(19,4))) AS VARCHAR) AS DOUBLE) AS syy
-      FROM lineitem GROUP BY l_returnflag
-    )
-    SELECT l_returnflag, n,
-           (n * sxy - sx * sy)
-             / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)) AS corr_qty_price,
-           sqrt((n * sxx - sx * sx) / (n * (n - 1))) AS stddev_qty
-    FROM m
-    """,
-)
-def q_corr_stats(spark, sf_dir):
-    """Correlation/stddev via decimal moment sums.  Native corr()/stddev()
-    aggregates are order-dependent in floating point (Welford updates), so
-    cross-engine bits differ; accumulating the five moments as exact
-    decimals and applying the closed formula to the resulting doubles is
-    bit-identical on both engines AND still one map-side-combined shuffle.
-    Products are formed decimal×decimal (NOT double-multiplied then cast):
-    rounding an arbitrary double product to a decimal can land on a .5
-    boundary where the engines' rounding disagrees; casting each factor
-    first is exact (currency/quantity values round unambiguously)."""
-    l = load(spark, sf_dir, "lineitem")
-    x = F.col("l_quantity").cast("decimal(14,4)")
-    y = F.col("l_extendedprice").cast("decimal(14,4)")
-    dm = lambda c: F.sum(c).cast("double")  # noqa: E731
-    m = l.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        dm(x).alias("sx"),
-        dm(y).alias("sy"),
-        dm(x * y).alias("sxy"),
-        dm(x * x).alias("sxx"),
-        dm(y * y).alias("syy"),
-    )
-    n, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-    sxy, sxx, syy = F.col("sxy"), F.col("sxx"), F.col("syy")
-    return m.select(
-        "l_returnflag",
-        "n",
-        ((n * sxy - sx * sy) / (F.sqrt(n * sxx - sx * sx) * F.sqrt(n * syy - sy * sy))).alias(
-            "corr_qty_price"
-        ),
-        F.sqrt((n * sxx - sx * sx) / (n * (n - F.lit(1)))).alias("stddev_qty"),
-    )
-
-
-# =============================================================================
-# Round-2b: product-analytics battery — funnel, cohort retention, quartiles,
-# robust outliers.  All integer/count-dominated → trivially deterministic.
-# =============================================================================
-
-@q(
-    "q_events_funnel",
-    """
-    WITH v AS (
-      SELECT user_id, MIN(ts) AS t FROM events WHERE event_type = 'view' GROUP BY user_id
-    ),
-    c AS (
-      SELECT e.user_id, MIN(e.ts) AS t
-      FROM events e JOIN v ON e.user_id = v.user_id AND e.ts > v.t
-      WHERE e.event_type = 'click' GROUP BY e.user_id
-    ),
-    p AS (
-      SELECT e.user_id, MIN(e.ts) AS t
-      FROM events e JOIN c ON e.user_id = c.user_id AND e.ts > c.t
-      WHERE e.event_type = 'purchase' GROUP BY e.user_id
-    )
-    SELECT (SELECT COUNT(*) FROM v) AS n_viewed,
-           (SELECT COUNT(*) FROM c) AS n_clicked,
-           (SELECT COUNT(*) FROM p) AS n_purchased
-    """,
-)
-def q_events_funnel(spark, sf_dir):
-    """Strict-ordering funnel (view → click after it → purchase after that):
-    per-stage first-timestamp aggregates, each stage a user-keyed join onto
-    the previous stage's min-ts.  Every stage shuffles on user_id, so AQE
-    reuses one exchange; stage outputs are user-count-sized (small) and the
-    final counts collapse to one row.  Min-of-timestamps + counts — no float
-    arithmetic anywhere."""
-    e = load(spark, sf_dir, "events")
-    v = (
-        e.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("vt"))
-    )
-    c = (
-        e.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(F.col("ts") > F.col("vt"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("ct"))
-    )
-    p = (
-        e.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(F.col("ts") > F.col("ct"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("pt"))
-    )
-    return (
-        v.agg(F.count(F.lit(1)).alias("n_viewed"))
-        .join(c.agg(F.count(F.lit(1)).alias("n_clicked")))
-        .join(p.agg(F.count(F.lit(1)).alias("n_purchased")))
-    )
-
-
-@q(
-    "q_user_retention",
-    """
-    WITH f AS (
-      SELECT user_id, date_trunc('week', MIN(ts)) AS cohort FROM events GROUP BY user_id
-    ),
-    a AS (
-      SELECT DISTINCT user_id, date_trunc('week', ts) AS wk FROM events
-    )
-    SELECT CAST(f.cohort AS TIMESTAMP) AS cohort_week,
-           CAST((epoch(a.wk) - epoch(f.cohort)) / 604800 AS BIGINT) AS week_offset,
-           COUNT(*) AS n_users
-    FROM a JOIN f ON a.user_id = f.user_id
-    GROUP BY 1, 2
-    """,
-)
-def q_user_retention(spark, sf_dir):
-    """Cohort retention: users grouped by first-seen week, counted in each
-    later activity week.  first-seen is a user-keyed min; activity weeks a
-    user-keyed distinct — the join is small×small after both aggregates.
-    Week offsets are exact integer divisions of epoch seconds (both engines
-    truncate weeks to Monday 00:00 UTC)."""
-    e = load(spark, sf_dir, "events")
-    f = e.groupBy("user_id").agg(F.date_trunc("week", F.min("ts")).alias("cohort"))
-    a = e.select("user_id", F.date_trunc("week", F.col("ts")).alias("wk")).distinct()
-    return (
-        a.join(f, "user_id")
-        .groupBy(
-            F.col("cohort").alias("cohort_week"),
-            ((F.unix_timestamp("wk") - F.unix_timestamp("cohort")) / 604800)
-            .cast("long")
-            .alias("week_offset"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_users"))
-    )
-
-
-@q(
-    "q_customer_quartiles",
-    f"""
-    WITH spend AS (
-      SELECT o_custkey AS c_custkey, {_sql_dsum('o_totalprice', 'spend')}
-      FROM orders GROUP BY o_custkey
-    )
-    SELECT c_custkey, spend,
-           CAST(ntile(4) OVER w AS INT) AS quartile,
-           percent_rank() OVER w AS pr
-    FROM spend
-    WINDOW w AS (ORDER BY spend DESC, c_custkey)
-    """,
-)
-def q_customer_quartiles(spark, sf_dir):
-    """Global ranking window (ntile + percent_rank) over per-customer spend.
-    A single-partition window is the one legitimately non-scalable shape —
-    at 100 TB you bucket by range first (range-partitioned sort) — but the
-    input here is post-aggregate (one row per customer), 1000× smaller than
-    the fact table, which is the standard way this stays viable.  Total
-    order via (spend DESC, custkey) tie-break; percent_rank is an exact
-    small-integer ratio."""
-    o = load(spark, sf_dir, "orders")
-    spend = o.groupBy(F.col("o_custkey").alias("c_custkey")).agg(
-        dsum("o_totalprice", "spend")
-    )
-    w = Window.orderBy(F.desc("spend"), F.asc("c_custkey"))
-    return spend.select(
-        "c_custkey",
-        "spend",
-        F.ntile(4).over(w).cast("int").alias("quartile"),
-        F.percent_rank().over(w).alias("pr"),
-    )
-
-
-@q(
-    "q_events_outliers",
-    """
-    WITH med AS (
-      SELECT event_type, quantile_cont(value, 0.5) AS median_value
-      FROM events GROUP BY event_type
-    ),
-    mad AS (
-      SELECT e.event_type, quantile_cont(abs(e.value - m.median_value), 0.5) AS mad_value
-      FROM events e JOIN med m ON e.event_type = m.event_type
-      GROUP BY e.event_type
-    )
-    SELECT e.event_type, COUNT(*) AS n,
-           COUNT(*) FILTER (WHERE abs(e.value - m.median_value) > 3.0 * d.mad_value)
-             AS n_outliers
-    FROM events e
-    JOIN med m ON e.event_type = m.event_type
-    JOIN mad d ON e.event_type = d.event_type
-    GROUP BY e.event_type
-    """,
-)
-def q_events_outliers(spark, sf_dir):
-    """Robust (median/MAD) outlier counts per event type — the skew-immune
-    anomaly screen.  Medians via interpolated percentile (identical linear
-    interpolation both engines); the two median tables are group-count-sized
-    → broadcast back onto the fact scan; outlier test is per-row IEEE
-    arithmetic.  Two percentile shuffles + one count shuffle total."""
-    e = load(spark, sf_dir, "events")
-    med = e.groupBy("event_type").agg(
-        F.expr("percentile(value, 0.5)").alias("median_value")
-    )
-    mad = (
-        e.join(F.broadcast(med), "event_type")
-        .groupBy("event_type")
-        .agg(
-            F.expr("percentile(abs(value - median_value), 0.5)").alias("mad_value")
-        )
-    )
-    return (
-        e.join(F.broadcast(med), "event_type")
-        .join(F.broadcast(mad), "event_type")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(
-                F.when(
-                    F.abs(F.col("value") - F.col("median_value"))
-                    > F.lit(3.0) * F.col("mad_value"),
-                    1,
-                )
-            ).alias("n_outliers"),
-        )
-    )
-
-
-@q(
-    "pipeline_pack_budget",
-    f"""
-    WITH t AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
-    meta AS (SELECT doc_id, toks, len(toks) AS L,
-                    1 + CAST(floor((greatest(len(toks) - 50, 0) + 39) / 40) AS INT) AS n
-             FROM t),
-    ch AS (SELECT doc_id, unnest(generate_series(0, n - 1)) AS chunk_idx, L
-           FROM meta),
-    chunks AS (
-      SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
-             CAST(least(L - chunk_idx*40, 50) AS BIGINT) AS chunk_n_tokens
-      FROM ch
-    )
-    SELECT doc_id, chunk_idx, chunk_n_tokens,
-           CAST(floor((SUM(chunk_n_tokens) OVER (ORDER BY doc_id, chunk_idx
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       - chunk_n_tokens) / 200.0) AS BIGINT) AS pack_id
-    FROM chunks
-    """,
-)
-def pipeline_pack_budget(spark, sf_dir):
-    """Chunk → token-budget sharding: 50-token chunks packed into ~200-token
-    trainer work units by running-total bucketing (a row never splits; packs
-    overhang by at most one row).  Integer cumsum over an explicit total
-    order — deterministic; see pack_budget's docstring for the global-window
-    scale note (shard by key at 100 TB)."""
-    d = load(spark, sf_dir, "documents")
-    chunks = text.chunk_counts(d, chunk_tokens=50, overlap=10)
-    # bounds from a column-pruned scan of the raw table (a superset of the
-    # chunk frame's doc_id domain — identical pack ids, see pack_budget):
-    # saves the bucketing pass over the tokenize lineage (r15)
-    b = d.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
-    return text.pack_budget(
-        chunks,
-        capacity=200,
-        order_cols=("doc_id", "chunk_idx"),
-        bounds=(b[0], b[1]),
-    )
-
-
-# =============================================================================
-# Round-2b: fuzzy matching, histograms, time-series interpolation.
-# =============================================================================
-
-from pdtable_spark.operators import fuzzy  # noqa: E402
-from pdtable_spark.operators.interpolate import interpolate_at  # noqa: E402
-
-
-@q(
-    "q_fuzzy_part_names",
-    """
-    WITH names AS (SELECT DISTINCT p_name FROM part)
-    SELECT a.p_name AS name_a, b.p_name AS name_b,
-           CAST(levenshtein(a.p_name, b.p_name) AS INT) AS dist
-    FROM names a JOIN names b
-      ON a.p_name < b.p_name
-     AND abs(length(a.p_name) - length(b.p_name)) <= 2
-    WHERE levenshtein(a.p_name, b.p_name) <= 2
-    """,
-)
-def q_fuzzy_part_names(spark, sf_dir):
-    """Fuzzy self-match: distinct part names within 2 edits of each other
-    (the catalog-cleanup / entity-resolution primitive).  Length-band
-    blocking replaces the oracle's all-pairs join — candidates only meet
-    inside a band, the levenshtein filter runs on band-mates (JVM codegen,
-    no UDF).  The distinct-names input is vocabulary-sized, so even the
-    exploded side stays tiny relative to the fact tables."""
-    names = load(spark, sf_dir, "part").select("p_name").distinct()
-    pairs = fuzzy.fuzzy_self_pairs(
-        names.withColumn("__id", F.col("p_name")), "p_name", "__id", max_dist=2
-    )
-    return pairs.select(
-        F.col("p_name_a").alias("name_a"), F.col("p_name_b").alias("name_b"), "dist"
-    )
-
-
-@q(
-    "q_price_histogram",
-    f"""
-    SELECT CAST(floor(p_retailprice / 10.0) AS BIGINT) AS bucket,
-           COUNT(*) AS n,
-           {_sql_dsum('p_retailprice', 'total_price')}
-    FROM part
-    GROUP BY 1
-    """,
-)
-def q_price_histogram(spark, sf_dir):
-    """Fixed-width histogram (the profiling primitive): bucket index is
-    per-row integer arithmetic, the aggregate one map-side-combined
-    shuffle on a small key domain."""
-    p = load(spark, sf_dir, "part")
-    return p.groupBy(
-        F.floor(F.col("p_retailprice") / 10.0).cast("long").alias("bucket")
-    ).agg(F.count(F.lit(1)).alias("n"), dsum("p_retailprice", "total_price"))
-
-
-@q(
-    "q_events_interpolate",
-    """
-    WITH v AS (SELECT user_id, ts, value FROM events WHERE event_type = 'view'),
-    p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-    pb AS (
-      SELECT p.event_id, p.user_id, p.ts,
-        (SELECT v.ts FROM v WHERE v.user_id = p.user_id AND v.ts <= p.ts
-          ORDER BY v.ts DESC LIMIT 1) AS prev_ts,
-        (SELECT v.value FROM v WHERE v.user_id = p.user_id AND v.ts <= p.ts
-          ORDER BY v.ts DESC LIMIT 1) AS prev_val,
-        (SELECT v.ts FROM v WHERE v.user_id = p.user_id AND v.ts > p.ts
-          ORDER BY v.ts ASC LIMIT 1) AS next_ts,
-        (SELECT v.value FROM v WHERE v.user_id = p.user_id AND v.ts > p.ts
-          ORDER BY v.ts ASC LIMIT 1) AS next_val
-      FROM p
-    )
-    SELECT event_id, user_id,
-           CASE WHEN prev_ts IS NULL AND next_ts IS NULL THEN NULL
-                WHEN prev_ts IS NULL THEN next_val
-                WHEN next_ts IS NULL THEN prev_val
-                ELSE prev_val + (next_val - prev_val) *
-                     (CAST(epoch_us(ts) - epoch_us(prev_ts) AS DOUBLE)
-                      / CAST(epoch_us(next_ts) - epoch_us(prev_ts) AS DOUBLE))
-           END AS interp_value
-    FROM pb
-    """,
-)
-def q_events_interpolate(spark, sf_dir):
-    """Linear interpolation of each user's 'view' value series at their
-    purchase timestamps (two as-of passes — ONE user_id shuffle — vs the
-    oracle's brute-force correlated min/max scans).  Microsecond deltas are
-    exact integers; the blend is one IEEE expression tree — deterministic
-    (view timestamps are unique per user in this dataset)."""
-    e = load(spark, sf_dir, "events")
-    views = e.filter(F.col("event_type") == "view").select("user_id", "ts", "value")
-    purchases = e.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    out = interpolate_at(views, purchases, on="ts", by="user_id", value_col="value")
-    return out.select("event_id", "user_id", "interp_value")
-
-
-@q(
-    "pipeline_weighted_sample",
-    """
-    SELECT doc_id, n_chars
-    FROM documents
-    WHERE CAST(CAST('0x' || substr(md5('w1' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-               % 100000 AS DOUBLE)
-          < least(1.0, CAST(n_chars AS DOUBLE) / 500.0) * 100000.0
-    """,
-)
-def pipeline_weighted_sample(spark, sf_dir):
-    """Importance resampling: acceptance probability proportional to doc
-    length (capped at 1) — longer docs kept preferentially, decided by a
-    content-stable hash so every engine/run keeps the same rows.  Zero
-    shuffles."""
-    d = load(spark, sf_dir, "documents")
-    w = F.least(F.lit(1.0), F.col("n_chars").cast("double") / 500.0)
-    return sampling.weighted_hash_sample(d, w, salt="w1").select("doc_id", "n_chars")
-
-
-@q(
-    "q_events_rolling",
-    """
-    SELECT event_id, user_id,
-           CAST(SUM(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE) AS rolling_sum_5,
-           COUNT(*) OVER w AS n_in_window
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)
-    """,
-)
-def q_events_rolling(spark, sf_dir):
-    """Rolling per-user feature (sum/count over the trailing 5 events) —
-    the online-feature-engineering primitive.  One user_id shuffle for the
-    window sort; decimal accumulation keeps the rolling sum
-    order-independent across engines; (ts, event_id) is a total order."""
-    e = load(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.asc("ts"), F.asc("event_id"))
-        .rowsBetween(-4, 0)
-    )
-    return e.select(
-        "event_id",
-        "user_id",
-        F.sum(F.col("value").cast("decimal(18,4)")).over(w).cast("double").alias("rolling_sum_5"),
-        F.count(F.lit(1)).over(w).alias("n_in_window"),
-    )
-
-
-@q(
-    "q_price_trend_by_brand",
-    """
-    WITH m AS (
-      SELECT p_brand,
-             COUNT(*) AS n,
-             CAST(CAST(SUM(CAST(p_size AS DECIMAL(19,4))) AS VARCHAR) AS DOUBLE) AS sx,
-             CAST(CAST(SUM(CAST(p_retailprice AS DECIMAL(19,4))) AS VARCHAR) AS DOUBLE) AS sy,
-             CAST(CAST(SUM(CAST(p_size AS DECIMAL(19,4))
-                      * CAST(p_retailprice AS DECIMAL(19,4))) AS VARCHAR) AS DOUBLE) AS sxy,
-             CAST(CAST(SUM(CAST(p_size AS DECIMAL(19,4))
-                      * CAST(p_size AS DECIMAL(19,4))) AS VARCHAR) AS DOUBLE) AS sxx
-      FROM part GROUP BY p_brand
-    )
-    SELECT p_brand, n,
-           (n * sxy - sx * sy) / (n * sxx - sx * sx) AS slope,
-           (sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n AS intercept
-    FROM m
-    """,
-)
-def q_price_trend_by_brand(spark, sf_dir):
-    """Per-group closed-form linear regression (price ~ size per brand) from
-    exact decimal moment sums — the grouped-ML primitive without any ML
-    runtime: one map-side-combined shuffle, deterministic across engines
-    (same moment technique as q_corr_stats; DuckDB decimal→double routed
-    via VARCHAR because its direct cast is not correctly rounded)."""
-    p = load(spark, sf_dir, "part")
-    x = F.col("p_size").cast("decimal(19,4)")
-    y = F.col("p_retailprice").cast("decimal(19,4)")
-    m = p.groupBy("p_brand").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).cast("double").alias("sx"),
-        F.sum(y).cast("double").alias("sy"),
-        F.sum(x * y).cast("double").alias("sxy"),
-        F.sum(x * x).cast("double").alias("sxx"),
-    )
-    n, sx, sy, sxy, sxx = (F.col(c) for c in ("n", "sx", "sy", "sxy", "sxx"))
-    slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    return m.select(
-        "p_brand",
-        "n",
-        slope.alias("slope"),
-        ((sy - slope * sx) / n).alias("intercept"),
-    )
-
-
-@q(
-    "stream_funnel_stateful",
-    """
-    WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type FROM events
-               WHERE event_type IN ('view', 'click', 'purchase')
-                 AND NOT (user_id % 7 = 0 AND event_type IN ('click', 'purchase'))
-                 AND NOT (user_id % 5 = 0 AND event_type = 'purchase')),
-    mx AS (SELECT MAX(ts) AS m FROM e),
-    u  AS (SELECT user_id, MAX(ts) AS last_ts FROM e GROUP BY user_id),
-    fv AS (SELECT user_id, MIN(ts) AS t FROM e WHERE event_type = 'view' GROUP BY user_id),
-    fc AS (SELECT e.user_id, MIN(e.ts) AS t
-           FROM e JOIN fv ON e.user_id = fv.user_id AND e.ts > fv.t
-           WHERE e.event_type = 'click' GROUP BY e.user_id),
-    fp AS (SELECT e.user_id, MIN(e.ts) AS t
-           FROM e JOIN fc ON e.user_id = fc.user_id AND e.ts > fc.t
-           WHERE e.event_type = 'purchase' GROUP BY e.user_id)
-    SELECT u.user_id,
-           CAST(CASE WHEN fv.t IS NULL THEN 0 ELSE 1 END
-                + CASE WHEN fc.t IS NULL THEN 0 ELSE 1 END
-                + CASE WHEN fp.t IS NULL THEN 0 ELSE 1 END AS INT) AS stage,
-           fv.t AS first_view, fc.t AS first_click, fp.t AS first_purchase
-    FROM u
-    LEFT JOIN fv ON u.user_id = fv.user_id
-    LEFT JOIN fc ON u.user_id = fc.user_id
-    LEFT JOIN fp ON u.user_id = fp.user_id
-    CROSS JOIN mx
-    WHERE epoch_ms(u.last_ts) + 86400000 < epoch_ms(mx.m) - 7200000
-    """,
-)
-def stream_funnel_stateful(spark, sf_dir):
-    """applyInPandasWithState conversion funnel — the streaming spelling of
-    ``q_events_funnel``, finalized per user when the watermark passes their
-    last view/click/purchase plus a 24 h horizon (timeout fires iff
-    last_ms + horizon_ms is strictly below max_event_ms − 2 h — users still
-    inside the horizon stay open in state; the oracle's WHERE excludes
-    exactly those).  Stages are computed over the full buffered event list
-    in event-time order, so batching order cannot change the answer."""
-    from pdtable_spark.streaming.stateful import funnel_with_state
-
-    _STREAM_SEQ[0] += 1
-    name = f"q_stream_funnel_{_STREAM_SEQ[0]}"
-    from pdtable_spark.streaming import run_to_memory
-
-    # derived stream: %7 users never click/purchase, %5 users never
-    # purchase — every fixture user who finalized did so at stage 3, so
-    # the partial-stage timeout emission (stages 1/2, NULL stage
-    # timestamps) was invisible to the oracle (round-8 constant-column
-    # audit); the slices make all three finalization shapes appear
-    ev = _events_stream(spark, sf_dir).filter(
-        ~((F.col("user_id") % 7 == 0)
-          & F.col("event_type").isin("click", "purchase"))
-        & ~((F.col("user_id") % 5 == 0) & (F.col("event_type") == "purchase"))
-    )
-    q_ = run_to_memory(funnel_with_state(ev), name)
-    q_.stop()
-    return spark.table(name)
-
-
-@q(
-    "q_discount_rank_ties",
-    """
-    SELECT l_orderkey, l_linenumber, l_discount,
-           CAST(rank()       OVER w AS INT) AS rnk,
-           CAST(dense_rank() OVER w AS INT) AS drnk
-    FROM lineitem
-    WHERE l_orderkey % 1000 = 0
-    WINDOW w AS (PARTITION BY l_orderkey ORDER BY l_discount DESC)
-    """,
-)
-def q_discount_rank_ties(spark, sf_dir):
-    """rank()/dense_rank() tie semantics (vs row_number's total order —
-    the one window family the suite didn't yet pin): discounts repeat
-    within an order, so ranks skip and dense ranks don't.  Deterministic
-    WITHOUT a tie-break because ties share the rank value by definition."""
-    l = load(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 1000 == 0)
-    w = Window.partitionBy("l_orderkey").orderBy(F.desc("l_discount"))
-    return l.select(
-        "l_orderkey",
-        "l_linenumber",
-        "l_discount",
-        F.rank().over(w).cast("int").alias("rnk"),
-        F.dense_rank().over(w).cast("int").alias("drnk"),
-    )
-
-
-@q(
-    "pipeline_mix_report",
-    f"""
-    WITH kept AS (
-      SELECT d.*
-      FROM documents d
-      WHERE d.doc_id = (SELECT MIN(d2.doc_id) FROM documents d2
-                        WHERE md5(d2.text) = md5(d.text))
-        AND CAST('0x' || substr(md5('mix1' || CAST(d.doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-              % 1000
-            < CASE d.lang WHEN 'en' THEN 250 WHEN 'zh' THEN 900 ELSE 500 END
-    ),
-    split AS (
-      SELECT *,
-             CASE WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT)
-                       % 100 < 90
-                  THEN 'train' ELSE 'val' END AS split
-      FROM kept
-    )
-    SELECT lang, split,
-           COUNT(*) AS n_docs,
-           CAST(SUM(CAST(len({_SQL_TOKS}) AS DECIMAL(18,0))) AS BIGINT) AS total_tokens
-    FROM split
-    GROUP BY lang, split
-    """,
-)
-def pipeline_mix_report(spark, sf_dir):
-    """The end-to-end mixing report a training run starts from: exact-dedup
-    (keep min doc_id per digest) → per-language stratified sampling →
-    hash split → per-(lang, split) doc/token totals.  Composes four
-    operators in one plan: the dedup semi-join is the only body-keyed
-    shuffle (on digests), sampling/splitting are scan-side expressions, and
-    the final rollup is a tiny two-key aggregate."""
-    d = load(spark, sf_dir, "documents")
-    kept = dedup.exact_dedup_keep_first(d)
-    sampled = sampling.stratified_hash_sample(
-        kept, strata_col="lang", rates={"en": 0.25, "zh": 0.9}, default_rate=0.5, salt="mix1"
-    )
-    split = text.hash_split(sampled, train_pct=90)
-    return split.groupBy("lang", "split").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(text.token_count(F.col("text")).cast("decimal(18,0)"))
-        .cast("long")
-        .alias("total_tokens"),
-    )
-
-
-@q(
-    "q_embedding_norms",
-    """
-    WITH n AS (
-      SELECT label,
-             sqrt(list_sum(list_transform(generate_series(1, 64),
-                  i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))))
-               AS nrm
-      FROM embeddings
-    )
-    SELECT label, COUNT(*) AS n_vecs,
-           CAST(SUM(CAST(floor(nrm * 1000000000.0) AS BIGINT)) AS DOUBLE)
-             / (1000000000.0 * COUNT(*)) AS mean_norm,
-           MAX(nrm) AS max_norm
-    FROM n GROUP BY label
-    """,
-)
-def q_embedding_norms(spark, sf_dir):
-    """Per-label embedding-norm profile (the vector-column health check).
-    Per-row norms are identical folds on both engines; their SUM is made
-    order-independent by integer quantization — floor(norm·1e9) summed as
-    exact BIGINTs — the pattern for aggregating arbitrary doubles where
-    decimal CASTs would themselves hit cross-engine rounding boundaries
-    (floor on the shared binary value is boundary-free)."""
-    emb = load(spark, sf_dir, "embeddings")
-    nrm = similarity.norm(F.transform("embedding", lambda x: x.cast("double")))
-    n = emb.select("label", nrm.alias("nrm"))
-    return n.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n_vecs"),
-        (
-            F.sum(F.floor(F.col("nrm") * 1e9).cast("long")).cast("double")
-            / (F.lit(1e9) * F.count(F.lit(1)))
-        ).alias("mean_norm"),
-        F.max("nrm").alias("max_norm"),
-    )
-
-
-@q(
-    "q_session_conversion",
-    """
-    WITH g AS (
-      SELECT user_id, ts, event_id, event_type,
-             CASE WHEN lag(ts) OVER w IS NULL
-                       OR date_diff('second', lag(ts) OVER w, ts) > 1800
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-      WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    s AS (
-      SELECT user_id, event_type,
-             SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS sid
-      FROM g
-    ),
-    sess AS (
-      SELECT user_id, sid,
-             MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS converted
-      FROM s GROUP BY user_id, sid
-    )
-    SELECT COUNT(*) AS n_sessions,
-           CAST(SUM(converted) AS BIGINT) AS n_converted,
-           CAST(SUM(converted) AS DOUBLE) / COUNT(*) AS conversion_rate
-    FROM sess
-    """,
-)
-def q_session_conversion(spark, sf_dir):
-    """Session-level conversion rate: gap-detected sessions (30-min), a
-    session converts if it contains a purchase.  Composition of the
-    sessionization trick with a per-session flag rollup — both window
-    passes and the session aggregate share ONE user_id shuffle; the final
-    global rollup is a single row.  Integer counts → exact."""
-    e = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("ts").over(w)
-    new_s = F.when(
-        prev.isNull() | ((F.unix_timestamp("ts") - F.unix_timestamp(prev)) > 1800), 1
-    ).otherwise(0)
-    sid = F.sum(new_s).over(
-        Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-    )
-    sess = (
-        e.select("user_id", "ts", "event_id", "event_type")
-        .withColumn("sid", sid)
-        .groupBy("user_id", "sid")
-        .agg(
-            F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
-                "converted"
-            )
-        )
-    )
-    return sess.agg(
-        F.count(F.lit(1)).alias("n_sessions"),
-        F.sum("converted").cast("long").alias("n_converted"),
-        (F.sum("converted").cast("double") / F.count(F.lit(1))).alias("conversion_rate"),
-    )
-
-
-@q(
-    "text_surprisal",
-    f"""
-    WITH toks AS (
-      SELECT doc_id, unnest({_SQL_TOKS}) AS term FROM documents
-    ),
-    freq AS (SELECT term, COUNT(*) AS cnt FROM toks GROUP BY term),
-    total AS (SELECT COUNT(*) AS n_total FROM toks),
-    scored AS (
-      SELECT t.doc_id,
-             CAST(floor(round(-ln(CAST(f.cnt AS DOUBLE) / CAST(x.n_total AS DOUBLE)), 9)
-                        * 1000000000.0) AS BIGINT) AS q_surprisal
-      FROM toks t JOIN freq f ON t.term = f.term CROSS JOIN total x
-    )
-    SELECT doc_id, COUNT(*) AS n_tokens,
-           CAST(SUM(q_surprisal) AS DOUBLE) / (1000000000.0 * COUNT(*))
-             AS mean_surprisal
-    FROM scored GROUP BY doc_id
-    """,
-)
-def text_surprisal(spark, sf_dir):
-    """Unigram surprisal score: mean −ln p(token) per document under the
-    corpus's own unigram distribution — the statistics-based quality signal
-    (gibberish and boilerplate sit at the distribution's tails).  Plan:
-    explode → term-keyed count (the vocabulary) joined back onto postings
-    (AQE-broadcast while the vocab fits) → per-doc rollup.  Cross-engine
-    determinism stacks both patterns: ln rounds at 9 decimals (JVM/libm
-    last-ulp), then the per-token values sum as quantized BIGINTs
-    (order-independent)."""
-    d = load(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(text.tokens(F.col("text"))).alias("term"))
-    freq = toks.groupBy(F.col("term").alias("f_term")).agg(F.count(F.lit(1)).alias("cnt"))
-    total = toks.agg(F.count(F.lit(1)).alias("n_total"))
-    q_surprisal = F.floor(
-        F.round(-F.log(F.col("cnt").cast("double") / F.col("n_total").cast("double")), 9)
-        * 1e9
-    ).cast("long")
-    scored = (
-        toks.join(freq, F.col("term") == F.col("f_term"))
-        .join(F.broadcast(total))
-        .select("doc_id", q_surprisal.alias("q_surprisal"))
-    )
-    return scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        (F.sum("q_surprisal").cast("double") / (F.lit(1e9) * F.count(F.lit(1)))).alias(
-            "mean_surprisal"
-        ),
-    )
-
-
-@q(
-    "pipeline_corpus_shuffle",
-    """
-    SELECT doc_id, md5('sh1' || CAST(doc_id AS VARCHAR)) AS shuffle_key
-    FROM documents
-    """,
-)
-def pipeline_corpus_shuffle(spark, sf_dir):
-    """Deterministic global corpus shuffle (decorrelate source/crawl order
-    before writing training shards): total order by md5(salt ‖ id), realized
-    as a range repartition + per-partition sort — no global window, no
-    single task.  The oracle verifies the permutation KEY per row (the
-    driver compares order-insensitively; order follows from the key)."""
-    from pdtable_spark.operators import sampling
-
-    d = load(spark, sf_dir, "documents")
-    return sampling.corpus_shuffle(d, salt="sh1").select("doc_id", "shuffle_key")
-
-
-@q(
-    "pipeline_length_buckets",
-    f"""
-    WITH t AS (
-      SELECT doc_id, CAST(len({_SQL_TOKS}) AS BIGINT) AS n_tokens FROM documents
-    )
-    SELECT CAST(floor(log2(CAST(n_tokens AS DOUBLE) + 1.0)) AS INT) AS len_bucket,
-           COUNT(*) AS n_docs,
-           CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-           MIN(n_tokens) AS min_tokens,
-           MAX(n_tokens) AS max_tokens
-    FROM t GROUP BY 1
-    """,
-)
-def pipeline_length_buckets(spark, sf_dir):
-    """Padding-efficiency batching profile: log2 length buckets (stable as
-    the corpus grows — quantile boundaries drift, log boundaries never
-    move) with per-bucket doc/token stats; one keyed aggregate with a
-    ~log2(max length)-row output."""
-    d = load(spark, sf_dir, "documents")
-    out = text.length_bucket_stats(d)
-    return out.select(
-        "len_bucket",
-        F.col("n_docs"),
-        F.col("total_tokens"),
-        F.col("min_tokens").cast("long").alias("min_tokens"),
-        F.col("max_tokens").cast("long").alias("max_tokens"),
-    )
 
 
 def _sql_band_index(num_hashes: int, bands: int) -> str:
@@ -4319,135 +243,6 @@ def _sql_band_index(num_hashes: int, bands: int) -> str:
     )"""
 
 
-@q(
-    "dedup_incremental",
-    f"""
-    WITH {_sql_band_index(16, 4)},
-    collided AS (
-      SELECT DISTINCT nb.doc_id
-      FROM bands nb JOIN bands cb
-        ON cb.band = nb.band AND cb.bucket = nb.bucket AND cb.doc_id % 2 = 0
-      WHERE nb.doc_id % 2 = 1
-    )
-    SELECT d.doc_id, d.source FROM documents d
-    WHERE d.doc_id % 2 = 1 AND d.doc_id NOT IN (SELECT doc_id FROM collided)
-    """,
-)
-def dedup_incremental(spark, sf_dir):
-    """Continuous-ingestion dedup: the corpus half (even doc_ids) is indexed
-    ONCE via band_buckets (the persistable LSH index); the new batch (odd
-    doc_ids) hashes only itself and semi-joins the index — no corpus
-    rescan, no all-pairs.  Survivors = new docs colliding in no band.
-    md5_60 mode so DuckDB reproduces bucket identities byte-for-byte."""
-    from pdtable_spark.operators import dedup
-
-    d = load(spark, sf_dir, "documents")
-    corpus = d.filter(F.col("doc_id") % 2 == 0)
-    new = d.filter(F.col("doc_id") % 2 == 1)
-    index = dedup.band_buckets(corpus, hash_fn="md5_60")
-    return dedup.incremental_dedup(new, index, hash_fn="md5_60").select(
-        "doc_id", "source"
-    )
-
-
-@q(
-    "dedup_keep_best",
-    None,  # placeholder; real SQL assigned below (wraps the clusters oracle)
-)
-def dedup_keep_best(spark, sf_dir):
-    """Quality-aware canonical selection: within each near-dup cluster keep
-    the longest document (n_chars; ties → smallest doc_id) — composition of
-    the cluster closure with a per-cluster max_by.  The curation policy
-    that replaces naive keep-first."""
-    from pdtable_spark.operators import dedup as _dedup
-
-    d = load(spark, sf_dir, "documents")
-    pairs = _dedup.ngram_jaccard_pairs(d, shingle_n=5, threshold=0.5).select(
-        "id_a", "id_b"
-    )
-    comp = _dedup.connected_components(pairs, d.select(F.col("doc_id").alias("id")))
-    kept = _dedup.keep_best_per_cluster(
-        d.select("doc_id", "source", "n_chars"), comp, quality_col="n_chars"
-    )
-    return kept.select(
-        "doc_id", "source", F.col("n_chars").cast("long").alias("n_chars"), "component"
-    )
-
-
-# the oracle wraps dedup_clusters' recursive-CTE closure (kept verbatim in
-# one place) with a per-component row_number over (n_chars DESC, doc_id ASC)
-# — the same lexicographic ordering the Spark window uses, exact for any id
-# range (a packed-double score would lose integer resolution past ~9e6 chars)
-ORACLES["dedup_keep_best"] = f"""
-    WITH clusters AS ({ORACLES["dedup_clusters"]}),
-    scored AS (
-      SELECT d.doc_id, d.source, CAST(d.n_chars AS BIGINT) AS n_chars,
-             c.component,
-             row_number() OVER (
-               PARTITION BY c.component
-               ORDER BY d.n_chars DESC, d.doc_id ASC
-             ) AS rn
-      FROM documents d JOIN clusters c ON c.doc_id = d.doc_id
-    )
-    SELECT doc_id, source, n_chars, component FROM scored WHERE rn = 1
-"""
-
-# leakage-safe split oracle: the clusters closure + the md5_60 bucket test
-# applied to the COMPONENT id (so a clique's members always agree)
-ORACLES["pipeline_leakage_safe_split"] = f"""
-    WITH clusters AS ({ORACLES["dedup_clusters"]})
-    SELECT d.doc_id, d.source, c.component,
-           CAST({_SQL_MD5_60.format(x="CAST(c.component AS VARCHAR)")} % 100
-                AS INT) AS split_bucket,
-           CASE WHEN {_SQL_MD5_60.format(x="CAST(c.component AS VARCHAR)")} % 100 < 90
-                THEN 'train' ELSE 'val' END AS split
-    FROM documents d JOIN clusters c ON c.doc_id = d.doc_id
-"""
-
-
-@q(
-    "dedup_incremental_verified",
-    f"""
-    WITH {_sql_band_index(16, 4)},
-    cand AS (
-      SELECT DISTINCT nb.doc_id AS new_id, cb.doc_id AS corpus_id
-      FROM bands nb JOIN bands cb
-        ON cb.band = nb.band AND cb.bucket = nb.bucket AND cb.doc_id % 2 = 0
-      WHERE nb.doc_id % 2 = 1
-    ),
-    dropped AS (
-      SELECT DISTINCT cand.new_id
-      FROM cand
-      JOIN base ba ON ba.doc_id = cand.new_id
-      JOIN base bb ON bb.doc_id = cand.corpus_id
-      WHERE CAST(len(list_intersect(ba.sh, bb.sh)) AS DOUBLE)
-              / CAST(len(ba.sh) + len(bb.sh) - len(list_intersect(ba.sh, bb.sh)) AS DOUBLE)
-            >= 0.5
-    )
-    SELECT d.doc_id, d.source FROM documents d
-    WHERE d.doc_id % 2 = 1 AND d.doc_id NOT IN (SELECT new_id FROM dropped)
-    """,
-)
-def dedup_incremental_verified(spark, sf_dir):
-    """Verified continuous-ingestion dedup: band collisions against the
-    persisted corpus index only NOMINATE (new, corpus) candidate pairs;
-    each is confirmed with exact Jaccard over persisted shingle sets
-    (shingle_store) before the new doc is dropped — the false-positive
-    drop rate of the collision-only mode goes to zero while the plan stays
-    corpus-rescan-free (only bucket-pruned candidate ids join the shingle
-    store).  md5_60 mode so DuckDB reproduces every stage."""
-    from pdtable_spark.operators import dedup
-
-    d = load(spark, sf_dir, "documents")
-    corpus = d.filter(F.col("doc_id") % 2 == 0)
-    new = d.filter(F.col("doc_id") % 2 == 1)
-    index = dedup.band_buckets(corpus, hash_fn="md5_60")
-    store = dedup.shingle_store(corpus, hash_fn="md5_60")
-    return dedup.incremental_dedup(
-        new, index, hash_fn="md5_60", verify_threshold=0.5, corpus_shingles=store
-    ).select("doc_id", "source")
-
-
 # --- Model-based quality filtering -----------------------------------------
 #
 # Weights are BINARY FRACTIONS (multiples of 2^-6) so per-document weight
@@ -4471,710 +266,9 @@ def _sql_clf_weights() -> str:
     )
 
 
-@q(
-    "text_classifier_filter",
-    f"""
-    WITH toks AS (
-      SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS term
-      FROM documents
-    ),
-    w(term, weight) AS (VALUES {_sql_clf_weights()}),
-    s AS (SELECT doc_id, SUM(weight) AS wsum FROM toks JOIN w USING (term) GROUP BY 1)
-    SELECT d.doc_id,
-           CAST({_CLF_BIAS!r} AS DOUBLE) + COALESCE(s.wsum, 0.0) AS clf_score,
-           (CAST({_CLF_BIAS!r} AS DOUBLE) + COALESCE(s.wsum, 0.0)) >= 0 AS keep
-    FROM documents d LEFT JOIN s USING (doc_id)
-    """,
-)
-def text_classifier_filter(spark, sf_dir):
-    """fastText-style linear quality classifier (the model-based filter of
-    public curation pipelines) via the zero-shuffle map-literal path: the
-    score is one per-row aggregate() fold over the token array — a pure
-    scan+project at any scale.  Binary-fraction weights make the fold
-    order-independent and bit-exact cross-engine; keep = score >= 0 (the
-    sigmoid is monotone, so the 0.5-probability cut IS the 0-score cut)."""
-    d = load(spark, sf_dir, "documents")
-    scored = text.classifier_score(d, _CLF_WEIGHTS, bias=_CLF_BIAS)
-    return scored.select(
-        "doc_id",
-        F.col("clf_score"),
-        (F.col("clf_score") >= 0).alias("keep"),
-    )
-
-
 # --- SemDeDup: cluster-then-prune semantic dedup ----------------------------
 
 _SEMDEDUP_THRESHOLD = 0.3
-
-
-def _sql_semantic_dedup(threshold: float, n_cells: int, dim: int = 64) -> str:
-    return f"""
-    WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ca FROM embeddings),
-    cent AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS ce
-             FROM embeddings WHERE vec_id < {n_cells}),
-    cd AS (
-      SELECT c.vec_id, cent.cid,
-             ROW_NUMBER() OVER (PARTITION BY c.vec_id
-                                ORDER BY {_sql_dist2('ca', 'ce', dim)}, cent.cid) AS rn
-      FROM c CROSS JOIN cent
-    ),
-    b AS (
-      SELECT c.vec_id, ca, cid AS cell
-      FROM c JOIN (SELECT vec_id, cid FROM cd WHERE rn = 1) a USING (vec_id)
-    ),
-    drops AS (
-      SELECT DISTINCT y.vec_id
-      FROM b x JOIN b y ON x.cell = y.cell AND x.vec_id < y.vec_id
-      WHERE {_sql_cos_ns('x.ca', 'y.ca', dim)} >= CAST({threshold!r} AS DOUBLE)
-    )
-    SELECT b.vec_id, CAST(b.cell AS INT) AS cell FROM b
-    WHERE b.vec_id NOT IN (SELECT vec_id FROM drops)
-    """
-
-
-@q(
-    "embedding_semantic_dedup",
-    _sql_semantic_dedup(_SEMDEDUP_THRESHOLD, _IVF_CELLS),
-)
-def embedding_semantic_dedup(spark, sf_dir):
-    """SemDeDup (cluster, then prune within cluster): nearest-centroid cell
-    assignment restricts the quadratic cosine comparison to cells; a vector
-    drops iff a smaller-id SAME-CELL vector is >= 0.3 cosine-similar.
-    Fixed seed centroids (first _IVF_CELLS corpus vectors, FAISS-style
-    sampled init) make assignment deterministic → full value oracle;
-    production uses KMeans centroids (centroids=None)."""
-    emb = load(spark, sf_dir, "embeddings")
-    cents = [
-        list(r["v"])
-        for r in emb.filter(F.col("vec_id") < _IVF_CELLS)
-        .orderBy("vec_id")
-        .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-        .collect()
-    ]
-    return similarity.semantic_dedup(
-        emb, cents, threshold=_SEMDEDUP_THRESHOLD
-    ).select("vec_id", F.col("cell").cast("int").alias("cell"))
-
-
-@q(
-    "stream_enriched_segments",
-    f"""
-    SELECT CAST(date_trunc('hour', e.ts) AS TIMESTAMP) AS hour, c.c_mktsegment,
-           COUNT(*) AS n, {_sql_dsum('e.value', 'total_value', 'DECIMAL(28,4)')}
-    FROM events e JOIN customer c ON e.user_id = c.c_custkey
-    GROUP BY 1, 2
-    """,
-)
-def stream_enriched_segments(spark, sf_dir):
-    """Stream-static enrichment: the event stream broadcast-joins the static
-    customer dimension per micro-batch (stateless join mode — no watermark
-    state for the dim side), then rolls up per (hour, mktsegment).  With
-    availableNow + complete output and decimal accumulation the streaming
-    result equals the batch join+grouping exactly → FULL value oracle."""
-    from pdtable_spark.streaming import run_to_memory, stream_enriched_segment_counts
-
-    _STREAM_SEQ[0] += 1
-    name = f"q_stream_enrich_{_STREAM_SEQ[0]}"
-    customers = load(spark, sf_dir, "customer")
-    q_ = run_to_memory(
-        stream_enriched_segment_counts(_events_stream(spark, sf_dir), customers),
-        name,
-        output_mode="complete",
-    )
-    q_.stop()
-    return spark.table(name)
-
-
-@q(
-    "embedding_lsh_filtered",
-    _sql_lsh_topk(
-        k=10, dim=64, bits_per_table=8, num_tables=4, seed=42,
-        corpus_where="WHERE label <= 5",
-    ),
-)
-def embedding_lsh_filtered(spark, sf_dir):
-    """Filtered ("hybrid") ANN: top-k restricted to candidates whose
-    metadata passes a predicate (here label <= 5).  The label travels IN the index
-    (ann_index metadata_cols), so the where= filter evaluates inside the
-    index scan — parquet row-group pushdown at serving time, no metadata
-    join.  Same seeded hyperplanes → full value oracle."""
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    idx = similarity.ann_index(emb, metadata_cols=["label"])
-    return similarity.ann_query(idx, queries, k=10, where=F.col("label") <= 5)
-
-
-@q(
-    "multimodal_dedup",
-    f"""
-    WITH assets AS ({_SQL_ASSETS}),
-    ingested AS (
-      SELECT asset_id, payload_text FROM assets
-      UNION ALL
-      SELECT asset_id + 1000000, payload_text FROM assets WHERE asset_id % 7 = 0
-    ),
-    h AS (SELECT asset_id, md5(payload_text) AS digest FROM ingested)
-    SELECT digest, COUNT(*) AS n_copies, MIN(asset_id) AS keep_id
-    FROM h GROUP BY digest HAVING COUNT(*) > 1
-    """,
-)
-def multimodal_dedup(spark, sf_dir):
-    """Exact byte-identical duplicate groups over opaque binary payloads —
-    only 16-byte digests shuffle, the media bytes stay put.  The input is
-    the asset table plus a re-ingested copy of every 7th asset (the
-    double-upload case), so duplicate groups exist by construction at any
-    SF.  (DuckDB's md5 is VARCHAR-only, so the oracle hashes the UTF-8
-    source text — the payload IS those bytes by construction.)"""
-    a = _assets(spark, sf_dir)
-    reingested = a.filter(F.col("asset_id") % 7 == 0).withColumn(
-        "asset_id", F.col("asset_id") + F.lit(1000000)
-    )
-    return multimodal.binary_dedup(a.unionByName(reingested))
-
-
-@q(
-    "pipeline_cluster_keywords",
-    f"""
-    WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ca FROM embeddings),
-    cent AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS ce
-             FROM embeddings WHERE vec_id < {_IVF_CELLS}),
-    cd AS (
-      SELECT c.vec_id, cent.cid,
-             ROW_NUMBER() OVER (PARTITION BY c.vec_id
-                                ORDER BY {_sql_dist2('ca', 'ce', 64)}, cent.cid) AS rn
-      FROM c CROSS JOIN cent
-    ),
-    asg AS (SELECT vec_id, cid AS cell FROM cd WHERE rn = 1),
-    toks AS (
-      SELECT a.cell, unnest(regexp_split_to_array(trim(lower(d.text)), '\\s+')) AS term
-      FROM documents d JOIN asg a ON a.vec_id = d.doc_id
-    ),
-    tc AS (SELECT cell, term, COUNT(*) AS n FROM toks GROUP BY 1, 2),
-    ranked AS (
-      SELECT cell, term, n,
-             ROW_NUMBER() OVER (PARTITION BY cell ORDER BY n DESC, term) AS rank
-      FROM tc
-    )
-    SELECT CAST(cell AS INT) AS cell, term, CAST(n AS BIGINT) AS n,
-           CAST(rank AS INT) AS rank
-    FROM ranked WHERE rank <= 5
-    """,
-)
-def pipeline_cluster_keywords(spark, sf_dir):
-    """Cross-modal composition: embedding-space clusters (ivf_index cell
-    assignment over seed centroids) joined back to the TEXT of their
-    member documents, then per-cluster top-5 terms by in-cluster count —
-    the "what is each cluster about" topic readout of a curation
-    pipeline.  One broadcast-literal assignment scan, one doc_id join,
-    one (cell, term) aggregate, one per-cell top-k window."""
-    emb = load(spark, sf_dir, "embeddings")
-    docs = load(spark, sf_dir, "documents")
-    cents = [
-        list(r["v"])
-        for r in emb.filter(F.col("vec_id") < _IVF_CELLS)
-        .orderBy("vec_id")
-        .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-        .collect()
-    ]
-    asg = similarity.ivf_index(emb, cents).select("vec_id", "cell")
-    toks = (
-        docs.join(asg, docs["doc_id"] == asg["vec_id"])
-        .select(F.col("cell"), F.explode(text.tokens(F.lower(F.col("text")))).alias("term"))
-    )
-    tc = toks.groupBy("cell", "term").agg(F.count(F.lit(1)).alias("n"))
-    w = Window.partitionBy("cell").orderBy(F.desc("n"), F.asc("term"))
-    return (
-        tc.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= 5)
-        .select(F.col("cell").cast("int").alias("cell"), "term", "n", "rank")
-    )
-
-
-def _recall_at_10(exact, approx):
-    """Shared recall@10 rollup for the ANN diagnostic trio: per query, how
-    many of the exact top-10 the approximate method recovered."""
-    hits = (
-        exact.alias("e")
-        .join(
-            approx.alias("l"),
-            (F.col("l.query_id") == F.col("e.query_id"))
-            & (F.col("l.vec_id") == F.col("e.vec_id")),
-            "left",
-        )
-        .groupBy(F.col("e.query_id").alias("query_id"))
-        .agg(F.count(F.col("l.vec_id")).alias("n_hits"))
-    )
-    return hits.select(
-        "query_id",
-        "n_hits",
-        (F.col("n_hits").cast("double") / F.lit(10.0)).alias("recall_at_10"),
-    )
-
-
-_RECALL_EXACT_SQL = f"""
-    WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qa
-               FROM embeddings WHERE vec_id < 5),
-    c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ca FROM embeddings),
-    scored AS (
-      SELECT q.query_id, c.vec_id, {_COSINE_SQL} AS cosine_sim
-      FROM c CROSS JOIN q
-    ),
-    ranked AS (
-      SELECT query_id, vec_id,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cosine_sim DESC, vec_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, vec_id FROM ranked WHERE rank <= 10
-"""
-
-
-@q(
-    "embedding_ann_recall",
-    f"""
-    WITH lsh AS (
-      SELECT query_id, vec_id
-      FROM ({_sql_lsh_topk(k=10, dim=64, bits_per_table=8, num_tables=4, seed=42)})
-    ),
-    exact AS ({_RECALL_EXACT_SQL}),
-    hits AS (
-      SELECT e.query_id, COUNT(l.vec_id) AS n_hits
-      FROM exact e LEFT JOIN lsh l
-        ON l.query_id = e.query_id AND l.vec_id = e.vec_id
-      GROUP BY e.query_id
-    )
-    SELECT query_id, CAST(n_hits AS BIGINT) AS n_hits,
-           CAST(n_hits AS DOUBLE) / 10.0 AS recall_at_10
-    FROM hits
-    """,
-)
-def embedding_ann_recall(spark, sf_dir):
-    """ANN quality diagnostic: recall@10 of the RHP-LSH path against the
-    exact brute-force baseline, per query — the measurement that decides
-    bits/tables tuning before pointing the index at 100 TB.  Both sides
-    are deterministic (seeded planes; total-order tie-breaks), so even
-    this meta-metric carries a full value oracle."""
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    lsh = similarity.rhp_lsh_topk(
-        emb, queries, k=10, dim=64, bits_per_table=8, num_tables=4, seed=42
-    ).select("query_id", "vec_id")
-    exact = similarity.cosine_topk(emb, queries, k=10).select("query_id", "vec_id")
-    return _recall_at_10(exact, lsh)
-
-
-def _sql_incremental_embedding_dedup(
-    threshold: float, dim: int, bits_per_table: int, num_tables: int, seed: int
-) -> str:
-    tables = [
-        similarity._lcg_hyperplanes(dim, bits_per_table, seed + 1000 * t)
-        for t in range(num_tables)
-    ]
-    cb = "\n      UNION ALL ".join(
-        f"SELECT vec_id, {t} AS tbl, {_sql_rhp_bucket('ca', tables[t])} AS bkt FROM corp"
-        for t in range(num_tables)
-    )
-    nb = "\n      UNION ALL ".join(
-        f"SELECT vec_id AS new_id, {t} AS tbl, {_sql_rhp_bucket('na', tables[t])} AS bkt FROM newb"
-        for t in range(num_tables)
-    )
-    return f"""
-    WITH corp AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ca
-                  FROM embeddings WHERE vec_id % 2 = 0),
-    newb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS na
-             FROM embeddings WHERE vec_id % 2 = 1),
-    cb AS ({cb}),
-    nb AS ({nb}),
-    cand AS (
-      SELECT DISTINCT nb.new_id, cb.vec_id
-      FROM cb JOIN nb ON cb.tbl = nb.tbl AND cb.bkt = nb.bkt
-    ),
-    dropped AS (
-      SELECT DISTINCT cand.new_id
-      FROM cand
-      JOIN corp ON corp.vec_id = cand.vec_id
-      JOIN newb ON newb.vec_id = cand.new_id
-      WHERE {_sql_cos('na', 'ca', dim)} >= CAST({threshold!r} AS DOUBLE)
-    )
-    SELECT n.vec_id, n.label FROM embeddings n
-    WHERE n.vec_id % 2 = 1 AND n.vec_id NOT IN (SELECT new_id FROM dropped)
-    """
-
-
-@q(
-    "embedding_incremental_dedup",
-    _sql_incremental_embedding_dedup(
-        threshold=0.3, dim=64, bits_per_table=8, num_tables=4, seed=42
-    ),
-)
-def embedding_incremental_dedup(spark, sf_dir):
-    """Continuous-ingestion embedding dedup: odd vec_ids play the new
-    ingest batch, even ids the persisted corpus ann_index; bucket
-    collisions nominate candidates, exact cosine >= 0.3 confirms the drop.
-    No corpus rescan — seeded planes give the full value oracle."""
-    emb = load(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") % 2 == 0)
-    new = emb.filter(F.col("vec_id") % 2 == 1)
-    idx = similarity.ann_index(corpus)
-    return similarity.incremental_embedding_dedup(new, idx, threshold=0.3).select(
-        "vec_id", "label"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Round-5 additions: normalized dedup, span dedup, temperature mixing, PQ ANN
-# ---------------------------------------------------------------------------
-
-
-@q(
-    "dedup_normalized",
-    """
-    SELECT md5(trim(regexp_replace(regexp_replace(lower(text),
-               '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))) AS norm_md5,
-           MIN(doc_id) AS keep_id,
-           CAST(COUNT(*) AS BIGINT) AS n_dups
-    FROM documents
-    GROUP BY 1
-    """,
-)
-def dedup_normalized(spark, sf_dir):
-    """Soft-exact dedup: documents identical up to case / punctuation /
-    whitespace collapse to one keeper (C4-style normalization pass).
-    Shuffle key is the 16-byte digest of the normalized form."""
-    docs = load(spark, sf_dir, "documents")
-    from pdtable_spark.operators.dedup import normalized_dedup
-
-    return normalized_dedup(docs)
-
-
-_SPAN_WORDS = 8
-
-_SQL_SPAN_DEDUP = f"""
-    WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\s+'), w -> w <> '') AS ws FROM documents),
-    w AS (
-      SELECT doc_id,
-             unnest(ws) AS word,
-             unnest(generate_series(1, len(ws))) AS pos
-      FROM t
-    ),
-    s AS (
-      SELECT doc_id, (pos - 1) // {_SPAN_WORDS} AS span_no,
-             string_agg(word, ' ' ORDER BY pos) AS span_text
-      FROM w
-      GROUP BY doc_id, (pos - 1) // {_SPAN_WORDS}
-    ),
-    k AS (
-      SELECT doc_id, span_no, span_text,
-             ROW_NUMBER() OVER (PARTITION BY span_text
-                                ORDER BY doc_id, span_no) AS rn
-      FROM s
-    ),
-    rebuilt AS (
-      SELECT doc_id, string_agg(span_text, ' ' ORDER BY span_no) AS clean_text,
-             COUNT(*) AS kept
-      FROM k WHERE rn = 1 GROUP BY doc_id
-    ),
-    tot AS (SELECT doc_id, COUNT(*) AS n_spans FROM s GROUP BY doc_id)
-    SELECT d.doc_id,
-           COALESCE(r.clean_text, '') AS clean_text,
-           CAST(t.n_spans AS BIGINT) AS n_spans,
-           CAST(t.n_spans - COALESCE(r.kept, 0) AS BIGINT) AS removed_spans
-    FROM documents d
-    JOIN tot t ON t.doc_id = d.doc_id
-    LEFT JOIN rebuilt r ON r.doc_id = d.doc_id
-    """
-
-
-@q("dedup_spans", _SQL_SPAN_DEDUP)
-def dedup_spans(spark, sf_dir):
-    """Duplicated-span removal (Lee et al. arXiv:2107.06499 re-expressed at
-    fixed word-chunk granularity): the globally-first occurrence of each
-    8-word span survives; later copies are deleted from their documents.
-    The oracle recomputes the identical keep rule (lexicographic-min
-    (doc_id, span_no) per span text) in SQL."""
-    docs = load(spark, sf_dir, "documents")
-    from pdtable_spark.operators.dedup import span_dedup
-
-    return span_dedup(docs, span_words=_SPAN_WORDS)
-
-
-_MIX_ALPHA = 0.7
-
-
-@q(
-    "pipeline_mixture_temperature",
-    f"""
-    WITH c AS (
-      SELECT source, COUNT(*) AS n_docs FROM documents
-      WHERE (doc_id % 97) % (CAST(substr(source, 4) AS INT) % 4 + 2) <> 0
-      GROUP BY source
-    ),
-    t AS (SELECT SUM(n_docs) AS total FROM c),
-    w AS (
-      SELECT source, n_docs,
-             CAST(n_docs AS DOUBLE) / CAST(total AS DOUBLE) AS share,
-             CAST(FLOOR(POW(CAST(n_docs AS DOUBLE) / CAST(total AS DOUBLE),
-                            {_MIX_ALPHA}) * 1e9 + 0.5) AS BIGINT) AS wq
-      FROM c CROSS JOIN t
-    ),
-    s AS (SELECT SUM(wq) AS wtot FROM w)
-    SELECT source, CAST(n_docs AS BIGINT) AS n_docs, share,
-           CAST(wq AS DOUBLE) / 1e9 AS temp_weight,
-           CAST(wq AS DOUBLE) / CAST(wtot AS DOUBLE) AS mix_share
-    FROM w CROSS JOIN s
-    """,
-)
-def pipeline_mixture_temperature(spark, sf_dir):
-    """Temperature-scaled domain mixing (p_i^0.7 renormalized, mT5-style):
-    upsamples small high-quality sources.  The pow() output is quantized
-    to 9 decimals as BIGINT before the renormalizing sum, so the weights
-    are bit-reproducible across engines (pow differs by ulps).
-
-    The fixture corpus is perfectly UNIFORM (equal docs per source), so
-    on the raw table every share/weight was one constant and the
-    upsampling math was invisible to the oracle (round-8
-    constant-column audit) — a deterministic source-dependent skew
-    (keep fraction varies by source number mod 4) gives four share
-    levels, so mix_share genuinely diverges from share."""
-    docs = load(spark, sf_dir, "documents")
-    # doc ids are round-robin-correlated with source, so a direct
-    # doc_id %% m test keeps all-or-none per source — mod 97 first
-    docs = docs.filter(
-        (F.col("doc_id") % 97)
-        % (F.substring(F.col("source"), 4, 10).cast("int") % 4 + 2)
-        != 0
-    )
-    from pdtable_spark.operators.sampling import mixture_temperature_weights
-
-    return mixture_temperature_weights(docs, alpha=_MIX_ALPHA)
-
-
-@q(
-    "pipeline_mixture_tokens",
-    f"""
-    WITH c AS (
-      SELECT source, COUNT(*) AS n_docs,
-             SUM(len({_SQL_TOKS})) AS total_weight
-      FROM documents GROUP BY source
-    ),
-    t AS (SELECT SUM(total_weight) AS total FROM c),
-    w AS (
-      SELECT source, n_docs, total_weight,
-             CAST(total_weight AS DOUBLE) / CAST(total AS DOUBLE) AS share,
-             CAST(FLOOR(POW(CAST(total_weight AS DOUBLE) / CAST(total AS DOUBLE),
-                            {_MIX_ALPHA}) * 1e9 + 0.5) AS BIGINT) AS wq
-      FROM c CROSS JOIN t
-    ),
-    s AS (SELECT SUM(wq) AS wtot FROM w)
-    SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
-           CAST(total_weight AS BIGINT) AS total_weight, share,
-           CAST(wq AS DOUBLE) / 1e9 AS temp_weight,
-           CAST(wq AS DOUBLE) / CAST(wtot AS DOUBLE) AS mix_share
-    FROM w CROSS JOIN s
-    """,
-)
-def pipeline_mixture_tokens(spark, sf_dir):
-    """TOKEN-budgeted temperature mixing: source shares are whitespace-token
-    sums, not document counts — the unit training mixtures are actually
-    specified in (a source of few huge documents is a bigger slice than
-    its doc count suggests).  Same bit-reproducible quantized-pow recipe
-    as the per-document spelling."""
-    docs = load(spark, sf_dir, "documents").withColumn(
-        "n_toks", F.size(text.tokens(F.col("text"))).cast("long")
-    )
-    from pdtable_spark.operators.sampling import mixture_temperature_weights
-
-    return mixture_temperature_weights(docs, alpha=_MIX_ALPHA, weight_col="n_toks")
-
-
-_PQ_CODES = 16
-_PQ_M = 8
-_PQ_DSUB = 8  # 64-dim / 8 subspaces
-
-
-def _sql_pq_topk(k: int) -> str:
-    dsub, m_max, n_codes = _PQ_DSUB, _PQ_M - 1, _PQ_CODES
-    d2 = (
-        f"CAST(FLOOR(list_sum(list_transform(generate_series(1, {dsub}), "
-        f"i -> (sv[i]-cvec[i])*(sv[i]-cvec[i]))) * 1e9) AS BIGINT)"
-    )
-    return f"""
-    WITH ms AS (SELECT unnest(generate_series(0, {m_max})) AS m),
-    cent AS (
-      SELECT ms.m, cb.vec_id AS code,
-             cb.ce[ms.m*{dsub}+1 : ms.m*{dsub}+{dsub}] AS cvec
-      FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ce
-            FROM embeddings ORDER BY vec_id LIMIT {n_codes}) cb
-      CROSS JOIN ms
-    ),
-    c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ca FROM embeddings),
-    sub AS (
-      SELECT vec_id, ms.m, ca[ms.m*{dsub}+1 : ms.m*{dsub}+{dsub}] AS sv
-      FROM c CROSS JOIN ms
-    ),
-    enc AS (
-      SELECT vec_id, m, code,
-             ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY dq, code) AS rn
-      FROM (SELECT s.vec_id, s.m, cent.code, {d2} AS dq
-            FROM sub s JOIN cent ON cent.m = s.m)
-    ),
-    codes AS (SELECT vec_id, m, code FROM enc WHERE rn = 1),
-    q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qa
-          FROM embeddings WHERE vec_id < 5),
-    qsub AS (
-      SELECT query_id, ms.m, qa[ms.m*{dsub}+1 : ms.m*{dsub}+{dsub}] AS sv
-      FROM q CROSS JOIN ms
-    ),
-    lut AS (
-      SELECT s.query_id, s.m, cent.code, {d2} AS dq
-      FROM qsub s JOIN cent ON cent.m = s.m
-    ),
-    scored AS (
-      SELECT lut.query_id, codes.vec_id, SUM(lut.dq) AS adist
-      FROM codes JOIN lut ON lut.m = codes.m AND lut.code = codes.code
-      GROUP BY lut.query_id, codes.vec_id
-    ),
-    ranked AS (
-      SELECT query_id, vec_id,
-             CAST(adist AS DOUBLE) / 1e9 AS approx_dist2,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY adist, vec_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, vec_id, approx_dist2, rank FROM ranked WHERE rank <= {k}
-    """
-
-
-@q("embedding_pq_topk", _sql_pq_topk(k=10))
-def embedding_pq_topk(spark, sf_dir):
-    """Product-quantization ANN: 64-dim float corpus compressed to 8
-    one-byte codes per vector (32× memory), queries answered by
-    asymmetric-distance table lookup over the compressed index.
-    Codebooks are the FAISS-style sampled init (first 16 corpus vectors,
-    id-ordered, split into 8 subspaces) so the oracle recomputes the
-    identical encoding; per-subspace distances are quantized to BIGINT
-    before the ADC sum (order-independent, engine-exact)."""
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    books = similarity.pq_codebooks(
-        emb, n_codes=_PQ_CODES, num_subspaces=_PQ_M
-    )
-    return similarity.pq_topk(
-        emb, queries, k=10, num_subspaces=_PQ_M, codebooks=books
-    )
-
-
-@q(
-    "q_user_skew_report",
-    """
-    WITH c AS (SELECT user_id, COUNT(*) AS n_rows FROM events GROUP BY user_id),
-    t AS (SELECT SUM(n_rows) AS total, COUNT(*) AS nkeys FROM c),
-    top AS (
-      SELECT user_id, n_rows,
-             ROW_NUMBER() OVER (ORDER BY n_rows DESC, user_id) AS rank
-      FROM c ORDER BY n_rows DESC, user_id LIMIT 20
-    )
-    SELECT user_id, CAST(n_rows AS BIGINT) AS n_rows,
-           CAST(n_rows AS DOUBLE) / CAST(total AS DOUBLE) AS share,
-           CAST(n_rows AS DOUBLE)
-             / (CAST(total AS DOUBLE) / CAST(nkeys AS DOUBLE)) AS skew_factor,
-           rank
-    FROM top CROSS JOIN t
-    """,
-)
-def q_user_skew_report(spark, sf_dir):
-    """Key-skew diagnostic over the event stream's user key: the 20
-    hottest users with corpus share and skew factor (count over
-    mean-rows-per-key) — the pre-join measurement that sizes a salt.
-    TakeOrdered top-k; totals are aggregates over the counts frame."""
-    ev = load(spark, sf_dir, "events")
-    from pdtable_spark.operators.skew import skew_report
-
-    return skew_report(ev, "user_id", n=20)
-
-
-_NOVELTY_N = 3
-
-_SQL_NGRAM_NOVELTY = f"""
-    WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS ws
-               FROM documents),
-    e AS (
-      SELECT doc_id, ws,
-             unnest(generate_series(1, len(ws) - {_NOVELTY_N - 1})) AS i
-      FROM t WHERE len(ws) >= {_NOVELTY_N}
-    ),
-    g AS (
-      SELECT DISTINCT doc_id,
-             md5(array_to_string(ws[i : i + {_NOVELTY_N - 1}], ' ')) AS ng
-      FROM e
-    ),
-    o AS (SELECT ng, MIN(doc_id) AS owner FROM g GROUP BY ng)
-    SELECT g.doc_id,
-           CAST(COUNT(*) AS BIGINT) AS n_ngrams,
-           CAST(SUM(CASE WHEN o.owner = g.doc_id THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_novel,
-           CAST(SUM(CASE WHEN o.owner = g.doc_id THEN 1 ELSE 0 END) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE) AS novelty
-    FROM g JOIN o ON o.ng = g.ng
-    GROUP BY g.doc_id
-    """
-
-
-@q("text_ngram_novelty", _SQL_NGRAM_NOVELTY)
-def text_ngram_novelty(spark, sf_dir):
-    """Trigram novelty per document (fraction of distinct trigrams first
-    seen in this doc) — the curation signal between exact and similarity
-    dedup.  Grams shuffle as md5 digests; owner = min doc_id."""
-    docs = load(spark, sf_dir, "documents")
-    return text.ngram_novelty(docs, n=_NOVELTY_N)
-
-
-_PQ_REFINE = 4
-
-
-@q(
-    "embedding_pq_refined",
-    f"""
-    WITH cand AS (
-      SELECT query_id, vec_id FROM ({_sql_pq_topk(k=10 * _PQ_REFINE)})
-    ),
-    c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ca FROM embeddings),
-    q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qa
-          FROM embeddings WHERE vec_id < 5),
-    scored AS (
-      SELECT cand.query_id, cand.vec_id, {_sql_cos('qa', 'ca', 64)} AS cosine_sim
-      FROM cand JOIN c ON c.vec_id = cand.vec_id
-      JOIN q ON q.query_id = cand.query_id
-    ),
-    ranked AS (
-      SELECT query_id, vec_id, cosine_sim,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cosine_sim DESC, vec_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, vec_id, cosine_sim, rank FROM ranked WHERE rank <= 10
-    """,
-)
-def embedding_pq_refined(spark, sf_dir):
-    """Two-stage PQ serving: ADC over the compressed index retrieves
-    k×4 candidates, exact cosine over their raw vectors ranks the final
-    top-10 — coarse recall from the 32×-smaller index, precision from a
-    bounded by-id fetch.  Both stages deterministic → full value oracle."""
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    books = similarity.pq_codebooks(emb, n_codes=_PQ_CODES, num_subspaces=_PQ_M)
-    idx = similarity.pq_encode(emb, books)
-    return similarity.pq_query_refined(
-        idx, queries, books, emb, k=10, refine_factor=_PQ_REFINE
-    )
 
 
 _GOPHER_MIN_WORDS = 20
@@ -5307,710 +401,159 @@ def _gopher_derived_col():
 _GOPHER_M = _sql_gopher_metrics("t.der")
 
 
-@q(
-    "text_gopher_rules",
-    f"""
-    WITH t AS (SELECT doc_id, {_GOPHER_DERIVED_SQL} AS der FROM documents),
-    m AS (
-      SELECT doc_id,
-             {_GOPHER_M['n_words']} AS n_words,
-             {_GOPHER_M['mean_word_len']} AS mean_word_len,
-             {_GOPHER_M['alpha_ratio']} AS alpha_ratio,
-             {_GOPHER_M['n_stopwords']} AS n_stopwords,
-             {_GOPHER_M['symbol_word_ratio']} AS symbol_word_ratio,
-             {_GOPHER_M['bullet_line_frac']} AS bullet_line_frac,
-             {_GOPHER_M['ellipsis_line_frac']} AS ellipsis_line_frac,
-             {_GOPHER_M['dup_line_frac']} AS dup_line_frac
-      FROM t
-    )
-    SELECT *,
-           CAST(pass_word_count = 1 AND pass_mean_word_len = 1
-                AND pass_alpha_ratio = 1 AND pass_stopwords = 1
-                AND pass_symbol_ratio = 1 AND pass_bullet_lines = 1
-                AND pass_ellipsis_lines = 1 AND pass_dup_lines = 1 AS INT)
-             AS pass_all
-    FROM (
-      SELECT *,
-             CAST(n_words >= {_GOPHER_MIN_WORDS} AND n_words <= 100000 AS INT)
-               AS pass_word_count,
-             CAST(mean_word_len >= 3.0 AND mean_word_len <= 10.0 AS INT)
-               AS pass_mean_word_len,
-             CAST(alpha_ratio >= 0.8 AS INT) AS pass_alpha_ratio,
-             CAST(n_stopwords >= 2 AS INT) AS pass_stopwords,
-             CAST(symbol_word_ratio <= 0.1 AS INT) AS pass_symbol_ratio,
-             CAST(bullet_line_frac <= 0.9 AS INT) AS pass_bullet_lines,
-             CAST(ellipsis_line_frac <= 0.3 AS INT) AS pass_ellipsis_lines,
-             CAST(dup_line_frac <= 0.3 AS INT) AS pass_dup_lines
-      FROM m
-    )
-    """,
-)
-def text_gopher_rules(spark, sf_dir):
-    """The full Gopher rule set (word-count / mean-word-length bounds,
-    alpha-word ratio, stopword hits, hash/ellipsis symbol-to-word ratio,
-    bullet- and ellipsis-line fractions, duplicate-line fraction) —
-    zero-shuffle column expressions; flags as 0/1 ints for the
-    cross-engine hash.  Runs on a deterministic multi-line variant of the
-    fixture (see ``_GOPHER_DERIVED_SQL``) so every line-level metric takes
-    non-trivial values under the oracle."""
-    # three doc slices pushed past a rule threshold each (see
-    # _gopher_derived_col), so the mean-word-length / bullet-line /
-    # duplicate-line FAIL paths are exercised by the value oracle
-    docs = load(spark, sf_dir, "documents").withColumn(
-        "text", _gopher_derived_col()
-    )
-    return text.gopher_quality_flags(docs, min_words=_GOPHER_MIN_WORDS)
+#: BM25 query terms for the staged retrieval query: one rare term
+#: ('dup' — df 25 of 500 docs at sf0.01) and two common ones, so idf
+#: spread is real.  Sorted-lowercase order matters: the per-term score
+#: sum is evaluated in this order on BOTH engines (IEEE-identical trees).
+R8_BM25_TERMS = ["dup", "scan", "vector"]
 
 
-def _sql_minhash_estimate(num_hashes: int, bands: int) -> str:
-    rpb = num_hashes // bands
-    h1 = _SQL_MD5_60.format(x="s")
-    h2 = _SQL_MD5_60.format(x="'x' || s")
-    return f"""
-    WITH base AS (SELECT doc_id, {_SQL_SHINGLES} AS sh FROM documents),
-    hp AS (
-      SELECT doc_id, sh,
-             list_transform(sh, s -> struct_pack(
-               h1 := {h1}, h2 := ({h2}) % {1 << 52})) AS pairs
-      FROM base
-    ),
-    mh AS (
-      SELECT doc_id, seed,
-             list_aggregate(list_transform(pairs, p -> (p.h1 + seed * p.h2) % {1 << 60}),
-                            'min') AS mh
-      FROM hp, (SELECT unnest(generate_series(0, {num_hashes - 1})) AS seed) seeds
-    ),
-    bands AS (
-      SELECT doc_id, seed // {rpb} AS band,
-             string_agg(CAST(mh AS VARCHAR), ',' ORDER BY seed) AS bucket
-      FROM mh GROUP BY doc_id, seed // {rpb}
-    ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-    ),
-    sigl AS (
-      SELECT doc_id, list(mh ORDER BY seed) AS sig FROM mh GROUP BY doc_id
-    ),
-    est AS (
-      SELECT cand.id_a, cand.id_b,
-             CAST(len(list_filter(
-               list_transform(generate_series(1, {num_hashes}),
-                              i -> sa.sig[i] = sb.sig[i]), x -> x)) AS DOUBLE)
-               / {float(num_hashes)} AS est_jaccard
-      FROM cand JOIN sigl sa ON sa.doc_id = cand.id_a
-      JOIN sigl sb ON sb.doc_id = cand.id_b
-    ),
-    ver AS (
-      SELECT est.id_a, est.id_b, est.est_jaccard,
-             CAST(len(list_intersect(ba.sh, bb.sh)) AS DOUBLE)
-               / (CAST(len(ba.sh) + len(bb.sh) AS DOUBLE)
-                  - CAST(len(list_intersect(ba.sh, bb.sh)) AS DOUBLE))
-               AS true_jaccard
-      FROM est
-      JOIN base ba ON ba.doc_id = est.id_a
-      JOIN base bb ON bb.doc_id = est.id_b
-    )
-    SELECT id_a, id_b, est_jaccard, true_jaccard,
-           abs(est_jaccard - true_jaccard) AS abs_err
-    FROM ver
-    """
-
-
-@q("minhash_estimate_error", _sql_minhash_estimate(num_hashes=16, bands=4))
-def minhash_estimate_error(spark, sf_dir):
-    """Sketch-quality diagnostic: per LSH candidate pair, the signature
-    estimate of Jaccard vs the exact shingle-set value and the absolute
-    error — tunes num_hashes/bands before 100 TB (the MinHash analog of
-    embedding_ann_recall).  md5_60 mode → full value oracle."""
-    d = load(spark, sf_dir, "documents")
-    return dedup.minhash_estimate_report(
-        d, num_hashes=16, bands=4, hash_fn="md5_60"
-    )
-
-
-@q(
-    "q_label_centroids",
-    """
-    WITH e AS (
-      SELECT label, CAST(embedding AS DOUBLE[]) AS ca FROM embeddings
-    ),
-    x AS (
-      SELECT label,
-             unnest(generate_series(1, 64)) AS dim,
-             unnest(ca) AS v
-      FROM e
-    )
-    SELECT label, CAST(dim AS INT) AS dim,
-           CAST(SUM(CAST(FLOOR(v * 1e9) AS BIGINT)) AS DOUBLE)
-             / CAST(COUNT(*) AS DOUBLE) / 1e9 AS centroid,
-           CAST(COUNT(*) AS BIGINT) AS n_members
-    FROM x GROUP BY label, dim
-    """,
-)
-def q_label_centroids(spark, sf_dir):
-    """Per-label centroid of the embedding corpus, one (label, dim) row per
-    coordinate — the class-prototype analytics behind SemDeDup cell
-    inspection and classifier calibration.  Per-dim values quantize to
-    BIGINT before the mean (order-independent sum → engine-exact).  One
-    64× explode + ONE (label, dim)-keyed shuffle with map-side partials —
-    scale-safe at any corpus size."""
-    emb = load(spark, sf_dir, "embeddings")
-    x = emb.select(
-        "label",
-        F.posexplode(F.transform("embedding", lambda v: v.cast("double"))).alias(
-            "dim0", "v"
-        ),
-    )
+def _sql_tf(term: str) -> str:
     return (
-        x.groupBy("label", (F.col("dim0") + 1).cast("int").alias("dim"))
-        .agg(
-            F.sum(F.floor(F.col("v") * 1e9).cast("long")).alias("__qs"),
-            F.count(F.lit(1)).alias("n_members"),
+        "CAST(len(list_filter(list_transform("
+        "regexp_split_to_array(trim(text), '\\s+'), x -> lower(x)), "
+        f"x -> x = '{term}')) AS BIGINT)"
+    )
+
+
+def _sql_bm25(terms, k: int) -> str:
+    terms = sorted({t.lower() for t in terms})
+    tf_cols = ",\n             ".join(
+        f"{_sql_tf(t)} AS tf{i}" for i, t in enumerate(terms)
+    )
+    df_cols = ", ".join(
+        f"SUM(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS df{i}"
+        for i in range(len(terms))
+    )
+    # mirrors operators/text.py::bm25_topk exactly: idf rounded
+    # binary-faithfully (floor(x*1e9 + 0.5)/1e9), k1=1.2, b=0.75, and the
+    # same left-associative expression shapes so doubles are bit-identical
+    def contrib(i: int) -> str:
+        idf = (
+            f"floor(ln(1.0 + (CAST(n AS DOUBLE) - CAST(df{i} AS DOUBLE) + 0.5)"
+            f" / (CAST(df{i} AS DOUBLE) + 0.5)) * 1000000000.0 + 0.5)"
+            " / 1000000000.0"
         )
-        .select(
-            "label",
-            "dim",
-            (
-                F.col("__qs").cast("double") / F.col("n_members").cast("double") / F.lit(1e9)
-            ).alias("centroid"),
-            "n_members",
+        denom = (
+            f"CAST(tf{i} AS DOUBLE) + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE)"
+            " / (CAST(dl_total AS DOUBLE) / CAST(n AS DOUBLE)))"
         )
-    )
+        return f"{idf} * CAST(tf{i} AS DOUBLE) * 2.2 / ({denom})"
 
-
-@q(
-    "pipeline_dataset_card",
-    f"""
-    WITH der AS (
-      SELECT doc_id, source, lang,
-             CASE WHEN doc_id % 19 = 0
-                  THEN 'boilerplate notice from ' || source
-                  ELSE text END AS text
-      FROM documents
-    ),
-    f AS (
-      SELECT source, lang, md5(text) AS h,
-             len(regexp_split_to_array(trim(text), '\\s+')) AS n_toks,
-             CASE WHEN {_sql_gopher_ok("text")} THEN 1 ELSE 0 END AS ok
-      FROM der
+    score = " + ".join(contrib(i) for i in range(len(terms)))
+    n_hits = " + ".join(
+        f"CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END" for i in range(len(terms))
     )
-    SELECT source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_toks) AS BIGINT) AS n_tokens,
-           CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
-           CAST(COUNT(DISTINCT h) AS BIGINT) AS n_distinct,
-           CAST(COUNT(*) - COUNT(DISTINCT h) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-             AS dup_rate,
-           CAST(SUM(ok) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS quality_pass_rate
-    FROM f GROUP BY source
-    """,
-)
-def pipeline_dataset_card(spark, sf_dir):
-    """The dataset card: per-source corpus summary — docs, tokens, language
-    count, exact-dup rate (via text digests), Gopher-rule pass rate — the
-    one-page answer to "what is in this corpus" before training on it.
-    One scan; the two exact distincts expand the aggregate (documented
-    cost at 100 TB — swap in approx_count_distinct when ±2% is fine)."""
-    # same %19 derived-dup slice as pipeline_source_stats: the raw
-    # fixtures have no exact-dup texts, so dup_rate was constant 0.0
-    docs = load(spark, sf_dir, "documents").withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 19 == 0,
-            F.concat(F.lit("boilerplate notice from "), F.col("source")),
-        ).otherwise(F.col("text")),
-    )
-    flags = text.gopher_quality_flags(docs, min_words=_GOPHER_MIN_WORDS).select(
-        "doc_id", "pass_all"
-    )
-    f = docs.join(flags, "doc_id").select(
-        "source",
-        "lang",
-        F.md5("text").alias("h"),
-        F.size(text.tokens(F.col("text"))).cast("long").alias("n_toks"),
-        F.col("pass_all").alias("ok"),
-    )
-    return f.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_toks").alias("n_tokens"),
-        F.countDistinct("lang").alias("n_langs"),
-        F.countDistinct("h").alias("n_distinct"),
-        (
-            (F.count(F.lit(1)) - F.countDistinct("h")).cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("dup_rate"),
-        (F.sum("ok").cast("double") / F.count(F.lit(1)).cast("double")).alias(
-            "quality_pass_rate"
-        ),
-    )
-
-
-_CDC_DIVISOR = 8
-
-_SQL_CDC_CHUNKS = f"""
-    WITH w AS (
+    return f"""
+    WITH base AS (
       SELECT doc_id,
-             unnest(regexp_split_to_array(trim(text), '\s+')) AS word,
-             unnest(generate_series(1, len(regexp_split_to_array(trim(text), '\s+')))) AS pos
+             CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS BIGINT) AS dl,
+             {tf_cols}
       FROM documents
     ),
-    g AS (
-      SELECT doc_id, pos, word,
-             concat_ws(' ',
-               lag(word, 2) OVER (PARTITION BY doc_id ORDER BY pos),
-               lag(word, 1) OVER (PARTITION BY doc_id ORDER BY pos),
-               word) AS gram
-      FROM w WHERE word <> ''
+    stats AS (
+      SELECT COUNT(*) AS n, SUM(dl) AS dl_total, {df_cols} FROM base
     ),
-    b AS (
-      SELECT doc_id, pos, word,
-             CASE WHEN ({_SQL_MD5_60.format(x='gram')}) % {_CDC_DIVISOR} = 0
-                  THEN 1 ELSE 0 END AS brk
-      FROM g
+    scored AS (
+      SELECT b.doc_id, b.dl,
+             CAST({n_hits} AS BIGINT) AS n_hits,
+             {score} AS score
+      FROM base b CROSS JOIN stats
     ),
-    c AS (
-      SELECT doc_id, pos, word,
-             COALESCE(SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS chunk_no
-      FROM b
+    topk AS (
+      SELECT * FROM scored WHERE n_hits > 0
+      ORDER BY score DESC, doc_id LIMIT {k}
     )
-    SELECT doc_id, CAST(chunk_no AS BIGINT) AS chunk_no,
-           string_agg(word, ' ' ORDER BY pos) AS chunk_text,
-           CAST(COUNT(*) AS BIGINT) AS n_words,
-           md5(string_agg(word, ' ' ORDER BY pos)) AS chunk_md5
-    FROM c GROUP BY doc_id, chunk_no
+    SELECT doc_id, dl, n_hits, score,
+           CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS INT) AS rank
+    FROM topk
     """
 
 
-@q("doc_cdc_chunks", _SQL_CDC_CHUNKS)
-def doc_cdc_chunks(spark, sf_dir):
-    """Content-defined chunking (rolling-hash boundaries, LBFS/rsync
-    family): identical content chunks identically at any offset — the
-    shift-robust complement to fixed-width span dedup.  Per-document lag
-    windows (bounded state), md5_60 boundary hash → full value oracle."""
-    docs = load(spark, sf_dir, "documents")
-    return text.cdc_chunks(docs, gram_words=3, divisor=_CDC_DIVISOR)
+R8_SQL_BM25 = _sql_bm25(R8_BM25_TERMS, k=25)
 
 
-@q(
-    "embedding_ivf_recall",
-    f"""
-    WITH ivf AS (
-      SELECT query_id, vec_id FROM ({_sql_ivf_topk(k=10)})
-    ),
-    exact AS ({_RECALL_EXACT_SQL}),
-    hits AS (
-      SELECT e.query_id, COUNT(l.vec_id) AS n_hits
-      FROM exact e LEFT JOIN ivf l
-        ON l.query_id = e.query_id AND l.vec_id = e.vec_id
-      GROUP BY e.query_id
+#: Embedding-space composition + cluster-balanced selection, under the
+#: suite's deterministic seed centroids (first _IVF_CELLS corpus vectors,
+#: FAISS-style sampled init — the semantic-dedup oracle pattern).
+
+
+_SQL_CLUSTER_ASSIGN = f"""
+    c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ca FROM embeddings),
+    cent AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS ce
+             FROM embeddings WHERE vec_id < {_IVF_CELLS}),
+    cd AS (
+      SELECT c.vec_id, cent.cid, {_sql_dist2('ca', 'ce')} AS d2,
+             ROW_NUMBER() OVER (PARTITION BY c.vec_id
+                                ORDER BY {_sql_dist2('ca', 'ce')}, cent.cid) AS rn
+      FROM c CROSS JOIN cent
     )
-    SELECT query_id, CAST(n_hits AS BIGINT) AS n_hits,
-           CAST(n_hits AS DOUBLE) / 10.0 AS recall_at_10
-    FROM hits
-    """,
-)
-def embedding_ivf_recall(spark, sf_dir):
-    """IVF recall@10 against the exact baseline, per query — the nprobe /
-    n_cells tuning measurement, completing the diagnostic pair with
-    `embedding_ann_recall` (LSH).  Deterministic seeded centroids → full
-    value oracle even for the meta-metric."""
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    cents = [
+"""
+
+
+def _seed_centroids(spark, sf_dir):
+    from pdtable_spark.queries.suite import load as _load
+
+    emb = _load(spark, sf_dir, "embeddings")
+    return emb, [
         list(r["v"])
         for r in emb.filter(F.col("vec_id") < _IVF_CELLS)
         .orderBy("vec_id")
         .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
         .collect()
     ]
-    ivf = similarity.ivf_topk(
-        emb, queries, k=10, n_cells=_IVF_CELLS, nprobe=_IVF_NPROBE, centroids=cents
-    ).select("query_id", "vec_id")
-    exact = similarity.cosine_topk(emb, queries, k=10).select("query_id", "vec_id")
-    return _recall_at_10(exact, ivf)
-
-
-_RECALL_EXACT_L2_SQL = f"""
-    WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qa
-               FROM embeddings WHERE vec_id < 5),
-    c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ca FROM embeddings),
-    scored AS (
-      SELECT q.query_id, c.vec_id, {_sql_dist2('qa', 'ca', 64)} AS d2
-      FROM c CROSS JOIN q
-    ),
-    ranked AS (
-      SELECT query_id, vec_id,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY d2, vec_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, vec_id FROM ranked WHERE rank <= 10
-"""
-
-
-@q(
-    "embedding_pq_recall",
-    f"""
-    WITH pq AS (
-      SELECT query_id, vec_id FROM ({_sql_pq_topk(k=10)})
-    ),
-    exact AS ({_RECALL_EXACT_L2_SQL}),
-    hits AS (
-      SELECT e.query_id, COUNT(l.vec_id) AS n_hits
-      FROM exact e LEFT JOIN pq l
-        ON l.query_id = e.query_id AND l.vec_id = e.vec_id
-      GROUP BY e.query_id
-    )
-    SELECT query_id, CAST(n_hits AS BIGINT) AS n_hits,
-           CAST(n_hits AS DOUBLE) / 10.0 AS recall_at_10
-    FROM hits
-    """,
-)
-def embedding_pq_recall(spark, sf_dir):
-    """PQ recall@10 against the exact squared-L2 baseline (PQ approximates
-    L2, so its baseline is L2 — the LSH/IVF twins use cosine), per query:
-    the n_codes / num_subspaces tuning measurement completing the ANN
-    diagnostic trio.  Deterministic codebooks → full value oracle."""
-    emb = load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    books = similarity.pq_codebooks(emb, n_codes=_PQ_CODES, num_subspaces=_PQ_M)
-    pq_hits = similarity.pq_topk(
-        emb, queries, k=10, num_subspaces=_PQ_M, codebooks=books
-    ).select("query_id", "vec_id")
-    qd = queries.select("query_id", similarity._as_double(F.col("embedding")).alias("qa"))
-    cd = emb.select("vec_id", similarity._as_double(F.col("embedding")).alias("ca"))
-    scored = cd.crossJoin(F.broadcast(qd)).select(
-        "query_id", "vec_id", similarity._dist2(F.col("qa"), F.col("ca")).alias("d2")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("d2"), F.asc("vec_id"))
-    exact = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select("query_id", "vec_id")
-    )
-    return _recall_at_10(exact, pq_hits)
-
-
-@q(
-    "stream_curate_survivors",
-    f"""
-    WITH {_sql_band_index(16, 4)},
-    ok AS (
-      SELECT doc_id, text, lang, source, n_chars FROM documents
-      WHERE {_sql_gopher_ok("text")}
-    ),
-    b1 AS (SELECT * FROM ok WHERE doc_id % 2 = 0),
-    k1 AS (SELECT md5(text) AS h, MIN(doc_id) AS keep_id FROM b1 GROUP BY 1),
-    s1 AS (SELECT b1.* FROM b1
-           JOIN k1 ON k1.keep_id = b1.doc_id AND k1.h = md5(b1.text)),
-    b2 AS (SELECT * FROM ok WHERE doc_id % 2 = 1),
-    k2 AS (SELECT md5(text) AS h, MIN(doc_id) AS keep_id FROM b2 GROUP BY 1),
-    c2 AS (SELECT b2.* FROM b2
-           JOIN k2 ON k2.keep_id = b2.doc_id AND k2.h = md5(b2.text)),
-    collided AS (
-      SELECT DISTINCT nb.doc_id
-      FROM bands nb JOIN bands cb
-        ON cb.band = nb.band AND cb.bucket = nb.bucket
-      WHERE nb.doc_id IN (SELECT doc_id FROM c2)
-        AND cb.doc_id IN (SELECT doc_id FROM s1)
-    ),
-    s2 AS (SELECT * FROM c2
-           WHERE doc_id NOT IN (SELECT doc_id FROM collided))
-    SELECT doc_id, lang, source, CAST(n_chars AS BIGINT) AS n_chars FROM s1
-    UNION ALL
-    SELECT doc_id, lang, source, CAST(n_chars AS BIGINT) AS n_chars FROM s2
-    """,
-)
-def stream_curate_survivors(spark, sf_dir):
-    """The continuous-curation pipeline under the correctness gate — now
-    genuinely MULTI-BATCH: the documents table lands as two sequential
-    ingestion waves (even doc_ids, then odd doc_ids — each a parallel
-    multi-file JSON write, no single-task staging), each picked up by its
-    own ``availableNow`` run of ``streaming.curate.curate_stream`` over
-    the SAME checkpoint.  Wave 1 curates against an empty index and
-    appends its survivors' band rows; wave 2's checkpoint resumes at the
-    new files only and its LSH stage dedups against wave 1's persisted
-    index — the sequential index-append semantics the oracle encodes
-    explicitly (batch-2 survivors = gopher-pass ∧ intra-batch keep-min ∧
-    no band collision with batch-1 survivors).  ``hash_fn="md5_60"`` so
-    DuckDB rebuilds identical bucket identities."""
-
-    from pdtable_spark.io.jsonl import read_jsonl_stream
-    from pdtable_spark.streaming.curate import curate_stream
-
-    d = scratch_dir("curate")
-    land, out = f"{d}/land", f"{d}/out"
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    for wave in (0, 1):
-        docs.filter(F.col("doc_id") % 2 == wave).write.json(land, mode="append")
-        curate_stream(
-            read_jsonl_stream(spark, land),
-            out,
-            f"{d}/index",
-            f"{d}/ckpt",
-            min_words=_GOPHER_MIN_WORDS,
-            min_stopwords=2,
-            hash_fn="md5_60",
-        )
-    survivors = spark.read.parquet(out)
-    return survivors.select(
-        "doc_id", "lang", "source", F.col("n_chars").cast("long").alias("n_chars")
-    )
-
-
-#: Derived corpus for the composite recipe: line structure only (sentence-
-#: terminated breaks from ' sort', bare breaks from ' merge') — no symbol
-#: injection, so the C4 brace/lorem flags stay all-pass and the gate is
-#: driven by the sentence minimum, the Gopher rules, and the blocklist.
-_RECIPE_DER_SQL = (
-    "replace(replace(replace(text, ' sort', '.' || chr(10)),"
-    " ' key', '.' || chr(10)), ' merge', chr(10))"
-)
-_RECIPE_KEPT_SQL = _C4_KEPT_SQL  # same C4 line-keep rule, over column `der`
-_RECIPE_MIN_WORDS = 10
-
-
-@q(
-    "pipeline_modern_recipe",
-    f"""
-    WITH t AS (SELECT doc_id, source, {_RECIPE_DER_SQL} AS der FROM documents),
-    c AS (
-      SELECT doc_id, source,
-             COALESCE(array_to_string({_RECIPE_KEPT_SQL}, chr(10)), '') AS clean,
-             CAST(len({_RECIPE_KEPT_SQL}) AS BIGINT) AS n_kept_lines,
-             len(regexp_extract_all(
-               COALESCE(array_to_string({_RECIPE_KEPT_SQL}, chr(10)), ''),
-               '[.!?]')) AS n_sent,
-             contains(lower(der), 'lorem ipsum') AS hl,
-             contains(der, '{{') AS hb
-      FROM t
-    ),
-    c4pass AS (SELECT * FROM c WHERE n_sent >= 3 AND NOT hl AND NOT hb),
-    gate AS (
-      SELECT * FROM c4pass
-      WHERE {_sql_gopher_ok("clean", min_words=_RECIPE_MIN_WORDS)}
-        AND len(list_filter(['window'],
-              b -> list_contains(
-                list_transform(regexp_split_to_array(trim(clean), '\\s+'),
-                               w -> lower(w)), b))) = 0
-    )
-    SELECT doc_id, source, n_kept_lines,
-           CAST(len(regexp_split_to_array(trim(clean), '\\s+')) AS BIGINT)
-             AS n_clean_tokens
-    FROM gate
-    """,
-)
-def pipeline_modern_recipe(spark, sf_dir):
-    """The operators composed as a production curation recipe: C4 line
-    cleaning (keep punctuation-terminated ≥5-word lines, page gates) →
-    the full Gopher rule set over the CLEANED text → term blocklist —
-    survivors with their cleaned-line/token accounting, every stage
-    value-oracled end-to-end through one SQL expression chain.  All three
-    three stages are scan-local column expressions; the composition pays
-    two id-keyed semi joins to apply the gate verdicts (fuse the stages
-    into one projection — or persist the cleaned frame — when the extra
-    scans matter at full corpus scale)."""
-    docs = load(spark, sf_dir, "documents")
-    der = docs.select(
-        "doc_id",
-        "source",
-        F.replace(
-            F.replace(
-                F.replace(F.col("text"), F.lit(" sort"), F.lit(".\n")),
-                F.lit(" key"),
-                F.lit(".\n"),
-            ),
-            F.lit(" merge"),
-            F.lit("\n"),
-        ).alias("text"),
-    )
-    surv = text.curate_recipe(
-        der,
-        passthrough=["source"],
-        min_words=_RECIPE_MIN_WORDS,
-        blocklist=["window"],
-    )
-    return surv.select(
-        "doc_id",
-        "source",
-        "n_kept_lines",
-        F.size(text.tokens(F.col("clean_text"))).cast("long").alias("n_clean_tokens"),
-    )
-
-
-#: Per-source score calibration, BOTH spellings in one frame: the exact
-#: window cume_dist and the crawl-scale approx (aggregated
-#: percentile_approx boundaries + broadcast join).  The approx oracle
-#: reproduces Spark bit-for-bit because (a) with per-source n below
-#: accuracy/2 (= 5000 rows at the default accuracy=10000) the GK sketch's
-#: rank error is < 0.5, i.e. exact, and Spark's selection is the value at
-#: rank ceil(p·n) with p·n computed in IEEE doubles — so the oracle
-#: spells the SAME double product (DuckDB shares the float artifacts,
-#: e.g. 0.28·25 = 7.000000000000001 → rank 8, verified identical at
-#: sf0.01 and sf1); and (b) the percentile fold is the same
-#: count-of-boundaries-≤-score array expression on both engines.
-_SQL_SCORE_CALIBRATION = """
-    WITH s AS (
-      SELECT doc_id, source, CAST(n_chars AS DOUBLE) AS score FROM documents
-    ),
-    r AS (
-      SELECT doc_id, source, score,
-             CAST(cume_dist() OVER (PARTITION BY source
-                                    ORDER BY score ASC, doc_id ASC) AS DOUBLE)
-               AS score_pct
-      FROM s
-    ),
-    ranked AS (
-      SELECT source, score AS v,
-             ROW_NUMBER() OVER (PARTITION BY source ORDER BY score) AS rk,
-             COUNT(*) OVER (PARTITION BY source) AS n
-      FROM s
-    ),
-    bounds AS (
-      SELECT source, list(v ORDER BY i) AS bl
-      FROM ranked
-      JOIN generate_series(1, 100) t(i)
-        ON rk = CAST(ceil((CAST(i AS DOUBLE) / 100.0) * n) AS BIGINT)
-      GROUP BY source
-    )
-    SELECT r.doc_id, r.source, r.score, r.score_pct,
-           CAST(len(list_filter(b.bl, x -> x <= r.score)) AS DOUBLE) / 100.0
-             AS score_pct_approx
-    FROM r JOIN bounds b ON b.source = r.source
-"""
-
-
-@q("pipeline_score_calibration", _SQL_SCORE_CALIBRATION)
-def pipeline_score_calibration(spark, sf_dir):
-    """Per-source percentile calibration of a quality proxy (n_chars) —
-    the "keep every source's top q%" primitive — in BOTH spellings
-    side-by-side: ``score_pct`` is the exact window cume_dist (one task
-    per source under WindowExec — fine to tens of millions of rows per
-    source), ``score_pct_approx`` the crawl-scale aggregate spelling
-    (per-source approx_percentile boundaries at 1/100 granularity,
-    broadcast-joined back; no task ever holds a whole source).  Both are
-    value-pinned so the scale-safe path cannot silently drift from the
-    exact contract it approximates; the oracle is exact while per-source
-    counts stay below accuracy/2 = 5000 (see _SQL_SCORE_CALIBRATION)."""
-    from pdtable_spark.operators.sampling import (
-        per_source_percentile,
-        per_source_percentile_approx,
-    )
-
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id", "source", F.col("n_chars").cast("double").alias("score")
-    )
-    exact = per_source_percentile(docs, "score")
-    return per_source_percentile_approx(exact, "score", out_col="score_pct_approx")
-
-
-#: The streaming drift monitor replayed as two deterministic ingest waves
-#: (the stream_curate_survivors staging pattern): reference = even
-#: doc_ids; wave 1 = doc_id%4==1 (batch 0), wave 2 = doc_id%4==3
-#: (batch 1), each its own availableNow run over one checkpoint.  The
-#: oracle rebuilds each batch's drift report with the t>0 share guard
-#: (an empty side defines shares as 0.0, exactly like the operator — a
-#: bare n/SUM(n) window would yield NULL shares on an empty wave).
-_SQL_STREAM_DRIFT = """
-    WITH waves(w, batch_id) AS (VALUES (1, 0), (3, 1)),
-    oc AS (
-      SELECT b.batch_id, CAST(source AS VARCHAR) AS value, COUNT(*) AS n_old
-      FROM documents CROSS JOIN waves b
-      WHERE (doc_id % 97) % 2 = 0 GROUP BY 1, 2
-    ),
-    nc AS (
-      SELECT b.batch_id, CAST(source AS VARCHAR) AS value, COUNT(*) AS n_new
-      FROM documents JOIN waves b ON (doc_id % 97) % 4 = b.w GROUP BY 1, 2
-    ),
-    j AS (
-      SELECT COALESCE(oc.batch_id, nc.batch_id) AS batch_id,
-             COALESCE(oc.value, nc.value) AS value,
-             COALESCE(oc.n_old, 0) AS n_old, COALESCE(nc.n_new, 0) AS n_new
-      FROM oc FULL OUTER JOIN nc
-        ON nc.batch_id = oc.batch_id AND nc.value IS NOT DISTINCT FROM oc.value
-    ),
-    m AS (
-      SELECT batch_id, value,
-             CAST(n_old AS BIGINT) AS n_old, CAST(n_new AS BIGINT) AS n_new,
-             CASE WHEN SUM(n_old) OVER (PARTITION BY batch_id) > 0
-                  THEN CAST(n_old AS DOUBLE)
-                       / CAST(SUM(n_old) OVER (PARTITION BY batch_id) AS DOUBLE)
-                  ELSE 0.0 END AS share_old,
-             CASE WHEN SUM(n_new) OVER (PARTITION BY batch_id) > 0
-                  THEN CAST(n_new AS DOUBLE)
-                       / CAST(SUM(n_new) OVER (PARTITION BY batch_id) AS DOUBLE)
-                  ELSE 0.0 END AS share_new
-      FROM j
-    ),
-    d AS (
-      SELECT *, share_new - share_old AS delta,
-             abs(share_new - share_old) AS abs_delta
-      FROM m
-    )
-    SELECT 'source' AS dim, value, n_old, n_new, share_old, share_new,
-           delta, abs_delta,
-           CAST(SUM(CAST(FLOOR(abs_delta * 1e9) AS BIGINT))
-                  OVER (PARTITION BY batch_id) AS DOUBLE) / 1e9 / 2.0 AS tvd,
-           CAST(batch_id AS BIGINT) AS batch_id
-    FROM d
-"""
-
-
-@q("stream_drift_monitor", _SQL_STREAM_DRIFT)
-def stream_drift_monitor(spark, sf_dir):
-    """The streaming observability path under the correctness gate: two
-    ingestion waves (doc_id%4==1, then %4==3 — parallel multi-file JSON
-    landings) each picked up by its own ``availableNow`` run of
-    ``streaming.monitor.drift_monitor_stream`` over ONE checkpoint, so
-    wave 2's run resumes at the new files only (batch_id 1) — per
-    micro-batch one drift row per reference-or-batch source value against
-    the pinned even-doc_id reference, with the quantized per-batch tvd
-    attached and landed exactly-once as a batch_id-partitioned dynamic
-    overwrite."""
-
-    from pdtable_spark.io.jsonl import read_jsonl_stream
-    from pdtable_spark.streaming.monitor import drift_monitor_stream
-
-    d = scratch_dir("drift")
-    land, out = f"{d}/land", f"{d}/out"
-    docs = load(spark, sf_dir, "documents")
-    # (doc_id %% 97) decorrelates the split from the fixtures' round-robin
-    # doc->source assignment: with plain %%2 / %%4 slices the reference held
-    # only EVEN sources and the waves only ODD ones — disjoint supports, so
-    # n_old was 0 on every row, tvd a constant 1.0, and the drift join's
-    # overlap path invisible to the oracle (round-8 constant-column audit)
-    ref = docs.filter((F.col("doc_id") % 97) % 2 == 0)
-    for wave in (1, 3):
-        docs.filter((F.col("doc_id") % 97) % 4 == wave).write.json(
-            land, mode="append"
-        )
-        drift_monitor_stream(
-            read_jsonl_stream(spark, land), ref, out, f"{d}/ckpt",
-            ["source"], quantize=1e9,
-        )
-    rep = spark.read.parquet(out)
-    return rep.select(
-        "dim", "value", "n_old", "n_new", "share_old", "share_new",
-        "delta", "abs_delta", "tvd", F.col("batch_id").cast("long").alias("batch_id"),
-    )
 
 
 # ---------------------------------------------------------------------------
-# The round-8 block (34 queries staged in r7, registered r8), the
-# round-9 block (13 queries staged in r8, registered r9) and the
-# round-10 block (6 queries staged in r9, registered r10) decorate
-# themselves into QUERIES/ORACLES on import — keep these imports LAST so
-# every name they reference above is already bound.
-from pdtable_spark.queries import suite_r8  # noqa: E402,F401
-from pdtable_spark.queries import pending_r9  # noqa: E402,F401
-from pdtable_spark.queries import pending_r10  # noqa: E402,F401
-from pdtable_spark.queries import pending_r11  # noqa: E402,F401
-from pdtable_spark.queries import pending_r12  # noqa: E402,F401
-from pdtable_spark.queries import pending_r13  # noqa: E402,F401
+# Bloom-filter decontamination screen (operators/dedup.py::bloom_decontaminate)
+# ---------------------------------------------------------------------------
+
+
+_BLOOM_BITS = 1 << 16
+
+
+def _sql_bloom_pos(expr: str, i: int) -> str:
+    # DuckDB spelling of operators/dedup.py::bloom_positions slot i
+    return (
+        f"(CAST('0x' || substr(md5({expr} || ':{i}'), 1, 15) AS BIGINT)"
+        f" % {_BLOOM_BITS})"
+    )
+
+
+_WINNOW_SEL_SQL = f"""
+    t AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
+    g AS (SELECT doc_id,
+            list_transform(generate_series(1, greatest(len(toks) - 4, 1)),
+              i -> CAST('0x' || substr(md5(array_to_string(
+                     list_slice(toks, i, i + 4), ' ')), 1, 15) AS BIGINT)) AS h
+          FROM t),
+    w AS (SELECT doc_id, h,
+                 unnest(generate_series(1, greatest(len(h) - 3, 1))) AS i
+          FROM g),
+    w2 AS (SELECT doc_id, CAST(i AS INT) AS i, list_slice(h, i, i + 3) AS s
+           FROM w),
+    sel AS (SELECT DISTINCT doc_id,
+              CAST(i + len(s) - list_position(list_reverse(s), list_min(s))
+                   AS INT) AS pos,
+              list_min(s) AS fp
+            FROM w2)
+"""
+
+
+_STALE_Q = "1000000.0"  # quantum literal: 1e6, spelled once for both engines
+
+
+_SHARD_N = 8
+
+
+# Registration: each family module decorates its builders with @q on import.
+# Imported last so every shared name above is bound; plain ``import`` keeps
+# this module's operator-module names (text, dedup, ...) unrebound.
+import pdtable_spark.queries.relational  # noqa: E402,F401
+import pdtable_spark.queries.text  # noqa: E402,F401
+import pdtable_spark.queries.dedup  # noqa: E402,F401
+import pdtable_spark.queries.embedding  # noqa: E402,F401
+import pdtable_spark.queries.multimodal  # noqa: E402,F401
+import pdtable_spark.queries.lake  # noqa: E402,F401
+import pdtable_spark.queries.stream  # noqa: E402,F401
+import pdtable_spark.queries.pipeline  # noqa: E402,F401

@@ -61,7 +61,6 @@ def main():
         "pipeline_apply_mixture",
         "pipeline_leakage_safe_split",
         "pipeline_source_overlap",
-        # round-5 additions
         "dedup_normalized",
         "dedup_spans",
         "embedding_pq_topk",
@@ -75,16 +74,12 @@ def main():
         "doc_cdc_chunks",
         "embedding_ivf_recall",
         "embedding_pq_recall",
-        # round-6 addition
         "text_repetition_signals",
         "text_c4_rules",
         "text_blocklist_filter",
         "pipeline_drift_report",
         "pipeline_modern_recipe",
-        # round-7 addition
         "pipeline_score_calibration",
-        # round-8 registered queries (queries/suite_r8.py — plan evidence
-        # started a round before registration, like their bench rows)
         "text_bm25_topk",
         "pipeline_dsir_weights",
         "hybrid_rrf_topk",
@@ -118,8 +113,6 @@ def main():
         "pipeline_snapshot_diff",
         "pipeline_facade_ops",
         "text_vocab_drift",
-        # the round-9 block (queries/pending_r9.py — registered r9; the
-        # stream_* entries excluded per the streaming policy above)
         "embedding_label_prop_agreement",
         "pipeline_novelty_ledger",
         "embedding_margin_mining",
@@ -131,17 +124,12 @@ def main():
         "pipeline_filter_agreement",
         "text_collocations",
         "embedding_gram",
-        # the round-10 block (queries/pending_r10.py — registered r10;
-        # stream_heavy_hitters excluded per the streaming policy above)
         "embedding_margin_agreement",
         "embedding_pca_project",
         "pipeline_heavy_hitters",
         "text_lm_bigram_nll",
         "multimodal_image_meta",
-        # registered round 10 (built in-round)
         "q22_idle_customers",
-        # round-11 staged queries (queries/pending_r11.py — plan evidence
-        # a round before registration, same policy)
         "pipeline_model_quality_recipe",
         "multimodal_audio_meta",
         "multimodal_video_meta",
@@ -149,11 +137,6 @@ def main():
         "lake_zorder_cells",
         "pipeline_column_profile",
         "pipeline_json_profile",
-        # (stream_gram_ledger / stream_upsert_changelog excluded per the
-        # streaming policy above)
-        # round-12 staged queries (queries/pending_r12.py;
-        # stream_ivf_staleness / stream_sample_ledger excluded per the
-        # streaming policy above)
         "lake_pruned_read",
         "embedding_ivf_staleness",
         "pipeline_json_extract_typed",
@@ -162,8 +145,6 @@ def main():
         "pipeline_json_profile_diff",
         "lake_pruned_semi_read",
         "lake_bloom_pruned_read",
-        # round-13 staged queries (queries/pending_r13.py;
-        # stream_upsert_vacuum excluded per the streaming policy)
         "pipeline_e2e_curation",
         "lake_zone_refresh_read",
         "lake_bloom_refresh_read",
@@ -171,8 +152,6 @@ def main():
         "dedup_skewed_buckets",
         "pipeline_shard_export",
         "q_bucketed_colocated_join",
-        # round-14 staged queries (queries/pending_r14.py;
-        # stream_upsert_hotkey excluded per the streaming policy)
         "pipeline_pack_partitioned",
         "lake_manifest_read",
         "lake_manifest_bloom_read",
@@ -192,15 +171,11 @@ def main():
         "|---|---|---|---|---|---|",
     ]
     from pdtable_spark.plans import plan_lint
-    from pdtable_spark.queries.pending_r14 import PENDING_R14
-
-    resolved = dict(QUERIES)
-    resolved.update({n: fn for n, (fn, _sql) in PENDING_R14.items()})
 
     details = []
     lint_errors = []
     for name in HEADLINE + extra:
-        df = resolved[name](spark, SF_DIR)
+        df = QUERIES[name](spark, SF_DIR)
         formatted = df._jdf.queryExecution().explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )

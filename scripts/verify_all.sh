@@ -17,10 +17,5 @@ python scripts/check_oracles.py /root/testdata/sf0.01 2>&1 | tail -3
 echo "=== 3/4 oracle sweep (partitions=7 — layout independence) ==="
 CHECK_ORACLES_PARTS=7 python scripts/check_oracles.py /root/testdata/sf0.01 2>&1 | tail -3
 
-echo "=== 3b/4 staged-query sweep (sf0.01) ==="
-# stderr stays OFF the pipe: Spark progress-bar \r fragments merged into
-# MATCH lines and undercounted them when 2>&1 fed the grep (round 9)
-python scripts/check_pending.py /root/testdata/sf0.01 2>/dev/null | grep -cE '^MATCH'
-
 echo "=== 4/4 bench (sf0.1) ==="
 python bench.py 2>/dev/null | grep -E '^\{'

@@ -12,7 +12,10 @@ arrival type is.
 
 import shutil
 
+import pytest
+
 from pdtable_spark.io.parquet import read_nanos_parquet
+from pdtable_spark.queries.suite import ORACLES, QUERIES
 from pdtable_spark.streaming import read_events_stream, run_to_memory
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -70,8 +73,6 @@ def test_stream_explicit_ntz_schema_is_cast_to_timestamp(spark, tmp_path):
     shutil.copy(f"{SF_DIR}/events.parquet", d / "part-000.parquet")
     batch = read_nanos_parquet(spark, f"{SF_DIR}/events.parquet")
     if dict(batch.dtypes)["ts"] != "timestamp_ntz":
-        import pytest
-
         pytest.skip("this Spark build does not surface TIMESTAMP(NANOS) as ntz")
     schema = StructType(
         [
@@ -90,15 +91,28 @@ def test_stream_explicit_ntz_schema_is_cast_to_timestamp(spark, tmp_path):
     assert got == want
 
 
-def test_query_registry_contract():
+@pytest.fixture(scope="module")
+def duck():
+    """DuckDB connection with a view per fixture table at sf0.001."""
+    import duckdb
+
+    from scripts.check_oracles import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
+        )
+    yield con
+    con.close()
+
+
+def test_query_registry_contract(duck):
     """The driver contract's invariants: every oracle belongs to a declared
     query, the rotation list is exactly the registry (no dups, no ghosts),
     and every oracle is syntactically valid DuckDB SQL against the fixture
     schemas (DESCRIBE — parse/bind only, no execution)."""
-    import duckdb
-
     import __spark_entry__ as entry
-    from pdtable_spark.queries.suite import ORACLES, QUERIES
 
     assert set(ORACLES) <= set(QUERIES)
     ordered = list(entry.queries())
@@ -106,198 +120,27 @@ def test_query_registry_contract():
     assert set(ordered) == set(QUERIES)
     assert list(entry.oracle_sql()) == [k for k in ordered if k in ORACLES]
 
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        )
     for name, sql in ORACLES.items():
         try:
-            con.execute(f"DESCRIBE {sql}")
+            duck.execute(f"DESCRIBE {sql}")
         except Exception as exc:  # pragma: no cover - the assert carries it
             raise AssertionError(f"oracle for {name!r} fails to parse: {exc}")
 
 
-def test_r8_block_oracles(spark):
-    """The round-8 block (staged r7, registered r8) stays under its own
-    correctness gate: each (spark, oracle) pair runs side-by-side at
-    sf0.001 — row count, column names, and order-insensitive values must
-    match (the driver's comparison, minus the pandas canonicalization
-    layer) — and every entry must actually be REGISTERED in the suite."""
-    import duckdb
-
-    from pdtable_spark.queries.suite import ORACLES, QUERIES
-    from pdtable_spark.queries.suite_r8 import R8_QUERIES
-
-    for name, (fn, sql) in R8_QUERIES.items():
-        assert QUERIES.get(name) is fn, f"{name} not registered"
-        assert ORACLES.get(name) == sql, f"{name} oracle not registered"
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        )
-    _oracle_pair_gate(spark, con, R8_QUERIES)
-
-
-def test_pending_r9_oracles(spark):
-    """The round-9 block (staged r8, registered r9) stays under its own
-    correctness gate: each (spark, oracle) pair runs side-by-side at
-    sf0.001 — and every entry must actually be REGISTERED in the suite
-    (the r8-block discipline)."""
-    import duckdb
-
-    from pdtable_spark.queries.pending_r9 import PENDING_R9
-    from pdtable_spark.queries.suite import ORACLES, QUERIES
-
-    for name, (fn, sql) in PENDING_R9.items():
-        assert QUERIES.get(name) is fn, f"{name} not registered"
-        assert ORACLES.get(name) == sql, f"{name} oracle not registered"
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        )
-    _oracle_pair_gate(spark, con, PENDING_R9)
-
-
-def test_pending_r10_oracles(spark):
-    """The round-10 block (staged r9, registered r10) stays under its
-    own correctness gate: each (spark, oracle) pair runs side-by-side at
-    sf0.001 — and every entry must actually be REGISTERED in the suite
-    (the r8/r9-block discipline)."""
-    import duckdb
-
-    from pdtable_spark.queries.pending_r10 import PENDING_R10
-    from pdtable_spark.queries.suite import ORACLES, QUERIES
-
-    for name, (fn, sql) in PENDING_R10.items():
-        assert QUERIES.get(name) is fn, f"{name} not registered"
-        assert ORACLES.get(name) == sql, f"{name} oracle not registered"
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        )
-    _oracle_pair_gate(spark, con, PENDING_R10)
-
-
-def test_pending_r11_oracles(spark):
-    """The staged round-11 queries are under the correctness gate BEFORE
-    registration (the suite_r8/pending_r9/pending_r10 staging
-    discipline): each (spark, oracle) pair runs side-by-side at sf0.001
-    in pytest, so staged queries cannot rot between rounds."""
-    import duckdb
-
-    from pdtable_spark.queries.pending_r11 import PENDING_R11
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        )
-    _oracle_pair_gate(spark, con, PENDING_R11)
-
-
-def test_pending_r12_oracles(spark):
-    """The staged round-12 queries are under the correctness gate BEFORE
-    registration (the suite_r8/pending_r9/pending_r10/pending_r11
-    staging discipline): each (spark, oracle) pair runs side-by-side at
-    sf0.001 in pytest, so staged queries cannot rot between rounds."""
-    import duckdb
-
-    from pdtable_spark.queries.pending_r12 import PENDING_R12
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        )
-    _oracle_pair_gate(spark, con, PENDING_R12)
-
-
-def test_pending_r13_oracles(spark):
-    """The staged round-13 queries are under the correctness gate BEFORE
-    registration (the suite_r8…pending_r12 staging discipline): each
-    (spark, oracle) pair runs side-by-side at sf0.001 in pytest, so
-    staged queries cannot rot between rounds."""
-    import duckdb
-
-    from pdtable_spark.queries.pending_r13 import PENDING_R13
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        )
-    _oracle_pair_gate(spark, con, PENDING_R13)
-
-
-def test_pending_r14_oracles(spark):
-    """The staged round-14 queries are under the correctness gate BEFORE
-    registration (the suite_r8…pending_r13 staging discipline): each
-    (spark, oracle) pair runs side-by-side at sf0.001 in pytest, so
-    staged queries cannot rot between rounds."""
-    import duckdb
-
-    from pdtable_spark.queries.pending_r14 import PENDING_R14
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings".split()
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        )
-    _oracle_pair_gate(spark, con, PENDING_R14)
-
-
-def _oracle_pair_gate(spark, con, entries):
+@pytest.mark.parametrize("name", sorted(ORACLES))
+def test_oracle_matches(spark, duck, name):
+    """Each registered (query, oracle) pair runs side by side at sf0.001:
+    the driver-compat dtype gate holds on both sides, and column names and
+    order-insensitive values match (the driver's comparison, minus its
+    pandas canonicalization layer)."""
     from scripts.check_oracles import oracle_dtype_problems, spark_dtype_problems
 
-    for name, (fn, sql) in entries.items():
-        sdf = fn(spark, "/root/testdata/sf0.001")
-        # the driver-compat dtype gate (round-2 lesson) must hold BEFORE
-        # registration, not surface as a red driver row after it
-        assert not oracle_dtype_problems(con, sql), name
-        assert not spark_dtype_problems(sdf), name
-        got = sorted(map(tuple, sdf.collect()))
-        cur = con.execute(sql)
-        want = sorted(map(tuple, cur.fetchall()))
-        assert [f.name for f in sdf.schema.fields] == [
-            d[0] for d in cur.description
-        ], name
-        assert got == want, (name, got[:3], want[:3])
+    sql = ORACLES[name]
+    sdf = QUERIES[name](spark, SF_DIR)
+    assert not oracle_dtype_problems(duck, sql)
+    assert not spark_dtype_problems(sdf)
+    got = sorted(map(tuple, sdf.collect()))
+    cur = duck.execute(sql)
+    want = sorted(map(tuple, cur.fetchall()))
+    assert [f.name for f in sdf.schema.fields] == [d[0] for d in cur.description]
+    assert got == want, (got[:3], want[:3])

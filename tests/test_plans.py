@@ -990,10 +990,8 @@ def test_e2e_curation_composed_plan_clean(spark):
     gate inlining).  Plus the pack stage's documented global
     running-sum window (shard by key at 100 TB)."""
     from pdtable_spark.plans import assert_clean
-    from pdtable_spark.queries.pending_r13 import PENDING_R13
 
-    fn, _sql = PENDING_R13["pipeline_e2e_curation"]
-    df = fn(spark, "/root/testdata/sf0.001")
+    df = QUERIES["pipeline_e2e_curation"](spark, "/root/testdata/sf0.001")
     try:
         findings = assert_clean(
             df,
@@ -1016,13 +1014,10 @@ def test_e2e_curation_composed_plan_clean(spark):
 
 
 def test_bucketed_join_query_plan_no_exchange_on_join(spark):
-    """The staged q_bucketed_colocated_join must actually take the
-    bucket path: no shuffle exchange feeding either join side (the
-    whole point of paying the write-time shuffle once)."""
-    from pdtable_spark.queries.pending_r13 import PENDING_R13
-
-    fn, _sql = PENDING_R13["q_bucketed_colocated_join"]
-    df = fn(spark, "/root/testdata/sf0.001")
+    """q_bucketed_colocated_join must actually take the bucket path: no
+    shuffle exchange feeding either join side (the whole point of paying
+    the write-time shuffle once)."""
+    df = QUERIES["q_bucketed_colocated_join"](spark, "/root/testdata/sf0.001")
     try:
         plan = df._jdf.queryExecution().executedPlan().toString()
         join_idx = plan.find("SortMergeJoin")
