@@ -84,7 +84,7 @@ EXTENDED = [
     "pipeline_modern_recipe",
     "pipeline_drift_report",
     "pipeline_score_calibration",
-    # round-8 registered queries (queries/suite_r8.py): BM25 retrieval
+    # round-8 additions: BM25 retrieval
     # (zero-postings-shuffle) and DSIR importance scoring (bounded-LUT
     # scan-local fold) are the two corpus-heavy ones
     "text_bm25_topk",
@@ -126,7 +126,7 @@ EXTENDED = [
     # round-8 additions (cont.): frozen-vocab OOV drift alarm
     "text_vocab_drift",
     # round-8 in-round additions: the IVF-accelerated label
-    # propagation (staged r9 — priced against its exact sibling
+    # propagation (priced against its exact sibling
     # embedding_label_propagation above) and the containment pair
     # miner in production df-cut mode (the exact-mode row
     # dedup_containment_pairs stays for round-over-round trend)
@@ -137,7 +137,7 @@ EXTENDED = [
     "pipeline_novelty_ledger",
     # round-8 in-round addition: trained-BPE fertility scan
     "text_bpe_fertility",
-    # round-8 in-round addition: margin-based pair mining (staged r9)
+    # round-8 in-round addition: margin-based pair mining
     "embedding_margin_mining",
     # round-8 in-round additions: corpus lexical diversity (single
     # scan, digest shuffle) and the per-source unigram divergence
@@ -161,7 +161,7 @@ EXTENDED = [
     # round-8 in-round addition: embedding covariance matrix (one
     # scan, d²-domain shuffle — the PCA/anisotropy precursor)
     "embedding_gram",
-    # round-9 in-round additions (staged r10): IVF-served margin
+    # round-9 in-round additions: IVF-served margin
     # mining agreement (exact + probed spellings in one frame), the
     # PCA rotation-invariance projection gate, and the heavy-hitters
     # ledger (two snapshot builds + bounded merge)
@@ -169,40 +169,40 @@ EXTENDED = [
     "embedding_pca_project",
     "pipeline_heavy_hitters",
     "margin_mining_ivf_served",
-    # round-9 in-round addition (staged r10): frozen bigram-LM quality
+    # round-9 in-round addition: frozen bigram-LM quality
     # scoring (train on the even half, score the odd half)
     "text_lm_bigram_nll",
-    # round-9 in-round addition (staged r10): zero-decode header
+    # round-9 in-round addition: zero-decode header
     # metadata scan (synthesize + parse, one codegen projection)
     "multimodal_image_meta",
     # round-10 addition: the full TPC-H Q22 analog (pool filter +
     # broadcast scalar threshold + anti-join + dim rollup)
     "q22_idle_customers",
-    # round-10 in-round addition (staged r11): the full model-quality
+    # round-10 in-round addition: the full model-quality
     # recipe (frozen classifier fold + frozen LM buckets + one-scan
     # threshold sweep)
     "pipeline_model_quality_recipe",
-    # round-10 in-round additions (staged r11): zero-decode WAV chunk
+    # round-10 in-round additions: zero-decode WAV chunk
     # walk and AVI header walk (synthesize + parse, one codegen
     # projection each — the audio/video arms of the pre-decode trio)
     "multimodal_audio_meta",
     "multimodal_video_meta",
-    # round-10 in-round addition (staged r11): the mergeable moment
+    # round-10 in-round addition: the mergeable moment
     # ledger (two snapshot gram states + d²-domain merge)
     "embedding_gram_ledger",
-    # round-10 in-round addition (staged r11): Z-order clustering key
+    # round-10 in-round addition: Z-order clustering key
     # profile (bounded min/max artifact + codegen bit interleave + one
     # 64-cell aggregate — the layout job's certificate pass)
     "lake_zorder_cells",
-    # round-10 in-round addition (staged r11): per-column ANALYZE
+    # round-10 in-round addition: per-column ANALYZE
     # pre-flight (one aggregate pass per table, unpivot on the single
     # aggregate row)
     "pipeline_column_profile",
-    # round-10 in-round addition (staged r11): JSON shape census
+    # round-10 in-round addition: JSON shape census
     # (synthesize varying-shape docs, two bounded explodes, one
     # path-domain aggregate)
     "pipeline_json_profile",
-    # round-11 in-round additions (staged r12): the certificate-driven
+    # round-11 in-round additions: the certificate-driven
     # reads (range-predicate and dimension-key-set spellings — each
     # prices a clustered write + stats pass + pruned scan), the IVF
     # staleness diagnostic (two ledger passes + broadcast join), the
@@ -219,13 +219,13 @@ EXTENDED = [
     "pipeline_json_infer_plan",
     "pipeline_json_profile_diff",
     "lake_hilbert_cells",
-    # round-12 in-round addition (staged r13): the composed curation DAG
+    # round-12 in-round addition: the composed curation DAG
     # (Gopher gate -> exact dedup -> LSH greedy -> semantic prune ->
     # source cap -> chunk -> pack -> shard accounting) in ONE lineage —
     # prices cross-operator plan-size/driver-latency, the regression class
     # the per-stage rows cannot see (the multimodal_audio_meta lesson)
     "pipeline_e2e_curation",
-    # round-12 in-round additions (staged r13): the sidecar REFRESH
+    # round-12 in-round additions: the sidecar REFRESH
     # lifecycles (two-phase write + incremental refresh + certificate
     # read) and the hot-bucket guard on a deliberately skewed corpus
     # (stream_upsert_vacuum excluded per the streaming policy)
@@ -235,7 +235,7 @@ EXTENDED = [
     "dedup_skewed_buckets",
     "pipeline_shard_export",
     "q_bucketed_colocated_join",
-    # round-13 in-round additions (staged r14): the partitioned pack
+    # round-13 in-round additions: the partitioned pack
     # spelling (one shuffle on the shard key), the manifest-validated
     # read lifecycles (listing-free certificate reads), and the
     # snapshot-frame residual semi read (stream_upsert_hotkey excluded
@@ -401,6 +401,7 @@ def main():
     from pyspark.sql import functions as F
 
     from pdtable_spark.operators import dedup, similarity
+    from pdtable_spark.queries.embedding import seed_centroids
     from pdtable_spark.queries.suite import QUERIES, load
 
     BENCH_QUERIES = dict(QUERIES)
@@ -462,13 +463,7 @@ def main():
 
             path = tempfile.mkdtemp(prefix="bench_ivf_") + "/index"
             emb = s.read.parquet(f"{d}/embeddings.parquet")
-            cents = [
-                list(r["v"])
-                for r in emb.filter(F.col("vec_id") < 16)
-                .orderBy("vec_id")
-                .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-                .collect()
-            ]
+            cents = seed_centroids(emb)
             similarity.ivf_index(emb, cents).write.partitionBy("cell").parquet(path)
             # like the ANN row: the index DataFrame (and its file listing)
             # persists across query batches; the timed region is per-batch —
@@ -499,13 +494,7 @@ def main():
         # broadcast spelling in embedding_label_propagation above
         if "lp_ivf" not in _state:
             emb = s.read.parquet(f"{d}/embeddings.parquet")
-            cents = [
-                list(r["v"])
-                for r in emb.filter(F.col("vec_id") < 16)
-                .orderBy("vec_id")
-                .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-                .collect()
-            ]
+            cents = seed_centroids(emb)
             idx = similarity.ivf_index(
                 emb.filter(F.col("vec_id") % 10 != 0), cents, metadata_cols=["label"]
             ).cache()
@@ -542,13 +531,7 @@ def main():
         # spelling inside embedding_margin_agreement
         if "mm_ivf" not in _state:
             emb = s.read.parquet(f"{d}/embeddings.parquet")
-            cents = [
-                list(r["v"])
-                for r in emb.filter(F.col("vec_id") < 16)
-                .orderBy("vec_id")
-                .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-                .collect()
-            ]
+            cents = seed_centroids(emb)
             idx = similarity.ivf_index(
                 emb.filter(F.col("vec_id") % 7 != 0), cents
             ).cache()

@@ -231,7 +231,11 @@ def _expand_local_paths(path_spec: str):
         p = p[len("file:"):] if p.startswith("file:") else p
         matches = sorted(_glob.glob(p))
         if os.path.isdir(p):
-            matches = sorted(_glob.glob(os.path.join(p, "*")))
+            # a job output directory: skip the _SUCCESS marker and hidden
+            # (.crc) files, as Spark's file index does
+            matches = sorted(
+                os.path.join(p, n) for n in os.listdir(p) if not n.startswith(("_", "."))
+            )
         out.extend(matches)
     return out
 

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from pdtable_spark.operators import dedup
 from pdtable_spark.queries.suite import (
-    ORACLES,
+    _SQL_CLUSTERS,
     _SQL_MD5_60,
     _SQL_SHINGLES,
     _SQL_TOKS,
@@ -117,35 +117,7 @@ def _sql_minhash_pairs(num_hashes: int, bands: int, threshold: float) -> str:
     """
 
 
-@q(
-    "dedup_clusters",
-    f"""
-    WITH RECURSIVE
-    base AS (SELECT doc_id, {_SQL_SHINGLES} AS sh FROM documents),
-    sized AS (SELECT doc_id, len(sh) AS sz, sh FROM base),
-    posts AS (SELECT doc_id, sz, unnest(sh) AS g FROM sized),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.sz AS size_a, b.sz AS size_b,
-             COUNT(*) AS n_common
-      FROM posts a JOIN posts b ON a.g = b.g AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id, a.sz, b.sz
-    ),
-    pairs AS (
-      SELECT id_a, id_b FROM inter
-      WHERE CAST(n_common AS DOUBLE) / CAST(size_a + size_b - n_common AS DOUBLE) >= 0.5
-    ),
-    edges AS (SELECT id_a AS a, id_b AS b FROM pairs
-              UNION ALL SELECT id_b, id_a FROM pairs),
-    walk(id, comp) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT e.b, w.comp FROM walk w JOIN edges e ON e.a = w.id
-    )
-    SELECT id AS doc_id, MIN(comp) AS component,
-           (MIN(comp) = id) AS is_root
-    FROM walk GROUP BY id
-    """,
-)
+@q("dedup_clusters", _SQL_CLUSTERS)
 def dedup_clusters(spark, sf_dir):
     """Dedup CLUSTERING: near-dup pairs (exact n-gram Jaccard >= 0.5) →
     connected components via iterative min-label propagation; survivors =
@@ -261,9 +233,25 @@ def dedup_incremental(spark, sf_dir):
     )
 
 
+# the oracle wraps dedup_clusters' recursive-CTE closure (kept verbatim in
+# one place) with a per-component row_number over (n_chars DESC, doc_id ASC)
+# — the same lexicographic ordering the Spark window uses, exact for any id
+# range (a packed-double score would lose integer resolution past ~9e6 chars)
 @q(
     "dedup_keep_best",
-    None,  # placeholder; real SQL assigned below (wraps the clusters oracle)
+    f"""
+    WITH clusters AS ({_SQL_CLUSTERS}),
+    scored AS (
+      SELECT d.doc_id, d.source, CAST(d.n_chars AS BIGINT) AS n_chars,
+             c.component,
+             row_number() OVER (
+               PARTITION BY c.component
+               ORDER BY d.n_chars DESC, d.doc_id ASC
+             ) AS rn
+      FROM documents d JOIN clusters c ON c.doc_id = d.doc_id
+    )
+    SELECT doc_id, source, n_chars, component FROM scored WHERE rn = 1
+""",
 )
 def dedup_keep_best(spark, sf_dir):
     """Quality-aware canonical selection: within each near-dup cluster keep
@@ -283,25 +271,6 @@ def dedup_keep_best(spark, sf_dir):
     return kept.select(
         "doc_id", "source", F.col("n_chars").cast("long").alias("n_chars"), "component"
     )
-
-
-# the oracle wraps dedup_clusters' recursive-CTE closure (kept verbatim in
-# one place) with a per-component row_number over (n_chars DESC, doc_id ASC)
-# — the same lexicographic ordering the Spark window uses, exact for any id
-# range (a packed-double score would lose integer resolution past ~9e6 chars)
-ORACLES["dedup_keep_best"] = f"""
-    WITH clusters AS ({ORACLES["dedup_clusters"]}),
-    scored AS (
-      SELECT d.doc_id, d.source, CAST(d.n_chars AS BIGINT) AS n_chars,
-             c.component,
-             row_number() OVER (
-               PARTITION BY c.component
-               ORDER BY d.n_chars DESC, d.doc_id ASC
-             ) AS rn
-      FROM documents d JOIN clusters c ON c.doc_id = d.doc_id
-    )
-    SELECT doc_id, source, n_chars, component FROM scored WHERE rn = 1
-"""
 
 
 @q(
@@ -487,7 +456,7 @@ def minhash_estimate_error(spark, sf_dir):
     )
 
 
-R8_SQL_WINNOW_PAIRS = f"""
+_SQL_WINNOW_PAIRS = f"""
     WITH {_WINNOW_SEL_SQL},
     dsel AS (SELECT DISTINCT doc_id, fp FROM sel)
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -497,8 +466,8 @@ R8_SQL_WINNOW_PAIRS = f"""
 """
 
 
-@q("dedup_winnow_pairs", R8_SQL_WINNOW_PAIRS)
-def r8_dedup_winnow_pairs(spark, sf_dir):
+@q("dedup_winnow_pairs", _SQL_WINNOW_PAIRS)
+def dedup_winnow_pairs(spark, sf_dir):
     """Document pairs sharing >= 2 winnowed fingerprints — the
     ngram-Jaccard detection shape on the winnowed subset: the postings
     index carries ~2/(window+1) of the grams with a known coverage floor
@@ -515,7 +484,7 @@ def r8_dedup_winnow_pairs(spark, sf_dir):
 # Shingle containment pairs (operators/dedup.py) — the asymmetric measure
 # ---------------------------------------------------------------------------
 
-R8_SQL_CONTAINMENT = f"""
+_SQL_CONTAINMENT = f"""
     WITH base AS (SELECT doc_id, {_SQL_SHINGLES} AS sh FROM documents),
     sized AS (SELECT doc_id, len(sh) AS sz, sh FROM base),
     posts AS (SELECT doc_id, sz, unnest(sh) AS g FROM sized),
@@ -535,8 +504,8 @@ R8_SQL_CONTAINMENT = f"""
 """
 
 
-@q("dedup_containment_pairs", R8_SQL_CONTAINMENT)
-def r8_dedup_containment_pairs(spark, sf_dir):
+@q("dedup_containment_pairs", _SQL_CONTAINMENT)
+def dedup_containment_pairs(spark, sf_dir):
     """Asymmetric doc-inside-doc near-dups: shingle containment
     (inter / min set size) >= 0.6 over the same inverted-index plan as
     ngram_jaccard_pairs — catches a short doc quoted whole inside a long
@@ -564,7 +533,7 @@ _SKEW_DERIVED_SQL = (
     f"CASE WHEN doc_id % 20 = 0 THEN '{_SKEW_BOILERPLATE}' ELSE text END"
 )
 
-R13_SQL_SKEWED_BUCKETS = f"""
+_SQL_SKEWED_BUCKETS = f"""
     WITH documents AS (
       SELECT doc_id, {_SKEW_DERIVED_SQL} AS text FROM main.documents
     ),
@@ -583,8 +552,8 @@ R13_SQL_SKEWED_BUCKETS = f"""
 """
 
 
-@q("dedup_skewed_buckets", R13_SQL_SKEWED_BUCKETS)
-def r13_dedup_skewed_buckets(spark, sf_dir):
+@q("dedup_skewed_buckets", _SQL_SKEWED_BUCKETS)
+def dedup_skewed_buckets(spark, sf_dir):
     """Hot-bucket guard correctness under deliberate skew: 5% of the
     corpus becomes ONE boilerplate text (all four bands collide), and
     ``minhash_lsh_candidates`` runs with ``max_bucket=16`` so the

@@ -11,18 +11,30 @@ from pyspark.sql import functions as F
 
 from pdtable_spark.operators import similarity
 from pdtable_spark.queries.suite import (
-    R8_BM25_TERMS,
-    R8_SQL_BM25,
+    _BM25_TERMS,
     _IVF_CELLS,
     _SEMDEDUP_THRESHOLD,
+    _SQL_BM25,
     _SQL_CLUSTER_ASSIGN,
     _STALE_Q,
-    _seed_centroids,
     _sql_cos_ns,
     _sql_dist2,
     load,
     q,
 )
+
+
+def seed_centroids(emb) -> list:
+    """The first ``_IVF_CELLS`` vectors of ``emb`` by vec_id, as double
+    lists: the deterministic seed centroids of every IVF / cluster query
+    (FAISS-style sampled init), which an oracle can select the same way."""
+    return [
+        list(r["v"])
+        for r in emb.filter(F.col("vec_id") < _IVF_CELLS)
+        .orderBy("vec_id")
+        .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+        .collect()
+    ]
 
 
 # Explicit sequential-fold cosine (NOT list_cosine_similarity: DuckDB's
@@ -213,13 +225,7 @@ def embedding_ivf_topk(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    cents = [
-        list(r["v"])
-        for r in emb.filter(F.col("vec_id") < _IVF_CELLS)
-        .orderBy("vec_id")
-        .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-        .collect()
-    ]
+    cents = seed_centroids(emb)
     return similarity.ivf_topk(
         emb, queries, k=10, n_cells=_IVF_CELLS, nprobe=_IVF_NPROBE, centroids=cents
     )
@@ -286,13 +292,7 @@ def embedding_semantic_dedup(spark, sf_dir):
     sampled init) make assignment deterministic → full value oracle;
     production uses KMeans centroids (centroids=None)."""
     emb = load(spark, sf_dir, "embeddings")
-    cents = [
-        list(r["v"])
-        for r in emb.filter(F.col("vec_id") < _IVF_CELLS)
-        .orderBy("vec_id")
-        .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-        .collect()
-    ]
+    cents = seed_centroids(emb)
     return similarity.semantic_dedup(
         emb, cents, threshold=_SEMDEDUP_THRESHOLD
     ).select("vec_id", F.col("cell").cast("int").alias("cell"))
@@ -600,13 +600,7 @@ def embedding_ivf_recall(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    cents = [
-        list(r["v"])
-        for r in emb.filter(F.col("vec_id") < _IVF_CELLS)
-        .orderBy("vec_id")
-        .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-        .collect()
-    ]
+    cents = seed_centroids(emb)
     ivf = similarity.ivf_topk(
         emb, queries, k=10, n_cells=_IVF_CELLS, nprobe=_IVF_NPROBE, centroids=cents
     ).select("query_id", "vec_id")
@@ -683,8 +677,8 @@ def embedding_pq_recall(spark, sf_dir):
 #: cross the fusion boundary, so the oracle needs no score calibration.
 
 
-R8_SQL_HYBRID = f"""
-    WITH lex AS (SELECT doc_id, rank FROM ({R8_SQL_BM25})),
+_SQL_HYBRID = f"""
+    WITH lex AS (SELECT doc_id, rank FROM ({_SQL_BM25})),
     q AS (SELECT CAST(embedding AS DOUBLE[]) AS qa FROM embeddings WHERE vec_id = 0),
     c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ca FROM embeddings),
     scored AS (SELECT c.vec_id, {_COSINE_SQL} AS s FROM c CROSS JOIN q),
@@ -707,8 +701,8 @@ R8_SQL_HYBRID = f"""
 """
 
 
-@q("hybrid_rrf_topk", R8_SQL_HYBRID)
-def r8_hybrid_rrf_topk(spark, sf_dir):
+@q("hybrid_rrf_topk", _SQL_HYBRID)
+def hybrid_rrf_topk(spark, sf_dir):
     """Hybrid retrieval end-to-end: BM25 lexical ranks ⊕ embedding cosine
     ranks fused by RRF (k=60) — the standard RAG retrieval stack as one
     value-oracled composition of three operators."""
@@ -716,7 +710,7 @@ def r8_hybrid_rrf_topk(spark, sf_dir):
     from pdtable_spark.operators.text import bm25_topk
 
     docs = load(spark, sf_dir, "documents")
-    lex = bm25_topk(docs, R8_BM25_TERMS, k=25, round_digits=9).select(
+    lex = bm25_topk(docs, _BM25_TERMS, k=25, round_digits=9).select(
         "doc_id", "rank"
     )
     emb = load(spark, sf_dir, "embeddings")
@@ -729,7 +723,7 @@ def r8_hybrid_rrf_topk(spark, sf_dir):
     return similarity.rrf_fuse([lex, sem], k=60)
 
 
-R8_SQL_CLUSTER_PROFILE = f"""
+_SQL_CLUSTER_PROFILE = f"""
     WITH {_SQL_CLUSTER_ASSIGN},
     a AS (SELECT vec_id, CAST(cid AS INT) AS cell,
                  CAST(FLOOR(round(d2, 9) * 1000000000.0) AS BIGINT) AS qd
@@ -749,19 +743,20 @@ R8_SQL_CLUSTER_PROFILE = f"""
 """
 
 
-@q("embedding_cluster_profile", R8_SQL_CLUSTER_PROFILE)
-def r8_embedding_cluster_profile(spark, sf_dir):
+@q("embedding_cluster_profile", _SQL_CLUSTER_PROFILE)
+def embedding_cluster_profile(spark, sf_dir):
     """Per-cell corpus composition under the fixed seed centroids: count,
     share, and quantized mean squared distance — empty cells included (a
     cluster silently emptying is the alarm the profile exists for).  One
     scan; the aggregate is map-side-combinable at centroid cardinality."""
     from pdtable_spark.operators.similarity import cluster_profile
 
-    emb, cents = _seed_centroids(spark, sf_dir)
+    emb = load(spark, sf_dir, "embeddings")
+    cents = seed_centroids(emb)
     return cluster_profile(emb, cents)
 
 
-R8_SQL_CLUSTER_SAMPLE = f"""
+_SQL_CLUSTER_SAMPLE = f"""
     WITH {_SQL_CLUSTER_ASSIGN},
     a AS (SELECT vec_id, CAST(cid AS INT) AS cell FROM cd WHERE rn = 1),
     h AS (SELECT vec_id, cell,
@@ -777,18 +772,19 @@ R8_SQL_CLUSTER_SAMPLE = f"""
 """
 
 
-@q("embedding_cluster_sample", R8_SQL_CLUSTER_SAMPLE)
-def r8_embedding_cluster_sample(spark, sf_dir):
+@q("embedding_cluster_sample", _SQL_CLUSTER_SAMPLE)
+def embedding_cluster_sample(spark, sf_dir):
     """Cluster-balanced subsample: ≤5 vectors per seed-centroid cell in
     deterministic hash order — uniform over topics, not over documents
     (head topics capped, tail topics survive whole)."""
     from pdtable_spark.operators.similarity import cluster_balanced_sample
 
-    emb, cents = _seed_centroids(spark, sf_dir)
+    emb = load(spark, sf_dir, "embeddings")
+    cents = seed_centroids(emb)
     return cluster_balanced_sample(emb, cents, per_cell=5)
 
 
-R8_SQL_CLUSTER_DRIFT = f"""
+_SQL_CLUSTER_DRIFT = f"""
     WITH {_SQL_CLUSTER_ASSIGN},
     a AS (SELECT vec_id, CAST(cid AS INT) AS cell FROM cd WHERE rn = 1),
     oc AS (SELECT CAST(cell AS VARCHAR) AS value, COUNT(*) AS n_old
@@ -818,8 +814,8 @@ R8_SQL_CLUSTER_DRIFT = f"""
 """
 
 
-@q("embedding_cluster_drift", R8_SQL_CLUSTER_DRIFT)
-def r8_embedding_cluster_drift(spark, sf_dir):
+@q("embedding_cluster_drift", _SQL_CLUSTER_DRIFT)
+def embedding_cluster_drift(spark, sf_dir):
     """Embedding-space drift between the even/odd snapshot halves under
     the fixed seed centroids: the standard categorical report over the
     cell dimension — topic shifts surface here before any metadata
@@ -827,7 +823,8 @@ def r8_embedding_cluster_drift(spark, sf_dir):
     unchanged."""
     from pdtable_spark.operators.monitor import cluster_drift
 
-    emb, cents = _seed_centroids(spark, sf_dir)
+    emb = load(spark, sf_dir, "embeddings")
+    cents = seed_centroids(emb)
     return cluster_drift(
         emb.filter(F.col("vec_id") % 2 == 0),
         emb.filter(F.col("vec_id") % 2 == 1),
@@ -839,7 +836,7 @@ def r8_embedding_cluster_drift(spark, sf_dir):
 # Hard-negative mining + kNN label propagation (operators/similarity.py)
 # ---------------------------------------------------------------------------
 
-R8_SQL_HARD_NEG = f"""
+_SQL_HARD_NEG = f"""
     WITH a AS (SELECT vec_id AS anchor_id, CAST(embedding AS DOUBLE[]) AS qa,
                       label AS a_label
                FROM embeddings WHERE vec_id % 25 = 0),
@@ -859,8 +856,8 @@ R8_SQL_HARD_NEG = f"""
 """
 
 
-@q("embedding_hard_negatives", R8_SQL_HARD_NEG)
-def r8_embedding_hard_negatives(spark, sf_dir):
+@q("embedding_hard_negatives", _SQL_HARD_NEG)
+def embedding_hard_negatives(spark, sf_dir):
     """Hard-negative mining for contrastive training: for each of 20
     anchors, the top-5 most-similar vectors with a DIFFERENT label, under
     a 0.999 cosine ceiling (cross-label near-exacts are mislabel
@@ -871,7 +868,7 @@ def r8_embedding_hard_negatives(spark, sf_dir):
     return hard_negatives(emb, F.col("vec_id") % 25 == 0, k=5, ceiling=0.999)
 
 
-R8_SQL_LABEL_PROP = f"""
+_SQL_LABEL_PROP = f"""
     WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qa
                FROM embeddings WHERE vec_id % 10 = 0),
     c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ca, label
@@ -893,8 +890,8 @@ R8_SQL_LABEL_PROP = f"""
 """
 
 
-@q("embedding_label_propagation", R8_SQL_LABEL_PROP)
-def r8_embedding_label_propagation(spark, sf_dir):
+@q("embedding_label_propagation", _SQL_LABEL_PROP)
+def embedding_label_propagation(spark, sf_dir):
     """kNN label propagation: every 10th vector plays unlabeled and takes
     the majority label of its 10 nearest labeled neighbors (ties toward
     the smaller label) — the seed-classifier expansion step of a
@@ -912,7 +909,7 @@ def r8_embedding_label_propagation(spark, sf_dir):
 
 _TRUNC_DIM = 16
 
-R8_SQL_TRUNC_RECALL = f"""
+_SQL_TRUNC_RECALL = f"""
     WITH tq AS (SELECT vec_id AS query_id,
                        list_slice(CAST(embedding AS DOUBLE[]), 1, {_TRUNC_DIM}) AS qa
                 FROM embeddings WHERE vec_id < 5),
@@ -940,8 +937,8 @@ R8_SQL_TRUNC_RECALL = f"""
 """
 
 
-@q("embedding_truncation_recall", R8_SQL_TRUNC_RECALL)
-def r8_embedding_truncation_recall(spark, sf_dir):
+@q("embedding_truncation_recall", _SQL_TRUNC_RECALL)
+def embedding_truncation_recall(spark, sf_dir):
     """Matryoshka truncation diagnostic: recall@10 of cosine retrieval over
     only the first 16 of 64 embedding components vs the full-dim exact
     baseline — the measurement that licenses the 4x-cheaper scan/index
@@ -965,7 +962,7 @@ def r8_embedding_truncation_recall(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-R8_SQL_HARD_NEG_RECALL = f"""
+_SQL_HARD_NEG_RECALL = f"""
     WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ca, label
                FROM embeddings),
     a AS (SELECT vec_id AS anchor_id, CAST(embedding AS DOUBLE[]) AS qa,
@@ -1022,8 +1019,8 @@ R8_SQL_HARD_NEG_RECALL = f"""
 """
 
 
-@q("embedding_hard_negative_recall", R8_SQL_HARD_NEG_RECALL)
-def r8_embedding_hard_negative_recall(spark, sf_dir):
+@q("embedding_hard_negative_recall", _SQL_HARD_NEG_RECALL)
+def embedding_hard_negative_recall(spark, sf_dir):
     """Recall@5 of IVF-mined hard negatives (label-carrying persisted
     index, nprobe-pruned probes) against the exact cross-label miner —
     the tuning measurement that licenses index-accelerated mining at
@@ -1031,13 +1028,7 @@ def r8_embedding_hard_negative_recall(spark, sf_dir):
     from pdtable_spark.operators import similarity
 
     emb = load(spark, sf_dir, "embeddings")
-    cents = [
-        list(r["v"])
-        for r in emb.filter(F.col("vec_id") < _IVF_CELLS)
-        .orderBy("vec_id")
-        .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-        .collect()
-    ]
+    cents = seed_centroids(emb)
     idx = similarity.ivf_index(emb, cents, metadata_cols=["label"])
     anchors = emb.filter(F.col("vec_id") % 25 == 0).select(
         F.col("vec_id").alias("anchor_id"), "embedding", "label"
@@ -1073,7 +1064,7 @@ def r8_embedding_hard_negative_recall(spark, sf_dir):
 #  the suite's slowest sf1 row at 430 s)
 # ---------------------------------------------------------------------------
 
-R9_SQL_LABEL_PROP_AGREEMENT = f"""
+_SQL_LABEL_PROP_AGREEMENT = f"""
     WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ca, label
                FROM embeddings WHERE vec_id % 10 <> 0),
     q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qa
@@ -1140,8 +1131,8 @@ R9_SQL_LABEL_PROP_AGREEMENT = f"""
 """
 
 
-@q("embedding_label_prop_agreement", R9_SQL_LABEL_PROP_AGREEMENT)
-def r9_embedding_label_prop_agreement(spark, sf_dir):
+@q("embedding_label_prop_agreement", _SQL_LABEL_PROP_AGREEMENT)
+def embedding_label_prop_agreement(spark, sf_dir):
     """Per-query agreement of IVF-accelerated label propagation
     (label-carrying persisted index over the labeled pool, nprobe-pruned
     probes) against the exact broadcast spelling — the tuning
@@ -1152,13 +1143,7 @@ def r9_embedding_label_prop_agreement(spark, sf_dir):
     from pdtable_spark.operators import similarity
 
     emb = load(spark, sf_dir, "embeddings")
-    cents = [
-        list(r["v"])
-        for r in emb.filter(F.col("vec_id") < _IVF_CELLS)
-        .orderBy("vec_id")
-        .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-        .collect()
-    ]
+    cents = seed_centroids(emb)
     pred = F.col("vec_id") % 10 == 0
     idx = similarity.ivf_index(emb.filter(~pred), cents, metadata_cols=["label"])
     queries = emb.filter(pred).select(F.col("vec_id").alias("query_id"), "embedding")
@@ -1187,7 +1172,7 @@ def r9_embedding_label_prop_agreement(spark, sf_dir):
 # round 8 — Artetxe & Schwenk 2019, the LASER/CCMatrix bitext miner)
 # ---------------------------------------------------------------------------
 
-R9_SQL_MARGIN_MINING = f"""
+_SQL_MARGIN_MINING = f"""
     WITH l AS (SELECT vec_id AS left_id, CAST(embedding AS DOUBLE[]) AS qa
                FROM embeddings WHERE vec_id % 7 = 0),
     r AS (SELECT vec_id AS right_id, CAST(embedding AS DOUBLE[]) AS ca
@@ -1220,8 +1205,8 @@ R9_SQL_MARGIN_MINING = f"""
 """
 
 
-@q("embedding_margin_mining", R9_SQL_MARGIN_MINING)
-def r9_embedding_margin_mining(spark, sf_dir):
+@q("embedding_margin_mining", _SQL_MARGIN_MINING)
+def embedding_margin_mining(spark, sf_dir):
     """Aligned-pair mining across two embedding pools (vec_id%7 split
     standing in for the two languages/sources): per left vector, its
     best right match by RATIO margin — cos normalized by the mean of
@@ -1271,7 +1256,7 @@ def _sq_topk_cte(name: str, dq: str) -> str:
     )"""
 
 
-R9_SQL_SQ_RECALL = f"""
+_SQL_SQ_RECALL = f"""
     WITH ex AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ca FROM embeddings),
     dims AS (
       SELECT generate_subscripts(ca, 1) AS i, unnest(ca) AS v FROM ex
@@ -1305,8 +1290,8 @@ R9_SQL_SQ_RECALL = f"""
 """
 
 
-@q("embedding_sq_recall", R9_SQL_SQ_RECALL)
-def r9_embedding_sq_recall(spark, sf_dir):
+@q("embedding_sq_recall", _SQL_SQ_RECALL)
+def embedding_sq_recall(spark, sf_dir):
     """Scalar-quantization recall diagnostic: recall@10 of asymmetric
     retrieval over the int8 (255-level) AND 4-bit (15-level) SQ grids
     vs the exact full-precision baseline, in one frame — the
@@ -1354,7 +1339,7 @@ def r9_embedding_sq_recall(spark, sf_dir):
 #  embedding-collapse diagnostic and the PCA/whitening precursor)
 # ---------------------------------------------------------------------------
 
-R9_SQL_EMBEDDING_GRAM = """
+_SQL_EMBEDDING_GRAM = """
     WITH q AS (
       SELECT list_transform(CAST(embedding AS DOUBLE[]),
                             x -> CAST(FLOOR(x * 1000000.0 + 0.5) AS BIGINT)) AS v
@@ -1378,8 +1363,8 @@ R9_SQL_EMBEDDING_GRAM = """
 """
 
 
-@q("embedding_gram", R9_SQL_EMBEDDING_GRAM)
-def r9_embedding_gram(spark, sf_dir):
+@q("embedding_gram", _SQL_EMBEDDING_GRAM)
+def embedding_gram(spark, sf_dir):
     """The embedding-health matrix: second-moment and covariance entries
     over the upper triangle of the 64-dim embedding space — a collapsing
     covariance spectrum is the standard anisotropy alarm, and this
@@ -1401,7 +1386,7 @@ def r9_embedding_gram(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 def _sql_margin_pipeline(pair_cte: str, tag: str, k: int, threshold: float) -> str:
-    """The margin rescore (R9_SQL_MARGIN_MINING's fk/deg/m/best chain)
+    """The margin rescore (_SQL_MARGIN_MINING's fk/deg/m/best chain)
     parameterized over the pair CTE it runs on — the SQL mirror of the
     shared ``_margin_rescore`` tail, so both spellings' oracles are one
     spelling too."""
@@ -1433,7 +1418,7 @@ def _sql_margin_pipeline(pair_cte: str, tag: str, k: int, threshold: float) -> s
       WHERE rb = 1 AND margin >= {threshold})"""
 
 
-R10_SQL_MARGIN_AGREEMENT = f"""
+_SQL_MARGIN_AGREEMENT = f"""
     WITH l AS (SELECT vec_id AS left_id, CAST(embedding AS DOUBLE[]) AS qa
                FROM embeddings WHERE vec_id % 7 = 0),
     r AS (SELECT vec_id AS right_id, CAST(embedding AS DOUBLE[]) AS ca
@@ -1472,8 +1457,8 @@ R10_SQL_MARGIN_AGREEMENT = f"""
 """
 
 
-@q("embedding_margin_agreement", R10_SQL_MARGIN_AGREEMENT)
-def r10_embedding_margin_agreement(spark, sf_dir):
+@q("embedding_margin_agreement", _SQL_MARGIN_AGREEMENT)
+def embedding_margin_agreement(spark, sf_dir):
     """Per-left agreement of IVF-served margin mining (candidate pool in
     a persisted partition-pruned index, nprobe-probed; degrees over the
     probed pair frame) against the exact broadcast miner — the tuning
@@ -1487,13 +1472,7 @@ def r10_embedding_margin_agreement(spark, sf_dir):
     from pdtable_spark.operators import similarity
 
     emb = load(spark, sf_dir, "embeddings")
-    cents = [
-        list(r["v"])
-        for r in emb.filter(F.col("vec_id") < _IVF_CELLS)
-        .orderBy("vec_id")
-        .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-        .collect()
-    ]
+    cents = seed_centroids(emb)
     lp = F.col("vec_id") % 7 == 0
     left, right = emb.filter(lp), emb.filter(~lp)
     exact = similarity.margin_mining(left, right, k=4, threshold=1.05)
@@ -1524,11 +1503,10 @@ def r10_embedding_margin_agreement(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # PCA projection under the value gate
-# (operators/similarity.py::pca_basis / pca_project — VERDICT r8 task #4:
-#  the pytest-only PCA leg rides a staged query)
+# (operators/similarity.py::pca_basis / pca_project)
 # ---------------------------------------------------------------------------
 
-R10_SQL_PCA_PROJECT = """
+_SQL_PCA_PROJECT = """
     WITH q AS (
       SELECT vec_id,
              list_transform(CAST(embedding AS DOUBLE[]),
@@ -1544,8 +1522,8 @@ R10_SQL_PCA_PROJECT = """
 """
 
 
-@q("embedding_pca_project", R10_SQL_PCA_PROJECT)
-def r10_embedding_pca_project(spark, sf_dir):
+@q("embedding_pca_project", _SQL_PCA_PROJECT)
+def embedding_pca_project(spark, sf_dir):
     """The PCA leg end-to-end under the value gate: gram_matrix (exact
     integer second moments, the registered ``embedding_gram`` statistic)
     → pca_basis (driver-side eigh over the d² bounded artifact) →
@@ -1625,8 +1603,8 @@ def r10_embedding_pca_project(spark, sf_dir):
 #  heavy hitters, second moments; the incremental-PCA state)
 # ---------------------------------------------------------------------------
 
-@q("embedding_gram_ledger", R9_SQL_EMBEDDING_GRAM)
-def r11_embedding_gram_ledger(spark, sf_dir):
+@q("embedding_gram_ledger", _SQL_EMBEDDING_GRAM)
+def embedding_gram_ledger(spark, sf_dir):
     """The moment ledger end-to-end under the value gate: two snapshot
     ledgers (even/odd vec_id — per-cell exact-integer (n, sp, si, sj)
     state) merge through ``gram_from_ledgers`` into the (i, j, n, gram,
@@ -1657,7 +1635,7 @@ def r11_embedding_gram_ledger(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-R12_SQL_IVF_STALENESS = f"""
+_SQL_IVF_STALENESS = f"""
     WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ca FROM embeddings),
     cent AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS ce
              FROM embeddings WHERE vec_id < {_IVF_CELLS}),
@@ -1712,8 +1690,8 @@ R12_SQL_IVF_STALENESS = f"""
 """
 
 
-@q("embedding_ivf_staleness", R12_SQL_IVF_STALENESS)
-def r12_embedding_ivf_staleness(spark, sf_dir):
+@q("embedding_ivf_staleness", _SQL_IVF_STALENESS)
+def embedding_ivf_staleness(spark, sf_dir):
     """The when-to-retrain diagnostic under the value gate: the suite's
     seeded centroids (``vec_id < 16``, the ``embedding_ivf_recall``
     convention) are "trained" on the 2/3 slice ``vec_id % 3 != 0``; the
@@ -1732,13 +1710,7 @@ def r12_embedding_ivf_staleness(spark, sf_dir):
     from pdtable_spark.operators import similarity
 
     emb = load(spark, sf_dir, "embeddings")
-    cents = [
-        list(r["v"])
-        for r in emb.filter(F.col("vec_id") < _IVF_CELLS)
-        .orderBy("vec_id")
-        .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-        .collect()
-    ]
+    cents = seed_centroids(emb)
     train = emb.filter(F.col("vec_id") % 3 != 0)
     led = similarity.ivf_cell_ledger(train, cents)
     return similarity.ivf_staleness(

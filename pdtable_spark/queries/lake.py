@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from pdtable_spark.queries.suite import load, q, scratch_dir
+from pdtable_spark.queries.suite import _sql_bloom_pos, load, q, scratch_dir
 
 
 # ---------------------------------------------------------------------------
@@ -31,7 +31,7 @@ def _sql_interleave2(b1: str, b2: str, bits: int) -> str:
 
 _ZBITS = 6  # 64 buckets/column -> 4096-key curve, 64 cells after >> 6
 
-R11_SQL_LAKE_ZORDER = f"""
+_SQL_LAKE_ZORDER = f"""
     WITH o AS (
       SELECT o_custkey AS ck,
              CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
@@ -62,8 +62,8 @@ R11_SQL_LAKE_ZORDER = f"""
 """
 
 
-@q("lake_zorder_cells", R11_SQL_LAKE_ZORDER)
-def r11_lake_zorder_cells(spark, sf_dir):
+@q("lake_zorder_cells", _SQL_LAKE_ZORDER)
+def lake_zorder_cells(spark, sf_dir):
     """The Z-order clustering key under the value gate: bucket
     (o_custkey, integer-cents totalprice) into 2^6 edges each — the same
     exact-integer arithmetic ``write_zordered_parquet`` sorts the lake
@@ -117,7 +117,7 @@ def r11_lake_zorder_cells(spark, sf_dir):
 # the same exact-integer curve arithmetic.
 # ---------------------------------------------------------------------------
 
-R12_SQL_LAKE_PRUNED_READ = f"""
+_SQL_LAKE_PRUNED_READ = f"""
     WITH o AS (
       SELECT o_custkey AS ck,
              CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
@@ -175,8 +175,8 @@ R12_SQL_LAKE_PRUNED_READ = f"""
 """
 
 
-@q("lake_pruned_read", R12_SQL_LAKE_PRUNED_READ)
-def r12_lake_pruned_read(spark, sf_dir):
+@q("lake_pruned_read", _SQL_LAKE_PRUNED_READ)
+def lake_pruned_read(spark, sf_dir):
     """End-to-end read-side pruning proof: orders are written as a
     clustered lake whose FILE layout is deterministic by construction —
     one file per coarse Z-curve cell (``zkey >> {bits}``), achieved by
@@ -284,7 +284,7 @@ def _sql_hilbert_ctes(bits: int) -> str:
     return ",\n    ".join(ctes)
 
 
-R12_SQL_LAKE_HILBERT = f"""
+_SQL_LAKE_HILBERT = f"""
     WITH o AS (
       SELECT o_custkey AS ck,
              CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
@@ -316,8 +316,8 @@ R12_SQL_LAKE_HILBERT = f"""
 """
 
 
-@q("lake_hilbert_cells", R12_SQL_LAKE_HILBERT)
-def r12_lake_hilbert_cells(spark, sf_dir):
+@q("lake_hilbert_cells", _SQL_LAKE_HILBERT)
+def lake_hilbert_cells(spark, sf_dir):
     """The Hilbert clustering key under the value gate: same buckets as
     ``lake_zorder_cells``, but the adjacency-preserving rotate-and-
     reflect walk (``maintenance.hilbert_key`` — one bounded F.aggregate
@@ -366,7 +366,7 @@ def r12_lake_hilbert_cells(spark, sf_dir):
 # plain-parquet DPP shape for a star join on a key-clustered lake.
 # ---------------------------------------------------------------------------
 
-R12_SQL_LAKE_PRUNED_SEMI = f"""
+_SQL_LAKE_PRUNED_SEMI = f"""
     WITH o AS (
       SELECT o_custkey AS ck,
              CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
@@ -408,8 +408,8 @@ R12_SQL_LAKE_PRUNED_SEMI = f"""
 """
 
 
-@q("lake_pruned_semi_read", R12_SQL_LAKE_PRUNED_SEMI)
-def r12_lake_pruned_semi_read(spark, sf_dir):
+@q("lake_pruned_semi_read", _SQL_LAKE_PRUNED_SEMI)
+def lake_pruned_semi_read(spark, sf_dir):
     """Dynamic file pruning under the value gate: orders live as a lake
     clustered on customer key (one file per 2^6 key bucket, the
     deterministic ``partitionBy``-on-bucket layout), the dimension side
@@ -476,17 +476,7 @@ _BLOOM_K = 3
 _BLOOM_M = 1 << 20
 
 
-def _sql_bpos(expr: str, i: int) -> str:
-    # DuckDB spelling of operators/dedup.py::bloom_positions slot i at
-    # the sidecar's num_bits (suite_r8._sql_bloom_pos is pinned to its
-    # own 2^16 screen)
-    return (
-        f"(CAST('0x' || substr(md5({expr} || ':{i}'), 1, 15) AS BIGINT)"
-        f" % {_BLOOM_M})"
-    )
-
-
-R12_SQL_LAKE_BLOOM_PRUNED = f"""
+_SQL_LAKE_BLOOM_PRUNED = f"""
     WITH o AS (
       SELECT o_orderkey AS okey, o_custkey AS ck,
              CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
@@ -514,19 +504,19 @@ R12_SQL_LAKE_BLOOM_PRUNED = f"""
     fk AS (SELECT DISTINCT b_file, ck FROM f),
     sidecar AS (
       SELECT DISTINCT b_file, pos FROM (
-        SELECT b_file, {_sql_bpos("CAST(ck AS VARCHAR)", 0)} AS pos FROM fk
+        SELECT b_file, {_sql_bloom_pos("CAST(ck AS VARCHAR)", 0, _BLOOM_M)} AS pos FROM fk
         UNION ALL
-        SELECT b_file, {_sql_bpos("CAST(ck AS VARCHAR)", 1)} FROM fk
+        SELECT b_file, {_sql_bloom_pos("CAST(ck AS VARCHAR)", 1, _BLOOM_M)} FROM fk
         UNION ALL
-        SELECT b_file, {_sql_bpos("CAST(ck AS VARCHAR)", 2)} FROM fk
+        SELECT b_file, {_sql_bloom_pos("CAST(ck AS VARCHAR)", 2, _BLOOM_M)} FROM fk
       )
     ),
     kpos AS (
-      SELECT ck, {_sql_bpos("CAST(ck AS VARCHAR)", 0)} AS pos FROM keys
+      SELECT ck, {_sql_bloom_pos("CAST(ck AS VARCHAR)", 0, _BLOOM_M)} AS pos FROM keys
       UNION ALL
-      SELECT ck, {_sql_bpos("CAST(ck AS VARCHAR)", 1)} FROM keys
+      SELECT ck, {_sql_bloom_pos("CAST(ck AS VARCHAR)", 1, _BLOOM_M)} FROM keys
       UNION ALL
-      SELECT ck, {_sql_bpos("CAST(ck AS VARCHAR)", 2)} FROM keys
+      SELECT ck, {_sql_bloom_pos("CAST(ck AS VARCHAR)", 2, _BLOOM_M)} FROM keys
     ),
     kept AS (
       SELECT DISTINCT b_file FROM (
@@ -552,8 +542,8 @@ R12_SQL_LAKE_BLOOM_PRUNED = f"""
 """
 
 
-@q("lake_bloom_pruned_read", R12_SQL_LAKE_BLOOM_PRUNED)
-def r12_lake_bloom_pruned_read(spark, sf_dir):
+@q("lake_bloom_pruned_read", _SQL_LAKE_BLOOM_PRUNED)
+def lake_bloom_pruned_read(spark, sf_dir):
     """Bloom point-lookup pruning under the value gate: orders live
     bucketed by ORDER key (one file per 2^6 bucket — so each customer's
     handful of orders scatter across files and a zone map on the
@@ -626,14 +616,14 @@ def r12_lake_bloom_pruned_read(spark, sf_dir):
 # refresh_bloom_sidecar + crash-safe swaps): the r12 rows prove the
 # build→read leg; these prove the append→INCREMENTAL-refresh→read leg —
 # the posture a 100 TB lake with append cadence actually runs.  Layout
-# and oracle construction follow lake_pruned_read / lake_bloom_pruned_read
-# (pending_r12), with the lake written in TWO phases so each (bucket,
+# and oracle construction follow lake_pruned_read / lake_bloom_pruned_read,
+# with the lake written in TWO phases so each (bucket,
 # phase) pair is one deterministic file and the oracle can restate the
 # refreshed sidecar as arithmetic.
 # ---------------------------------------------------------------------------
 
 
-R13_SQL_LAKE_ZONE_REFRESH = f"""
+_SQL_LAKE_ZONE_REFRESH = f"""
     WITH o AS (
       SELECT o_custkey AS ck,
              CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
@@ -694,8 +684,8 @@ R13_SQL_LAKE_ZONE_REFRESH = f"""
 """
 
 
-@q("lake_zone_refresh_read", R13_SQL_LAKE_ZONE_REFRESH)
-def r13_lake_zone_refresh_read(spark, sf_dir):
+@q("lake_zone_refresh_read", _SQL_LAKE_ZONE_REFRESH)
+def lake_zone_refresh_read(spark, sf_dir):
     """The zone map's APPEND lifecycle end-to-end under the value gate:
     phase-0 orders land as the clustered lake and get the full
     certificate build (``write_zone_map``); phase-1 orders APPEND into
@@ -762,7 +752,7 @@ def r13_lake_zone_refresh_read(spark, sf_dir):
     )
 
 
-R13_SQL_LAKE_BLOOM_REFRESH = f"""
+_SQL_LAKE_BLOOM_REFRESH = f"""
     WITH o AS (
       SELECT o_orderkey AS okey, o_custkey AS ck,
              CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
@@ -791,20 +781,20 @@ R13_SQL_LAKE_BLOOM_REFRESH = f"""
     fk AS (SELECT DISTINCT b_file, phase, ck FROM f),
     sidecar AS (
       SELECT DISTINCT b_file, phase, pos FROM (
-        SELECT b_file, phase, {_sql_bpos("CAST(ck AS VARCHAR)", 0)} AS pos
+        SELECT b_file, phase, {_sql_bloom_pos("CAST(ck AS VARCHAR)", 0, _BLOOM_M)} AS pos
         FROM fk
         UNION ALL
-        SELECT b_file, phase, {_sql_bpos("CAST(ck AS VARCHAR)", 1)} FROM fk
+        SELECT b_file, phase, {_sql_bloom_pos("CAST(ck AS VARCHAR)", 1, _BLOOM_M)} FROM fk
         UNION ALL
-        SELECT b_file, phase, {_sql_bpos("CAST(ck AS VARCHAR)", 2)} FROM fk
+        SELECT b_file, phase, {_sql_bloom_pos("CAST(ck AS VARCHAR)", 2, _BLOOM_M)} FROM fk
       )
     ),
     kpos AS (
-      SELECT ck, {_sql_bpos("CAST(ck AS VARCHAR)", 0)} AS pos FROM keys
+      SELECT ck, {_sql_bloom_pos("CAST(ck AS VARCHAR)", 0, _BLOOM_M)} AS pos FROM keys
       UNION ALL
-      SELECT ck, {_sql_bpos("CAST(ck AS VARCHAR)", 1)} FROM keys
+      SELECT ck, {_sql_bloom_pos("CAST(ck AS VARCHAR)", 1, _BLOOM_M)} FROM keys
       UNION ALL
-      SELECT ck, {_sql_bpos("CAST(ck AS VARCHAR)", 2)} FROM keys
+      SELECT ck, {_sql_bloom_pos("CAST(ck AS VARCHAR)", 2, _BLOOM_M)} FROM keys
     ),
     kept AS (
       SELECT DISTINCT b_file, phase FROM (
@@ -832,8 +822,8 @@ R13_SQL_LAKE_BLOOM_REFRESH = f"""
 """
 
 
-@q("lake_bloom_refresh_read", R13_SQL_LAKE_BLOOM_REFRESH)
-def r13_lake_bloom_refresh_read(spark, sf_dir):
+@q("lake_bloom_refresh_read", _SQL_LAKE_BLOOM_REFRESH)
+def lake_bloom_refresh_read(spark, sf_dir):
     """The Bloom sidecar's APPEND lifecycle end-to-end under the value
     gate (the round-12 refresh_bloom_sidecar, in the
     lake_bloom_pruned_read layout): phase-0 orders land bucketed by
@@ -917,7 +907,7 @@ def r13_lake_bloom_refresh_read(spark, sf_dir):
 # certificate.
 # ---------------------------------------------------------------------------
 
-R13_SQL_LAKE_COMPACT_REFRESH = f"""
+_SQL_LAKE_COMPACT_REFRESH = f"""
     WITH o AS (
       SELECT o_custkey AS ck,
              CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
@@ -979,8 +969,8 @@ R13_SQL_LAKE_COMPACT_REFRESH = f"""
 """
 
 
-@q("lake_compact_refresh_read", R13_SQL_LAKE_COMPACT_REFRESH)
-def r13_lake_compact_refresh_read(spark, sf_dir):
+@q("lake_compact_refresh_read", _SQL_LAKE_COMPACT_REFRESH)
+def lake_compact_refresh_read(spark, sf_dir):
     """The zone map's COMPACTION lifecycle under the value gate (the
     vanished-files complement of lake_zone_refresh_read): the 64-cell
     fine layout gets the full certificate build, then compaction
@@ -1073,7 +1063,7 @@ def r13_lake_compact_refresh_read(spark, sf_dir):
 # _data_files to raise).
 # ---------------------------------------------------------------------------
 
-R14_SQL_LAKE_MANIFEST = f"""
+_SQL_LAKE_MANIFEST = f"""
     WITH o AS (
       SELECT o_custkey AS ck,
              CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
@@ -1146,8 +1136,8 @@ R14_SQL_LAKE_MANIFEST = f"""
 """
 
 
-@q("lake_manifest_read", R14_SQL_LAKE_MANIFEST)
-def r14_lake_manifest_read(spark, sf_dir):
+@q("lake_manifest_read", _SQL_LAKE_MANIFEST)
+def lake_manifest_read(spark, sf_dir):
     """The listing-free read lifecycle end-to-end under the value gate:
     phase-0 orders land clustered (one file per coarse Z-cell),
     ``write_zone_map`` builds the certificate, ``write_file_manifest``
@@ -1240,7 +1230,7 @@ def r14_lake_manifest_read(spark, sf_dir):
 # different offset/width so the two rows cannot mask each other.
 # ---------------------------------------------------------------------------
 
-R14_SQL_MANIFEST_BLOOM = f"""
+_SQL_MANIFEST_BLOOM = f"""
     WITH o AS (
       SELECT o_orderkey AS okey, o_custkey AS ck,
              CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
@@ -1268,19 +1258,19 @@ R14_SQL_MANIFEST_BLOOM = f"""
     fk AS (SELECT DISTINCT b_file, ck FROM f),
     sidecar AS (
       SELECT DISTINCT b_file, pos FROM (
-        SELECT b_file, {_sql_bpos("CAST(ck AS VARCHAR)", 0)} AS pos FROM fk
+        SELECT b_file, {_sql_bloom_pos("CAST(ck AS VARCHAR)", 0, _BLOOM_M)} AS pos FROM fk
         UNION ALL
-        SELECT b_file, {_sql_bpos("CAST(ck AS VARCHAR)", 1)} FROM fk
+        SELECT b_file, {_sql_bloom_pos("CAST(ck AS VARCHAR)", 1, _BLOOM_M)} FROM fk
         UNION ALL
-        SELECT b_file, {_sql_bpos("CAST(ck AS VARCHAR)", 2)} FROM fk
+        SELECT b_file, {_sql_bloom_pos("CAST(ck AS VARCHAR)", 2, _BLOOM_M)} FROM fk
       )
     ),
     kpos AS (
-      SELECT ck, {_sql_bpos("CAST(ck AS VARCHAR)", 0)} AS pos FROM keys
+      SELECT ck, {_sql_bloom_pos("CAST(ck AS VARCHAR)", 0, _BLOOM_M)} AS pos FROM keys
       UNION ALL
-      SELECT ck, {_sql_bpos("CAST(ck AS VARCHAR)", 1)} FROM keys
+      SELECT ck, {_sql_bloom_pos("CAST(ck AS VARCHAR)", 1, _BLOOM_M)} FROM keys
       UNION ALL
-      SELECT ck, {_sql_bpos("CAST(ck AS VARCHAR)", 2)} FROM keys
+      SELECT ck, {_sql_bloom_pos("CAST(ck AS VARCHAR)", 2, _BLOOM_M)} FROM keys
     ),
     kept AS (
       SELECT DISTINCT b_file FROM (
@@ -1307,8 +1297,8 @@ R14_SQL_MANIFEST_BLOOM = f"""
 """
 
 
-@q("lake_manifest_bloom_read", R14_SQL_MANIFEST_BLOOM)
-def r14_lake_manifest_bloom_read(spark, sf_dir):
+@q("lake_manifest_bloom_read", _SQL_MANIFEST_BLOOM)
+def lake_manifest_bloom_read(spark, sf_dir):
     """Bloom pruning served listing-free AND with the scalable residual:
     the lake is bucketed by order key (customer keys scatter — the
     un-zone-mappable shape), the Bloom sidecar and the generation-0
@@ -1382,7 +1372,7 @@ def r14_lake_manifest_bloom_read(spark, sf_dir):
 # value gate proves it returns the same rows.
 # ---------------------------------------------------------------------------
 
-R14_SQL_SEMI_SNAPSHOT = f"""
+_SQL_SEMI_SNAPSHOT = f"""
     WITH o AS (
       SELECT o_custkey AS ck,
              CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
@@ -1424,8 +1414,8 @@ R14_SQL_SEMI_SNAPSHOT = f"""
 """
 
 
-@q("lake_semi_snapshot_keys", R14_SQL_SEMI_SNAPSHOT)
-def r14_lake_semi_snapshot_keys(spark, sf_dir):
+@q("lake_semi_snapshot_keys", _SQL_SEMI_SNAPSHOT)
+def lake_semi_snapshot_keys(spark, sf_dir):
     """``pruned_semi_read`` with the snapshot-frame residual forced
     (``isin_threshold=0``): the newest 10% of customers decide the file
     scan set via footer-range bisect exactly as before, but the exact
@@ -1483,7 +1473,7 @@ def r14_lake_semi_snapshot_keys(spark, sf_dir):
 # append-only lifecycles never exercise.
 # ---------------------------------------------------------------------------
 
-R14_SQL_MANIFEST_DIFF = """
+_SQL_MANIFEST_DIFF = """
     WITH c AS (
       SELECT c_custkey AS k, c_custkey % 8 AS bucket,
              CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) AS cents
@@ -1504,8 +1494,8 @@ R14_SQL_MANIFEST_DIFF = """
 """
 
 
-@q("lake_manifest_diff", R14_SQL_MANIFEST_DIFF)
-def r14_lake_manifest_diff(spark, sf_dir):
+@q("lake_manifest_diff", _SQL_MANIFEST_DIFF)
+def lake_manifest_diff(spark, sf_dir):
     """The manifest write path's diff accounting under the value gate:
     customers land one file per ``c_custkey % 8`` bucket (8 files —
     the deterministic repartition-then-partitionBy layout), manifest

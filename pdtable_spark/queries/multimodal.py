@@ -181,7 +181,7 @@ def _sql_phash() -> str:
 #: hamming <= 1 differs in at most one of the operator's two 6-bit bands,
 #: so the pigeonhole blocking is lossless and the oracle is simply "all
 #: pairs within the hamming radius" — no band arithmetic to mirror.
-R8_SQL_PHASH_DUPS = f"""
+_SQL_PHASH_DUPS = f"""
     WITH assets AS ({_SQL_ASSETS}),
     px AS (SELECT asset_id, {_sql_phash()} AS phash FROM assets)
     SELECT a.asset_id AS id_a, b.asset_id AS id_b,
@@ -191,8 +191,8 @@ R8_SQL_PHASH_DUPS = f"""
 """
 
 
-@q("multimodal_phash_dups", R8_SQL_PHASH_DUPS)
-def r8_multimodal_phash_dups(spark, sf_dir):
+@q("multimodal_phash_dups", _SQL_PHASH_DUPS)
+def multimodal_phash_dups(spark, sf_dir):
     """Perceptual near-duplicate images: dHash (neighbor-difference bits
     over the decoded 4×4 grid, fake codec = oracle mode) blocked by the
     SimHash pigeonhole, exact bit_count(xor) verify — payloads and frames
@@ -209,7 +209,7 @@ def r8_multimodal_phash_dups(spark, sf_dir):
 #  format/dimension extraction as pure JVM column expressions)
 # ---------------------------------------------------------------------------
 
-R10_SQL_IMAGE_META = """
+_SQL_IMAGE_META = """
     SELECT doc_id,
            CASE doc_id % 6 WHEN 0 THEN 'png' WHEN 1 THEN 'gif'
                 WHEN 2 THEN 'jpeg' WHEN 3 THEN 'webp'
@@ -220,8 +220,8 @@ R10_SQL_IMAGE_META = """
 """
 
 
-@q("multimodal_image_meta", R10_SQL_IMAGE_META)
-def r10_multimodal_image_meta(spark, sf_dir):
+@q("multimodal_image_meta", _SQL_IMAGE_META)
+def multimodal_image_meta(spark, sf_dir):
     """The zero-decode metadata scan under the driver value gate: real
     PNG, GIF, JPEG, WebP and TIFF header BYTES are synthesized in-engine
     per document (doc_id % 6 picks the format: big-endian IHDR, little-
@@ -347,7 +347,7 @@ def r10_multimodal_image_meta(spark, sf_dir):
 #  bounded fold)
 # ---------------------------------------------------------------------------
 
-R11_SQL_AUDIO_META = """
+_SQL_AUDIO_META = """
     WITH d AS (
       SELECT doc_id,
              doc_id % 2 + 1 AS ch,
@@ -377,8 +377,8 @@ R11_SQL_AUDIO_META = """
 """
 
 
-@q("multimodal_audio_meta", R11_SQL_AUDIO_META)
-def r11_multimodal_audio_meta(spark, sf_dir):
+@q("multimodal_audio_meta", _SQL_AUDIO_META)
+def multimodal_audio_meta(spark, sf_dir):
     """The zero-decode AUDIO metadata scan under the driver value gate
     (the ``multimodal_image_meta`` idiom, next modality): real RIFF/WAVE
     header BYTES are synthesized in-engine per document — a
@@ -493,7 +493,7 @@ def r11_multimodal_audio_meta(spark, sf_dir):
 #  image/audio/video pre-decode scan trio)
 # ---------------------------------------------------------------------------
 
-R11_SQL_VIDEO_META = """
+_SQL_VIDEO_META = """
     WITH d AS (
       SELECT doc_id,
              CASE doc_id % 4 WHEN 0 THEN 16667 WHEN 1 THEN 33333
@@ -524,8 +524,8 @@ R11_SQL_VIDEO_META = """
 """
 
 
-@q("multimodal_video_meta", R11_SQL_VIDEO_META)
-def r11_multimodal_video_meta(spark, sf_dir):
+@q("multimodal_video_meta", _SQL_VIDEO_META)
+def multimodal_video_meta(spark, sf_dir):
     """The zero-decode VIDEO metadata scan under the driver value gate,
     completing the modality trio next to ``multimodal_image_meta`` and
     ``multimodal_audio_meta``: real RIFF/AVI header BYTES are

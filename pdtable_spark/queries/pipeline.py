@@ -10,8 +10,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from pdtable_spark.operators import dedup, sampling, similarity, text
+from pdtable_spark.queries.embedding import seed_centroids
 from pdtable_spark.queries.suite import (
-    ORACLES,
     _BLOOM_BITS,
     _C4_KEPT_SQL,
     _CLF_BIAS,
@@ -22,11 +22,11 @@ from pdtable_spark.queries.suite import (
     _IVF_CELLS,
     _SEMDEDUP_THRESHOLD,
     _SHARD_N,
+    _SQL_CLUSTERS,
     _SQL_CLUSTER_ASSIGN,
     _SQL_MD5_60,
     _SQL_SHINGLES,
     _SQL_TOKS,
-    _seed_centroids,
     _sql_band_index,
     _sql_bloom_pos,
     _sql_clf_weights,
@@ -236,9 +236,19 @@ def pipeline_apply_mixture(spark, sf_dir):
     ).select("doc_id", "source")
 
 
+# leakage-safe split oracle: the clusters closure + the md5_60 bucket test
+# applied to the COMPONENT id (so a clique's members always agree)
 @q(
     "pipeline_leakage_safe_split",
-    None,  # assigned below — wraps the dedup_clusters closure oracle
+    f"""
+    WITH clusters AS ({_SQL_CLUSTERS})
+    SELECT d.doc_id, d.source, c.component,
+           CAST({_SQL_MD5_60.format(x="CAST(c.component AS VARCHAR)")} % 100
+                AS INT) AS split_bucket,
+           CASE WHEN {_SQL_MD5_60.format(x="CAST(c.component AS VARCHAR)")} % 100 < 90
+                THEN 'train' ELSE 'val' END AS split
+    FROM documents d JOIN clusters c ON c.doc_id = d.doc_id
+""",
 )
 def pipeline_leakage_safe_split(spark, sf_dir):
     """Train/val split hashed on the near-dup CLUSTER id, so paraphrase
@@ -527,19 +537,6 @@ def pipeline_length_buckets(spark, sf_dir):
     )
 
 
-# leakage-safe split oracle: the clusters closure + the md5_60 bucket test
-# applied to the COMPONENT id (so a clique's members always agree)
-ORACLES["pipeline_leakage_safe_split"] = f"""
-    WITH clusters AS ({ORACLES["dedup_clusters"]})
-    SELECT d.doc_id, d.source, c.component,
-           CAST({_SQL_MD5_60.format(x="CAST(c.component AS VARCHAR)")} % 100
-                AS INT) AS split_bucket,
-           CASE WHEN {_SQL_MD5_60.format(x="CAST(c.component AS VARCHAR)")} % 100 < 90
-                THEN 'train' ELSE 'val' END AS split
-    FROM documents d JOIN clusters c ON c.doc_id = d.doc_id
-"""
-
-
 @q(
     "pipeline_cluster_keywords",
     f"""
@@ -577,13 +574,7 @@ def pipeline_cluster_keywords(spark, sf_dir):
     one (cell, term) aggregate, one per-cell top-k window."""
     emb = load(spark, sf_dir, "embeddings")
     docs = load(spark, sf_dir, "documents")
-    cents = [
-        list(r["v"])
-        for r in emb.filter(F.col("vec_id") < _IVF_CELLS)
-        .orderBy("vec_id")
-        .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-        .collect()
-    ]
+    cents = seed_centroids(emb)
     asg = similarity.ivf_index(emb, cents).select("vec_id", "cell")
     toks = (
         docs.join(asg, docs["doc_id"] == asg["vec_id"])
@@ -903,7 +894,7 @@ def pipeline_score_calibration(spark, sf_dir):
 #: PSI over the same even/odd snapshot halves (and the same report CTE) as
 #: the registered drift queries — the three standard drift gates (report /
 #: TVD / PSI) then share one oracle lineage.
-R8_SQL_PSI = f"""
+_SQL_PSI = f"""
     WITH rep AS ({_SQL_DRIFT_REPORT})
     SELECT dim, CAST(COUNT(*) AS BIGINT) AS n_values,
            CAST(SUM(CAST(FLOOR(round(
@@ -915,8 +906,8 @@ R8_SQL_PSI = f"""
 """
 
 
-@q("pipeline_drift_psi", R8_SQL_PSI)
-def r8_pipeline_drift_psi(spark, sf_dir):
+@q("pipeline_drift_psi", _SQL_PSI)
+def pipeline_drift_psi(spark, sf_dir):
     """Population Stability Index between the even/odd snapshot halves
     along source and lang — the rare-category-sensitive companion to
     pipeline_drift_tvd, quantized-BIGINT-summed for bit reproducibility."""
@@ -932,7 +923,7 @@ def r8_pipeline_drift_psi(spark, sf_dir):
 
 #: Numeric drift: n_chars over [0, 600) in 12 fixed bins (width 50.0 —
 #: exact in binary, so floor((x-0)/50) is engine-identical).
-R8_SQL_NUMERIC_DRIFT = """
+_SQL_NUMERIC_DRIFT = """
     WITH ob AS (
       SELECT CAST(CAST(LEAST(GREATEST(
                FLOOR((CAST(n_chars AS DOUBLE) - 0.0) / 50.0), 0), 11)
@@ -967,8 +958,8 @@ R8_SQL_NUMERIC_DRIFT = """
 """
 
 
-@q("pipeline_numeric_drift", R8_SQL_NUMERIC_DRIFT)
-def r8_pipeline_numeric_drift(spark, sf_dir):
+@q("pipeline_numeric_drift", _SQL_NUMERIC_DRIFT)
+def pipeline_numeric_drift(spark, sf_dir):
     """Numeric-dimension drift between the snapshot halves: n_chars
     bucketized into 12 shared fixed-width bins over [0, 600), then the
     standard categorical report — the length-distribution alarm a filter
@@ -1000,7 +991,7 @@ _SQL_DSIR_GRAMS = (
     f"ELSE [array_to_string({_SQL_DSIR_TOKS}, ' ')] END)"
 )
 
-R8_SQL_DSIR = f"""
+_SQL_DSIR = f"""
     WITH gb AS (
       SELECT doc_id,
              CAST('0x' || substr(md5(gram), 1, 15) AS BIGINT) % 4096 AS b
@@ -1029,8 +1020,8 @@ R8_SQL_DSIR = f"""
 """
 
 
-@q("pipeline_dsir_weights", R8_SQL_DSIR)
-def r8_pipeline_dsir_weights(spark, sf_dir):
+@q("pipeline_dsir_weights", _SQL_DSIR)
+def pipeline_dsir_weights(spark, sf_dir):
     """DSIR importance log-weights (hashed-ngram importance resampling,
     Xie et al. 2023) for steering the raw corpus toward its lang='en'
     slice — the modern "select data that looks like the target" primitive,
@@ -1048,7 +1039,7 @@ def r8_pipeline_dsir_weights(spark, sf_dir):
 #: The filter-tuning curve over doc length: how much of the corpus (docs
 #: AND tokens) survives each candidate n_chars cutoff — one scan, the
 #: curve unpivots from a single aggregate row.
-R8_SQL_THRESHOLD_SWEEP = r"""
+_SQL_THRESHOLD_SWEEP = r"""
     WITH t(threshold) AS (VALUES (100.0), (200.0), (300.0), (400.0)),
     base AS (SELECT source, CAST(n_chars AS DOUBLE) AS s,
                     CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS tok
@@ -1070,8 +1061,8 @@ R8_SQL_THRESHOLD_SWEEP = r"""
 """
 
 
-@q("pipeline_threshold_sweep", R8_SQL_THRESHOLD_SWEEP)
-def r8_pipeline_threshold_sweep(spark, sf_dir):
+@q("pipeline_threshold_sweep", _SQL_THRESHOLD_SWEEP)
+def pipeline_threshold_sweep(spark, sf_dir):
     """Per-source threshold sweep over n_chars at 100/200/300/400: docs
     kept, WITHIN-source share, tokens kept, token share per cutoff — the
     per-source cut a mixture rebalance is tuned from, still one scan (T
@@ -1148,11 +1139,11 @@ def _sql_funnel() -> str:
     return flags + "\n    UNION ALL".join(arms)
 
 
-R8_SQL_FUNNEL = _sql_funnel()
+_SQL_FUNNEL = _sql_funnel()
 
 
-@q("pipeline_curation_funnel", R8_SQL_FUNNEL)
-def r8_pipeline_curation_funnel(spark, sf_dir):
+@q("pipeline_curation_funnel", _SQL_FUNNEL)
+def pipeline_curation_funnel(spark, sf_dir):
     """Per-rule rejection funnel over the full Gopher flag set: n_failed
     (double-counts multi-rule failures by design), within-corpus failure
     share, and the MARGINAL n_failed_alone (what dropping the rule would
@@ -1166,7 +1157,7 @@ def r8_pipeline_curation_funnel(spark, sf_dir):
     return curation_funnel(gopher_quality_flags(docs, min_words=_GOPHER_MIN_WORDS))
 
 
-R8_SQL_BLOOM = f"""
+_SQL_BLOOM = f"""
     WITH base AS (SELECT doc_id, source = 'src0' AS is_bench, {_SQL_SHINGLES} AS sh
                   FROM documents),
     bench_g AS (SELECT DISTINCT unnest(sh) AS g FROM base WHERE is_bench),
@@ -1202,8 +1193,8 @@ R8_SQL_BLOOM = f"""
 """
 
 
-@q("pipeline_bloom_screen", R8_SQL_BLOOM)
-def r8_pipeline_bloom_screen(spark, sf_dir):
+@q("pipeline_bloom_screen", _SQL_BLOOM)
+def pipeline_bloom_screen(spark, sf_dir):
     """Bloom-filter decontamination screen: every non-benchmark doc's
     shingles probed against a 2^16-bit / 3-hash Bloom filter of the
     src0 eval set — the cheap first pass whose flags feed the exact
@@ -1226,8 +1217,8 @@ def r8_pipeline_bloom_screen(spark, sf_dir):
 # Two-stage decontamination funnel: Bloom screen -> exact verify on flagged
 # ---------------------------------------------------------------------------
 
-R8_SQL_DECON_FUNNEL = f"""
-    WITH screen AS ({R8_SQL_BLOOM}),
+_SQL_DECON_FUNNEL = f"""
+    WITH screen AS ({_SQL_BLOOM}),
     flagged AS (SELECT train_id FROM screen WHERE flagged = 1),
     base AS (SELECT doc_id, source = 'src0' AS is_bench, {_SQL_SHINGLES} AS sh
              FROM documents),
@@ -1248,8 +1239,8 @@ R8_SQL_DECON_FUNNEL = f"""
 """
 
 
-@q("pipeline_decon_funnel", R8_SQL_DECON_FUNNEL)
-def r8_pipeline_decon_funnel(spark, sf_dir):
+@q("pipeline_decon_funnel", _SQL_DECON_FUNNEL)
+def pipeline_decon_funnel(spark, sf_dir):
     """The production decontamination shape: the Bloom screen prunes the
     corpus to its flagged docs, and the exact (train, bench) containment
     verifier runs ONLY on those — the quadratic-looking pair stage sees a
@@ -1290,7 +1281,7 @@ def r8_pipeline_decon_funnel(spark, sf_dir):
 _EPOCHS_TARGETS = {"src1": 0.5, "src2": 0.3, "src3": 0.2}
 _EPOCHS_MAX = 2.0
 
-R8_SQL_EPOCHS = f"""
+_SQL_EPOCHS = f"""
     WITH per AS (
       SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
              CAST(SUM(CAST(len({_SQL_TOKS}) AS DECIMAL(18,0))) AS BIGINT)
@@ -1315,8 +1306,8 @@ R8_SQL_EPOCHS = f"""
 """
 
 
-@q("pipeline_epochs_plan", R8_SQL_EPOCHS)
-def r8_pipeline_epochs_plan(spark, sf_dir):
+@q("pipeline_epochs_plan", _SQL_EPOCHS)
+def pipeline_epochs_plan(spark, sf_dir):
     """Data-constrained pre-flight: how many epochs of each targeted
     source the (budget, mixture) pair implies, with the >max_epochs
     over-repetition flag (Muennighoff et al. 2023 — marginal value of a
@@ -1349,7 +1340,7 @@ def r8_pipeline_epochs_plan(spark, sf_dir):
 # Semantic packing: in-context-pretraining shards (cluster-then-pack)
 # ---------------------------------------------------------------------------
 
-R8_SQL_SEMANTIC_PACK = f"""
+_SQL_SEMANTIC_PACK = f"""
     WITH {_SQL_CLUSTER_ASSIGN},
     a AS (SELECT vec_id AS doc_id, CAST(cid AS INT) AS cell FROM cd WHERE rn = 1),
     d AS (SELECT doc_id, cell, CAST(len({_SQL_TOKS}) AS BIGINT) AS n_tokens
@@ -1362,8 +1353,8 @@ R8_SQL_SEMANTIC_PACK = f"""
 """
 
 
-@q("pipeline_semantic_pack", R8_SQL_SEMANTIC_PACK)
-def r8_pipeline_semantic_pack(spark, sf_dir):
+@q("pipeline_semantic_pack", _SQL_SEMANTIC_PACK)
+def pipeline_semantic_pack(spark, sf_dir):
     """In-context-pretraining shards (Shi et al. 2023, ICP): related
     documents land in the SAME trainer work unit — cluster assignment
     under the seed centroids, then token-budget packing WITHIN each cell
@@ -1373,7 +1364,8 @@ def r8_pipeline_semantic_pack(spark, sf_dir):
     from pdtable_spark.operators import similarity
     from pdtable_spark.operators.text import pack_budget, token_count
 
-    emb, cents = _seed_centroids(spark, sf_dir)
+    emb = load(spark, sf_dir, "embeddings")
+    cents = seed_centroids(emb)
     idx = similarity.ivf_index(emb, cents).select(
         F.col("vec_id").alias("doc_id"), F.col("cell")
     )
@@ -1395,7 +1387,7 @@ def r8_pipeline_semantic_pack(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-R8_SQL_UNCERTAINTY = f"""
+_SQL_UNCERTAINTY = f"""
     WITH toks AS (
       SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS term
       FROM documents
@@ -1414,8 +1406,8 @@ R8_SQL_UNCERTAINTY = f"""
 """
 
 
-@q("pipeline_uncertainty_sample", R8_SQL_UNCERTAINTY)
-def r8_pipeline_uncertainty_sample(spark, sf_dir):
+@q("pipeline_uncertainty_sample", _SQL_UNCERTAINTY)
+def pipeline_uncertainty_sample(spark, sf_dir):
     """Active-learning batch selection: the 20 docs whose linear-classifier
     score sits nearest the keep/drop threshold — margin-based uncertainty
     sampling, the label-what-the-model-doubts loop that grows a quality
@@ -1440,7 +1432,7 @@ def r8_pipeline_uncertainty_sample(spark, sf_dir):
 # Per-source cap (operators/sampling.py) — both spellings value-pinned
 # ---------------------------------------------------------------------------
 
-R8_SQL_SOURCE_CAP = """
+_SQL_SOURCE_CAP = """
     WITH s AS (
       SELECT doc_id, source, CAST(n_chars AS DOUBLE) AS score FROM documents
     ),
@@ -1455,8 +1447,8 @@ R8_SQL_SOURCE_CAP = """
 """
 
 
-@q("pipeline_source_cap", R8_SQL_SOURCE_CAP)
-def r8_pipeline_source_cap(spark, sf_dir):
+@q("pipeline_source_cap", _SQL_SOURCE_CAP)
+def pipeline_source_cap(spark, sf_dir):
     """Per-domain cap (keep each source's best 10 by a quality proxy) in
     BOTH spellings pinned against each other: the exact window
     row_number and the crawl-scale screen-then-trim (per-source
@@ -1485,7 +1477,7 @@ def r8_pipeline_source_cap(spark, sf_dir):
 # Record-level privacy (operators/privacy.py): k-anonymity + risk report
 # ---------------------------------------------------------------------------
 
-R8_SQL_K_ANONYMIZE = """
+_SQL_K_ANONYMIZE = """
     WITH g AS (
       SELECT c_nationkey, c_mktsegment FROM customer
       GROUP BY 1, 2 HAVING COUNT(*) >= 10
@@ -1497,8 +1489,8 @@ R8_SQL_K_ANONYMIZE = """
 """
 
 
-@q("pipeline_k_anonymize", R8_SQL_K_ANONYMIZE)
-def r8_pipeline_k_anonymize(spark, sf_dir):
+@q("pipeline_k_anonymize", _SQL_K_ANONYMIZE)
+def pipeline_k_anonymize(spark, sf_dir):
     """k-anonymity suppression over customer metadata: only rows whose
     (nation, segment) combination occurs >= 10 times survive — the
     pre-release privacy floor for record-level corpus metadata.  One
@@ -1511,7 +1503,7 @@ def r8_pipeline_k_anonymize(spark, sf_dir):
     return k_anonymize(cust, ["c_nationkey", "c_mktsegment"], 10)
 
 
-R8_SQL_ANONYMITY_REPORT = """
+_SQL_ANONYMITY_REPORT = """
     WITH s AS (
       SELECT c_nationkey, c_mktsegment, COUNT(*) AS n,
              COUNT(DISTINCT c_acctbal) AS l
@@ -1532,8 +1524,8 @@ R8_SQL_ANONYMITY_REPORT = """
 """
 
 
-@q("pipeline_anonymity_report", R8_SQL_ANONYMITY_REPORT)
-def r8_pipeline_anonymity_report(spark, sf_dir):
+@q("pipeline_anonymity_report", _SQL_ANONYMITY_REPORT)
+def pipeline_anonymity_report(spark, sf_dir):
     """Re-identification risk report over customer (nation, segment)
     groups at thresholds 5/10/20, with account balance as the sensitive
     attribute (min_l_diversity) — the audit that picks k for
@@ -1555,7 +1547,7 @@ def r8_pipeline_anonymity_report(spark, sf_dir):
 # Snapshot diff (io/maintenance.py) — dataset-release bookkeeping as a query
 # ---------------------------------------------------------------------------
 
-R8_SQL_SNAPSHOT_DIFF = """
+_SQL_SNAPSHOT_DIFF = """
     SELECT doc_id, 'removed' AS change_type FROM documents
     WHERE doc_id % 7 = 0
     UNION ALL
@@ -1567,8 +1559,8 @@ R8_SQL_SNAPSHOT_DIFF = """
 """
 
 
-@q("pipeline_snapshot_diff", R8_SQL_SNAPSHOT_DIFF)
-def r8_pipeline_snapshot_diff(spark, sf_dir):
+@q("pipeline_snapshot_diff", _SQL_SNAPSHOT_DIFF)
+def pipeline_snapshot_diff(spark, sf_dir):
     """Keyed diff between two corpus releases (what did this ingest DO):
     the new snapshot deterministically removes doc_id%7, rewrites the
     text of doc_id%5, and lands doc_id%11 again under shifted ids —
@@ -1613,7 +1605,7 @@ def _sql_facade_ops():
 
 
 @q("pipeline_facade_ops", _sql_facade_ops())
-def r8_pipeline_facade_ops(spark, sf_dir):
+def pipeline_facade_ops(spark, sf_dir):
     """The reference's mutation surface (R10 replace, R11 cast, R12
     fillna, R14 rename — previously pytest-only) chained through the
     unit-checked Table facade in the graded path: replace order-status
@@ -1666,7 +1658,7 @@ def r8_pipeline_facade_ops(spark, sf_dir):
 # novelty_estimate, new round 8 — DataSketches HLL, JVM-native)
 # ---------------------------------------------------------------------------
 
-R9_SQL_NOVELTY_LEDGER = """
+_SQL_NOVELTY_LEDGER = """
     SELECT source,
            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_batch_exact,
            CAST(COUNT(DISTINCT CASE WHEN (doc_id % 97) % 3 = 0 THEN doc_id END)
@@ -1677,8 +1669,8 @@ R9_SQL_NOVELTY_LEDGER = """
 """
 
 
-@q("pipeline_novelty_ledger", R9_SQL_NOVELTY_LEDGER)
-def r9_pipeline_novelty_ledger(spark, sf_dir):
+@q("pipeline_novelty_ledger", _SQL_NOVELTY_LEDGER)
+def pipeline_novelty_ledger(spark, sf_dir):
     """Continuous-ingest novelty bookkeeping from sketches alone: a
     ledger of per-source HLL distinct sketches over the already-seen
     corpus ((doc_id%97)%3<>0), probed by a new batch ((doc_id%97)%2=0)
@@ -1700,7 +1692,7 @@ def r9_pipeline_novelty_ledger(spark, sf_dir):
     docs = load(spark, sf_dir, "documents")
     # (doc_id %% 97) decorrelates from the fixtures' round-robin
     # doc->source assignment: plain %%2 gave every source EXACTLY 25
-    # batch docs (n_batch_exact constant — staged-oracle audit)
+    # batch docs (n_batch_exact constant)
     seen = docs.filter((F.col("doc_id") % 97) % 3 != 0)
     batch = docs.filter((F.col("doc_id") % 97) % 2 == 0)
     led = monitor.distinct_sketch(seen, "doc_id", "source", lgk=16)
@@ -1734,7 +1726,7 @@ def r9_pipeline_novelty_ledger(spark, sf_dir):
 # (operators/text.py::source_divergence, new round 8)
 # ---------------------------------------------------------------------------
 
-R9_SQL_SOURCE_DIVERGENCE = r"""
+_SQL_SOURCE_DIVERGENCE = r"""
     WITH tok AS (
       SELECT source AS src, unnest(regexp_split_to_array(trim(text), '\s+')) AS t
       FROM documents WHERE text IS NOT NULL
@@ -1773,8 +1765,8 @@ R9_SQL_SOURCE_DIVERGENCE = r"""
 """
 
 
-@q("pipeline_source_divergence", R9_SQL_SOURCE_DIVERGENCE)
-def r9_pipeline_source_divergence(spark, sf_dir):
+@q("pipeline_source_divergence", _SQL_SOURCE_DIVERGENCE)
+def pipeline_source_divergence(spark, sf_dir):
     """Pairwise Hellinger + total-variation distance between per-source
     unigram distributions over the corpus top-16 vocabulary plus one
     OOV mass bucket — the "which domains are lexically close" matrix
@@ -1798,7 +1790,7 @@ def r9_pipeline_source_divergence(spark, sf_dir):
 # distinct-count ledger)
 # ---------------------------------------------------------------------------
 
-R9_SQL_QUANTILE_LEDGER = r"""
+_SQL_QUANTILE_LEDGER = r"""
     WITH led AS (
       SELECT source,
              CASE WHEN v < 0.0 THEN -1
@@ -1832,8 +1824,8 @@ R9_SQL_QUANTILE_LEDGER = r"""
 """
 
 
-@q("pipeline_quantile_ledger", R9_SQL_QUANTILE_LEDGER)
-def r9_pipeline_quantile_ledger(spark, sf_dir):
+@q("pipeline_quantile_ledger", _SQL_QUANTILE_LEDGER)
+def pipeline_quantile_ledger(spark, sf_dir):
     """Cross-snapshot quantiles from histogram ledgers ALONE: two
     snapshot ledgers (even/odd doc ids) of fixed-boundary n_chars bin
     counts union by addition — the mergeability approx_percentile's GK
@@ -1863,7 +1855,7 @@ def r9_pipeline_quantile_ledger(spark, sf_dir):
 # erasure certificate like pipeline_snapshot_diff)
 # ---------------------------------------------------------------------------
 
-R9_SQL_FORGET_AUDIT = """
+_SQL_FORGET_AUDIT = """
     SELECT source,
            CAST(SUM(CASE WHEN (doc_id % 97) % 9 = 0 THEN 1 ELSE 0 END) AS BIGINT)
              AS n_forgotten,
@@ -1874,8 +1866,8 @@ R9_SQL_FORGET_AUDIT = """
 """
 
 
-@q("pipeline_forget_audit", R9_SQL_FORGET_AUDIT)
-def r9_pipeline_forget_audit(spark, sf_dir):
+@q("pipeline_forget_audit", _SQL_FORGET_AUDIT)
+def pipeline_forget_audit(spark, sf_dir):
     """The GDPR/takedown sweep end-to-end under the value gate: a
     partitioned copy of documents, a deterministic takedown key set
     ((doc_id%97)%9==0), `forget_keys` rewriting ONLY the affected partition
@@ -1892,7 +1884,7 @@ def r9_pipeline_forget_audit(spark, sf_dir):
     # (doc_id%97)%9: ~6%% of docs, decorrelated from the round-robin
     # doc->source assignment so per-source certificate counts VARY (the
     # old %97 set hit exactly one doc in each touched source — constant
-    # certificate, staged-oracle audit)
+    # certificate)
     keys = docs.filter((F.col("doc_id") % 97) % 9 == 0).select("doc_id")
     return forget_keys(
         spark, f"{d}/lake", keys, "doc_id", partition_col="source"
@@ -1904,7 +1896,7 @@ def r9_pipeline_forget_audit(spark, sf_dir):
 # (operators/monitor.py::filter_agreement, new round 8)
 # ---------------------------------------------------------------------------
 
-R9_SQL_FILTER_AGREEMENT = r"""
+_SQL_FILTER_AGREEMENT = r"""
     WITH fl AS (
       SELECT CAST(n_chars >= 200 AS INT) AS f0,
              CAST(len(regexp_split_to_array(trim(text), '\s+')) >= 40 AS INT)
@@ -1949,8 +1941,8 @@ R9_SQL_FILTER_AGREEMENT = r"""
 """
 
 
-@q("pipeline_filter_agreement", R9_SQL_FILTER_AGREEMENT)
-def r9_pipeline_filter_agreement(spark, sf_dir):
+@q("pipeline_filter_agreement", _SQL_FILTER_AGREEMENT)
+def pipeline_filter_agreement(spark, sf_dir):
     """Curation QA: pairwise observed agreement + Cohen's kappa between
     three deterministic quality flags (length, word count, a content
     membership) — kappa near 1 says two filters are redundant compute,
@@ -1983,7 +1975,7 @@ def r9_pipeline_filter_agreement(spark, sf_dir):
 # quantiles, heavy hitters)
 # ---------------------------------------------------------------------------
 
-R10_SQL_HEAVY_HITTERS = r"""
+_SQL_HEAVY_HITTERS = r"""
     WITH tok AS (
       SELECT doc_id % 2 AS snap, source,
              unnest(regexp_split_to_array(trim(text), '\s+')) AS key
@@ -2021,8 +2013,8 @@ R10_SQL_HEAVY_HITTERS = r"""
 """
 
 
-@q("pipeline_heavy_hitters", R10_SQL_HEAVY_HITTERS)
-def r10_pipeline_heavy_hitters(spark, sf_dir):
+@q("pipeline_heavy_hitters", _SQL_HEAVY_HITTERS)
+def pipeline_heavy_hitters(spark, sf_dir):
     """The frequent-items ledger end-to-end under the value gate: two
     snapshot ledgers (even/odd doc ids) of per-source token counts
     truncated to top-16 with their truncation floors, merged to the
@@ -2100,7 +2092,7 @@ def _sql_recipe_weights() -> str:
     )
 
 
-R11_SQL_MODEL_QUALITY_RECIPE = rf"""
+_SQL_MODEL_QUALITY_RECIPE = rf"""
     WITH d AS (
       SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS ws,
              regexp_split_to_array(trim(lower(text)), '\s+') AS lws
@@ -2180,8 +2172,8 @@ R11_SQL_MODEL_QUALITY_RECIPE = rf"""
 """
 
 
-@q("pipeline_model_quality_recipe", R11_SQL_MODEL_QUALITY_RECIPE)
-def r11_pipeline_model_quality_recipe(spark, sf_dir):
+@q("pipeline_model_quality_recipe", _SQL_MODEL_QUALITY_RECIPE)
+def pipeline_model_quality_recipe(spark, sf_dir):
     """The full model-based curation recipe under ONE value gate (VERDICT
     r9 task #7): the published FROZEN classifier (trained once by
     ``train_quality_classifier``, quantized by ``freeze_classifier`` —
@@ -2252,7 +2244,7 @@ _PROFILE_COLS = {
     "events": ["event_type", "user_id", "value", "props"],
 }
 
-R11_SQL_COLUMN_PROFILE = (
+_SQL_COLUMN_PROFILE = (
     " UNION ALL ".join(
         _sql_profile_arm(t, c) for t, cs in _PROFILE_COLS.items() for c in cs
     )
@@ -2260,8 +2252,8 @@ R11_SQL_COLUMN_PROFILE = (
 )
 
 
-@q("pipeline_column_profile", R11_SQL_COLUMN_PROFILE)
-def r11_pipeline_column_profile(spark, sf_dir):
+@q("pipeline_column_profile", _SQL_COLUMN_PROFILE)
+def pipeline_column_profile(spark, sf_dir):
     """The ANALYZE-TABLE pre-flight under the value gate: one-pass
     (n_rows, n_null, null_frac, ndv) per column over two tables — the
     numbers that size a join's shuffle key domain and flag null-heavy
@@ -2291,7 +2283,7 @@ def r11_pipeline_column_profile(spark, sf_dir):
 #  ingest-QA pass: (path, kind, n) over the key paths actually present)
 # ---------------------------------------------------------------------------
 
-R11_SQL_JSON_PROFILE = """
+_SQL_JSON_PROFILE = """
     WITH e AS (SELECT event_id FROM events)
     SELECT path, kind, CAST(n AS BIGINT) AS n FROM (
       SELECT '$' AS path, 'object' AS kind, COUNT(*) AS n FROM e
@@ -2311,8 +2303,8 @@ R11_SQL_JSON_PROFILE = """
 """
 
 
-@q("pipeline_json_profile", R11_SQL_JSON_PROFILE)
-def r11_pipeline_json_profile(spark, sf_dir):
+@q("pipeline_json_profile", _SQL_JSON_PROFILE)
+def pipeline_json_profile(spark, sf_dir):
     """The semi-structured ingest-QA pass under the value gate: per-event
     JSON documents are synthesized in-engine with VARYING shape —
     ``t`` always present, ``v`` a scalar on even event_ids, ``ctx`` a
@@ -2357,7 +2349,7 @@ def r11_pipeline_json_profile(spark, sf_dir):
 # the typed columns — the VARIANT-shaped step the profile defers.
 # ---------------------------------------------------------------------------
 
-R12_SQL_JSON_EXTRACT_TYPED = """
+_SQL_JSON_EXTRACT_TYPED = """
     WITH e AS (
       SELECT event_id, user_id,
              CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
@@ -2381,8 +2373,8 @@ R12_SQL_JSON_EXTRACT_TYPED = """
 """
 
 
-@q("pipeline_json_extract_typed", R12_SQL_JSON_EXTRACT_TYPED)
-def r12_pipeline_json_extract_typed(spark, sf_dir):
+@q("pipeline_json_extract_typed", _SQL_JSON_EXTRACT_TYPED)
+def pipeline_json_extract_typed(spark, sf_dir):
     """Typed extraction end-to-end under the value gate: each event is
     re-serialized as a nested JSON document (the ``k`` from the real
     ``props`` column, a derived device string, an integer-degree geo
@@ -2454,7 +2446,7 @@ def r12_pipeline_json_extract_typed(spark, sf_dir):
 # typed schema with no human in the loop.
 # ---------------------------------------------------------------------------
 
-R12_SQL_JSON_INFER_PLAN = """
+_SQL_JSON_INFER_PLAN = """
     WITH e AS (SELECT event_id FROM events),
     n AS (SELECT COUNT(*) AS n_all FROM e),
     thirds AS (SELECT COUNT(*) AS n_3 FROM e WHERE event_id % 3 = 0),
@@ -2487,8 +2479,8 @@ R12_SQL_JSON_INFER_PLAN = """
 """
 
 
-@q("pipeline_json_infer_plan", R12_SQL_JSON_INFER_PLAN)
-def r12_pipeline_json_infer_plan(spark, sf_dir):
+@q("pipeline_json_infer_plan", _SQL_JSON_INFER_PLAN)
+def pipeline_json_infer_plan(spark, sf_dir):
     """Schema inference under the value gate: events re-serialize as
     JSON documents carrying one path per primitive type — a long id, an
     always-fractional double, a boolean, a pure string, a MIXED column
@@ -2537,7 +2529,7 @@ def r12_pipeline_json_infer_plan(spark, sf_dir):
 # docstring promises, as one path-domain-sized report.
 # ---------------------------------------------------------------------------
 
-R12_SQL_JSON_PROFILE_DIFF = """
+_SQL_JSON_PROFILE_DIFF = """
     WITH n0 AS (SELECT COUNT(*) AS c FROM events WHERE event_id % 2 = 0),
     n1 AS (SELECT COUNT(*) AS c FROM events WHERE event_id % 2 = 1),
     v0 AS (SELECT COUNT(*) AS c FROM events
@@ -2576,8 +2568,8 @@ R12_SQL_JSON_PROFILE_DIFF = """
 """
 
 
-@q("pipeline_json_profile_diff", R12_SQL_JSON_PROFILE_DIFF)
-def r12_pipeline_json_profile_diff(spark, sf_dir):
+@q("pipeline_json_profile_diff", _SQL_JSON_PROFILE_DIFF)
+def pipeline_json_profile_diff(spark, sf_dir):
     """Schema drift under the value gate: the even-event feed plays
     generation OLD (``t`` + an every-third ``v`` + a scalar ``m``), the
     odd-event feed plays generation NEW (``t`` kept, ``v`` dropped,
@@ -2647,7 +2639,7 @@ _E2E_SHARDS = 4  # logical shard fan-out of the packed work units
 #: recomputes; correctness is unaffected).
 _E2E_LAST_HANDLES: list = []
 
-R13_SQL_E2E_CURATION = f"""
+_SQL_E2E_CURATION = f"""
     WITH {_sql_band_index(16, 4)},
     ok AS (
       SELECT doc_id, text, source, n_chars FROM documents
@@ -2724,8 +2716,8 @@ R13_SQL_E2E_CURATION = f"""
 """
 
 
-@q("pipeline_e2e_curation", R13_SQL_E2E_CURATION)
-def r13_pipeline_e2e_curation(spark, sf_dir):
+@q("pipeline_e2e_curation", _SQL_E2E_CURATION)
+def pipeline_e2e_curation(spark, sf_dir):
     """The full curation recipe as ONE chained lineage: Gopher quality
     gate → exact dedup (keep-min per md5 digest) → MinHash-LSH greedy
     bucket dedup (drop on collision with a smaller surviving id; md5_60
@@ -2782,13 +2774,7 @@ def r13_pipeline_e2e_curation(spark, sf_dir):
     )
     lsh = ex.join(coll, "doc_id", "anti")
 
-    cents = [
-        list(r["v"])
-        for r in emb.filter(F.col("vec_id") < _IVF_CELLS)
-        .orderBy("vec_id")
-        .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-        .collect()
-    ]
+    cents = seed_centroids(emb)
     embedded = emb.join(
         lsh.select(F.col("doc_id").alias("vec_id")), "vec_id", "semi"
     )
@@ -2854,7 +2840,7 @@ def r13_pipeline_e2e_curation(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-R13_SQL_SHARD_EXPORT = f"""
+_SQL_SHARD_EXPORT = f"""
     SELECT CAST((CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)
                  AS BIGINT)) % {_SHARD_N} AS VARCHAR) AS shard,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -2864,8 +2850,8 @@ R13_SQL_SHARD_EXPORT = f"""
 """
 
 
-@q("pipeline_shard_export", R13_SQL_SHARD_EXPORT)
-def r13_pipeline_shard_export(spark, sf_dir):
+@q("pipeline_shard_export", _SQL_SHARD_EXPORT)
+def pipeline_shard_export(spark, sf_dir):
     """Deterministic training-shard export end-to-end: every document
     lands in shard ``md5_60(doc_id) % {n}`` — bit-stable across runs,
     engines and parallelism — written as ``shard=N/`` partition
@@ -2908,7 +2894,7 @@ def r13_pipeline_shard_export(spark, sf_dir):
 # restates the per-partition running sum in SQL.
 # ---------------------------------------------------------------------------
 
-R14_SQL_PACK_PARTITIONED = f"""
+_SQL_PACK_PARTITIONED = f"""
     WITH t AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents),
     meta AS (SELECT doc_id, toks, len(toks) AS L,
                     1 + CAST(floor((greatest(len(toks) - 50, 0) + 39) / 40) AS INT) AS n
@@ -2933,8 +2919,8 @@ R14_SQL_PACK_PARTITIONED = f"""
 """
 
 
-@q("pipeline_pack_partitioned", R14_SQL_PACK_PARTITIONED)
-def r14_pipeline_pack_partitioned(spark, sf_dir):
+@q("pipeline_pack_partitioned", _SQL_PACK_PARTITIONED)
+def pipeline_pack_partitioned(spark, sf_dir):
     """Token-budget packing per SHARD — the spelling that actually runs
     at 100 TB: ``pack_budget(partition_cols=("source",))`` makes the
     running total an ordinary partitioned window (every source packs in
@@ -2973,7 +2959,7 @@ def r14_pipeline_pack_partitioned(spark, sf_dir):
 # q_quantity_percentiles) and the same strict comparison.
 # ---------------------------------------------------------------------------
 
-R14_SQL_CURRICULUM = f"""
+_SQL_CURRICULUM = f"""
     WITH s AS (
       SELECT doc_id, CAST(len({_SQL_TOKS}) AS BIGINT) AS score
       FROM documents
@@ -2999,8 +2985,8 @@ R14_SQL_CURRICULUM = f"""
 """
 
 
-@q("pipeline_curriculum", R14_SQL_CURRICULUM)
-def r14_pipeline_curriculum(spark, sf_dir):
+@q("pipeline_curriculum", _SQL_CURRICULUM)
+def pipeline_curriculum(spark, sf_dir):
     """The length-curriculum schedule under the value gate: documents
     tier into four difficulty phases by whitespace token count
     (``curriculum_phases`` — exact interpolated quantile thresholds,
@@ -3026,7 +3012,7 @@ def r14_pipeline_curriculum(spark, sf_dir):
 # thresholds with quantile_cont and the same strict-exceed counting.
 # ---------------------------------------------------------------------------
 
-R14_SQL_CURRICULUM_BY = f"""
+_SQL_CURRICULUM_BY = f"""
     WITH s AS (
       SELECT doc_id, source, CAST(len({_SQL_TOKS}) AS BIGINT) AS score
       FROM documents
@@ -3051,8 +3037,8 @@ R14_SQL_CURRICULUM_BY = f"""
 """
 
 
-@q("pipeline_curriculum_by_source", R14_SQL_CURRICULUM_BY)
-def r14_pipeline_curriculum_by_source(spark, sf_dir):
+@q("pipeline_curriculum_by_source", _SQL_CURRICULUM_BY)
+def pipeline_curriculum_by_source(spark, sf_dir):
     """Per-source length curricula under the value gate: every source
     tiers its documents against its OWN interpolated quantile
     thresholds (``curriculum_phases_by`` — one |sources|-row percentile

@@ -2310,7 +2310,7 @@ def q_label_centroids(spark, sf_dir):
 # VALUES here.
 # ---------------------------------------------------------------------------
 
-R13_SQL_BUCKETED_JOIN = """
+_SQL_BUCKETED_JOIN = """
     SELECT l.l_returnflag AS returnflag,
            CAST(COUNT(*) AS BIGINT) AS n_items,
            CAST(SUM(CAST(FLOOR(l.l_extendedprice * 100 + 0.5) AS BIGINT))
@@ -2322,8 +2322,8 @@ R13_SQL_BUCKETED_JOIN = """
 """
 
 
-@q("q_bucketed_colocated_join", R13_SQL_BUCKETED_JOIN)
-def r13_q_bucketed_colocated_join(spark, sf_dir):
+@q("q_bucketed_colocated_join", _SQL_BUCKETED_JOIN)
+def q_bucketed_colocated_join(spark, sf_dir):
     """The pay-the-shuffle-once join: orders and lineitem persist as
     same-bucketed catalog tables on the order key (16 buckets), and the
     fact⋈fact join runs through the bucket path — broadcast disabled by

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from pdtable_spark.queries.embedding import seed_centroids
 from pdtable_spark.queries.suite import (
     _BLOOM_BITS,
     _GOPHER_MIN_WORDS,
@@ -495,7 +496,7 @@ def stream_drift_monitor(spark, sf_dir):
 # Streaming Bloom screen (streaming/screen.py::bloom_screen_stream)
 # ---------------------------------------------------------------------------
 
-R8_SQL_STREAM_BLOOM = f"""
+_SQL_STREAM_BLOOM = f"""
     WITH waves(w, batch_id) AS (VALUES (1, 0), (3, 1)),
     bench_g AS (
       SELECT DISTINCT unnest({_SQL_SHINGLES}) AS g FROM documents
@@ -537,8 +538,8 @@ R8_SQL_STREAM_BLOOM = f"""
 """
 
 
-@q("stream_bloom_screen", R8_SQL_STREAM_BLOOM)
-def r8_stream_bloom_screen(spark, sf_dir):
+@q("stream_bloom_screen", _SQL_STREAM_BLOOM)
+def stream_bloom_screen(spark, sf_dir):
     """The streaming decontamination path under the correctness gate: two
     ingestion waves (doc_id%4==1, then %4==3) each picked up by its own
     ``availableNow`` run over ONE checkpoint, every micro-batch probed
@@ -570,7 +571,7 @@ def r8_stream_bloom_screen(spark, sf_dir):
     )
 
 
-R9_SQL_STREAM_NOVELTY = """
+_SQL_STREAM_NOVELTY = """
     SELECT CAST(0 AS BIGINT) AS batch_id, source,
            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_batch_exact,
            CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_new_exact,
@@ -586,8 +587,8 @@ R9_SQL_STREAM_NOVELTY = """
 """
 
 
-@q("stream_novelty_ledger", R9_SQL_STREAM_NOVELTY)
-def r9_stream_novelty_ledger(spark, sf_dir):
+@q("stream_novelty_ledger", _SQL_STREAM_NOVELTY)
+def stream_novelty_ledger(spark, sf_dir):
     """The novelty ledger under the streaming gate: two ingestion waves
     (doc_id%3==0, then %4==0 — overlapping on %12==0) each picked up by
     its own ``availableNow`` run over ONE checkpoint; per micro-batch and
@@ -655,7 +656,7 @@ def r9_stream_novelty_ledger(spark, sf_dir):
     )
 
 
-R9_SQL_STREAM_QUANTILE = r"""
+_SQL_STREAM_QUANTILE = r"""
     WITH obs AS (
       SELECT 0 AS batch_id, source, CAST(n_chars AS DOUBLE) AS v
       FROM documents WHERE doc_id % 3 = 0 AND n_chars IS NOT NULL
@@ -698,8 +699,8 @@ R9_SQL_STREAM_QUANTILE = r"""
 """
 
 
-@q("stream_quantile_ledger", R9_SQL_STREAM_QUANTILE)
-def r9_stream_quantile_ledger(spark, sf_dir):
+@q("stream_quantile_ledger", _SQL_STREAM_QUANTILE)
+def stream_quantile_ledger(spark, sf_dir):
     """The histogram ledger under the streaming gate: two ingestion
     waves (doc_id%3==0, then %4==0 — overlapping on %12==0, counted
     twice: the ledger tracks OBSERVATIONS) each picked up by its own
@@ -725,7 +726,7 @@ def r9_stream_quantile_ledger(spark, sf_dir):
     )
 
 
-R10_SQL_STREAM_HEAVY_HITTERS = r"""
+_SQL_STREAM_HEAVY_HITTERS = r"""
     WITH tok AS (
       SELECT wave, source,
              unnest(regexp_split_to_array(trim(text), '\s+')) AS key
@@ -793,8 +794,8 @@ R10_SQL_STREAM_HEAVY_HITTERS = r"""
 """
 
 
-@q("stream_heavy_hitters", R10_SQL_STREAM_HEAVY_HITTERS)
-def r10_stream_heavy_hitters(spark, sf_dir):
+@q("stream_heavy_hitters", _SQL_STREAM_HEAVY_HITTERS)
+def stream_heavy_hitters(spark, sf_dir):
     """The heavy-hitters ledger under the streaming gate: two ingestion
     waves (doc_id%3==0, then %4==0 — overlapping on %12==0, counted
     twice: the ledger tracks OBSERVATIONS, the quantile stream's
@@ -832,7 +833,7 @@ def r10_stream_heavy_hitters(spark, sf_dir):
     )
 
 
-R11_SQL_STREAM_GRAM_LEDGER = """
+_SQL_STREAM_GRAM_LEDGER = """
     WITH base AS (
       SELECT 0 AS wave,
              list_transform(CAST(embedding AS DOUBLE[]),
@@ -864,8 +865,8 @@ R11_SQL_STREAM_GRAM_LEDGER = """
 """
 
 
-@q("stream_gram_ledger", R11_SQL_STREAM_GRAM_LEDGER)
-def r11_stream_gram_ledger(spark, sf_dir):
+@q("stream_gram_ledger", _SQL_STREAM_GRAM_LEDGER)
+def stream_gram_ledger(spark, sf_dir):
     """The moment ledger under the streaming gate, completing the
     streaming ledger QUARTET: two ingestion waves (vec_id%3==0, then
     %4==0 — overlapping on %12==0, counted twice: the ledger tracks
@@ -905,7 +906,7 @@ def r11_stream_gram_ledger(spark, sf_dir):
 #  exactly-once under the ledger-stream retry discipline)
 # ---------------------------------------------------------------------------
 
-R11_SQL_STREAM_UPSERT = """
+_SQL_STREAM_UPSERT = """
     WITH o AS (
       SELECT o_orderkey AS k, o_orderstatus AS s,
              CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
@@ -921,8 +922,8 @@ R11_SQL_STREAM_UPSERT = """
 """
 
 
-@q("stream_upsert_changelog", R11_SQL_STREAM_UPSERT)
-def r11_stream_upsert_changelog(spark, sf_dir):
+@q("stream_upsert_changelog", _SQL_STREAM_UPSERT)
+def stream_upsert_changelog(spark, sf_dir):
     """The streaming MERGE under the value gate: wave 1 seeds the
     versioned table with every o_orderkey % 3 == 0 order; wave 2 mixes
     all three CDC shapes — changed rows (% 6 == 0: new status, bumped
@@ -973,7 +974,7 @@ def r11_stream_upsert_changelog(spark, sf_dir):
 # corpus rescan (extends the streaming ledger quartet to a quintet).
 # ---------------------------------------------------------------------------
 
-R12_SQL_STREAM_IVF_STALENESS = f"""
+_SQL_STREAM_IVF_STALENESS = f"""
     WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ca FROM embeddings),
     cent AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS ce
              FROM embeddings WHERE vec_id < {_IVF_CELLS}),
@@ -1044,8 +1045,8 @@ R12_SQL_STREAM_IVF_STALENESS = f"""
 """
 
 
-@q("stream_ivf_staleness", R12_SQL_STREAM_IVF_STALENESS)
-def r12_stream_ivf_staleness(spark, sf_dir):
+@q("stream_ivf_staleness", _SQL_STREAM_IVF_STALENESS)
+def stream_ivf_staleness(spark, sf_dir):
     """The IVF cell ledger under the streaming gate: the train-time
     ledger freezes over the 2/3 slice (``vec_id % 3 != 0``, the
     ``embedding_ivf_staleness`` convention), then two append waves
@@ -1062,13 +1063,7 @@ def r12_stream_ivf_staleness(spark, sf_dir):
     from pdtable_spark.streaming.monitor import cell_ledger_stream
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = [
-        list(r["v"])
-        for r in emb.filter(F.col("vec_id") < _IVF_CELLS)
-        .orderBy("vec_id")
-        .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-        .collect()
-    ]
+    cents = seed_centroids(emb)
     d = scratch_dir("cellled")
     land, led, out = f"{d}/land", f"{d}/ledger", f"{d}/out"
     train_led = ivf_cell_ledger(emb.filter(F.col("vec_id") % 3 != 0), cents)
@@ -1101,7 +1096,7 @@ def r12_stream_ivf_staleness(spark, sf_dir):
 
 _SAMPLE_K = 5
 
-R12_SQL_STREAM_SAMPLE_LEDGER = f"""
+_SQL_STREAM_SAMPLE_LEDGER = f"""
     WITH d AS (SELECT doc_id, source, lang FROM documents),
     waves AS (
       SELECT 0 AS wave, doc_id, source, lang FROM d WHERE doc_id % 3 = 0
@@ -1127,8 +1122,8 @@ R12_SQL_STREAM_SAMPLE_LEDGER = f"""
 """
 
 
-@q("stream_sample_ledger", R12_SQL_STREAM_SAMPLE_LEDGER)
-def r12_stream_sample_ledger(spark, sf_dir):
+@q("stream_sample_ledger", _SQL_STREAM_SAMPLE_LEDGER)
+def stream_sample_ledger(spark, sf_dir):
     """The bounded-sample ledger under the streaming gate: two document
     waves (doc_id%3==0, then %4==0 — overlapping on %12==0, ABSORBED
     rather than double-counted: the sample is set-semantics, a row's
@@ -1170,7 +1165,7 @@ def r12_stream_sample_ledger(spark, sf_dir):
 # miscounted shows up in the merged rows or the removed-count column.
 # ---------------------------------------------------------------------------
 
-R13_SQL_STREAM_UPSERT_VACUUM = """
+_SQL_STREAM_UPSERT_VACUUM = """
     WITH o AS (
       SELECT o_orderkey AS k, o_orderstatus AS s,
              CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
@@ -1193,8 +1188,8 @@ R13_SQL_STREAM_UPSERT_VACUUM = """
 """
 
 
-@q("stream_upsert_vacuum", R13_SQL_STREAM_UPSERT_VACUUM)
-def r13_stream_upsert_vacuum(spark, sf_dir):
+@q("stream_upsert_vacuum", _SQL_STREAM_UPSERT_VACUUM)
+def stream_upsert_vacuum(spark, sf_dir):
     """Versioned-table retention end-to-end: wave 1 seeds k%3==0; wave 2
     changes k%6==0 (status 'X', cents+1) and adds k%3==1; wave 3
     changes/adds every k%4==0 (status 'V', cents+2 — the LAST writer,
@@ -1256,7 +1251,7 @@ def r13_stream_upsert_vacuum(spark, sf_dir):
 # a mergeable additive ledger while ingest waves land.
 # ---------------------------------------------------------------------------
 
-R13_SQL_STREAM_SHARD_LEDGER = f"""
+_SQL_STREAM_SHARD_LEDGER = f"""
     WITH d AS (
       SELECT doc_id,
              CAST(len({_SQL_TOKS}) AS BIGINT) AS nt,
@@ -1274,8 +1269,8 @@ R13_SQL_STREAM_SHARD_LEDGER = f"""
 """
 
 
-@q("stream_shard_ledger", R13_SQL_STREAM_SHARD_LEDGER)
-def r13_stream_shard_ledger(spark, sf_dir):
+@q("stream_shard_ledger", _SQL_STREAM_SHARD_LEDGER)
+def stream_shard_ledger(spark, sf_dir):
     """The running training-shard manifest under the value gate: two
     ingest waves (even doc_ids, then odd) land through one checkpoint;
     each batch's ledger row set is the CUMULATIVE per-shard
@@ -1320,7 +1315,7 @@ def r13_stream_shard_ledger(spark, sf_dir):
 # around the skew.
 # ---------------------------------------------------------------------------
 
-R14_SQL_UPSERT_HOTKEY = """
+_SQL_UPSERT_HOTKEY = """
     WITH o AS (
       SELECT o_orderkey AS k, o_orderstatus AS s,
              CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
@@ -1339,8 +1334,8 @@ R14_SQL_UPSERT_HOTKEY = """
 """
 
 
-@q("stream_upsert_hotkey", R14_SQL_UPSERT_HOTKEY)
-def r14_stream_upsert_hotkey(spark, sf_dir):
+@q("stream_upsert_hotkey", _SQL_UPSERT_HOTKEY)
+def stream_upsert_hotkey(spark, sf_dir):
     """The streaming MERGE with deliberate key skew under the value
     gate: wave 1 seeds every even order key; wave 2 funnels ALL
     ``%4==1`` orders onto the single merge key ``-1`` (each stamped

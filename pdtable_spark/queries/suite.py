@@ -175,6 +175,37 @@ _SQL_SHINGLES = (
 )
 
 
+#: The near-dup cluster closure (n-gram Jaccard >= 0.5 pairs, then
+#: connected components by recursive min-label walk): dedup_clusters'
+#: oracle, and the clusters CTE of the oracles built on it.
+_SQL_CLUSTERS = f"""
+    WITH RECURSIVE
+    base AS (SELECT doc_id, {_SQL_SHINGLES} AS sh FROM documents),
+    sized AS (SELECT doc_id, len(sh) AS sz, sh FROM base),
+    posts AS (SELECT doc_id, sz, unnest(sh) AS g FROM sized),
+    inter AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.sz AS size_a, b.sz AS size_b,
+             COUNT(*) AS n_common
+      FROM posts a JOIN posts b ON a.g = b.g AND a.doc_id < b.doc_id
+      GROUP BY a.doc_id, b.doc_id, a.sz, b.sz
+    ),
+    pairs AS (
+      SELECT id_a, id_b FROM inter
+      WHERE CAST(n_common AS DOUBLE) / CAST(size_a + size_b - n_common AS DOUBLE) >= 0.5
+    ),
+    edges AS (SELECT id_a AS a, id_b AS b FROM pairs
+              UNION ALL SELECT id_b, id_a FROM pairs),
+    walk(id, comp) AS (
+      SELECT doc_id, doc_id FROM documents
+      UNION
+      SELECT e.b, w.comp FROM walk w JOIN edges e ON e.a = w.id
+    )
+    SELECT id AS doc_id, MIN(comp) AS component,
+           (MIN(comp) = id) AS is_root
+    FROM walk GROUP BY id
+    """
+
+
 _C4_KEPT_SQL = (
     "list_filter(regexp_split_to_array(der, '\\n'),"
     " x -> regexp_matches(trim(x), '[.!?\"]\\r?$')"
@@ -401,11 +432,11 @@ def _gopher_derived_col():
 _GOPHER_M = _sql_gopher_metrics("t.der")
 
 
-#: BM25 query terms for the staged retrieval query: one rare term
+#: BM25 query terms (text_bm25_topk, hybrid_rrf_topk): one rare term
 #: ('dup' — df 25 of 500 docs at sf0.01) and two common ones, so idf
 #: spread is real.  Sorted-lowercase order matters: the per-term score
 #: sum is evaluated in this order on BOTH engines (IEEE-identical trees).
-R8_BM25_TERMS = ["dup", "scan", "vector"]
+_BM25_TERMS = ["dup", "scan", "vector"]
 
 
 def _sql_tf(term: str) -> str:
@@ -470,7 +501,7 @@ def _sql_bm25(terms, k: int) -> str:
     """
 
 
-R8_SQL_BM25 = _sql_bm25(R8_BM25_TERMS, k=25)
+_SQL_BM25 = _sql_bm25(_BM25_TERMS, k=25)
 
 
 #: Embedding-space composition + cluster-balanced selection, under the
@@ -491,19 +522,6 @@ _SQL_CLUSTER_ASSIGN = f"""
 """
 
 
-def _seed_centroids(spark, sf_dir):
-    from pdtable_spark.queries.suite import load as _load
-
-    emb = _load(spark, sf_dir, "embeddings")
-    return emb, [
-        list(r["v"])
-        for r in emb.filter(F.col("vec_id") < _IVF_CELLS)
-        .orderBy("vec_id")
-        .select(F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-        .collect()
-    ]
-
-
 # ---------------------------------------------------------------------------
 # Bloom-filter decontamination screen (operators/dedup.py::bloom_decontaminate)
 # ---------------------------------------------------------------------------
@@ -512,11 +530,12 @@ def _seed_centroids(spark, sf_dir):
 _BLOOM_BITS = 1 << 16
 
 
-def _sql_bloom_pos(expr: str, i: int) -> str:
-    # DuckDB spelling of operators/dedup.py::bloom_positions slot i
+def _sql_bloom_pos(expr: str, i: int, num_bits: int = _BLOOM_BITS) -> str:
+    # DuckDB spelling of operators/dedup.py::bloom_positions slot i in a
+    # filter of num_bits bits
     return (
         f"(CAST('0x' || substr(md5({expr} || ':{i}'), 1, 15) AS BIGINT)"
-        f" % {_BLOOM_BITS})"
+        f" % {num_bits})"
     )
 
 

@@ -9,15 +9,14 @@ from pyspark.sql import functions as F
 
 from pdtable_spark.operators import text
 from pdtable_spark.queries.suite import (
-    ORACLES,
-    R8_BM25_TERMS,
-    R8_SQL_BM25,
+    _BM25_TERMS,
     _C4_KEPT_SQL,
     _CLF_BIAS,
     _CLF_WEIGHTS,
     _GOPHER_DERIVED_SQL,
     _GOPHER_M,
     _GOPHER_MIN_WORDS,
+    _SQL_BM25,
     _SQL_MD5_60,
     _SQL_SHINGLES,
     _SQL_TOKS,
@@ -436,9 +435,9 @@ def doc_chunks(spark, sf_dir):
     return text.chunk_documents(d, chunk_tokens=50, overlap=10)
 
 
-@q(
-    "text_tfidf_keywords",
-    f"""
+#: Per-doc top-3 TF-IDF keywords at 9 decimals: the oracle of both
+#: document-frequency spellings (window and aggregate).
+_SQL_TFIDF_TOP3 = f"""
     WITH toks AS (
       SELECT doc_id, unnest({_SQL_TOKS}) AS term FROM documents
     ),
@@ -455,8 +454,10 @@ def doc_chunks(spark, sf_dir):
       SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rank
       FROM scored
     ) WHERE rank <= 3
-    """,
-)
+    """
+
+
+@q("text_tfidf_keywords", _SQL_TFIDF_TOP3)
 def text_tfidf_keywords(spark, sf_dir):
     """Per-doc top-3 TF-IDF keywords in round_digits=9 verification mode:
     JVM Math.log and libm log differ in the last ulp, so the score is rounded
@@ -469,7 +470,7 @@ def text_tfidf_keywords(spark, sf_dir):
     )
 
 
-@q("text_tfidf_agg", None)  # oracle assigned below (shared with the window spelling)
+@q("text_tfidf_agg", _SQL_TFIDF_TOP3)
 def text_tfidf_agg(spark, sf_dir):
     """TF-IDF through the DEFAULT df_mode (= "aggregate" as of round 6):
     the skew-safe document-frequency spelling a caller gets without reading
@@ -477,10 +478,6 @@ def text_tfidf_agg(spark, sf_dir):
     oracle as the window spelling end-to-end."""
     return text.tfidf_keywords(load(spark, sf_dir, "documents"), k=3, round_digits=9)
 
-
-# the two df spellings are semantically identical; the aggregate query
-# reuses the window query's oracle verbatim
-ORACLES["text_tfidf_agg"] = ORACLES["text_tfidf_keywords"]
 
 
 _SQL_BIGRAMS = (
@@ -728,8 +725,8 @@ def doc_cdc_chunks(spark, sf_dir):
     return text.cdc_chunks(docs, gram_words=3, divisor=_CDC_DIVISOR)
 
 
-@q("text_bm25_topk", R8_SQL_BM25)
-def r8_text_bm25_topk(spark, sf_dir):
+@q("text_bm25_topk", _SQL_BM25)
+def text_bm25_topk(spark, sf_dir):
     """Okapi BM25 top-25 over the documents table for a mixed rare/common
     term bag — zero-shuffle tf + one broadcast stats row + TakeOrdered
     (see operators/text.py::bm25_topk), in round_digits=9 verification
@@ -738,7 +735,7 @@ def r8_text_bm25_topk(spark, sf_dir):
 
     return bm25_topk(
         load(spark, sf_dir, "documents"),
-        R8_BM25_TERMS,
+        _BM25_TERMS,
         k=25,
         round_digits=9,
     )
@@ -747,7 +744,7 @@ def r8_text_bm25_topk(spark, sf_dir):
 #: Character-entropy quality signal; the oracle rebuilds the quantized
 #: −p·ln p sum per document via explode+group (the operator's scan-local
 #: array fold and this relational spelling sum the same exact integers).
-R8_SQL_CHAR_ENTROPY = """
+_SQL_CHAR_ENTROPY = """
     WITH ch AS (
       SELECT doc_id,
              unnest(list_filter(string_split(text, ''), x -> x <> '')) AS c
@@ -776,8 +773,8 @@ R8_SQL_CHAR_ENTROPY = """
 """
 
 
-@q("text_char_entropy", R8_SQL_CHAR_ENTROPY)
-def r8_text_char_entropy(spark, sf_dir):
+@q("text_char_entropy", _SQL_CHAR_ENTROPY)
+def text_char_entropy(spark, sf_dir):
     """Character-level Shannon entropy per document — the cheap gibberish
     and repetition signal, computed as one scan-local array fold (no
     explode, no shuffle) with the quantized-ln determinism recipe."""
@@ -800,7 +797,7 @@ _SQL_LINE_BOIL = """
   HAVING COUNT(*) >= CEIL(0.78 * (SELECT COUNT(*) FROM documents))
 """
 
-R8_SQL_LINE_DEDUP = f"""
+_SQL_LINE_DEDUP = f"""
     WITH base AS (SELECT doc_id, source, string_split(text, ' ') AS ls
                   FROM documents),
     l AS (SELECT doc_id, unnest(ls) AS line, generate_subscripts(ls, 1) AS pos
@@ -818,8 +815,8 @@ R8_SQL_LINE_DEDUP = f"""
 """
 
 
-@q("text_line_dedup", R8_SQL_LINE_DEDUP)
-def r8_text_line_dedup(spark, sf_dir):
+@q("text_line_dedup", _SQL_LINE_DEDUP)
+def text_line_dedup(spark, sf_dir):
     """Line-level boilerplate removal: drop every line whose normalized
     form occurs in ≥78% of documents, survivors kept in original order and
     spelling — the broadcast spelling (scan-local filter + array_join; the
@@ -835,7 +832,7 @@ def r8_text_line_dedup(spark, sf_dir):
     )
 
 
-R8_SQL_COMMON_LINES = f"""
+_SQL_COMMON_LINES = f"""
     WITH base AS (SELECT doc_id, string_split(text, ' ') AS ls FROM documents),
     l AS (SELECT doc_id, unnest(ls) AS line FROM base),
     c AS (
@@ -848,8 +845,8 @@ R8_SQL_COMMON_LINES = f"""
 """
 
 
-@q("text_common_lines", R8_SQL_COMMON_LINES)
-def r8_text_common_lines(spark, sf_dir):
+@q("text_common_lines", _SQL_COMMON_LINES)
+def text_common_lines(spark, sf_dir):
     """The boilerplate audit behind line_dedup: normalized lines in ≥78%
     of documents with their document frequency — per-doc-distinct before
     the explode, so the count is a plain map-side-combinable groupBy."""
@@ -868,14 +865,14 @@ def r8_text_common_lines(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-R8_SQL_WINNOW = f"""
+_SQL_WINNOW = f"""
     WITH {_WINNOW_SEL_SQL}
     SELECT doc_id, pos, fp FROM sel
 """
 
 
-@q("text_winnow_fingerprints", R8_SQL_WINNOW)
-def r8_text_winnow_fingerprints(spark, sf_dir):
+@q("text_winnow_fingerprints", _SQL_WINNOW)
+def text_winnow_fingerprints(spark, sf_dir):
     """Winnowing fingerprint selection (Schleimer et al. 2003, the MOSS
     scheme): per 4-window of positional 5-gram hashes, the minimum at its
     rightmost position — guaranteed to cover any shared run of >= 8
@@ -891,7 +888,7 @@ def r8_text_winnow_fingerprints(spark, sf_dir):
 # Vocabulary coverage / OOV share (operators/text.py)
 # ---------------------------------------------------------------------------
 
-R8_SQL_VOCAB_COVERAGE = r"""
+_SQL_VOCAB_COVERAGE = r"""
     WITH tok AS (
       SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS t
       FROM documents
@@ -915,8 +912,8 @@ R8_SQL_VOCAB_COVERAGE = r"""
 """
 
 
-@q("text_vocab_coverage", R8_SQL_VOCAB_COVERAGE)
-def r8_text_vocab_coverage(spark, sf_dir):
+@q("text_vocab_coverage", _SQL_VOCAB_COVERAGE)
+def text_vocab_coverage(spark, sf_dir):
     """Per-doc OOV share against the corpus's top-16 token vocabulary
     (deterministic tf-desc, token-asc boundary) — the tokenizer-fertility
     / domain-shift signal.  The vocabulary is a bounded collected
@@ -938,7 +935,7 @@ def r8_text_vocab_coverage(spark, sf_dir):
 # Frozen-vocabulary OOV drift (operators/text.py vocab= path as designed)
 # ---------------------------------------------------------------------------
 
-R8_SQL_VOCAB_DRIFT = r"""
+_SQL_VOCAB_DRIFT = r"""
     WITH ref_tok AS (
       SELECT unnest(regexp_split_to_array(trim(text), '\s+')) AS t
       FROM documents WHERE doc_id % 2 = 0
@@ -968,8 +965,8 @@ R8_SQL_VOCAB_DRIFT = r"""
 """
 
 
-@q("text_vocab_drift", R8_SQL_VOCAB_DRIFT)
-def r8_text_vocab_drift(spark, sf_dir):
+@q("text_vocab_drift", _SQL_VOCAB_DRIFT)
+def text_vocab_drift(spark, sf_dir):
     """The frozen-vocabulary drift alarm as designed: build the top-16
     vocabulary on the REFERENCE half (even doc_ids), measure per-source
     OOV share on the INCOMING half (odd doc_ids) — a rising share is the
@@ -998,7 +995,7 @@ def r8_text_vocab_drift(spark, sf_dir):
 # new round 8 — Li et al. 2016 distinct-1/2/3; n=1 is the type-token ratio)
 # ---------------------------------------------------------------------------
 
-R9_SQL_DISTINCT_NGRAMS = r"""
+_SQL_DISTINCT_NGRAMS = r"""
     WITH tok AS (
       SELECT source, regexp_split_to_array(trim(text), '\s+') AS ws
       FROM documents WHERE text IS NOT NULL
@@ -1024,8 +1021,8 @@ R9_SQL_DISTINCT_NGRAMS = r"""
 """
 
 
-@q("text_distinct_ngrams", R9_SQL_DISTINCT_NGRAMS)
-def r9_text_distinct_ngrams(spark, sf_dir):
+@q("text_distinct_ngrams", _SQL_DISTINCT_NGRAMS)
+def text_distinct_ngrams(spark, sf_dir):
     """Per-source lexical diversity: total/distinct n-gram counts and
     their ratio for n=1,2,3 (distinct-n; n=1 is the type-token ratio) —
     the dashboard that flags template floods and generation loops while
@@ -1041,7 +1038,7 @@ def r9_text_distinct_ngrams(spark, sf_dir):
 # log-free PMI on the bigram event space)
 # ---------------------------------------------------------------------------
 
-R9_SQL_COLLOCATIONS = r"""
+_SQL_COLLOCATIONS = r"""
     WITH tok AS (
       SELECT regexp_split_to_array(trim(text), '\s+') AS ws
       FROM documents WHERE text IS NOT NULL
@@ -1068,8 +1065,8 @@ R9_SQL_COLLOCATIONS = r"""
 """
 
 
-@q("text_collocations", R9_SQL_COLLOCATIONS)
-def r9_text_collocations(spark, sf_dir):
+@q("text_collocations", _SQL_COLLOCATIONS)
+def text_collocations(spark, sf_dir):
     """Top-20 collocations by lift (min pair count 5): the
     statistically-bound word pairs that seed tokenizer-vocab candidates,
     multi-word PII patterns, and boilerplate-phrase discovery.  Lift is
@@ -1088,7 +1085,7 @@ def r9_text_collocations(spark, sf_dir):
 # next to the unigram text_surprisal)
 # ---------------------------------------------------------------------------
 
-R10_SQL_LM_BIGRAM = r"""
+_SQL_LM_BIGRAM = r"""
     WITH d AS (
       SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS ws
       FROM documents WHERE text IS NOT NULL
@@ -1131,8 +1128,8 @@ R10_SQL_LM_BIGRAM = r"""
 """
 
 
-@q("text_lm_bigram_nll", R10_SQL_LM_BIGRAM)
-def r10_text_lm_bigram_nll(spark, sf_dir):
+@q("text_lm_bigram_nll", _SQL_LM_BIGRAM)
+def text_lm_bigram_nll(spark, sf_dir):
     """CCNet-style frozen-LM quality scoring end-to-end under the value
     gate: the interpolated bigram model trains on the even-doc_id half
     (the curated reference pool) and scores the odd half — the

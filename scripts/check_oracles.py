@@ -14,6 +14,7 @@ Both of round 2's red rows (q12 HUGEINT, multimodal_features array<float>)
 would have been caught by this gate pre-submission.
 
 Usage: python scripts/check_oracles.py [--dtypes-only] [sf_dir] [query ...]
+(no query names = every registered query)
 """
 
 from __future__ import annotations
@@ -125,6 +126,8 @@ def main():
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
+    if only - set(qs):
+        sys.exit(f"unknown queries: {sorted(only - set(qs))}")
     failures = []
     for name, fn in qs.items():
         if only and name not in only:

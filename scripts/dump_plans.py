@@ -1,7 +1,17 @@
-"""Dump physical-plan evidence for the headline queries to PLANS.md:
-per query — shuffle-exchange count, broadcast joins, pushed filters, scan
-column pruning, codegen spans.  The '100 TB would this hold' review,
-machine-generated so it never drifts from the code.
+"""Plan evidence, regenerated on demand.
+
+    python scripts/dump_plans.py
+        PLANS.md for the headline queries: per query — shuffle-exchange
+        count, broadcast joins, pushed filters, scan column pruning,
+        codegen spans.  The '100 TB would this hold' review,
+        machine-generated so it never drifts from the code.
+
+    python scripts/dump_plans.py --tag T name [name ...]
+        the formatted explain of each named registered query, written to
+        plans/T/<name>.txt (e.g. run in two checkouts with tags
+        ``before`` and ``after`` and diff the directories).
+
+Both read SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.01).
 """
 
 from __future__ import annotations
@@ -10,9 +20,27 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+
+
+def dump_tagged(spark, tag, names):
+    """Write each named query's formatted explain to plans/<tag>/<name>.txt."""
+    from pdtable_spark.queries.suite import QUERIES
+
+    out_dir = os.path.join(ROOT, "plans", tag)
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        df = QUERIES[name](spark, SF_DIR)
+        plan = df._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+        )
+        path = os.path.join(out_dir, f"{name}.txt")
+        with open(path, "w") as fh:
+            fh.write(plan)
+        print(f"wrote {path} ({len(plan)} chars)")
 
 
 def main():
@@ -20,8 +48,18 @@ def main():
     from bench import HEADLINE
     from pdtable_spark.queries.suite import QUERIES
 
+    args = sys.argv[1:]
+    if args and (args[0] != "--tag" or len(args) < 3):
+        sys.exit("usage: dump_plans.py [--tag T name [name ...]]")
+    unknown = [n for n in args[2:] if n not in QUERIES]
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
+
     spark = get_session("plan-dump", master="local[4]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
+    if args:
+        dump_tagged(spark, args[1], args[2:])
+        return
 
     # beyond the bench headline: the scale-design queries worth plan review
     # (streaming queries excluded — their evidence is the availableNow

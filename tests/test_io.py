@@ -116,6 +116,19 @@ def test_scan_csv_distributed(spark, tmp_path):
     assert t.df.agg(F.sum("value")).collect()[0][0] == pytest.approx(3 * (0.5 + 1.5 + 2.5 + 3.5))
 
 
+def test_scan_csv_reads_write_csv_distributed_dir(spark, tmp_path):
+    """The distributed writer's output directory (part files beside the
+    _SUCCESS marker and .crc files) scans back as a directory."""
+    from pdtable_spark.io.csv import write_csv_distributed
+
+    src = TableBundle(read_csv(io.StringIO(CSV)))["places"]
+    out = str(tmp_path / "places_csv")
+    write_csv_distributed(src, out)
+    back = scan_csv(spark, out, "places")
+    assert back.units == src.units
+    assert sorted(map(tuple, back.df.collect())) == sorted(map(tuple, src.df.collect()))
+
+
 def test_scan_csv_file_size_bound(spark, tmp_path):
     """A file over max_file_bytes fails fast with actionable guidance
     instead of risking an executor OOM."""

@@ -4192,7 +4192,7 @@ def test_train_quality_classifier_dict_path_end_to_end(spark):
 
 def test_freeze_classifier_train_freeze_serve_loop(spark):
     """The train → freeze → serve loop behind the recipe query
-    (pending_r11): freezing a trained model to binary fractions keeps a
+    (pipeline_model_quality_recipe): freezing a trained model to binary fractions keeps a
     separable fixture perfectly separated, every frozen weight is an
     exact multiple of 2^-quantum, top_k truncation is deterministic
     (|weight| desc, term asc), zero-quantized terms drop, and the dict

@@ -977,7 +977,7 @@ def test_certificate_read_paths_plan_clean(spark, tmp_path):
 
 
 def test_e2e_curation_composed_plan_clean(spark):
-    """The composed curation DAG (staged r13) stays lint-clean end to
+    """The composed curation DAG (pipeline_e2e_curation) stays lint-clean end to
     end: no Python row stages, no raw cartesians.  r15: pack_budget no
     longer truncates the lineage behind an eager localCheckpoint, so
     the lint now sees the WHOLE composed plan — including the
