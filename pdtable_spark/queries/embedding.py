@@ -1060,7 +1060,7 @@ def embedding_hard_negative_recall(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # IVF-accelerated kNN label propagation + agreement vs the exact spelling
 # (operators/similarity.py::knn_label_propagation_ivf, new round 8 — the
-#  index-accelerated sibling VERDICT r7 asked for: the exact spelling was
+#  index-accelerated sibling: the exact spelling was
 #  the suite's slowest sf1 row at 430 s)
 # ---------------------------------------------------------------------------
 
@@ -1381,7 +1381,7 @@ def embedding_gram(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Corpus-scale margin mining: agreement of the IVF-served spelling vs the
 # exact broadcast miner (operators/similarity.py::margin_mining_ivf, new
-# round 9 — VERDICT r8 task #5: bitext mining uncapped from the 100k
+# round 9: bitext mining uncapped from the 100k
 # broadcast-scan bound)
 # ---------------------------------------------------------------------------
 
@@ -1628,7 +1628,7 @@ def embedding_gram_ledger(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# IVF staleness diagnostic (VERDICT r10 task #3): the when-to-retrain
+# IVF staleness diagnostic: the when-to-retrain
 # companion of ivf_append — per-cell appended fraction + assigned-d²
 # drift vs the train-time ledger, in the embedding_ivf_recall /
 # minhash_estimate_error sketch-quality convention.

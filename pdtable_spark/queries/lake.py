@@ -109,7 +109,7 @@ def lake_zorder_cells(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# The READ side of the Z-order pruning certificate (VERDICT r10 task #2):
+# The READ side of the Z-order pruning certificate:
 # write a clustered lake with a DETERMINISTIC file layout, plan a
 # conjunctive range predicate, read through io.maintenance.pruned_read,
 # and return BOTH the files-read accounting and the pruned answer — the
@@ -1052,8 +1052,7 @@ def lake_compact_refresh_read(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# The versioned file manifest under the value gate (VERDICT r12 task
-# #3): build the lake + zone map + manifest, serve a pruned read
+# The versioned file manifest under the value gate: build the lake + zone map + manifest, serve a pruned read
 # validated against manifest generation 0, APPEND, refresh (which
 # advances the manifest), and serve the post-refresh read — BOTH reads'
 # file accounting plus the advanced generation travel inside the
@@ -1225,8 +1224,7 @@ def lake_manifest_read(spark, sf_dir):
 # Bloom point lookup, manifest-validated, with the SNAPSHOT-FRAME
 # residual (isin_threshold=0 forces the broadcast-semi-join spelling —
 # the production path for key sets past a few thousand, where a
-# Column.isin literal would bloat plan construction; ADVICE r12
-# medium).  Same probe semantics as lake_bloom_pruned_read but a
+# Column.isin literal would bloat plan construction).  Same probe semantics as lake_bloom_pruned_read but a
 # different offset/width so the two rows cannot mask each other.
 # ---------------------------------------------------------------------------
 

@@ -248,7 +248,7 @@ def multimodal_image_meta(spark, sf_dir):
         # dims are uint16 in GIF and JPEG (2 bytes / 4 hex chars) — a
         # value past 65535 must fail the FIXTURE loudly, not have lpad
         # silently truncate the high byte into a confusing oracle
-        # mismatch (review r9; n_chars is bounded far below this)
+        # mismatch (n_chars is bounded far below this)
         return F.when(
             c >= F.lit(65536),
             F.raise_error(F.lit("image_meta fixture: dim exceeds uint16")),
@@ -403,7 +403,7 @@ def multimodal_audio_meta(spark, sf_dir):
         # n-byte little-endian hex of a non-negative long column; a value
         # past 256^n must fail the FIXTURE loudly — per-byte %256 would
         # silently WRAP the high bytes into a confusing oracle mismatch
-        # (the image fixture's u16-guard convention, review r9)
+        # (the image fixture's u16-guard convention)
         return F.when(
             c >= F.lit(256 ** n),
             F.raise_error(F.lit(f"audio_meta fixture: value exceeds u{8 * n}")),
@@ -549,7 +549,7 @@ def multimodal_video_meta(spark, sf_dir):
     docs = load(spark, sf_dir, "documents").filter(F.col("n_chars").isNotNull())
 
     def le_hex(c, n):
-        # loud u8n bound — per-byte %256 would silently wrap (review r9)
+        # loud u8n bound — per-byte %256 would silently wrap
         return F.when(
             c >= F.lit(256 ** n),
             F.raise_error(F.lit(f"video_meta fixture: value exceeds u{8 * n}")),
@@ -594,7 +594,7 @@ def multimodal_video_meta(spark, sf_dir):
     )
     def be_hex(c, n):
         # loud u8n bound — lpad TRUNCATES an over-long hex string, which
-        # would silently corrupt the box's high bytes (review r9)
+        # would silently corrupt the box's high bytes
         return F.when(
             c >= F.lit(256 ** n),
             F.raise_error(F.lit(f"video_meta fixture: value exceeds u{8 * n}")),

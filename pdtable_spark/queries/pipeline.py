@@ -2046,7 +2046,7 @@ def pipeline_heavy_hitters(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# The model-based quality recipe end-to-end (VERDICT r9 task #7): a frozen
+# The model-based quality recipe end-to-end: a frozen
 # trained classifier + the frozen n-gram LM scorer feeding one
 # threshold-sweep decision table — train → freeze → score → sweep.
 # ---------------------------------------------------------------------------
@@ -2174,8 +2174,8 @@ _SQL_MODEL_QUALITY_RECIPE = rf"""
 
 @q("pipeline_model_quality_recipe", _SQL_MODEL_QUALITY_RECIPE)
 def pipeline_model_quality_recipe(spark, sf_dir):
-    """The full model-based curation recipe under ONE value gate (VERDICT
-    r9 task #7): the published FROZEN classifier (trained once by
+    """The full model-based curation recipe under ONE value gate: the
+    published FROZEN classifier (trained once by
     ``train_quality_classifier``, quantized by ``freeze_classifier`` —
     provenance on ``_RECIPE_CLF_WEIGHTS``) scores every document via the
     zero-shuffle map-literal fold; the frozen bigram LM (trained on the
@@ -2344,7 +2344,7 @@ def pipeline_json_profile(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Typed drill-down after json_profile (VERDICT r10 task #4): compile a
+# Typed drill-down after json_profile: compile a
 # profile-derived path→type plan into ONE from_json schema and aggregate
 # the typed columns — the VARIANT-shaped step the profile defers.
 # ---------------------------------------------------------------------------
@@ -2615,7 +2615,7 @@ def pipeline_json_profile_diff(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# The composed end-to-end curation DAG (VERDICT r11 task #4): every stage
+# The composed end-to-end curation DAG: every stage
 # is individually registered and value-oracled, but the 100 TB story is
 # the CHAINED lineage — ingest → Gopher gate → exact dedup → MinHash-LSH
 # → semantic dedup → per-source mixture cap → chunk → token-budget pack →
@@ -2885,8 +2885,8 @@ def pipeline_shard_export(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# pack_budget's PARTITIONED production spelling under the value gate
-# (VERDICT r12 task #6): the two-phase global cumsum is already oracled
+# pack_budget's PARTITIONED production spelling under the value gate:
+# the two-phase global cumsum is already oracled
 # (pipeline_pack_budget, pipeline_e2e_curation); the 100 TB posture —
 # per-shard packing where the cumulative sum is an ordinary partitioned
 # window and pack_id restarts per shard (operators/text.py:340-344) —

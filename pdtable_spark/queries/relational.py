@@ -635,7 +635,7 @@ def q_idle_customers(spark, sf_dir):
     """,
 )
 def q22_idle_customers(spark, sf_dir):
-    """The full TPC-H Q22 analog (VERDICT r9 task #6): "country code"
+    """The full TPC-H Q22 analog: "country code"
     membership filter (the testdata has no ``c_phone``, so the 7-code
     prefix set maps to 7 nationkeys), balance above the POSITIVE-balance
     average of that pool (the correlated scalar subquery), customers

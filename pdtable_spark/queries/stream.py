@@ -1159,7 +1159,7 @@ def stream_sample_ledger(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # CDC vacuum under the value gate: three MERGE waves build versions
 # 0/1/2, vacuum_versions(keep_last=2) drops exactly version 0 (the
-# crashed-retry window keeps N-1 — the round-12 ADVICE fix), and the
+# crashed-retry window keeps N-1 — the round-12 fix), and the
 # AS-OF-latest read must still be the full last-writer-wins state.  A
 # vacuum that removed the wrong partition, damaged the survivors, or
 # miscounted shows up in the merged rows or the removed-count column.
@@ -1306,7 +1306,7 @@ def stream_shard_ledger(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Streaming MERGE under a HOT KEY (VERDICT r12 task #4's value-gate
+# Streaming MERGE under a HOT KEY (the value-gate
 # sibling: the sf1 load evidence lives in scripts/bench_merge_skew.py /
 # BENCH_SCALE.md; this row keeps the skewed shape itself under the
 # per-round oracle).  A quarter of the wave-2 traffic collapses onto

@@ -89,11 +89,11 @@ def scratch_dir(name: str) -> str:
     at exit via atexit), one subdir per query wiped clean at each call
     — so repeated bench/oracle-sweep invocations of the lake/ledger/
     stream queries overwrite their own scratch instead of leaking a
-    fresh mkdtemp of lake data per call (ADVICE r12).  Wiping at entry
+    fresh mkdtemp of lake data per call.  Wiping at entry
     also guarantees the empty-landing-dir precondition the streaming
     wave queries rely on.
 
-    CONTRACT (ADVICE r13): callers sharing a ``name`` must consume any
+    CONTRACT: callers sharing a ``name`` must consume any
     DataFrame rooted in the dir BEFORE the next invocation (the wipe
     invalidates live lazy handles), and sweeps must run sequentially.
     Every batch query here uses a unique per-query name; the one shared
@@ -128,7 +128,7 @@ def scratch_dir(name: str) -> str:
 #: through load() and stay uncached.
 
 
-#: Weakly keyed on the session (ADVICE r14): a stopped/dropped session's
+#: Weakly keyed on the session: a stopped/dropped session's
 #: handles become collectable instead of leaking for the process
 #: lifetime in long-lived multi-session harnesses.
 _LOAD_CACHE: "_weakref.WeakKeyDictionary[SparkSession, Dict[tuple, DataFrame]]" = (

@@ -84,6 +84,9 @@ def main():
 
     import __spark_entry__ as entry
 
+    if only - set(entry.QUERIES):
+        sys.exit(f"unknown queries: {sorted(only - set(entry.QUERIES))}")
+
     import os
 
     # perturb via env to prove layout independence (e.g. PARTS=7 or 64)
@@ -126,8 +129,6 @@ def main():
 
     qs = entry.queries()
     oracles = entry.oracle_sql()
-    if only - set(qs):
-        sys.exit(f"unknown queries: {sorted(only - set(qs))}")
     failures = []
     for name, fn in qs.items():
         if only and name not in only:

@@ -11,7 +11,8 @@
         plans/T/<name>.txt (e.g. run in two checkouts with tags
         ``before`` and ``after`` and diff the directories).
 
-Both read SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.01).
+Both run the queries on the fixture directory in SPARK_GRAFT_SF_DIR
+(default: the sf0.01 fixtures, as check_oracles.py).
 """
 
 from __future__ import annotations

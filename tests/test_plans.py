@@ -991,7 +991,7 @@ def test_e2e_curation_composed_plan_clean(spark):
     running-sum window (shard by key at 100 TB)."""
     from pdtable_spark.plans import assert_clean
 
-    df = QUERIES["pipeline_e2e_curation"](spark, "/root/testdata/sf0.001")
+    df = QUERIES["pipeline_e2e_curation"](spark, SF_DIR)
     try:
         findings = assert_clean(
             df,
@@ -1017,7 +1017,7 @@ def test_bucketed_join_query_plan_no_exchange_on_join(spark):
     """q_bucketed_colocated_join must actually take the bucket path: no
     shuffle exchange feeding either join side (the whole point of paying
     the write-time shuffle once)."""
-    df = QUERIES["q_bucketed_colocated_join"](spark, "/root/testdata/sf0.001")
+    df = QUERIES["q_bucketed_colocated_join"](spark, SF_DIR)
     try:
         plan = df._jdf.queryExecution().executedPlan().toString()
         join_idx = plan.find("SortMergeJoin")
