@@ -115,21 +115,52 @@ def attach_units(
     return df
 
 
+def local_frame(
+    spark: SparkSession, schema: T.StructType, columns: Sequence[Sequence]
+) -> DataFrame:
+    """A small driver-held frame from typed Python columns, one value
+    sequence per field of ``schema``.
+
+    Driver-held rows of the StarTable surface (parsed tables, appended rows,
+    lake snapshots) reach Spark through here, never as a pickled row list:
+    ``pa.table`` → ``createDataFrame`` ships the values to the JVM once,
+    so the frame plans as a ``LocalTableScan`` and no action on it starts a
+    Python worker.  ``createDataFrame(rows, schema)`` plans as ``Scan
+    ExistingRDD`` over a Python RDD instead, and every job reading it
+    launches Python-worker tasks.
+
+    Timestamps go through ``TimestampType.toInternal`` into a UTC-zoned
+    Arrow array, the exact value the row-list path stores (naive datetimes
+    read in the process's local time zone).  A naive Arrow array would be
+    localized by ``pc.assume_timezone`` in the session time zone, which
+    rejects wall-clock times in a DST gap.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    arrays = []
+    for field, values in zip(schema.fields, columns):
+        if isinstance(field.dataType, T.TimestampType):
+            to_internal = field.dataType.toInternal
+            arrays.append(
+                pa.array([to_internal(v) for v in values], pa.timestamp("us", tz="UTC"))
+            )
+        else:
+            arrays.append(pa.array(list(values), to_arrow_type(field.dataType)))
+    return spark.createDataFrame(pa.table(arrays, names=schema.names), schema=schema)
+
+
 def table_from_parsed(parsed, spark: Optional[SparkSession] = None):
     """ParsedTable (pure Python) → Spark-backed Table.
 
-    The Spark analog of blocks.py:224-241: ``spark.createDataFrame`` with a
+    The Spark analog of blocks.py:224-241: a :func:`local_frame` with a
     unit-derived schema instead of ``pd.DataFrame`` + ``ComplementaryTableInfo``.
     """
     from pdtable_spark.table import Table
 
     spark = active_spark(spark)
     schema = schema_for_units(parsed.column_names, parsed.units)
-    rows = list(zip(*(parsed.columns[c] for c in parsed.column_names)))
-    if not parsed.column_names:
-        df = spark.createDataFrame([], schema=T.StructType([]))
-    else:
-        df = spark.createDataFrame(rows, schema=schema)
+    df = local_frame(spark, schema, [parsed.columns[c] for c in parsed.column_names])
     meta = TableMetadata(
         name=parsed.name,
         destinations=set(parsed.destinations),

@@ -28,6 +28,8 @@ from typing import List, Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pdtable_spark.frame import local_frame
+
 
 def upsert_parquet(
     spark: SparkSession,
@@ -410,11 +412,8 @@ def write_zone_map(spark: SparkSession, path: str, cols: Sequence[str]) -> int:
     cols = list(cols)
     zdir = _zone_map_dir(path)
     stats = clustering_stats(spark, path, cols)
-    # write the DISTRIBUTED frame directly: a driver round-trip
-    # (collect + createDataFrame) would back the write with a
-    # Python-RDD relation, which launches a Python worker per task —
-    # measured ~4 s of pure overhead for a 64-row sidecar vs ~0.2 s
-    # for the JVM lineage
+    # write the distributed frame directly: rows the cluster already
+    # holds need no collect and no driver-built frame
     covered = _observed_sidecar_write(stats, zdir + ".new", coalesce=True)
     current = _data_files(spark, path)
     n_cov, n_add = _append_empty_file_rows(
@@ -557,34 +556,16 @@ def _norm_file_col(c: Column) -> Column:
 
 def _snapshot_frame(spark: SparkSession, values, name: str, dtype) -> DataFrame:
     """A driver-collected snapshot (file list / key set) as a SMALL
-    JVM-executable frame: Arrow-path ``createDataFrame`` ships the
-    values to the JVM once at creation, so downstream actions run with
-    no Python worker (the lineage is a plain ParallelCollectionRDD —
-    verified, unlike the pickled-row path the ``write_zone_map`` lesson
-    is about), and the PLAN stays O(1) in the snapshot size — an
-    ``isin`` literal grows the plan per element, and at millions of
-    entries plan construction and driver memory blow up (ADVICE r12).
-    The snapshot property itself is preserved: the values are frozen at
-    call time, exactly like the literal spelling."""
+    one-column :func:`~pdtable_spark.frame.local_frame`: the PLAN stays
+    O(1) in the snapshot size — an ``isin`` literal grows the plan per
+    element, and at millions of entries plan construction and driver
+    memory blow up (ADVICE r12).  The snapshot property itself is
+    preserved: the values are frozen at call time, exactly like the
+    literal spelling."""
     from pyspark.sql.types import StructField, StructType
 
     schema = StructType([StructField(name, dtype, True)])
-    if not values:
-        return spark.createDataFrame([], schema)
-    try:
-        # the pyarrow.Table path serializes via Arrow REGARDLESS of the
-        # session's arrow conf (verified: ParallelCollectionRDD lineage
-        # with the conf off) — no mutation of shared session state, so
-        # concurrent createDataFrame calls on other threads are never
-        # raced onto a different conversion path
-        import pyarrow as pa
-
-        return spark.createDataFrame(pa.table({name: list(values)}), schema=schema)
-    except Exception:
-        # exotic value types pyarrow cannot infer: fall back to the
-        # row-list path (correct for any Spark type; slower — fine for
-        # the rare case)
-        return spark.createDataFrame([(v,) for v in values], schema)
+    return local_frame(spark, schema, [values])
 
 
 def _keep_covered_rows(
@@ -871,12 +852,11 @@ def _append_empty_file_rows(
     covered = {_norm_file(f) for f in covered}
     missing = sorted(current - covered)
     if missing:
-        cols = [f.name for f in schema.fields]
-        rows = [
-            tuple(f if c == "file" else fill.get(c) for c in cols)
-            for f in missing
+        columns = [
+            missing if f.name == "file" else [fill.get(f.name)] * len(missing)
+            for f in schema.fields
         ]
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+        local_frame(spark, schema, columns).coalesce(1).write.mode(
             "append"
         ).parquet(new_dir)
     return len(covered), len(missing)
@@ -1200,10 +1180,8 @@ def bloom_pruned_read(
     sidecar = spark.read.parquet(path.rstrip("/") + f"/_bloom_{key_col}")
     has_stamps = "num_hashes" in sidecar.columns
     body = sidecar.drop("num_hashes", "num_bits") if has_stamps else sidecar
-    # kset stays a JVM lineage: a driver round-trip through
-    # createDataFrame would put a Python-RDD relation inside the
-    # RETURNED plan, re-launching Python workers on every downstream
-    # action (the write_zone_map lesson)
+    # kset stays a distributed lineage: no driver round trip (collect,
+    # then a driver-built frame) for keys the cluster already holds
     kpos = kset.select(
         key_col,
         F.explode(
@@ -1942,9 +1920,14 @@ def forget_keys(
             ).parquet(out)
         finally:
             flagged.unpersist()
-        return spark.createDataFrame(
-            [(None, int(row["n_f"] or 0), int(row["n_k"] or 0))],
-            f"{partition_col or 'partition'} string, n_forgotten long, n_kept long",
+        from pyspark.sql.types import StructType
+
+        return local_frame(
+            spark,
+            StructType.fromDDL(
+                f"{partition_col or 'partition'} string, n_forgotten long, n_kept long"
+            ),
+            [[None], [int(row["n_f"] or 0)], [int(row["n_k"] or 0)]],
         )
     find_src = df
     if sidecar is not None:
@@ -2010,4 +1993,6 @@ def forget_keys(
         ).partitionBy(partition_col).parquet(out)
     finally:
         flagged.unpersist()
-    return spark.createDataFrame(cert_rows, cert.schema)
+    return local_frame(
+        spark, cert.schema, [[r[i] for r in cert_rows] for i in range(len(cert.columns))]
+    )

@@ -674,7 +674,10 @@ def _memo_walk(fn):
             if per_session is None:
                 # a new session invalidates every prior gateway-bound
                 # Column: drop dead sessions' entries wholesale so the
-                # module global stays bounded (ADVICE r14)
+                # module global stays bounded (ADVICE r14).  Two live
+                # sessions used alternately thrash it: each switch
+                # clears the other's entries, so every call rebuilds
+                # its walk as if unmemoized (correct, only slower)
                 _WALK_MEMO.clear()
                 per_session = _WALK_MEMO.setdefault(session, {})
             if key not in per_session:

@@ -31,6 +31,7 @@ from pdtable_spark.frame import (
     coerce_value_for_unit,
     column_metadata_from_df,
     derived_origin,
+    local_frame,
     schema_for_units,
 )
 from pdtable_spark.model.metadata import (
@@ -516,10 +517,10 @@ class Table:
             vals = [row.get(c) for c in self.column_names]
         else:
             vals = list(row)
-        coerced = tuple(
-            coerce_value_for_unit(v, cm[c].unit) for v, c in zip(vals, self.column_names)
-        )
-        one = self.spark.createDataFrame([coerced], schema=self._df.schema)
+        coerced = [
+            [coerce_value_for_unit(v, cm[c].unit)] for v, c in zip(vals, self.column_names)
+        ]
+        one = local_frame(self.spark, self._df.schema, coerced)
         return self._derive(self._df.unionByName(one), "append_row")
 
     def rename_column(self, old: str, new: str) -> "Table":
@@ -537,11 +538,9 @@ class Table:
         rows = self._df.collect()
         names = self.column_names
         out_cols = ["column"] + [f"row_{i}" for i in range(len(rows))]
-        data = [
-            tuple([name] + [str(row[name]) for row in rows]) for name in names
-        ]
+        columns = [names] + [[str(row[name]) for name in names] for row in rows]
         schema = schema_for_units(out_cols, ["text"] * len(out_cols))
-        df = self.spark.createDataFrame(data, schema=schema)
+        df = local_frame(self.spark, schema, columns)
         return self._derive(df, "transpose")
 
     def pivot(
@@ -807,7 +806,5 @@ def _df_from_values(spark: SparkSession, name: str, values: list, unit: str) -> 
         T.StructField("__row_idx__", T.LongType(), False),
         schema.fields[1],
     ]
-    coerced = [
-        (i, coerce_value_for_unit(v, unit)) for i, v in enumerate(values)
-    ]
-    return spark.createDataFrame(coerced, schema=T.StructType(fields))
+    coerced = [coerce_value_for_unit(v, unit) for v in values]
+    return local_frame(spark, T.StructType(fields), [range(len(values)), coerced])

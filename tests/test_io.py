@@ -207,6 +207,62 @@ def test_scan_csv_permissive_counts_fixes(spark, tmp_path):
     assert acc.value == 1
 
 
+def test_scan_csv_permissive_counts_fixes_per_table(spark, tmp_path):
+    """Fixes are counted per parsed table: a file holding the target table
+    twice, with one illegal cell in each, counts two (the parser resets
+    the fixer per block, so its count is never a running total)."""
+    block = "**m;\nall\na;b\n-;text\n{};x\n3.0;y\n\n"
+    (tmp_path / "f.csv").write_text(
+        block.format("bad_one") + "**other;\nall\nz\n-\n1\n\n" + block.format("bad_two")
+    )
+
+    acc = spark.sparkContext.accumulator(0)
+    t = scan_csv(spark, str(tmp_path / "f.csv"), "m", permissive=True, fix_counter=acc)
+    assert t.df.count() == 4
+    assert acc.value == 2
+
+
+DATETIME_CSV = """**events;
+all
+label;at
+text;datetime
+gap;2020-03-08 02:30
+fold;2020-11-01 01:30
+plain;2021-06-15 12:00:05
+missing;-
+
+"""
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York", "Asia/Kolkata"])
+def test_read_csv_datetime_matches_row_list_frame(spark, tz):
+    """A parsed datetime column collects, and casts to string, exactly as
+    the pickled row-list spelling of the same rows does, under any session
+    time zone -- including a wall-clock time in New York's DST gap."""
+    from pdtable_spark.frame import schema_for_units
+
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        (table,) = [b for k, b in read_csv(io.StringIO(DATETIME_CSV)) if k == BlockType.TABLE]
+        (parsed,) = [
+            b for k, b in read_csv(io.StringIO(DATETIME_CSV), to="parsed")
+            if k == BlockType.TABLE
+        ]
+        rows = list(zip(*(parsed.columns[c] for c in parsed.column_names)))
+        row_list = spark.createDataFrame(
+            rows, schema_for_units(parsed.column_names, parsed.units)
+        )
+
+        def as_strings(df):
+            return df.select([F.col(c).cast("string") for c in df.columns]).collect()
+
+        assert table.df.collect() == row_list.collect()
+        assert as_strings(table.df) == as_strings(row_list)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
 def test_scan_csv_strict_fails_on_illegal_cell(spark, tmp_path):
     from pdtable_spark.io.csv import scan_csv
     from py4j.protocol import Py4JJavaError

@@ -976,6 +976,60 @@ def test_certificate_read_paths_plan_clean(spark, tmp_path):
     assert_clean(bl)
 
 
+STARTABLE_CSV = """**m;
+all
+run;depth;at
+text;mm;datetime
+a;1.5;2020-03-08 02:30
+b;-;2021-01-02 03:04
+
+"""
+
+
+def test_startable_driver_frames_are_local_scans(spark, tmp_path):
+    """Tables parsed on the driver (read_csv, load_files) and rows appended
+    with Table.append_row reach Spark as local relations: no Python-RDD
+    scan in the executed plan, and the unit metadata stays on the fields."""
+    from pdtable_spark.frame import column_metadata_from_df
+    from pdtable_spark.io.csv import read_csv
+    from pdtable_spark.io.load import load_files
+    from pdtable_spark.parsers.blocks import BlockType
+
+    path = tmp_path / "m.csv"
+    path.write_text(STARTABLE_CSV)
+
+    def table_of(blocks):
+        (t,) = [b for k, b in blocks if k == BlockType.TABLE]
+        return t
+
+    read = table_of(read_csv(str(path)))
+    loaded = table_of(load_files([str(path)]))
+    appended = read.append_row(["c", 2.0, "2022-05-06 07:08"])
+    for t in (read, loaded, appended):
+        plan = t.df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, plan
+        # a fresh projection reads the schema back from the JVM
+        units = {c: m.unit for c, m in column_metadata_from_df(t.df.select("*")).items()}
+        assert units == {"run": "text", "depth": "mm", "at": "datetime"}
+    assert appended.df.count() == 3
+
+
+def test_scan_csv_path_frame_has_no_exchange(spark, tmp_path):
+    """scan_csv parses straight off its path frame: no shuffle sits below
+    MapInPandas, and the files still spread over min_partitions tasks."""
+    from pdtable_spark.io.csv import scan_csv
+
+    for i in range(5):
+        (tmp_path / f"f{i}.csv").write_text(STARTABLE_CSV)
+    t = scan_csv(spark, f"{tmp_path}/f*.csv", "m", min_partitions=3)
+    plan = t.df._jdf.queryExecution().executedPlan().toString()
+    below = plan[plan.index("MapInPandas"):]
+    assert "Exchange" not in below, plan
+    assert "ExistingRDD" not in below, plan
+    assert t.df.rdd.getNumPartitions() == 3
+    assert t.df.count() == 10
+
+
 def test_e2e_curation_composed_plan_clean(spark):
     """The composed curation DAG (pipeline_e2e_curation) stays lint-clean end to
     end: no Python row stages, no raw cartesians.  r15: pack_budget no
