@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pdtable_spark.operators.scanfan import fanout_small_scan
+from pdtable_spark.operators.sqltext import ident
 from pdtable_spark.operators.text import shingle_hashes, shingles, tokens
 
 
@@ -52,14 +53,12 @@ def shard_of(key: Column, num_shards: int, salt: str = "") -> Column:
 def _pair_combos(entries_name: str) -> Column:
     """All unordered pairs (ea, eb) of a sorted entry array column (by
     name), in-row.  One JVM-parsed SQL expression: the nested-lambda
-    ``F.transform`` spelling costs ~20 py4j round-trips to build per call
-    (r14 builder-cost note on ``_signature_exprs``); the tree and the
-    values are identical."""
+    ``F.transform`` spelling costs ~20 py4j round-trips to build per call."""
     if not isinstance(entries_name, str):
         raise TypeError(
             f"_pair_combos takes a column NAME, got {type(entries_name).__name__}"
         )
-    e = f"`{entries_name}`"
+    e = ident(entries_name)
     return F.expr(
         f"flatten(transform({e}, (x, i) -> "
         f"transform(slice({e}, i + 2, greatest(size({e}) - i - 1, 0)), "
@@ -180,10 +179,8 @@ def _signature_exprs(sh_name: str, num_hashes: int, hash_fn: str = "xxhash64"):
     :func:`_signature_frame`): the Python-lambda ``F.transform`` spelling
     costs ~10 py4j round-trips per seed to build, which measured ~150 ms
     of driver time per call at ``num_hashes=16`` vs ~15 ms for one
-    ``selectExpr`` — identical expression tree, identical values (r14
-    optimization; seeds are INT literals in both spellings, so the hashes
-    are bit-equal)."""
-    sh = f"`{sh_name}`"
+    ``selectExpr``."""
+    sh = ident(sh_name)
     if hash_fn == "md5_60":
         return [
             f"array_min(transform({sh}, p -> (p.h1 + {seed} * p.h2) % {1 << 60}))"
@@ -206,7 +203,7 @@ def _signature_frame(
     """(id, mh_0..mh_{n-1}) from a shingle-set frame in ONE ``selectExpr``
     (builder-cost note on :func:`_signature_exprs`)."""
     return sets_df.selectExpr(
-        f"`{id_col}`", *_signature_exprs(sh_name, num_hashes, hash_fn)
+        ident(id_col), *_signature_exprs(sh_name, num_hashes, hash_fn)
     )
 
 
@@ -228,11 +225,9 @@ def _md5_hash_pairs(sh_strings: Column) -> Column:
 
 def _shingle_sets(df, text_col: str, id_col: str, shingle_n: int, hash_fn: str, out: str):
     """Per-doc shingle set — 64-bit hash identities in production, gram
-    strings in md5_60 verification mode (what DuckDB can rebuild).
-    Column-NAME form of the shingle builders = one JVM-side expression
-    parse (r14 builder-cost note in operators/text.py)."""
+    strings in md5_60 verification mode (what DuckDB can rebuild)."""
     mk = shingles if hash_fn == "md5_60" else shingle_hashes
-    # r14 opt: tokenize+hash is compute-dense over a byte-tiny scan —
+    # tokenize+hash is compute-dense over a byte-tiny scan —
     # fan a provably small local input to the core count (identity at
     # scale; see operators/scanfan.py)
     return fanout_small_scan(df).select(
@@ -317,7 +312,7 @@ def _band_bucket_frame(
 ) -> DataFrame:
     """(id, band, bucket) rows from a signature frame — the LSH index
     relation (see :func:`_lsh_candidate_pairs` for bucket-identity notes).
-    SQL-string spelling (r14 builder-cost note on ``_signature_exprs``)."""
+    SQL-string spelling (builder-cost note on ``_signature_exprs``)."""
     rows_per_band = num_hashes // bands
 
     def band_key(b):
@@ -331,8 +326,8 @@ def _band_bucket_frame(
         f"struct({b} AS band, {band_key(b)} AS bucket)" for b in range(bands)
     )
     return sig.selectExpr(
-        f"`{id_col}`", f"explode(array({bb})) AS bb"
-    ).selectExpr(f"`{id_col}`", "bb.band AS band", "bb.bucket AS bucket")
+        ident(id_col), f"explode(array({bb})) AS bb"
+    ).selectExpr(ident(id_col), "bb.band AS band", "bb.bucket AS bucket")
 
 
 def band_buckets(
@@ -728,7 +723,7 @@ def source_overlap(
     per_g = (
         df.select(
             F.col(source_col).alias("src"),
-            F.explode(mk(F.col(text_col), shingle_n)).alias("g"),
+            F.explode(mk(text_col, shingle_n)).alias("g"),
         )
         .groupBy("g")
         .agg(F.sort_array(F.collect_set("src")).alias("srcs"))
@@ -1361,27 +1356,25 @@ def bloom_decontaminate(
 # ---------------------------------------------------------------------------
 
 
-def _positional_gram_hashes(text: Column, gram_n: int, hash_fn: str) -> Column:
+def _positional_gram_hashes(text_col: str, gram_n: int, hash_fn: str) -> Column:
     """POSITIONAL word-gram hash array (no dedup — element i is the gram
     starting at token i, which winnowing's window arithmetic needs).
-    md5_60 hashes the gram strings (the DuckDB-reproducible oracle mode);
-    xxhash64 combines token hashes without building strings."""
-    from pdtable_spark.operators.text import _let, _windows_of
+    md5_60 hashes the gram strings (the DuckDB-reproducible oracle mode,
+    spelled as :func:`md5_60`); xxhash64 combines token hashes without
+    building strings."""
+    from pdtable_spark.operators.text import _let_sql, _tokens_sql, _windows_sql
 
-    toks_h = (
-        tokens(text)
-        if hash_fn == "md5_60"
-        else F.transform(tokens(text), lambda t: F.xxhash64(t))
-    )
+    toks = _tokens_sql(ident(text_col))
     if hash_fn == "md5_60":
-        mk = lambda s: md5_60(  # noqa: E731
-            F.concat_ws(" ", *[s[str(i)] for i in range(gram_n)])
-        )
+        def mk(f):
+            gram = f"concat_ws(' ', {', '.join(f)})"
+            return f"CAST(conv(substring(md5({gram}), 1, 15), 16, 10) AS BIGINT)"
     else:
-        mk = lambda s: F.xxhash64(  # noqa: E731
-            *[F.coalesce(s[str(i)], F.lit(0)) for i in range(gram_n)]
-        )
-    return _let(toks_h, lambda hs: F.transform(_windows_of(hs, gram_n), mk))
+        toks = f"transform({toks}, t -> xxhash64(t))"
+
+        def mk(f):
+            return "xxhash64(" + ", ".join(f"coalesce({x}, 0)" for x in f) + ")"
+    return F.expr(_let_sql(toks, "hs", _windows_sql("hs", gram_n, mk)))
 
 
 def winnow_fingerprints(
@@ -1443,7 +1436,7 @@ def winnow_fingerprints(
         )
 
     sels = _let(
-        _positional_gram_hashes(F.col(text_col), gram_n, hash_fn), pick
+        _positional_gram_hashes(text_col, gram_n, hash_fn), pick
     )
     return (
         fanout_small_scan(df)

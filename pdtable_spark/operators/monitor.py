@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdtable_spark.operators.scanfan import fanout_small_scan
+from pdtable_spark.operators.sqltext import ident, num
 
 
 def corpus_drift_report(
@@ -300,38 +301,37 @@ def threshold_sweep(
         raise ValueError("threshold_sweep: thresholds must be non-empty")
     ts = sorted({float(t) for t in thresholds})
 
-    # SQL-text spellings throughout (r15, guide §7.3): the Column form
-    # built ~12 aggregate exprs + T five-field structs through py4j
-    # (~0.4 s of driver time per sweep build); the same trees parse
-    # JVM-side in a handful of calls.
+    # SQL text throughout: the Column form built ~12 aggregate exprs + T
+    # five-field structs through py4j (~0.4 s of driver time per sweep
+    # build); the same trees parse JVM-side in a handful of calls.
+    from pdtable_spark.operators.text import _tokens_sql
+
     by = list(by or [])
-    cols = [*[f"`{c}`" for c in by], f"`{score_col}` AS __s"]
+    cols = [*[ident(c) for c in by], f"{ident(score_col)} AS __s"]
     if text_col is not None:
-        cols.append(
-            f"CAST(size(split(trim(`{text_col}`), '\\\\s+')) AS BIGINT) AS __tok"
-        )
+        cols.append(f"CAST(size({_tokens_sql(ident(text_col))}) AS BIGINT) AS __tok")
     base = df.selectExpr(*cols)
     aggs = ["count(1) AS __n"]
     if text_col is not None:
         aggs.append("sum(__tok) AS __tk")
     for i, t in enumerate(ts):
-        keep = f"CAST((__s >= {t!r}D) AS BIGINT)"
+        keep = f"CAST((__s >= {num(t)}) AS BIGINT)"
         aggs.append(f"sum({keep}) AS __k{i}")
         if text_col is not None:
             aggs.append(f"sum({keep} * __tok) AS __t{i}")
     agg_cols = [F.expr(a) for a in aggs]
     row = base.groupBy(*by).agg(*agg_cols) if by else base.agg(*agg_cols)
 
-    def share(num, den):
+    def share(part, whole):
         return (
-            f"CASE WHEN {den} > 0 THEN CAST({num} AS DOUBLE) / "
-            f"CAST({den} AS DOUBLE) ELSE 0.0D END"
+            f"CASE WHEN {whole} > 0 THEN CAST({part} AS DOUBLE) / "
+            f"CAST({whole} AS DOUBLE) ELSE 0.0D END"
         )
 
     entries = []
     for i, t in enumerate(ts):
         fields = [
-            f"{t!r}D AS threshold",
+            f"{num(t)} AS threshold",
             f"CAST(coalesce(__k{i}, 0) AS BIGINT) AS n_kept",
             share(f"__k{i}", "__n") + " AS share_kept",
         ]
@@ -342,7 +342,7 @@ def threshold_sweep(
             ]
         entries.append("struct(" + ", ".join(fields) + ")")
     return row.selectExpr(
-        *[f"`{c}`" for c in by],
+        *[ident(c) for c in by],
         "inline(array(" + ", ".join(entries) + "))",
     )
 
@@ -383,9 +383,9 @@ def cluster_drift(
 
     def cell_counts(d: DataFrame, out: str) -> DataFrame:
         c = _matrix_frame(
-            d.select(_as_double(F.col(vec_col)).alias("vec")), "__cents", cents, 2
+            d.select(_as_double(ident(vec_col)).alias("vec")), "__cents", cents, 2
         )
-        best = F.element_at(_cell_scores(F.col("vec"), F.col("__cents")), 1)
+        best = F.element_at(_cell_scores("vec", "__cents"), 1)
         return (
             c.select(best["cell"].alias("cell"))
             .groupBy("cell")
@@ -912,7 +912,7 @@ def json_extract_typed(
                 # primitive leaves parse as string, cast later (see
                 # docstring); complex types must parse typed
                 typ = v if is_complex(v) else "string"
-            fields.append(f"`{k}`:{typ}")
+            fields.append(f"{ident(k)}:{typ}")
         return "struct<" + ",".join(fields) + ">"
 
     names = [prefix + "_".join(p[2:].split(".")) for p in plan]

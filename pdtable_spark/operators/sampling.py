@@ -421,19 +421,18 @@ def mixture_temperature_weights(
     )
 
 
-def _dsir_grams(text_col):
+def _dsir_grams(text_col: str) -> Column:
     """The DSIR feature stream: unigrams ++ (non-deduplicated) bigrams,
     with multiplicity — hashed-ngram features per Xie et al. (DSIR,
     arXiv:2302.03169).  Single-token docs contribute their lone token
     twice (the degenerate 1-window bigram), mirrored exactly in the
     oracle SQL."""
-    from pdtable_spark.operators.text import _windows_of, tokens
+    from pdtable_spark.operators.sqltext import ident
+    from pdtable_spark.operators.text import _tokens_sql, _windows_sql
 
-    toks = tokens(text_col)
-    bigrams = F.transform(
-        _windows_of(toks, 2), lambda s: F.concat_ws(" ", s["0"], s["1"])
-    )
-    return F.concat(toks, bigrams)
+    toks = _tokens_sql(ident(text_col))
+    bigrams = _windows_sql(toks, 2, lambda f: f"concat_ws(' ', {f[0]}, {f[1]})")
+    return F.expr(f"concat({toks}, {bigrams})")
 
 
 def dsir_log_importance(
@@ -495,7 +494,7 @@ def dsir_log_importance(
 
     if buckets <= 0:
         raise ValueError("dsir_log_importance: buckets must be positive")
-    # r14 opt: every pass explodes + hashes the full gram stream —
+    # every pass explodes + hashes the full gram stream —
     # compute-dense over a byte-tiny scan; fan a provably tiny local
     # corpus to the core count (identity at scale)
     df = fanout_small_scan(df)
@@ -512,7 +511,7 @@ def dsir_log_importance(
 
     def bucket_counts(d: DataFrame) -> dict:
         rows = (
-            d.select(F.explode(_dsir_grams(F.col(text_col))).alias("g"))
+            d.select(F.explode(_dsir_grams(text_col)).alias("g"))
             .groupBy(bucket_of(F.col("g")).alias("b"))
             .agg(F.count(F.lit(1)).alias("c"))
             .collect()
@@ -524,7 +523,7 @@ def dsir_log_importance(
         # total gram count AND the count from predicate-matching docs
         rows = (
             df.select(
-                F.explode(_dsir_grams(F.col(text_col))).alias("g"),
+                F.explode(_dsir_grams(text_col)).alias("g"),
                 target_pred.cast("long").alias("__t"),
             )
             .groupBy(bucket_of(F.col("g")).alias("b"))
@@ -545,7 +544,7 @@ def dsir_log_importance(
         p_s = (cs.get(b, 0) + 1.0) / (ts + float(buckets))
         lr = math.log(p_t / p_s)
         lut.append(float(math.floor(lr * quantize + 0.5)))
-    grams = _dsir_grams(F.col(text_col))
+    grams = _dsir_grams(text_col)
     d = _matrix_frame(
         df.select(F.col(id_col), grams.alias("__grams")), "__dsir_lut", lut, 1
     )

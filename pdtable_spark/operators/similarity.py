@@ -18,47 +18,41 @@ from __future__ import annotations
 
 from typing import List, Optional
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from pdtable_spark.frame import local_frame
 from pdtable_spark.operators.scanfan import fanout_small_scan
+from pdtable_spark.operators.sqltext import ident, num
 
 
-def dot(a, b):
-    """Dot product of two array<double|float> columns (JVM fold).
-
-    Both sides may be SQL text (column names / field paths) — that form
-    parses the identical tree JVM-side in ONE call instead of ~30 py4j
-    lambda round-trips per fold (the r14 builder-cost move, guide §7.3;
-    parity pinned in tests/test_operators.py::
-    test_similarity_sql_spellings_match)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, "
-            "(acc, v) -> acc + v)"
-        )
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def _dot_sql(a: str, b: str) -> str:
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)"
 
 
-def norm(a):
+def dot(a: str, b: str) -> Column:
+    """Dot product of two array<double|float> SQL expressions (column
+    names, field paths) — a JVM fold parsed in one call."""
+    return F.expr(_dot_sql(a, b))
+
+
+def norm(a: str) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a, b):
+def cosine(a: str, b: str) -> Column:
     # dot / sqrt(|a|² · |b|²): one sqrt, and self-similarity is exactly 1.0
     return dot(a, b) / F.sqrt(dot(a, a) * dot(b, b))
 
 
-def _as_double(col):
-    """array<float> → array<double>.  SQL-text input parses the identical
-    tree JVM-side in one call (builder-cost note on :func:`dot`)."""
-    if isinstance(col, str):
-        return F.expr(f"transform({col}, x -> CAST(x AS DOUBLE))")
-    return F.transform(col, lambda x: x.cast("double"))
+def _as_double_sql(col: str) -> str:
+    return f"transform({col}, x -> CAST(x AS DOUBLE))"
+
+
+def _as_double(col: str) -> Column:
+    """array<float> → array<double> over the SQL expression ``col``."""
+    return F.expr(_as_double_sql(col))
 
 
 def cosine_topk(
@@ -95,12 +89,12 @@ def cosine_topk(
         "queries",
     )
     q = queries.select(
-        F.col(query_id_col), _as_double(f"`{vec_col}`").alias("q_vec")
+        F.col(query_id_col), _as_double(ident(vec_col)).alias("q_vec")
     ).select(
         query_id_col, "q_vec", dot("q_vec", "q_vec").alias("__q_n2")
     )
     c = fanout_small_scan(corpus).select(
-        F.col(id_col), _as_double(f"`{vec_col}`").alias("c_vec")
+        F.col(id_col), _as_double(ident(vec_col)).alias("c_vec")
     ).select(id_col, "c_vec", dot("c_vec", "c_vec").alias("__c_n2"))
     scored = c.crossJoin(F.broadcast(q)).select(
         query_id_col,
@@ -140,56 +134,32 @@ def _lcg_hyperplanes(dim: int, n_planes: int, seed: int) -> List[List[float]]:
     return planes
 
 
-def rhp_bucket(vec_col, planes: List[List[float]]):
-    """Sign-bit bucket id of a vector against a list of hyperplanes.
-
-    Pure-column spelling (kept for composability in arbitrary expressions);
-    the operators below use :func:`_rhp_bucket_expr` over a plane MATRIX
-    COLUMN instead — inlining dim×bits literals here builds a
-    thousands-of-nodes Catalyst tree whose analysis costs seconds of
-    driver time per query batch (measured 2.4 s for a 4×8×64 family)."""
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(x)) for x in plane])
-        bit = F.when(dot(vec_col, p) >= 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        bucket = bucket + bit * F.lit(2 ** i).cast("long")
-    return bucket
-
-
-def _rhp_bucket_expr(vec, planes_col):
-    """Bucket id from a plane-matrix COLUMN: Σ 2ⁱ over planes i with
-    dot(vec, planeᵢ) ≥ 0 — bit-identical to :func:`rhp_bucket`, but the
-    planes travel as one row of DATA (broadcast), so the expression tree is
-    ~50 nodes regardless of dim×bits.  2ⁱ accumulates exactly in doubles
-    for i < 53 (bits per table is ≤ ~30 in practice)."""
-    bits = F.transform(
-        planes_col,
-        lambda p, i: F.when(
-            dot(vec, p) >= 0, F.pow(F.lit(2.0), i.cast("double"))
-        ).otherwise(F.lit(0.0)),
+def _rhp_bucket_sql(vec: str, planes: str) -> str:
+    """Sign-bit bucket id of the vector ``vec`` against a plane-matrix
+    ``planes`` (SQL text both): Σ 2ⁱ over planes i with dot(vec, planeᵢ)
+    ≥ 0.  The planes travel as one row of DATA (broadcast), so the
+    expression tree is ~50 nodes regardless of dim×bits — inlining
+    dim×bits literals builds a thousands-of-nodes Catalyst tree whose
+    analysis costs seconds of driver time per query batch (measured
+    2.4 s for a 4×8×64 family).  2ⁱ accumulates exactly in doubles for
+    i < 53 (bits per table is ≤ ~30 in practice)."""
+    return (
+        f"CAST(aggregate(transform({planes}, (p, i) -> CASE WHEN "
+        f"{_dot_sql(vec, 'p')} >= 0 THEN power(2.0D, CAST(i AS DOUBLE)) "
+        "ELSE 0.0D END), 0.0D, (a, v) -> a + v) AS BIGINT)"
     )
-    return F.aggregate(bits, F.lit(0.0), lambda a, v: a + v).cast("long")
 
 
 def _matrix_frame(df: DataFrame, name: str, matrix, depth: int) -> DataFrame:
     """Attach a small numeric matrix to every row of ``df`` as ONE column of
     nested-array DATA via a broadcast single-row cross join — the
     plan-size-safe alternative to inlining it as per-element literals.
-
-    The single row ships via the pyarrow ``createDataFrame`` path (the
-    ``_snapshot_frame`` lesson, r15): Arrow conversion works regardless
-    of the session's arrow conf and backs the relation with a plain JVM
-    lineage — the pickled-row fallback costs ~180 ms of driver time per
-    build AND launches a Python worker for the one-row side inside every
-    downstream action (guide §4: the JVM↔Python boundary)."""
-    schema = f"{name}: " + "array<" * depth + "double" + ">" * depth
-    spark = df.sparkSession
-    try:
-        import pyarrow as pa
-
-        one = spark.createDataFrame(pa.table({name: [matrix]}), schema=schema)
-    except Exception:
-        one = spark.createDataFrame([(matrix,)], schema)
+    The row is a :func:`~pdtable_spark.frame.local_frame`, so no action
+    on it starts a Python worker."""
+    dtype = T.DoubleType()
+    for _ in range(depth):
+        dtype = T.ArrayType(dtype)
+    one = local_frame(df.sparkSession, T.StructType().add(name, dtype), [[matrix]])
     return df.crossJoin(F.broadcast(one))
 
 
@@ -206,14 +176,11 @@ def _bucketize(
     df: DataFrame, id_: str, vec_col: str, out_vec: str, tables, extra_cols=()
 ) -> DataFrame:
     extras = [F.col(c) for c in extra_cols]
-    d = df.select(F.col(id_), _as_double(f"`{vec_col}`").alias(out_vec), *extras)
+    d = df.select(F.col(id_), _as_double(ident(vec_col)).alias(out_vec), *extras)
     d = _matrix_frame(d, "__rhp_tables", [[[float(x) for x in p] for p in t] for t in tables], 3)
-    entries = F.transform(
-        F.col("__rhp_tables"),
-        lambda tbl, t: F.struct(
-            t.cast("int").alias("tbl"),
-            _rhp_bucket_expr(F.col(out_vec), tbl).alias("bkt"),
-        ),
+    entries = F.expr(
+        "transform(__rhp_tables, (tbl, t) -> struct(CAST(t AS INT) AS tbl, "
+        f"{_rhp_bucket_sql(ident(out_vec), 'tbl')} AS bkt))"
     )
     return d.select(id_, out_vec, F.explode(entries).alias("e"), *extra_cols).select(
         id_, out_vec, F.col("e.tbl").alias("tbl"), F.col("e.bkt").alias("bkt"), *extra_cols
@@ -305,7 +272,7 @@ def ann_query(
         .dropDuplicates([query_id_col, id_col])
     )
     scored = cand.select(
-        query_id_col, id_col, cosine(F.col("q_vec"), F.col("vec")).alias("cosine_sim")
+        query_id_col, id_col, cosine("q_vec", "vec").alias("cosine_sim")
     )
     w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.asc(id_col))
     return (
@@ -362,10 +329,10 @@ def embedding_near_dups(
     from pdtable_spark.operators.dedup import bucket_pairs
 
     planes = _lcg_hyperplanes(dim, bits, seed)
-    d = df.select(F.col(id_col), _as_double(f"`{vec_col}`").alias("v"))
+    d = df.select(F.col(id_col), _as_double(ident(vec_col)).alias("v"))
     d = (
         _matrix_frame(d, "__planes", [[float(x) for x in p] for p in planes], 2)
-        .withColumn("bkt", _rhp_bucket_expr(F.col("v"), F.col("__planes")))
+        .withColumn("bkt", F.expr(_rhp_bucket_sql("v", "__planes")))
         .drop("__planes")
     )
     # per-entry norm: one array traversal per pair, not three (see
@@ -410,7 +377,7 @@ def ivf_train_centroids(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    train = corpus.select(_as_double(f"`{vec_col}`").alias("arr"))
+    train = corpus.select(_as_double(ident(vec_col)).alias("arr"))
     if sample_fraction < 1.0:
         train = train.sample(fraction=sample_fraction, seed=seed)
     km = KMeans(k=n_cells, seed=seed, featuresCol="features")
@@ -418,46 +385,28 @@ def ivf_train_centroids(
     return [[float(x) for x in c] for c in model.clusterCenters()]
 
 
-def _cell_scores(vec, cents_col):
+def _cell_scores_sql(vec: str, cents: str) -> str:
+    return (
+        f"sort_array(transform({cents}, (c, i) -> struct("
+        f"aggregate(zip_with({vec}, c, (a, b) -> (a - b) * (a - b)), "
+        "0.0D, (acc, v_) -> acc + v_) AS d, CAST(i AS INT) AS cell)))"
+    )
+
+
+def _cell_scores(vec: str, cents: str) -> Column:
     """(d², cell) structs sorted by ascending squared distance to ``vec``
     (ties to the lower cell id — sort_array's struct order).
 
-    ``cents_col`` is a centroid-matrix COLUMN (see :func:`_matrix_frame`) —
+    ``cents`` is a centroid-matrix column (see :func:`_matrix_frame`) —
     element index IS the cell id.  Inlining n_cells×dim literals instead
     costs seconds of driver-side plan analysis per query batch.  Both
-    args as SQL text → one JVM-side parse (builder-cost note on
-    :func:`dot`)."""
-    if isinstance(vec, str) and isinstance(cents_col, str):
-        return F.expr(
-            f"sort_array(transform({cents_col}, (c, i) -> struct("
-            f"aggregate(zip_with({vec}, c, (a, b) -> (a - b) * (a - b)), "
-            "0.0D, (acc, v_) -> acc + v_) AS d, CAST(i AS INT) AS cell)))"
-        )
-    scored = F.transform(
-        cents_col,
-        lambda c, i: F.struct(
-            F.aggregate(
-                F.zip_with(vec, c, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, v_: acc + v_,
-            ).alias("d"),
-            i.cast("int").alias("cell"),
-        ),
-    )
-    return F.sort_array(scored)
+    arguments are SQL text."""
+    return F.expr(_cell_scores_sql(vec, cents))
 
 
-def _cell_ranking(vec, cents_col):
-    """Array of cell ids sorted by ascending squared distance to ``vec``.
-    SQL-text args → one JVM-side parse (builder-cost note on :func:`dot`)."""
-    if isinstance(vec, str) and isinstance(cents_col, str):
-        return F.expr(
-            f"transform(sort_array(transform({cents_col}, (c, i) -> struct("
-            f"aggregate(zip_with({vec}, c, (a, b) -> (a - b) * (a - b)), "
-            "0.0D, (acc, v_) -> acc + v_) AS d, CAST(i AS INT) AS cell))), "
-            "s -> s.cell)"
-        )
-    return F.transform(_cell_scores(vec, cents_col), lambda s: s["cell"])
+def _cell_ranking(vec: str, cents: str) -> Column:
+    """Array of cell ids sorted by ascending squared distance to ``vec``."""
+    return F.expr(f"transform({_cell_scores_sql(vec, cents)}, s -> s.cell)")
 
 
 def _cosine_pre(q_vec, c_vec):
@@ -499,13 +448,13 @@ def ivf_index(
     assignments.  ``metadata_cols`` ride along for filtered search /
     label-aware mining (same contract as :func:`ann_index`)."""
     cents = [[float(x) for x in c] for c in centroids]
-    # r14 opt: the nearest-cell assignment folds dim doubles per centroid
-    # per row — compute-dense over a byte-tiny scan (guide §2.5); fan a
+    # the nearest-cell assignment folds dim doubles per centroid per
+    # row — compute-dense over a byte-tiny scan; fan a
     # provably tiny local corpus to the core count first (identity at
     # scale / on derived multi-source lineage)
     c = fanout_small_scan(corpus).select(
         F.col(id_col),
-        _as_double(f"`{vec_col}`").alias("vec"),
+        _as_double(ident(vec_col)).alias("vec"),
         *[F.col(m) for m in metadata_cols],
     )
     c = _matrix_frame(c, "__cents", cents, 2)
@@ -597,7 +546,7 @@ def ivf_cell_ledger(
     n_cells-group aggregate — KB-sized state at any corpus scale.
     """
     cents = [[float(x) for x in c] for c in centroids]
-    c = corpus.select(_as_double(f"`{vec_col}`").alias("vec"))
+    c = corpus.select(_as_double(ident(vec_col)).alias("vec"))
     c = _matrix_frame(c, "__cents", cents, 2)
     nearest = F.element_at(
         _cell_scores("vec", "__cents"), 1
@@ -750,7 +699,7 @@ def ivf_query(
     if where is not None:
         index = index.filter(where)
     q = _ivf_probes(
-        queries.select(F.col(query_id_col), _as_double(f"`{vec_col}`").alias("q_vec")),
+        queries.select(F.col(query_id_col), _as_double(ident(vec_col)).alias("q_vec")),
         centroids,
         nprobe,
     )
@@ -936,7 +885,7 @@ def incremental_embedding_dedup(
         .dropDuplicates(["__new_id", "__corpus_id"])
     )
     dropped = (
-        cand.filter(cosine(F.col("q_vec"), F.col("vec")) >= F.lit(float(threshold)))
+        cand.filter(cosine("q_vec", "vec") >= F.lit(float(threshold)))
         .select(F.col("__new_id").alias(id_col))
         .distinct()
     )
@@ -999,7 +948,7 @@ def pq_codebooks(
     rows = (
         corpus.orderBy(id_col)
         .limit(n_codes)
-        .select(_as_double(f"`{vec_col}`").alias("v"))
+        .select(_as_double(ident(vec_col)).alias("v"))
         .collect()
     )
     if not rows:
@@ -1036,7 +985,7 @@ def _refine_pq_codebooks(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    train = corpus.select(_as_double(f"`{vec_col}`").alias("v"))
+    train = corpus.select(_as_double(ident(vec_col)).alias("v"))
     if sample_fraction < 1.0:
         train = train.sample(fraction=sample_fraction, seed=seed)
     train = train.cache()
@@ -1063,12 +1012,19 @@ def _pq_cent_frame(spark, codebooks: List[List[List[float]]]) -> DataFrame:
     num_subspaces × n_codes rows, a few KB.  A frame, not a literal tree:
     inlining M×K×dsub literals costs seconds of Catalyst analysis
     (same lesson as :func:`_matrix_frame`)."""
-    data = [
-        (m, code, [float(x) for x in cvec])
-        for m, book in enumerate(codebooks)
-        for code, cvec in enumerate(book)
-    ]
-    return spark.createDataFrame(data, "m int, code int, cvec array<double>")
+    ms, codes, cvecs = [], [], []
+    for m, book in enumerate(codebooks):
+        for code, cvec in enumerate(book):
+            ms.append(m)
+            codes.append(code)
+            cvecs.append([float(x) for x in cvec])
+    schema = (
+        T.StructType()
+        .add("m", T.IntegerType())
+        .add("code", T.IntegerType())
+        .add("cvec", T.ArrayType(T.DoubleType()))
+    )
+    return local_frame(spark, schema, [ms, codes, cvecs])
 
 
 def _pq_subspaces(df: DataFrame, id_cols: List[str], vec: str, num_subspaces: int, dsub: int):
@@ -1105,7 +1061,7 @@ def pq_encode(
     num_subspaces = len(codebooks)
     dsub = len(codebooks[0][0])
     cent = _pq_cent_frame(corpus.sparkSession, codebooks)
-    c = corpus.select(F.col(id_col), _as_double(f"`{vec_col}`").alias("v"))
+    c = corpus.select(F.col(id_col), _as_double(ident(vec_col)).alias("v"))
     sub = _pq_subspaces(c, [id_col], "v", num_subspaces, dsub)
     best = (
         sub.join(F.broadcast(cent), "m")
@@ -1151,7 +1107,7 @@ def pq_query(
     num_subspaces = len(codebooks)
     dsub = len(codebooks[0][0])
     cent = _pq_cent_frame(index.sparkSession, codebooks)
-    q = queries.select(F.col(query_id_col), _as_double(f"`{vec_col}`").alias("v"))
+    q = queries.select(F.col(query_id_col), _as_double(ident(vec_col)).alias("v"))
     qsub = _pq_subspaces(q, [query_id_col], "v", num_subspaces, dsub)
     lut = (
         qsub.join(F.broadcast(cent), "m")
@@ -1232,15 +1188,15 @@ def pq_query_refined(
         index, queries, codebooks, k=k * refine_factor,
         id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
     ).select(query_id_col, id_col)
-    q = queries.select(F.col(query_id_col), _as_double(f"`{vec_col}`").alias("q_vec"))
-    c = corpus.select(F.col(id_col), _as_double(f"`{vec_col}`").alias("c_vec"))
+    q = queries.select(F.col(query_id_col), _as_double(ident(vec_col)).alias("q_vec"))
+    c = corpus.select(F.col(id_col), _as_double(ident(vec_col)).alias("c_vec"))
     scored = (
         cand.join(c, id_col)
         .join(F.broadcast(q), query_id_col)
         .select(
             query_id_col,
             id_col,
-            cosine(F.col("q_vec"), F.col("c_vec")).alias("cosine_sim"),
+            cosine("q_vec", "c_vec").alias("cosine_sim"),
         )
     )
     w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine_sim"), F.asc(id_col))
@@ -1354,7 +1310,7 @@ def cluster_profile(
     divides the exact integer sum (the suite's quantized-ln recipe).
     """
     cents = [[float(x) for x in c] for c in centroids]
-    c = corpus.select(_as_double(f"`{vec_col}`").alias("vec"))
+    c = corpus.select(_as_double(ident(vec_col)).alias("vec"))
     c = _matrix_frame(c, "__cents", cents, 2)
     best = F.element_at(_cell_scores("vec", "__cents"), 1)
     per_row = c.select(
@@ -1503,7 +1459,7 @@ def hard_negatives(
     )
     anchors = corpus.filter(anchor_pred).select(
         F.col(id_col).alias("anchor_id"),
-        _as_double(f"`{vec_col}`").alias("q_vec"),
+        _as_double(ident(vec_col)).alias("q_vec"),
         F.col(label_col).alias("__a_label"),
     ).select(
         # squared norm folded ONCE per anchor (see cosine_topk): the pair
@@ -1515,7 +1471,7 @@ def hard_negatives(
     )
     cand = fanout_small_scan(corpus).select(
         F.col(id_col).alias("neg_id"),
-        _as_double(f"`{vec_col}`").alias("c_vec"),
+        _as_double(ident(vec_col)).alias("c_vec"),
         F.col(label_col).alias("neg_label"),
     ).select(
         "neg_id",
@@ -1600,13 +1556,13 @@ def knn_label_propagation(
         "query_pred",
     )
     queries = corpus.filter(query_pred).select(
-        F.col(id_col).alias("query_id"), _as_double(f"`{vec_col}`").alias("q_vec")
+        F.col(id_col).alias("query_id"), _as_double(ident(vec_col)).alias("q_vec")
     ).select(
         "query_id", "q_vec", dot("q_vec", "q_vec").alias("__q_n2")
     )
     labeled = fanout_small_scan(corpus.filter(~query_pred)).select(
         F.col(id_col),
-        _as_double(f"`{vec_col}`").alias("c_vec"),
+        _as_double(ident(vec_col)).alias("c_vec"),
         F.col(label_col).alias("__nl"),
     ).select(
         id_col, "c_vec", "__nl", dot("c_vec", "c_vec").alias("__c_n2")
@@ -1686,7 +1642,7 @@ def hard_negatives_ivf(
     a = _ivf_probes(
         anchors.select(
             F.col(anchor_id_col).alias("anchor_id"),
-            _as_double(f"`{vec_col}`").alias("q_vec"),
+            _as_double(ident(vec_col)).alias("q_vec"),
             F.col(label_col).alias("__a_label"),
         ),
         centroids,
@@ -1749,7 +1705,7 @@ def knn_label_propagation_ivf(
     q = _ivf_probes(
         queries.select(
             F.col(query_id_col).alias("query_id"),
-            _as_double(f"`{vec_col}`").alias("q_vec"),
+            _as_double(ident(vec_col)).alias("q_vec"),
         ),
         centroids,
         nprobe,
@@ -1828,12 +1784,12 @@ def margin_mining(
         left.select(F.col(id_col)), max_left, "margin_mining", "left"
     )
     l = left.select(
-        F.col(id_col).alias("left_id"), _as_double(f"`{vec_col}`").alias("q_vec")
+        F.col(id_col).alias("left_id"), _as_double(ident(vec_col)).alias("q_vec")
     ).select(
         "left_id", "q_vec", dot("q_vec", "q_vec").alias("__q_n2")
     )
     r = fanout_small_scan(right).select(
-        F.col(id_col).alias("right_id"), _as_double(f"`{vec_col}`").alias("c_vec")
+        F.col(id_col).alias("right_id"), _as_double(ident(vec_col)).alias("c_vec")
     ).select(
         "right_id", "c_vec", dot("c_vec", "c_vec").alias("__c_n2")
     )
@@ -1949,7 +1905,7 @@ def margin_mining_ivf(
     probes = _ivf_probes(
         left.select(
             F.col(id_col).alias("left_id"),
-            _as_double(f"`{vec_col}`").alias("q_vec"),
+            _as_double(ident(vec_col)).alias("q_vec"),
         ),
         centroids,
         nprobe,
@@ -1982,7 +1938,7 @@ def sq_bounds(corpus: DataFrame, vec_col: str = "embedding") -> List[List[float]
     (no quantized-sum machinery needed, unlike the degree/distance
     folds)."""
     rows = (
-        corpus.select(F.posexplode(_as_double(f"`{vec_col}`")).alias("i", "v"))
+        corpus.select(F.posexplode(_as_double(ident(vec_col))).alias("i", "v"))
         .groupBy("i")
         .agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
         .orderBy("i")
@@ -2022,7 +1978,7 @@ def sq_index(
     """
     if not (2 <= int(levels) <= 255):
         raise ValueError("sq_index: levels must be in 2..255")
-    df = corpus.select(F.col(id_col), _as_double(f"`{vec_col}`").alias("__v"))
+    df = corpus.select(F.col(id_col), _as_double(ident(vec_col)).alias("__v"))
     code = F.transform(
         F.col("__v"),
         lambda x, i: F.when(
@@ -2228,14 +2184,11 @@ def gram_ledger(
     not per snapshot — quantize governs the end state)."""
     corpus = fanout_small_scan(corpus)
     # the whole quantize → upper-triangle pair-product expansion as ONE
-    # JVM-parsed SQL string (r15, guide §7.3): the 4-deep nested-lambda
-    # Column spelling cost ~40 py4j round-trips per build.  Identical
-    # tree — same _let binding (element_at(transform(array(...)), 1)),
-    # same casts, same struct fields; values pinned by the gram oracles.
-    q = float(quantize)
+    # JVM-parsed SQL string: the 4-deep nested-lambda Column spelling
+    # cost ~40 py4j round-trips per build
     qv_sql = (
-        f"transform(transform(`{vec_col}`, x -> CAST(x AS DOUBLE)), "
-        f"x -> CAST(floor(x * {q!r}D + 0.5D) AS BIGINT))"
+        f"transform({_as_double_sql(ident(vec_col))}, "
+        f"x -> CAST(floor(x * {num(float(quantize))} + 0.5D) AS BIGINT))"
     )
     d_pairs = F.expr(
         f"element_at(transform(array({qv_sql}), v -> flatten("
@@ -2310,11 +2263,9 @@ def pca_project(
     d = _matrix_frame(
         df, "__pca_b", [[float(x) for x in c] for c in components], 2
     )
-    # one JVM-side parse of the per-coordinate fold (builder-cost note on
-    # :func:`dot`; the lambda spelling cost ~60 py4j round-trips per build)
+    # one JVM-side parse of the per-coordinate fold (the lambda spelling
+    # cost ~60 py4j round-trips per build)
     proj = F.expr(
-        "transform(__pca_b, comp -> aggregate(zip_with(comp, "
-        f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE)), "
-        "(x, y) -> x * y), 0.0D, (acc, v) -> acc + v))"
+        f"transform(__pca_b, comp -> {_dot_sql('comp', _as_double_sql(ident(vec_col)))})"
     )
     return d.select(*df.columns, proj.alias(out_col))

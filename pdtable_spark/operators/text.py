@@ -15,8 +15,11 @@ from typing import Dict, Iterable, List, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from pdtable_spark.frame import local_frame
 from pdtable_spark.operators.scanfan import fanout_small_scan
+from pdtable_spark.operators.sqltext import ident, num, str_lit
 
 
 def tokens(text: Column) -> Column:
@@ -24,50 +27,57 @@ def tokens(text: Column) -> Column:
     return F.split(F.trim(text), r"\s+")
 
 
-# --- SQL-string spellings of the shingle pipeline ---------------------------
+# --- SQL-text fragments of the token/shingle pipeline ----------------------
 #
-# r14 builder-cost optimization (guide §7.3 — driver/planning time): the
-# Column spelling of shingles/shingle_hashes builds ~40 py4j round-trips of
-# nested higher-order lambdas per call (~100 ms of driver time per query
-# build, measured); these emit the IDENTICAL expression tree as one SQL
-# string parsed JVM-side.  Parity (same tree -> bit-identical values) is
-# pinned in tests/test_operators.py::test_shingle_sql_spellings_match.
+# Each builds the expression as one SQL string parsed JVM-side: the same
+# tree as nested Column lambdas costs tens of py4j round-trips per build.
 
 
 def _tokens_sql(text_sql: str) -> str:
     return f"split(trim({text_sql}), '\\\\s+')"
 
 
-def _windows_sql(arr: str, n: int, body: str) -> str:
-    """``transform(<n-windows of arr>, s -> body)`` as SQL text — the
-    :func:`_windows_of` shape (``arrays_zip`` of n shifted slices, short
-    arrays degrading to one null-padded window)."""
+def _tokens_or_empty_sql(text_sql: str) -> str:
+    """:func:`_tokens_sql` with NULL text as zero tokens."""
+    return f"coalesce({_tokens_sql(text_sql)}, CAST(array() AS array<string>))"
+
+
+def _let_sql(value: str, var: str, body: str) -> str:
+    """``body`` with ``var`` bound to ``value`` evaluated once per row (see
+    :func:`_let`)."""
+    return f"element_at(transform(array({value}), {var} -> {body}), 1)"
+
+
+def _windows_sql(arr: str, n: int, body) -> str:
+    """``transform(<n-windows of arr>, s -> body(fields))``: the windows are
+    an ``arrays_zip`` of n shifted slices (structs with fields "0".."n-1",
+    passed to ``body`` as SQL text); an array shorter than n yields one
+    null-padded window."""
     shifted = ", ".join(
         f"slice({arr}, {i + 1}, greatest(size({arr}) - {i}, 0))" for i in range(n)
     )
+    fields = [f"s.{ident(str(i))}" for i in range(n)]
     return (
         f"transform(slice(arrays_zip({shifted}), 1, "
-        f"greatest(size({arr}) - {n - 1}, 1)), s -> {body})"
+        f"greatest(size({arr}) - {n - 1}, 1)), s -> {body(fields)})"
     )
 
 
 def _shingles_sql(text_sql: str, n: int) -> str:
-    """:func:`shingles` as SQL text over the expression ``text_sql``."""
-    parts = ", ".join(f"s.`{i}`" for i in range(n))
-    body = f"concat_ws(' ', {parts})"
-    return (
-        f"element_at(transform(array({_tokens_sql(text_sql)}), "
-        f"toks -> array_distinct({_windows_sql('toks', n, body)})), 1)"
-    )
+    """:func:`shingles` over the SQL expression ``text_sql``."""
+    windows = _windows_sql("toks", n, lambda f: f"concat_ws(' ', {', '.join(f)})")
+    return _let_sql(_tokens_sql(text_sql), "toks", f"array_distinct({windows})")
 
 
 def _shingle_hashes_sql(text_sql: str, n: int) -> str:
-    """:func:`shingle_hashes` as SQL text over the expression ``text_sql``."""
-    parts = ", ".join(f"coalesce(s.`{i}`, 0)" for i in range(n))
-    body = f"xxhash64({parts})"
-    return (
-        f"element_at(transform(array(transform({_tokens_sql(text_sql)}, "
-        f"t -> xxhash64(t))), hs -> array_distinct({_windows_sql('hs', n, body)})), 1)"
+    """:func:`shingle_hashes` over the SQL expression ``text_sql``."""
+    windows = _windows_sql(
+        "hs", n, lambda f: "xxhash64(" + ", ".join(f"coalesce({x}, 0)" for x in f) + ")"
+    )
+    return _let_sql(
+        f"transform({_tokens_sql(text_sql)}, t -> xxhash64(t))",
+        "hs",
+        f"array_distinct({windows})",
     )
 
 
@@ -149,21 +159,9 @@ def _let(value: Column, body) -> Column:
     return F.element_at(F.transform(F.array(value), body), 1)
 
 
-def _windows_of(arr: Column, n: int) -> Column:
-    """All n-length sliding windows of ``arr`` as an array of structs with
-    fields "0".."n-1" (short arrays: one null-padded window)."""
-    shifted = [F.slice(arr, i + 1, F.greatest(F.size(arr) - i, F.lit(0))) for i in range(n)]
-    zipped = F.arrays_zip(*shifted)
-    k = F.greatest(F.size(arr) - (n - 1), F.lit(1))
-    return F.slice(zipped, F.lit(1), k)
-
-
-def shingles(text, n: int = 5) -> Column:
-    """Word n-gram shingles as an array of strings (deduplicated).
-
-    ``text`` may be a Column or a column NAME (string) — the string form
-    parses the identical tree JVM-side in one call (builder-cost note
-    above).
+def shingles(text_col: str, n: int = 5) -> Column:
+    """Word n-gram shingles of the column named ``text_col`` as an array of
+    strings (deduplicated).
 
     Built as ``arrays_zip`` of ``n`` shifted slices of the token array, then
     one ``concat_ws`` per window.  NOT the obvious
@@ -172,60 +170,33 @@ def shingles(text, n: int = 5) -> Column:
     element, so the tokenizer split would run once per *token* — quadratic in
     document length (measured seconds per 5k docs).  Here the token array is
     evaluated a constant ~n+2 times per row and every lambda touches only its
-    own struct element.
+    own struct element.  ``concat_ws`` skips nulls, so a shorter-than-n
+    doc's single window degrades to "all tokens joined" — the whole-text
+    shingle.
     """
-    if isinstance(text, str):
-        return F.expr(_shingles_sql(f"`{text}`", n))
-    return _let(
-        tokens(text),
-        lambda toks: F.array_distinct(
-            F.transform(
-                _windows_of(toks, n),
-                # concat_ws skips nulls, so a shorter-than-n doc's single
-                # window degrades to "all tokens joined" — the whole-text
-                # shingle.
-                lambda s: F.concat_ws(" ", *[s[str(i)] for i in range(n)]),
-            )
-        ),
-    )
+    return F.expr(_shingles_sql(ident(text_col), n))
 
 
-def shingle_hashes(text, n: int = 5) -> Column:
+def shingle_hashes(text_col: str, n: int = 5) -> Column:
     """64-bit hashes of word n-gram shingles, without materializing the
     shingle strings: tokens are hashed once, then each window combines its
     n token-hashes with one fixed-width ``xxhash64``.  Collision-safe for
     dedup purposes (64-bit) and several times cheaper than building
     ``n``-gram strings — use wherever only shingle *identity* matters
     (MinHash, Jaccard estimates); use :func:`shingles` when the strings
-    themselves are needed.  ``text`` may be a Column or a column NAME
-    (string form: one JVM-side parse — builder-cost note above).
+    themselves are needed.  The null-padded tail of a short doc's single
+    window is coalesced to 0 for a deterministic hash.
     """
-    if isinstance(text, str):
-        return F.expr(_shingle_hashes_sql(f"`{text}`", n))
-    return _let(
-        F.transform(tokens(text), lambda t: F.xxhash64(t)),
-        lambda hs: F.array_distinct(
-            F.transform(
-                _windows_of(hs, n),
-                # null-padded tails only occur in the single short-doc window;
-                # coalesce pins them to a constant for a deterministic hash
-                lambda s: F.xxhash64(*[F.coalesce(s[str(i)], F.lit(0)) for i in range(n)]),
-            )
-        ),
-    )
+    return F.expr(_shingle_hashes_sql(ident(text_col), n))
 
 
-def fingerprint(text, n: int = 5) -> Column:
+def fingerprint(text_col: str, n: int = 5) -> Column:
     """Document fingerprint: the minimum md5 over word n-gram shingles — a
     deterministic, locality-sensitive-ish content signature (rolling-hash
-    family).  Identical (even partially re-ordered) content collides.
-    ``text`` may be a Column or a column NAME (string form: one JVM-side
-    parse — builder-cost note above)."""
-    if isinstance(text, str):
-        return F.expr(
-            f"array_min(transform({_shingles_sql(f'`{text}`', n)}, s -> md5(s)))"
-        )
-    return F.array_min(F.transform(shingles(text, n), lambda s: F.md5(s)))
+    family).  Identical (even partially re-ordered) content collides."""
+    return F.expr(
+        f"array_min(transform({_shingles_sql(ident(text_col), n)}, s -> md5(s)))"
+    )
 
 
 def chunk_documents(
@@ -575,7 +546,7 @@ def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
         .withColumn("n_bpe_ish", bpe_ish_token_count(t))
         .withColumn("lang_pred", lang_id(t))
         .withColumn("quality", quality_score(t))
-        .withColumn("fingerprint", fingerprint(t))
+        .withColumn("fingerprint", fingerprint(text_col))
     )
 
 
@@ -751,10 +722,10 @@ def train_quality_classifier(
             if float(c) != 0.0
         }
         return weights_d, float(lrm.intercept)
-    spark = df.sparkSession
-    weights = spark.createDataFrame(
-        list(zip(cvm.vocabulary, [float(c) for c in coefs])),
-        "term string, weight double",
+    weights = local_frame(
+        df.sparkSession,
+        T.StructType().add("term", T.StringType()).add("weight", T.DoubleType()),
+        [cvm.vocabulary, [float(c) for c in coefs]],
     )
     return weights, float(lrm.intercept)
 
@@ -909,42 +880,18 @@ def gopher_quality_flags(
     Python; at 100 TB the failing rows die inside the scan's codegen
     stage when this feeds a filter.
     """
-    m = _gopher_metrics_sql(f"`{text_col}`")
-    # one selectExpr = one py4j call + one JVM parse for all nine metric
-    # expressions (r15, guide §7.3 — was ~40 lambda round-trips per build)
+    m = _gopher_metrics_sql(ident(text_col))
+    # one selectExpr = one py4j call + one JVM parse for all the metrics
     out = df.selectExpr(
-        f"`{id_col}`",
-        f"{m['n_words']} AS n_words",
-        f"{m['mean_len']} AS mean_word_len",
-        f"{m['alpha_ratio']} AS alpha_ratio",
-        f"{m['n_stop']} AS n_stopwords",
-        f"{m['symbol_ratio']} AS symbol_word_ratio",
-        f"{m['bullet_frac']} AS bullet_line_frac",
-        f"{m['ellipsis_frac']} AS ellipsis_line_frac",
-        f"{m['dup_frac']} AS dup_line_frac",
+        ident(id_col),
+        *[f"{m[key]} AS {name}" for key, name in _GOPHER_METRIC_NAMES.items()],
     )
-    flags = {
-        "pass_word_count": (
-            f"(n_words >= {_sql_num(min_words)} AND "
-            f"n_words <= {_sql_num(max_words)})"
-        ),
-        "pass_mean_word_len": (
-            f"(mean_word_len >= {_sql_num(float(min_mean_word_len))} AND "
-            f"mean_word_len <= {_sql_num(float(max_mean_word_len))})"
-        ),
-        "pass_alpha_ratio": f"(alpha_ratio >= {_sql_num(float(min_alpha_ratio))})",
-        "pass_stopwords": f"(n_stopwords >= {_sql_num(min_stopwords)})",
-        "pass_symbol_ratio": (
-            f"(symbol_word_ratio <= {_sql_num(float(max_symbol_word_ratio))})"
-        ),
-        "pass_bullet_lines": (
-            f"(bullet_line_frac <= {_sql_num(float(max_bullet_line_frac))})"
-        ),
-        "pass_ellipsis_lines": (
-            f"(ellipsis_line_frac <= {_sql_num(float(max_ellipsis_line_frac))})"
-        ),
-        "pass_dup_lines": f"(dup_line_frac <= {_sql_num(float(max_dup_line_frac))})",
-    }
+    flags = _gopher_conds(
+        _GOPHER_METRIC_NAMES,
+        min_words, max_words, min_mean_word_len, max_mean_word_len,
+        min_alpha_ratio, min_stopwords, max_symbol_word_ratio,
+        max_bullet_line_frac, max_ellipsis_line_frac, max_dup_line_frac,
+    )
     return out.selectExpr(
         "*",
         *[f"CAST({cond} AS INT) AS {name}" for name, cond in flags.items()],
@@ -974,55 +921,75 @@ def gopher_pass_all(
     codegen stage at 100 TB instead of paying a second corpus pass plus a
     doc_id shuffle/join.
     """
-    m = _gopher_metrics_sql(f"`{text_col}`")
-    # ONE JVM-side parse of the whole predicate (~220 ms of py4j lambda
-    # round-trips per gate build before — r15, guide §7.3); same tree,
-    # same comparisons, parity-pinned against _gopher_metric_exprs
-    return F.expr(
-        f"(({m['n_words']} >= {_sql_num(min_words)})"
-        f" AND ({m['n_words']} <= {_sql_num(max_words)})"
-        f" AND ({m['mean_len']} >= {_sql_num(float(min_mean_word_len))})"
-        f" AND ({m['mean_len']} <= {_sql_num(float(max_mean_word_len))})"
-        f" AND ({m['alpha_ratio']} >= {_sql_num(float(min_alpha_ratio))})"
-        f" AND ({m['n_stop']} >= {_sql_num(min_stopwords)})"
-        f" AND ({m['symbol_ratio']} <= {_sql_num(float(max_symbol_word_ratio))})"
-        f" AND ({m['bullet_frac']} <= {_sql_num(float(max_bullet_line_frac))})"
-        f" AND ({m['ellipsis_frac']} <= {_sql_num(float(max_ellipsis_line_frac))})"
-        f" AND ({m['dup_frac']} <= {_sql_num(float(max_dup_line_frac))}))"
+    conds = _gopher_conds(
+        _gopher_metrics_sql(ident(text_col)),
+        min_words, max_words, min_mean_word_len, max_mean_word_len,
+        min_alpha_ratio, min_stopwords, max_symbol_word_ratio,
+        max_bullet_line_frac, max_ellipsis_line_frac, max_dup_line_frac,
     )
+    # one JVM-side parse of the whole predicate
+    return F.expr("(" + " AND ".join(conds.values()) + ")")
 
 
-def _sql_str(s: str) -> str:
-    """``s`` as a Spark SQL string literal (escaped-backslash spelling —
-    the parser's default escape handling would otherwise eat regex
-    backslashes)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+#: Metric key of :func:`_gopher_metrics_sql` → output column of
+#: :func:`gopher_quality_flags`.
+_GOPHER_METRIC_NAMES = {
+    "n_words": "n_words",
+    "mean_len": "mean_word_len",
+    "alpha_ratio": "alpha_ratio",
+    "n_stop": "n_stopwords",
+    "symbol_ratio": "symbol_word_ratio",
+    "bullet_frac": "bullet_line_frac",
+    "ellipsis_frac": "ellipsis_line_frac",
+    "dup_frac": "dup_line_frac",
+}
 
 
-def _sql_num(v) -> str:
-    """A threshold as SQL text with the same type the Column spelling's
-    ``F.lit`` produces: ints stay integral, floats become DOUBLE
-    literals (a bare ``3.0`` parses as DECIMAL)."""
-    if isinstance(v, float):
-        return f"{v!r}D"
-    return str(int(v))
+def _gopher_conds(
+    m: dict,
+    min_words, max_words, min_mean_word_len, max_mean_word_len,
+    min_alpha_ratio, min_stopwords, max_symbol_word_ratio,
+    max_bullet_line_frac, max_ellipsis_line_frac, max_dup_line_frac,
+) -> dict:
+    """``pass_*`` flag name → SQL predicate over the metric expressions
+    ``m`` (keyed as :func:`_gopher_metrics_sql`).  Count thresholds stay
+    integral, ratio thresholds compare as doubles."""
+    return {
+        "pass_word_count": (
+            f"({m['n_words']} >= {num(min_words)} AND "
+            f"{m['n_words']} <= {num(max_words)})"
+        ),
+        "pass_mean_word_len": (
+            f"({m['mean_len']} >= {num(float(min_mean_word_len))} AND "
+            f"{m['mean_len']} <= {num(float(max_mean_word_len))})"
+        ),
+        "pass_alpha_ratio": f"({m['alpha_ratio']} >= {num(float(min_alpha_ratio))})",
+        "pass_stopwords": f"({m['n_stop']} >= {num(min_stopwords)})",
+        "pass_symbol_ratio": (
+            f"({m['symbol_ratio']} <= {num(float(max_symbol_word_ratio))})"
+        ),
+        "pass_bullet_lines": (
+            f"({m['bullet_frac']} <= {num(float(max_bullet_line_frac))})"
+        ),
+        "pass_ellipsis_lines": (
+            f"({m['ellipsis_frac']} <= {num(float(max_ellipsis_line_frac))})"
+        ),
+        "pass_dup_lines": f"({m['dup_frac']} <= {num(float(max_dup_line_frac))})",
+    }
 
 
 def _gopher_metrics_sql(txt_sql: str) -> dict:
-    """:func:`_gopher_metric_exprs` as SQL text over the expression
-    ``txt_sql`` — the r14 builder-cost move (guide §7.3): the Column
-    spelling costs ~40 py4j round-trips of higher-order lambdas +
-    a per-stopword literal array (~220 ms of driver time per gate
-    build, measured); these parse the identical tree JVM-side in one
-    call.  Values pinned identical to the Column spelling in
-    tests/test_operators.py::test_gopher_sql_spelling_matches."""
+    """The eight Gopher quality metrics as SQL text over the expression
+    ``txt_sql`` — the one construction site of :func:`gopher_quality_flags`
+    (metrics + flags frame) and :func:`gopher_pass_all` (inline filter
+    predicate), so the two cannot drift."""
     ws = _tokens_sql(txt_sql)
     n_words = f"CAST(size({ws}) AS BIGINT)"
     n_chars = f"length(regexp_replace({txt_sql}, '\\\\s+', ''))"
     mean_len = f"(CAST({n_chars} AS DOUBLE) / CAST({n_words} AS DOUBLE))"
     alpha = f"CAST(size(filter({ws}, w -> w rlike '[a-zA-Z]')) AS BIGINT)"
     alpha_ratio = f"(CAST({alpha} AS DOUBLE) / CAST({n_words} AS DOUBLE))"
-    stop_arr = "array(" + ", ".join(_sql_str(s) for s in _GOPHER_STOPWORDS) + ")"
+    stop_arr = "array(" + ", ".join(str_lit(s) for s in _GOPHER_STOPWORDS) + ")"
     n_stop = (
         f"CAST(size(filter({ws}, w -> array_contains({stop_arr}, lower(w)))) "
         "AS BIGINT)"
@@ -1041,8 +1008,8 @@ def _gopher_metrics_sql(txt_sql: str) -> dict:
     )
     lines = f"split({txt_sql}, '\\\\n')"
     n_lines = f"CAST(size({lines}) AS BIGINT)"
-    bullet = _sql_str(_GOPHER_BULLET_RE)
-    ellipsis = _sql_str(_GOPHER_ELLIPSIS_RE)
+    bullet = str_lit(_GOPHER_BULLET_RE)
+    ellipsis = str_lit(_GOPHER_ELLIPSIS_RE)
     bullet_frac = (
         f"(CAST(size(filter({lines}, l -> l rlike {bullet})) AS DOUBLE) / "
         f"CAST({n_lines} AS DOUBLE))"
@@ -1060,64 +1027,6 @@ def _gopher_metrics_sql(txt_sql: str) -> dict:
         f"CAST(({n_nl} - size(array_distinct({norm_lines}))) AS DOUBLE) / "
         f"CAST({n_nl} AS DOUBLE) ELSE 0.0D END)"
     )
-    return {
-        "n_words": n_words,
-        "mean_len": mean_len,
-        "alpha_ratio": alpha_ratio,
-        "n_stop": n_stop,
-        "symbol_ratio": symbol_ratio,
-        "bullet_frac": bullet_frac,
-        "ellipsis_frac": ellipsis_frac,
-        "dup_frac": dup_frac,
-    }
-
-
-def _gopher_metric_exprs(txt):
-    """The nine Gopher quality metrics as a dict of named column
-    expressions over ``txt`` — the single construction site shared by
-    :func:`gopher_quality_flags` (metrics + flags frame) and
-    :func:`gopher_pass_all` (inline filter predicate), so the two
-    spellings cannot drift.  Kept as the reference spelling the SQL-text
-    form (:func:`_gopher_metrics_sql`, what both consumers now build
-    through) is parity-pinned against."""
-    ws = tokens(txt)
-    n_words = F.size(ws).cast("long")
-    n_chars = F.length(F.regexp_replace(txt, r"\s+", ""))
-    mean_len = n_chars.cast("double") / n_words.cast("double")
-    alpha = F.size(F.filter(ws, lambda w: w.rlike("[a-zA-Z]"))).cast("long")
-    alpha_ratio = alpha.cast("double") / n_words.cast("double")
-    stop_arr = F.array(*[F.lit(s) for s in _GOPHER_STOPWORDS])
-    n_stop = F.size(
-        F.filter(ws, lambda w: F.array_contains(stop_arr, F.lower(w)))
-    ).cast("long")
-
-    # symbol counts by length difference over literal (non-regex) replace
-    n_hash = (F.length(txt) - F.length(F.replace(txt, F.lit("#"), F.lit("")))).cast("long")
-    n_ellipsis = (
-        ((F.length(txt) - F.length(F.replace(txt, F.lit("..."), F.lit("")))) / 3).cast("long")
-        + (F.length(txt) - F.length(F.replace(txt, F.lit("…"), F.lit(""))))
-    )
-    symbol_ratio = F.greatest(n_hash, n_ellipsis).cast("double") / n_words.cast("double")
-
-    lines = F.split(txt, "\n")
-    n_lines = F.size(lines).cast("long")
-    bullet_frac = (
-        F.size(F.filter(lines, lambda l: l.rlike(_GOPHER_BULLET_RE))).cast("double")
-        / n_lines.cast("double")
-    )
-    ellipsis_frac = (
-        F.size(F.filter(lines, lambda l: l.rlike(_GOPHER_ELLIPSIS_RE))).cast("double")
-        / n_lines.cast("double")
-    )
-    norm_lines = F.transform(
-        F.filter(lines, lambda l: F.trim(l) != ""), lambda l: F.lower(F.trim(l))
-    )
-    n_nl = F.size(norm_lines)
-    dup_frac = F.when(
-        n_nl > 0,
-        (n_nl - F.size(F.array_distinct(norm_lines))).cast("double") / n_nl.cast("double"),
-    ).otherwise(F.lit(0.0))
-
     return {
         "n_words": n_words,
         "mean_len": mean_len,
@@ -2068,27 +1977,25 @@ def distinct_ngrams(
     if not ns or ns[0] < 1:
         raise ValueError("distinct_ngrams: ns must be >= 1")
 
-    def gram_digests(toks, n):
+    def gram_digests(n):
         if n == 1:
-            return F.transform(toks, lambda t: F.md5(t))
-        return F.when(
-            F.size(toks) >= n,
-            F.transform(
-                _windows_of(toks, n),
-                lambda s: F.md5(F.concat_ws(" ", *[s[str(i)] for i in range(n)])),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
+            return "transform(t, w -> md5(w))"
+        windows = _windows_sql(
+            "t", n, lambda f: f"md5(concat_ws(' ', {', '.join(f)}))"
+        )
+        return (
+            f"CASE WHEN size(t) >= {n} THEN {windows} "
+            "ELSE CAST(array() AS array<string>) END"
+        )
 
-    entries = _let(
-        F.coalesce(tokens(F.col(text_col)), F.array().cast("array<string>")),
-        lambda t: F.array(
-            *[
-                F.struct(
-                    F.lit(n).cast("int").alias("n"), gram_digests(t, n).alias("g")
-                )
-                for n in ns
-            ]
-        ),
+    entries = F.expr(
+        _let_sql(
+            _tokens_or_empty_sql(ident(text_col)),
+            "t",
+            "array("
+            + ", ".join(f"struct({n} AS n, {gram_digests(n)} AS g)" for n in ns)
+            + ")",
+        )
     )
     rows = (
         df.select(F.col(by), F.explode(entries).alias("e"))
@@ -2248,14 +2155,13 @@ def collocations(
 
     if k < 1 or min_count < 1:
         raise ValueError("collocations: k and min_count must be >= 1")
-    toks = F.coalesce(tokens(F.col(text_col)), F.array().cast("array<string>"))
-    pairs = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            _windows_of(toks, 2),
-            lambda s: F.struct(s["0"].alias("w1"), s["1"].alias("w2")),
-        ),
-    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+    toks_sql = _tokens_or_empty_sql(ident(text_col))
+    toks = F.expr(toks_sql)
+    pairs = F.expr(
+        f"CASE WHEN size({toks_sql}) >= 2 THEN "
+        f"{_windows_sql(toks_sql, 2, lambda f: f'struct({f[0]} AS w1, {f[1]} AS w2)')} "
+        "ELSE CAST(array() AS array<struct<w1:string,w2:string>>) END"
+    )
     counts = (
         fanout_small_scan(df)
         .select(F.explode(pairs).alias("p"))
@@ -2349,10 +2255,7 @@ def ngram_lm_nll(
             "ngram_lm_nll: need 0.0 <= lam < 1.0 — the finiteness guarantee "
             "requires a strictly positive unigram interpolation share"
         )
-    toks_sql = (
-        f"coalesce({_tokens_sql(f'`{text_col}`')}, "
-        "CAST(array() AS array<string>))"
-    )
+    toks_sql = _tokens_or_empty_sql(ident(text_col))
     toks = F.expr(toks_sql)
 
     def window_pairs():
@@ -2360,14 +2263,12 @@ def ngram_lm_nll(
         # joined on a SPACE — tokens() splits on \s+, so no token can
         # contain whitespace and the space-joined context is injective
         # (a control-char separator was NOT: \x1f survives tokenization,
-        # so ('a\x1fb','c') and ('a','b\x1fc') would conflate — review
-        # r9).  For order 2 the ctx is the bare token, so the bigram
-        # spelling is byte-identical to the registered r9 oracle.
-        # One JVM-side parse (r15, guide §7.3 — the _windows_of lambda
-        # spelling cost ~0.3 s of py4j per reference of this builder,
-        # and it is referenced twice).
-        parts = ", ".join(f"s.`{i}`" for i in range(order - 1))
-        body = f"struct(concat_ws(' ', {parts}) AS cx, s.`{order - 1}` AS w)"
+        # so ('a\x1fb','c') and ('a','b\x1fc') would conflate).  For
+        # order 2 the ctx is the bare token, so the bigram spelling is
+        # byte-identical to the bigram oracle.
+        def body(f):
+            return f"struct(concat_ws(' ', {', '.join(f[:-1])}) AS cx, {f[-1]} AS w)"
+
         return F.expr(
             f"CASE WHEN size({toks_sql}) >= {order} THEN "
             f"{_windows_sql(toks_sql, order, body)} "
@@ -2376,7 +2277,7 @@ def ngram_lm_nll(
 
     # tokenize + window-build is compute-dense over a byte-tiny scan at
     # bench scale — fan a provably tiny local corpus to the core count
-    # (identity at scale; r15, guide §2.5)
+    # (identity at scale)
     df = fanout_small_scan(df)
     ref = df.filter(ref_pred)
     rtoks = ref.select(F.explode(toks).alias("w"))

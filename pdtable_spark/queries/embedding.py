@@ -657,8 +657,8 @@ def embedding_pq_recall(spark, sf_dir):
     pq_hits = similarity.pq_topk(
         emb, queries, k=10, num_subspaces=_PQ_M, codebooks=books
     ).select("query_id", "vec_id")
-    qd = queries.select("query_id", similarity._as_double(F.col("embedding")).alias("qa"))
-    cd = emb.select("vec_id", similarity._as_double(F.col("embedding")).alias("ca"))
+    qd = queries.select("query_id", similarity._as_double("embedding").alias("qa"))
+    cd = emb.select("vec_id", similarity._as_double("embedding").alias("ca"))
     scored = cd.crossJoin(F.broadcast(qd)).select(
         "query_id", "vec_id", similarity._dist2(F.col("qa"), F.col("ca")).alias("d2")
     )
@@ -1571,20 +1571,13 @@ def embedding_pca_project(spark, sf_dir):
             lambda acc, v: acc + v,
         )
 
-    def ddot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     # the probe set is 8 rows by construction — broadcast one side so
     # the non-equi pairing plans as a bounded BroadcastNestedLoopJoin,
     # never a raw CartesianProduct (the plans.lint error class; caught
     # by the dump_plans lint gate the round it was added)
     pairs = side("a").join(F.broadcast(side("b")), F.col("id_a") <= F.col("id_b"))
-    dot_raw = ddot(F.col("ea"), F.col("eb"))
-    dot_proj = ddot(F.col("pa"), F.col("pb"))
+    dot_raw = similarity.dot("ea", "eb")
+    dot_proj = similarity.dot("pa", "pb")
     tol = F.greatest(F.lit(1e-9), F.abs(dot_raw) * F.lit(1e-9))
     return pairs.select(
         "id_a",

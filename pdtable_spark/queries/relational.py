@@ -2148,7 +2148,7 @@ def q_embedding_norms(spark, sf_dir):
     decimal CASTs would themselves hit cross-engine rounding boundaries
     (floor on the shared binary value is boundary-free)."""
     emb = load(spark, sf_dir, "embeddings")
-    nrm = similarity.norm(F.transform("embedding", lambda x: x.cast("double")))
+    nrm = similarity.norm(similarity._as_double_sql("embedding"))
     n = emb.select("label", nrm.alias("nrm"))
     return n.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vecs"),

@@ -38,7 +38,7 @@ def test_lang_id(spark, docs):
 
 
 def test_fingerprint_matches_for_identical_docs(spark, docs):
-    fp = {r["doc_id"]: r["f"] for r in docs.select("doc_id", text.fingerprint(F.col("text")).alias("f")).collect()}
+    fp = {r["doc_id"]: r["f"] for r in docs.select("doc_id", text.fingerprint("text").alias("f")).collect()}
     assert fp[0] == fp[1]
     assert fp[0] != fp[3]
 
@@ -5367,14 +5367,13 @@ def test_curriculum_phases_by_group_thresholds(spark):
     assert out.columns == ["src", "doc_id", "score", "phase"]
 
 
-def test_shingle_sql_spellings_match(spark):
-    """r14 builder-cost optimization parity pin: the SQL-string spellings
-    of tokens/shingles/shingle_hashes/fingerprint (one JVM-side parse)
-    produce bit-identical values to the Column-lambda spellings on every
-    edge shape — empty text, whitespace-only, shorter-than-n docs, exact-n
-    docs, long docs, repeated shingles (array_distinct), NULL text."""
-    from pyspark.sql import functions as F
-
+def test_shingle_golden_values(spark):
+    """shingles / shingle_hashes / fingerprint on every edge shape — empty
+    text, whitespace-only, shorter-than-n docs (one padded window),
+    exact-n docs, long docs, repeated shingles (array_distinct), NULL
+    text.  The expected values were captured from the Column-lambda
+    spelling these SQL-text builders replaced; the minhash, winnowing and
+    n-gram oracles check the same builders against DuckDB."""
     from pdtable_spark.operators import text as T
 
     rows = [
@@ -5388,28 +5387,71 @@ def test_shingle_sql_spellings_match(spark):
         (7, "one two three four five six seven eight nine ten"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for n in (2, 5):
-        a = df.select(
-            "doc_id", T.shingles(F.col("text"), n).alias("s")
-        ).collect()
-        b = df.select("doc_id", T.shingles("text", n).alias("s")).collect()
-        assert [(r["doc_id"], r["s"]) for r in a] == [
-            (r["doc_id"], r["s"]) for r in b
-        ], f"shingles n={n}"
-        a = df.select(
-            "doc_id", T.shingle_hashes(F.col("text"), n).alias("s")
-        ).collect()
-        b = df.select("doc_id", T.shingle_hashes("text", n).alias("s")).collect()
-        assert [(r["doc_id"], r["s"]) for r in a] == [
-            (r["doc_id"], r["s"]) for r in b
-        ], f"shingle_hashes n={n}"
-        a = df.select(
-            "doc_id", T.fingerprint(F.col("text"), n).alias("f")
-        ).collect()
-        b = df.select("doc_id", T.fingerprint("text", n).alias("f")).collect()
-        assert [(r["doc_id"], r["f"]) for r in a] == [
-            (r["doc_id"], r["f"]) for r in b
-        ], f"fingerprint n={n}"
+    want = {
+        ("shingles", 2): [
+            ["a b", "b c", "c d", "d e", "e f", "f g", "g h"],
+            ["a b", "b c", "c d", "d e"],
+            ["a b"],
+            [""],
+            [""],
+            ["x x"],
+            None,
+            ["one two", "two three", "three four", "four five", "five six", "six seven", "seven eight", "eight nine", "nine ten"],
+        ],
+        ("shingle_hashes", 2): [
+            [-5961636332996392597, 2846194167770765352, 5648364541172629920, 1094353516161241648, -5404456149393267902, -450787918130677211, -3446009568035237415],
+            [-5961636332996392597, 2846194167770765352, 5648364541172629920, 1094353516161241648],
+            [-5961636332996392597],
+            [3001446374005999293],
+            [3001446374005999293],
+            [-1903293512731516222],
+            None,
+            [2447852267575332529, -578446535311137693, -3170984707300951090, -5543636616934254406, -2602962226128909489, -7129733896726048688, 316482673452389780, -8435588596725627251, 6705612202527790591],
+        ],
+        ("fingerprint", 2): [
+            "0cc9cd4dd26c5137b675a0d819cb9ab0",
+            "0cc9cd4dd26c5137b675a0d819cb9ab0",
+            "0cc9cd4dd26c5137b675a0d819cb9ab0",
+            "d41d8cd98f00b204e9800998ecf8427e",
+            "d41d8cd98f00b204e9800998ecf8427e",
+            "cd62295b0e01122c91133a9640eed230",
+            None,
+            "24c13fe5cd658fde63203a93a93b8ff9",
+        ],
+        ("shingles", 5): [
+            ["a b c d e", "b c d e f", "c d e f g", "d e f g h"],
+            ["a b c d e"],
+            ["a b"],
+            [""],
+            [""],
+            ["x x x x x"],
+            None,
+            ["one two three four five", "two three four five six", "three four five six seven", "four five six seven eight", "five six seven eight nine", "six seven eight nine ten"],
+        ],
+        ("shingle_hashes", 5): [
+            [-8793965818490581973, 2589773191123208611, -5275989219476575994, -2652650438044568664],
+            [-8793965818490581973],
+            [-5843730038173860666],
+            [806133299374791145],
+            [806133299374791145],
+            [-8181238895876531219],
+            None,
+            [-6238694334135527072, 5701411091198159943, 3971089534552418496, 5398128162414108335, -616250182994175888, -6768478630018183616],
+        ],
+        ("fingerprint", 5): [
+            "2438b89b82c22b3d063b2ee165c033c0",
+            "2438b89b82c22b3d063b2ee165c033c0",
+            "0cc9cd4dd26c5137b675a0d819cb9ab0",
+            "d41d8cd98f00b204e9800998ecf8427e",
+            "d41d8cd98f00b204e9800998ecf8427e",
+            "3275c1f4e88dca00bd77fd0acd360d59",
+            None,
+            "00522f4721e79dea5fb761d08e506cda",
+        ],
+    }
+    for (fn, n), expected in want.items():
+        got = df.orderBy("doc_id").select(getattr(T, fn)("text", n).alias("v"))
+        assert [r["v"] for r in got.collect()] == expected, f"{fn} n={n}"
 
 
 def test_fanout_small_scan_gate(spark, tmp_path, monkeypatch):
@@ -5459,13 +5501,12 @@ def test_fanout_small_scan_gate(spark, tmp_path, monkeypatch):
     assert scanfan.fanout_small_scan(local) is local
 
 
-def test_similarity_sql_spellings_match(spark):
-    """r15 builder-cost parity pin: the SQL-text spellings of
-    dot/_as_double/_cell_scores/_cell_ranking (one JVM-side parse)
-    produce bit-identical values to the Column-lambda spellings —
-    including empty arrays, negatives, and float inputs."""
-    from pyspark.sql import functions as F
-
+def test_similarity_golden_values(spark):
+    """dot / _as_double / _cell_scores / _cell_ranking on empty arrays,
+    zeros, negatives, mixed magnitudes and float inputs.  The expected
+    values were captured from the Column-lambda spelling these SQL-text
+    builders replaced; the embedding oracles check the same folds against
+    DuckDB."""
     from pdtable_spark.operators import similarity as S
 
     rows = [
@@ -5475,16 +5516,14 @@ def test_similarity_sql_spellings_match(spark):
         (3, [1e-9, -1e9, 3.25], [2.0, 2.0, 2.0]),
     ]
     df = spark.createDataFrame(rows, "i long, a array<double>, b array<double>")
-    got = df.select(S.dot("a", "b").alias("v")).collect()
-    want = df.select(S.dot(F.col("a"), F.col("b")).alias("v")).collect()
-    assert [r["v"] for r in got] == [r["v"] for r in want]
+    got = df.orderBy("i").select(S.dot("a", "b").alias("v")).collect()
+    assert [r["v"] for r in got] == [-8.5, 0.0, 0.0, -1999999993.5]
 
     fl = spark.createDataFrame(
         [(0, [1.5, -2.25]), (1, [])], "i long, a array<float>"
     )
-    got = fl.select(S._as_double("a").alias("v")).collect()
-    want = fl.select(S._as_double(F.col("a")).alias("v")).collect()
-    assert [r["v"] for r in got] == [r["v"] for r in want]
+    got = fl.orderBy("i").select(S._as_double("a").alias("v")).collect()
+    assert [r["v"] for r in got] == [[1.5, -2.25], []]
 
     cents = [[0.0, 0.0], [1.0, 1.0], [2.0, -2.0]]
     d = S._matrix_frame(
@@ -5495,25 +5534,23 @@ def test_similarity_sql_spellings_match(spark):
         "__cents",
         cents,
         2,
-    )
+    ).orderBy("i")
     got = d.select(S._cell_scores("v", "__cents").alias("s")).collect()
-    want = d.select(
-        S._cell_scores(F.col("v"), F.col("__cents")).alias("s")
-    ).collect()
-    assert [r["s"] for r in got] == [r["s"] for r in want]
+    assert [[(s["d"], s["cell"]) for s in r["s"]] for r in got] == [
+        [(0.02000000000000001, 1), (2.0200000000000005, 0), (10.820000000000002, 2)],
+        [(50.0, 0), (52.0, 1), (98.0, 2)],
+        [(0.0, 2), (8.0, 0), (10.0, 1)],
+    ]
     got = d.select(S._cell_ranking("v", "__cents").alias("s")).collect()
-    want = d.select(
-        S._cell_ranking(F.col("v"), F.col("__cents")).alias("s")
-    ).collect()
-    assert [r["s"] for r in got] == [r["s"] for r in want]
+    assert [r["s"] for r in got] == [[1, 0, 2], [0, 1, 2], [2, 0, 1]]
 
 
-def test_gopher_sql_spelling_matches(spark):
-    """r15 builder-cost parity pin: the SQL-text Gopher metrics
-    (_gopher_metrics_sql — one JVM-side parse) produce bit-identical
-    values to the Column-lambda reference (_gopher_metric_exprs) on
-    every edge shape — empty text, whitespace-only, symbol-heavy,
-    bullet/ellipsis lines, duplicate lines, unicode ellipsis, NULL."""
+def test_gopher_golden_values(spark):
+    """The Gopher metrics (_gopher_metrics_sql) on every edge shape —
+    empty text, whitespace-only, symbol-heavy, bullet/ellipsis lines,
+    duplicate lines, unicode ellipsis, NULL.  The expected values were
+    captured from the Column-lambda spelling this SQL text replaced; the
+    text_gopher_rules oracle checks the same metrics against DuckDB."""
     from pyspark.sql import functions as F
 
     from pdtable_spark.operators import text as T
@@ -5530,21 +5567,111 @@ def test_gopher_sql_spelling_matches(spark):
         (8, "word " * 60),
         (9, "onlyoneword"),
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    ref = T._gopher_metric_exprs(F.col("text"))
+    df = spark.createDataFrame(rows, "doc_id long, text string").orderBy("doc_id")
+    want = {
+        "n_words": [72, 1, 1, None, 6, 7, 11, 8, 60, 1],
+        "mean_len": [3.6666666666666665, 0.0, 0.0, None, 3.6666666666666665, 4.857142857142857, 3.727272727272727, 3.375, 4.0, 11.0],
+        "alpha_ratio": [1.0, 0.0, 0.0, None, 0.3333333333333333, 1.0, 0.7272727272727273, 0.875, 1.0, 1.0],
+        "n_stop": [16, 0, 0, None, 0, 2, 0, 0, 0, 0],
+        "symbol_ratio": [0.0, 0.0, 0.0, None, 1.0, 0.7142857142857143, 0.0, 0.0, 0.0, 0.0],
+        "bullet_frac": [0.0, 0.0, 0.0, None, 0.0, 0.0, 0.75, 0.0, 0.0, 0.0],
+        "ellipsis_frac": [0.0, 0.0, 0.0, None, 0.0, 1.0, 0.0, 0.0, 0.0, 0.0],
+        "dup_frac": [0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.5, 0.0, 0.0],
+    }
     sql = T._gopher_metrics_sql("`text`")
-    for key in ref:
-        a = [r["v"] for r in df.select(ref[key].alias("v")).collect()]
-        b = [r["v"] for r in df.select(F.expr(sql[key]).alias("v")).collect()]
-        assert a == b, f"gopher metric {key}: {a} != {b}"
+    for key, expected in want.items():
+        got = [r["v"] for r in df.select(F.expr(sql[key]).alias("v")).collect()]
+        assert got == expected, f"gopher metric {key}: {got} != {expected}"
     # the fused pass_all predicate agrees with the flags-frame pass_all
     flags = T.gopher_quality_flags(df, min_words=5)
-    want = {r["doc_id"] for r in flags.filter("pass_all = 1").collect()}
-    got = {
+    want_ids = {r["doc_id"] for r in flags.filter("pass_all = 1").collect()}
+    got_ids = {
         r["doc_id"]
         for r in df.filter(T.gopher_pass_all(min_words=5)).collect()
     }
-    assert got == want
+    assert got_ids == want_ids
+
+
+def test_non_finite_thresholds(spark):
+    """Non-finite thresholds are ordinary comparisons: each Gopher flag
+    equals the ``F.lit`` comparison over its metric, the fused gate keeps
+    the rows the flags frame passes, and a threshold sweep at ±inf keeps
+    nothing / every scored row."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from pdtable_spark.operators import text as T
+    from pdtable_spark.operators.monitor import threshold_sweep
+
+    rows = [
+        (0, "the cat sat on the mat and the dog ran off"),
+        (1, "# # # ### hash heavy text ..."),
+        (2, ""),
+        (3, None),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    for kw, flag, want in [
+        (
+            {"max_symbol_word_ratio": math.inf},
+            "pass_symbol_ratio",
+            F.col("symbol_word_ratio") <= F.lit(math.inf),
+        ),
+        (
+            {"max_dup_line_frac": -math.inf},
+            "pass_dup_lines",
+            F.col("dup_line_frac") <= F.lit(-math.inf),
+        ),
+        (
+            {"min_alpha_ratio": float("nan")},
+            "pass_alpha_ratio",
+            F.col("alpha_ratio") >= F.lit(float("nan")),
+        ),
+    ]:
+        flags = T.gopher_quality_flags(df, min_words=1, **kw)
+        got = flags.select("doc_id", flag, want.cast("int").alias("w")).collect()
+        assert all(r[flag] == r["w"] for r in got), (kw, got)
+        gate = {r["doc_id"] for r in df.filter(T.gopher_pass_all(min_words=1, **kw)).collect()}
+        assert gate == {r["doc_id"] for r in flags.filter("pass_all = 1").collect()}
+
+    scores = spark.createDataFrame(
+        [(0.05, "a b"), (0.5, "c"), (2.0, "d e f"), (None, "g")], "score double, text string"
+    )
+    sweep = {
+        r["threshold"]: r
+        for r in threshold_sweep(scores, "score", [0.1, math.inf, -math.inf]).collect()
+    }
+    assert sweep[math.inf]["n_kept"] == 0 and sweep[math.inf]["tokens_kept"] == 0
+    assert sweep[-math.inf]["n_kept"] == 3
+    assert sweep[0.1]["n_kept"] == 2
+
+
+def test_builders_on_backticked_column_names(spark):
+    """Column names containing a backtick reach the SQL-text builders
+    quoted: Gopher flags, shingles and cosine top-k on ``te`xt`` /
+    ``em`b`` equal the same operators on plain names."""
+    from pdtable_spark.operators import text as T
+
+    docs = spark.createDataFrame(
+        [(0, "the cat sat on the mat"), (1, "a b"), (2, None)],
+        "doc_id long, text string",
+    )
+    odd = docs.withColumnRenamed("text", "te`xt")
+    assert T.gopher_quality_flags(odd, text_col="te`xt", min_words=1).collect() == (
+        T.gopher_quality_flags(docs, min_words=1).collect()
+    )
+    sh = lambda d, c: d.select("doc_id", T.shingles(c, 2).alias("s")).collect()  # noqa: E731
+    assert sh(odd, "te`xt") == sh(docs, "text")
+
+    vecs = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.6, 0.8]), (2, [-1.0, 0.5])],
+        "vec_id long, embedding array<float>",
+    )
+    q = vecs.filter("vec_id = 1").withColumnRenamed("vec_id", "query_id")
+    odd_v, odd_q = (d.withColumnRenamed("embedding", "em`b") for d in (vecs, q))
+    assert similarity.cosine_topk(odd_v, odd_q, k=2, vec_col="em`b").collect() == (
+        similarity.cosine_topk(vecs, q, k=2).collect()
+    )
 
 
 def test_minhash_verify_single_pass_values(spark, docs):

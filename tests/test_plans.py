@@ -1085,3 +1085,23 @@ def test_bucketed_join_query_plan_no_exchange_on_join(spark):
     finally:
         spark.sql("DROP TABLE IF EXISTS r13_bucketed_orders")
         spark.sql("DROP TABLE IF EXISTS r13_bucketed_lineitem")
+
+
+def test_operator_driver_frames_are_local_scans(spark):
+    """Driver-held matrices, PQ codebooks and trained classifier weights
+    reach Spark as local relations: no Python-RDD scan in the plan."""
+    from pdtable_spark.operators import similarity as S
+    from pdtable_spark.operators import text as T
+
+    base = spark.range(2).selectExpr("id", "array(1.0D, 2.0D) AS v")
+    matrix = S._matrix_frame(base, "__m", [[1.0, 0.0], [0.0, 1.0]], 2)
+    books = S._pq_cent_frame(spark, [[[1.0], [2.0]], [[3.0], [4.0]]])
+    docs = spark.createDataFrame(
+        [("good clean text", 1), ("spam spam buy now", 0)] * 4, "text string, label int"
+    )
+    weights, _ = T.train_quality_classifier(docs, "label", max_iter=5)
+    for df in (matrix, books, weights):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, plan
+        assert "LocalTableScan" in plan, plan
+    assert books.count() == 4 and weights.count() > 0

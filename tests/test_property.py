@@ -524,7 +524,7 @@ def test_bloom_screen_no_false_negatives_property(spark, bench_texts, train_text
     n = 3
     sh = {
         r["doc_id"]: set(r["sh"])
-        for r in df.select("doc_id", shingles(F.col("text"), n).alias("sh")).collect()
+        for r in df.select("doc_id", shingles("text", n).alias("sh")).collect()
     }
     bench_sh = set().union(*(sh[i] for i in range(len(bench_texts))))
     out = {
@@ -694,3 +694,48 @@ def test_containment_pairs_match_brute_force(spark, texts, thr):
     assert set(got) == set(want)
     for k in want:
         assert all(abs(g - w) < 1e-12 for g, w in zip(got[k], want[k]))
+
+
+# -- SQL-text quoting ------------------------------------------------------------
+
+_ODD_NAMES = ["te`xt", "a.b", "a b", "`", "``x``", " ", "x'y", "c\\d", "é ü"]
+printable_names = st.one_of(
+    st.sampled_from(_ODD_NAMES),
+    st.text(st.characters(blacklist_categories=("Cc", "Cs")), min_size=1, max_size=12),
+)
+
+
+@settings(max_examples=25, deadline=None)
+@given(name=printable_names)
+def test_ident_selects_any_printable_name(spark, name):
+    """``ident(name)`` parses as exactly the column ``name`` — backticks,
+    dots, spaces and quotes stay part of the name."""
+    from pyspark.sql import functions as F
+
+    from pdtable_spark.operators.sqltext import ident
+
+    df = spark.range(1).select(F.lit(7).alias(name), F.lit(8).alias("other"))
+    out = df.selectExpr(ident(name))
+    assert out.columns == [name]
+    assert out.collect()[0][0] == 7
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    v=st.one_of(
+        st.integers(min_value=-(2**63), max_value=2**63 - 1),
+        st.floats(),
+        st.sampled_from([math.nan, math.inf, -math.inf, -0.0, 5e-324, 1e308]),
+    )
+)
+def test_num_literal_equals_lit(spark, v):
+    """``F.expr(num(v))`` has the type and value of ``F.lit(v)`` for ints
+    and floats, NaN and ±inf included (NaN counts as equal to NaN)."""
+    from pyspark.sql import functions as F
+
+    from pdtable_spark.operators.sqltext import num
+
+    df = spark.range(1).select(F.expr(num(v)).alias("a"), F.lit(v).alias("b"))
+    assert df.schema["a"].dataType == df.schema["b"].dataType
+    a, b = df.collect()[0]
+    assert a == b or (math.isnan(a) and math.isnan(b))
