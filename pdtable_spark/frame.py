@@ -31,10 +31,6 @@ from pdtable_spark.model.metadata import (
 from pdtable_spark.model.origin import TableOrigin
 
 
-class UnknownOperationError(Exception):
-    """Reference frame.py:62-64."""
-
-
 class InvalidTableCombineError(Exception):
     """Unit/metadata conflict when combining tables (frame.py:66-68)."""
 
@@ -128,6 +124,21 @@ def local_frame(
     Python worker.  ``createDataFrame(rows, schema)`` plans as ``Scan
     ExistingRDD`` over a Python RDD instead, and every job reading it
     launches Python-worker tasks.
+    """
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table(arrow_columns(schema, columns), names=schema.names), schema=schema
+    )
+
+
+def arrow_columns(schema: T.StructType, columns: Sequence[Sequence]) -> list:
+    """Typed Python columns → Arrow arrays, one per field of ``schema``.
+
+    The one conversion of parsed values to Arrow: :func:`local_frame` and
+    the executor-side StarTable reader (``io.csv._table_batches``) both use
+    it, so ``read_csv``, ``scan_csv`` and ``format("startable")`` read the
+    same timestamps.
 
     Timestamps go through ``TimestampType.toInternal`` into a UTC-zoned
     Arrow array, the exact value the row-list path stores (naive datetimes
@@ -147,7 +158,7 @@ def local_frame(
             )
         else:
             arrays.append(pa.array(list(values), to_arrow_type(field.dataType)))
-    return spark.createDataFrame(pa.table(arrays, names=schema.names), schema=schema)
+    return arrays
 
 
 def table_from_parsed(parsed, spark: Optional[SparkSession] = None):

@@ -20,10 +20,13 @@ Scale paths beyond the reference (SURVEY §2.1 S1):
 
 from __future__ import annotations
 
+import fnmatch
+import io
 import os
+import re
 from contextlib import nullcontext
 from pathlib import Path
-from typing import Callable, Iterable, Optional, TextIO, Union
+from typing import Callable, Iterable, List, Optional, TextIO, Union
 
 from pdtable_spark.auxiliary import CSV_SEP
 from pdtable_spark.io._represent import represent_col_elements, represent_row_elements
@@ -79,8 +82,13 @@ def read_csv(
 
 
 # ---------------------------------------------------------------------------
-# Distributed scan: one logical table over many StarTable files
+# Executor-side reading: one logical table over many StarTable files
 # ---------------------------------------------------------------------------
+
+#: Rows per Arrow batch the executor-side readers emit.
+BATCH_ROWS = 1 << 16
+
+_GLOB_MAGIC = re.compile(r"[*?[]")
 
 
 def scan_csv(
@@ -92,23 +100,23 @@ def scan_csv(
     permissive: bool = False,
     fix_counter=None,
     max_file_bytes: int = 512 * 2 ** 20,
-    batch_rows: int = 1 << 16,
 ):
     """Parse ``table_name`` out of every StarTable CSV under ``paths`` into a
     single Spark-backed ``Table`` — the 100 TB path for S1.
 
-    Design: per-file parallelism (block structure spans lines, so a file must
-    be tokenized whole); the early block filter skips non-matching tables at
-    one-cell cost; the schema (column names + units) is taken from the first
-    file on the driver, then executors emit plain row tuples — no pandas, no
-    Table objects cross the wire.
+    ``paths`` is a file, directory, glob or URI (``file://``, ``hdfs://``,
+    ``s3://`` …), a comma-joined list of them, or an iterable.  A file is
+    the parallelism grain, because block structure spans lines.  The
+    schema (column names, units as field metadata) is probed from the
+    first file on the driver.  Each task then parses its files with
+    :func:`_table_batches`, the reader ``format("startable")`` uses too,
+    and hands Spark Arrow record batches through ``mapInArrow``.  Columns
+    bind to the schema by name, so files may list them in any order.
 
-    Memory bounds: lines stream from disk (no whole-file string) and output
-    flows in ``batch_rows`` Arrow batches, so peak executor memory is
-    O(target-table rows in one file).  A file above ``max_file_bytes``
-    (default 512 MiB) fails fast with guidance instead of risking an
-    executor OOM — StarTable CSVs are bundle-grain by design; split outsized
-    exports or raise the bound explicitly alongside executor memory.
+    Memory bounds: lines stream from the file, and output flows in
+    ``BATCH_ROWS`` batches, so peak executor memory is O(target-table rows
+    in one file).  A file above ``max_file_bytes`` (default 512 MiB) fails
+    its task with guidance instead of risking an executor OOM.
 
     Error accounting at scale (SURVEY §7 watch-list): with
     ``permissive=True`` illegal cells are fixed to type defaults inside
@@ -120,142 +128,183 @@ def scan_csv(
     matters).  Default (strict) mode fails the task on the first illegal
     cell, surfacing the executor error to the driver.
     """
-    from pdtable_spark.frame import schema_for_units
     from pdtable_spark.model.metadata import TableMetadata
     from pdtable_spark.table import Table
 
     if sep is None:
         sep = CSV_SEP
-    if isinstance(paths, (str, os.PathLike)):
-        path_spec = str(paths)
-    else:
-        path_spec = ",".join(str(p) for p in paths)
+    files = _expand_paths(paths)
+    schema = _probe_schema(files, table_name, sep, permissive)
 
-    # -- enumerate files + probe schema on the driver -------------------------
-    local_paths = _expand_local_paths(path_spec)
+    n_part = min_partitions or min(len(files), 2 * (os.cpu_count() or 8))
+    # the path frame is a range of file indexes: Range splits it into
+    # n_part slices whose sizes differ by at most one, so file counts
+    # per task stay even (hash partitioning on path strings left some
+    # tasks with 2 files and others with 0 — measured ~1.5× straggler
+    # cost) with no shuffle and no Python-RDD stage; the path list
+    # rides in the pickled UDF (broadcast by PySpark above 1 MB)
+    file_ids = spark.range(len(files), numPartitions=n_part)
 
-    if local_paths:
-        # streaming probe: reads only up to the first matching table
-        with open(local_paths[0]) as f:
-            probe = _parse_named_tables_lines(f, table_name, sep, permissive)
-            try:
-                first = next(probe)
-            except StopIteration:
-                raise LookupError(
-                    f"Table '{table_name}' not found in first file of {path_spec}"
-                )
-    else:
-        first_text = spark.sparkContext.wholeTextFiles(path_spec).values().first()
-        probe = _parse_named_tables(first_text, table_name, sep, permissive)
-        try:
-            first = next(probe)
-        except StopIteration:
-            raise LookupError(f"Table '{table_name}' not found in first file of {path_spec}")
-    column_names, units = first.column_names, first.units
-    schema = schema_for_units(column_names, units)
+    def parse_files(id_batches):
+        for ids in id_batches:
+            for i in ids.column(0).to_pylist():
+                path = files[i]
+                fs, inner = _filesystem(path)
+                size = fs.get_file_info(inner).size
+                if size > max_file_bytes:
+                    raise ValueError(
+                        f"StarTable CSV {path!r} is {size} bytes, over scan_csv's "
+                        f"max_file_bytes={max_file_bytes}: the per-file tokenizer "
+                        "buffers the target table's parsed rows, so an outsized "
+                        "file risks an executor OOM. Split the export into "
+                        "bundle-grain files, or pass a higher max_file_bytes "
+                        "sized alongside executor memory."
+                    )
+                for batch, n_fixes in _table_batches(
+                    path, table_name, sep, permissive, schema
+                ):
+                    if fix_counter is not None and n_fixes:
+                        fix_counter.add(n_fixes)
+                    yield batch
 
-    if local_paths:
-        # Arrow fast path: each task parses its files into pandas frames —
-        # columnar Arrow transfer instead of per-row pickling (measured ~5×
-        # on a 600k-row scan).
-        n_part = min_partitions or min(len(local_paths), 2 * (os.cpu_count() or 8))
-        # the path frame is a range of file indexes: Range splits it into
-        # n_part slices whose sizes differ by at most one, so file counts
-        # per task stay even (hash partitioning on path strings left some
-        # tasks with 2 files and others with 0 — measured ~1.5× straggler
-        # cost) with no shuffle and no Python-RDD stage; the path list
-        # rides in the pickled UDF (broadcast by PySpark above 1 MB)
-        file_ids = spark.range(len(local_paths), numPartitions=n_part)
-
-        def parse_files(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                for i in pdf["id"]:
-                    path = local_paths[i]
-                    size = os.path.getsize(path)
-                    if size > max_file_bytes:
-                        raise ValueError(
-                            f"StarTable CSV {path!r} is {size} bytes, over scan_csv's "
-                            f"max_file_bytes={max_file_bytes}: the per-file tokenizer "
-                            "buffers the target table's parsed rows, so an outsized "
-                            "file risks an executor OOM. Split the export into "
-                            "bundle-grain files, or pass a higher max_file_bytes "
-                            "sized alongside executor memory."
-                        )
-                    with open(path) as f:
-                        for parsed in _parse_named_tables_lines(
-                            f, table_name, sep, permissive
-                        ):
-                            if fix_counter is not None and parsed.n_fixes:
-                                fix_counter.add(parsed.n_fixes)
-                            cols = parsed.column_names
-                            n = len(parsed.columns[cols[0]]) if cols else 0
-                            for lo in range(0, max(n, 1), batch_rows):
-                                yield pd.DataFrame(
-                                    {
-                                        c: parsed.columns[c][lo : lo + batch_rows]
-                                        for c in cols
-                                    }
-                                )
-
-        df = file_ids.mapInPandas(parse_files, schema=schema)
-    else:
-        # generic path (hdfs:// s3:// ...): wholeTextFiles + row tuples
-        files = spark.sparkContext.wholeTextFiles(path_spec, minPartitions=min_partitions)
-
-        def rows_of(kv):
-            _, text = kv
-            for parsed in _parse_named_tables(text, table_name, sep, permissive):
-                if fix_counter is not None and parsed.n_fixes:
-                    fix_counter.add(parsed.n_fixes)
-                cols = [parsed.columns[c] for c in parsed.column_names]
-                yield from zip(*cols)
-
-        df = spark.createDataFrame(files.flatMap(rows_of), schema=schema)
-
-    meta = TableMetadata(name=table_name)
-    return Table(df, metadata=meta)
+    df = file_ids.mapInArrow(parse_files, schema=schema)
+    return Table(df, metadata=TableMetadata(name=table_name))
 
 
-def _expand_local_paths(path_spec: str):
-    """Resolve a comma-joined glob spec to local files; [] when any part
-    has a URI scheme (handled by the Hadoop path instead)."""
-    import glob as _glob
+def _table_batches(path: str, table: str, sep: str, permissive: bool, schema):
+    """Parse every ``table`` block of the StarTable file at ``path`` (a
+    local path or a URI) into Arrow record batches of ``schema``.
 
-    out = []
-    for part in path_spec.split(","):
-        p = part.strip()
-        if "://" in p:
-            return []
-        p = p[len("file:"):] if p.startswith("file:") else p
-        matches = sorted(_glob.glob(p))
-        if os.path.isdir(p):
-            # a job output directory: skip the _SUCCESS marker and hidden
-            # (.crc) files, as Spark's file index does
-            matches = sorted(
-                os.path.join(p, n) for n in os.listdir(p) if not n.startswith(("_", "."))
+    The one executor-side reader: ``scan_csv``, ``format("startable")``
+    and its streaming source all call it.  Yields ``(batch, n_fixes)``;
+    each table's fix count rides on its first batch.  Columns are aligned
+    to ``schema`` by name (:func:`_align_to_schema`) and converted by
+    :func:`pdtable_spark.frame.arrow_columns`, the conversion
+    ``read_csv``'s driver-side frames use, so both read the same
+    timestamps.  Pure Python and pyarrow: safe inside executors.
+    """
+    import pyarrow as pa
+
+    from pdtable_spark.frame import arrow_columns
+
+    with _open_text(path) as f:
+        for parsed in _parse_named_tables_lines(f, table, sep, permissive):
+            cols = _align_to_schema(parsed, schema.names, table, permissive, path)
+            n_rows, n_fixes = parsed.num_rows, parsed.n_fixes
+            for lo in range(0, max(n_rows, 1), BATCH_ROWS):
+                arrays = arrow_columns(schema, [c[lo : lo + BATCH_ROWS] for c in cols])
+                yield pa.RecordBatch.from_arrays(arrays, names=schema.names), n_fixes
+                n_fixes = 0
+
+
+def _align_to_schema(parsed, schema_names, table, permissive, path):
+    """Return ``parsed``'s columns in probed-schema order.
+
+    The schema is probed from the FIRST file, but every file parses into its
+    own column order — a later file listing the same table's columns
+    reordered (or with extras/gaps) must not silently bind values to the
+    wrong schema fields.  Missing columns raise in strict mode and None-fill
+    in permissive mode; columns absent from the schema cannot surface
+    through a fixed schema and are dropped.
+    """
+    cols = []
+    for name in schema_names:
+        if name in parsed.columns:
+            cols.append(parsed.columns[name])
+        elif permissive:
+            cols.append([None] * parsed.num_rows)
+        else:
+            raise ValueError(
+                f"{path}: table {table!r} lacks column {name!r} present in the "
+                "probed schema (first file); use .option('permissive', 'true') "
+                "to None-fill"
             )
-        out.extend(matches)
+    return cols
+
+
+def _probe_schema(files, table: str, sep: str, permissive: bool):
+    """The unit-derived schema of ``table``'s first block in ``files[0]``,
+    read on the driver up to that block."""
+    from pdtable_spark.frame import schema_for_units
+
+    if not files:
+        raise FileNotFoundError("no StarTable files match the given paths")
+    with _open_text(files[0]) as f:
+        for parsed in _parse_named_tables_lines(f, table, sep, permissive):
+            return schema_for_units(parsed.column_names, parsed.units)
+    raise LookupError(f"Table {table!r} not found in first file {files[0]!r}")
+
+
+def _open_text(path: str):
+    fs, inner = _filesystem(path)
+    return io.TextIOWrapper(fs.open_input_stream(inner), encoding="utf-8")
+
+
+def _filesystem(path: str):
+    """``(pyarrow filesystem, path inside it)`` for a local path or a URI."""
+    from pyarrow import fs as pafs
+
+    if "://" in path or path.startswith("file:"):
+        return pafs.FileSystem.from_uri(path)
+    return pafs.LocalFileSystem(), os.path.abspath(path)
+
+
+def _expand_paths(paths) -> List[str]:
+    """The files a path spec names, for ``scan_csv`` and
+    ``format("startable")`` alike.
+
+    ``paths`` is one string (comma-joined parts allowed) or an iterable.
+    Each part is a file, a directory or a glob, local or a URI.  A
+    directory lists its files, skipping names that start with ``_`` or
+    ``.`` (Spark's file-index rule: a job output directory reads without
+    its ``_SUCCESS`` marker and ``.crc`` files).  A glob matches path
+    components as Python's ``glob`` does, and a matched directory lists as
+    above.  Local files come back as absolute paths, remote ones as URIs.
+    """
+    from pyarrow import fs as pafs
+
+    directory, file = pafs.FileType.Directory, pafs.FileType.File
+    if isinstance(paths, (str, os.PathLike)):
+        paths = [paths]
+    out: List[str] = []
+    for part in filter(None, (p.strip() for spec in paths for p in str(spec).split(","))):
+        comps = part.split("/")
+        magic = next((i for i, c in enumerate(comps) if _GLOB_MAGIC.search(c)), len(comps))
+        base = "/".join(comps[:magic]) or ("/" if part.startswith("/") else ".")
+        fs, inner = _filesystem(base)
+        prefix = "" if isinstance(fs, pafs.LocalFileSystem) else base[: len(base) - len(inner)]
+
+        def listing(d):
+            return sorted(fs.get_file_info(pafs.FileSelector(d.path)), key=lambda i: i.path)
+
+        found = [fs.get_file_info(inner)]
+        if found[0].type == pafs.FileType.NotFound:
+            raise FileNotFoundError(f"StarTable path {base!r} does not exist")
+        for pattern in comps[magic:]:
+            found = [
+                i for d in found if d.type == directory for i in listing(d)
+                if fnmatch.fnmatchcase(i.base_name, pattern)
+                and (pattern.startswith(".") or not i.base_name.startswith("."))
+            ]
+        for info in found:
+            if info.type == directory:
+                out += [
+                    prefix + i.path for i in listing(info)
+                    if i.type == file and not i.base_name.startswith(("_", "."))
+                ]
+            elif info.type == file:
+                out.append(prefix + info.path)
     return out
-
-
-def _parse_named_tables(text: str, table_name: str, sep: str, permissive: bool = False):
-    """Tokenize one StarTable CSV text, yielding ParsedTables matching name
-    (each annotated with ``n_fixes`` applied while parsing it)."""
-    yield from _parse_named_tables_lines(text.splitlines(), table_name, sep, permissive)
 
 
 def _parse_named_tables_lines(
     line_iter, table_name: str, sep: str, permissive: bool = False
 ):
-    """Streaming variant: tokenize lazily from an iterator of lines (e.g. an
-    open file object) — the input is never materialized as one string, and
-    the early block filter drops non-matching blocks at one-cell cost, so
-    peak memory is O(target-table rows in the file), not O(file size).
-
-    Pure Python — safe inside executors (no SparkSession access).
-    """
+    """Tokenize lazily from an iterator of lines (e.g. an open file object),
+    yielding the ParsedTables named ``table_name``, each annotated with the
+    ``n_fixes`` applied while parsing it.  The early block filter drops
+    non-matching blocks at one-cell cost, so peak memory is O(target-table
+    rows in the file), not O(file size)."""
     fixer = None
     if permissive:
         fixer = ParseFixer()

@@ -8,49 +8,50 @@
 
 Integration notes:
 
-- ``load(path)`` accepts a file, directory, or glob; each matching file is
-  one input partition (block structure spans lines, so a file is the
-  parallelism grain — same contract as ``scan_csv``).
+- ``load(path)`` accepts a file, directory, glob or URI, expanded as
+  ``scan_csv`` expands its paths; each file is one input partition (block
+  structure spans lines, so a file is the parallelism grain).
 - Schema (column names + per-unit Spark types) is probed from the FIRST
-  file on the driver; executors then stream rows for the requested table.
-- This is the idiomatic-integration spelling of S1; ``scan_csv`` remains
-  the tuned path (Arrow-batched ``mapInPandas``, fix accounting, memory
-  bounds) — the data source trades a little throughput for composing with
-  everything that speaks ``spark.read`` (SQL ``CREATE TABLE ... USING``,
-  auto-registration, option plumbing).
+  file on the driver; executors then parse each file with
+  ``io.csv._table_batches``, the reader ``scan_csv`` runs too, and yield
+  its Arrow record batches.
+- ``scan_csv`` stays the faster spelling of the same read (no plan-time
+  Python workers, a ``fix_counter`` accumulator, unit field metadata);
+  the data source composes with everything that speaks ``spark.read``
+  (SQL ``CREATE TABLE ... USING``, option plumbing, streaming, filter
+  pushdown).
 """
 
 from __future__ import annotations
 
-import glob as _glob
+import datetime
+import json
 import os
-from typing import Iterator, List
+import sys
+from typing import List
 
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamWriter,
     DataSourceWriter,
+    EqualTo,
+    GreaterThan,
+    GreaterThanOrEqual,
+    In,
     InputPartition,
+    IsNotNull,
+    IsNull,
+    LessThan,
+    LessThanOrEqual,
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 
-from pdtable_spark.io.csv import CSV_SEP, _parse_named_tables_lines
-
-
-def _expand(path_spec: str) -> List[str]:
-    out = []
-    for part in path_spec.split(","):
-        part = part.strip()
-        if not part:
-            continue
-        if os.path.isdir(part):
-            out.extend(sorted(_glob.glob(os.path.join(part, "*.csv"))))
-        else:
-            matches = sorted(_glob.glob(part))
-            out.extend(matches if matches else [part])
-    return out
+from pdtable_spark.io.csv import CSV_SEP, _expand_paths, _probe_schema, _table_batches
 
 
 class StarTableDataSource(DataSource):
@@ -73,42 +74,27 @@ class StarTableDataSource(DataSource):
         return table, sep, permissive
 
     def schema(self):
-        from pyspark.sql import types as T
-
-        from pdtable_spark.frame import schema_for_units
-
         table, sep, permissive = self._opts()
-        paths = _expand(self.options.get("path", ""))
-        if not paths:
-            raise FileNotFoundError(f"no files match {self.options.get('path')!r}")
-        with open(paths[0]) as f:
-            for parsed in _parse_named_tables_lines(f, table, sep, permissive):
-                full = schema_for_units(parsed.column_names, parsed.units)
-                # metadata-free copy: Spark 4.1's Python STREAMING source
-                # runner fails its arrow-stream assertion when StructField
-                # metadata is present (verified with a minimal reader), and
-                # batch/streaming share this schema.  Unit metadata stays a
-                # scan_csv/read_csv feature; the data source exposes plain
-                # types.
-                return T.StructType(
-                    [T.StructField(f.name, f.dataType, f.nullable) for f in full.fields]
-                )
-        raise LookupError(f"Table {table!r} not found in first file {paths[0]!r}")
+        full = _probe_schema(_expand_paths(self.options.get("path", "")), table, sep, permissive)
+        # metadata-free copy: Spark 4.1's Python STREAMING source runner
+        # fails its arrow-stream assertion when StructField metadata is
+        # present (verified with a minimal reader), and batch/streaming
+        # share this schema.  Unit metadata stays a scan_csv/read_csv
+        # feature; the data source exposes plain types.
+        return T.StructType(
+            [T.StructField(f.name, f.dataType, f.nullable) for f in full.fields]
+        )
 
     def reader(self, schema) -> "StarTableReader":
         table, sep, permissive = self._opts()
-        paths = _expand(self.options.get("path", ""))
-        from pyspark.sql import SparkSession
-
-        session = SparkSession.getActiveSession()
-        enabled = (
-            session is not None
-            and str(
-                session.conf.get("spark.sql.python.filterPushdown.enabled", "false")
-            ).lower()
-            == "true"
-        )
-        cls = StarTablePushdownReader if enabled else StarTableReader
+        paths = _expand_paths(self.options.get("path", ""))
+        # Spark asks for the reader in its filter-pushdown worker only when
+        # spark.sql.python.filterPushdown.enabled is on; its plain planning
+        # worker rejects a reader that defines pushFilters.  Neither worker
+        # has a SparkSession to read the conf from, so the caller decides.
+        caller = os.path.basename(sys._getframe(1).f_code.co_filename)
+        pushdown = caller == "data_source_pushdown_filters.py"
+        cls = StarTablePushdownReader if pushdown else StarTableReader
         return cls(paths, schema, table, sep, permissive)
 
     def writer(self, schema, overwrite: bool) -> "StarTableWriter":
@@ -187,36 +173,10 @@ class StarTableDataSource(DataSource):
         return StarTableStreamReader(path, schema, table, sep, permissive)
 
 
-def _align_to_schema(parsed, schema_names, table, permissive, path):
-    """Return ``parsed``'s columns in probed-schema order.
-
-    The schema is probed from the FIRST file, but every file parses into its
-    own column order — a later file listing the same table's columns
-    reordered (or with extras/gaps) must not silently bind values to the
-    wrong schema fields.  Missing columns raise in strict mode and None-fill
-    in permissive mode; columns absent from the schema cannot surface
-    through a fixed schema and are dropped.
-    """
-    n_rows = len(parsed.columns[parsed.column_names[0]]) if parsed.column_names else 0
-    cols = []
-    for name in schema_names:
-        if name in parsed.columns:
-            cols.append(parsed.columns[name])
-        elif permissive:
-            cols.append([None] * n_rows)
-        else:
-            raise ValueError(
-                f"{path}: table {table!r} lacks column {name!r} present in the "
-                "probed schema (first file); use .option('permissive', 'true') "
-                "to None-fill"
-            )
-    return cols
-
-
 class StarTableReader(DataSourceReader):
     def __init__(self, paths, schema, table, sep, permissive):
         self.paths = paths
-        self.schema_names = [f.name for f in schema.fields]
+        self.schema = schema
         self.table = table
         self.sep = sep
         self.permissive = permissive
@@ -225,123 +185,98 @@ class StarTableReader(DataSourceReader):
     def partitions(self) -> List[InputPartition]:
         return [InputPartition(p) for p in self.paths]
 
-    def read(self, partition: InputPartition) -> Iterator[tuple]:
-        with open(partition.value) as f:
-            for parsed in _parse_named_tables_lines(
-                f, self.table, self.sep, self.permissive
-            ):
-                cols = _align_to_schema(
-                    parsed, self.schema_names, self.table, self.permissive,
-                    partition.value,
-                )
-                if not self._pushed:
-                    yield from zip(*cols)
-                    continue
-                idx = {c: i for i, c in enumerate(self.schema_names)}
-                for row in zip(*cols):
-                    if self._keep(lambda c: row[idx[c]] if c in idx else None):
-                        yield row
+    def read(self, partition: InputPartition):
+        for batch, _ in _table_batches(
+            partition.value, self.table, self.sep, self.permissive, self.schema
+        ):
+            yield batch.filter(_pushed_mask(batch, self._pushed)) if self._pushed else batch
 
-    def _keep(self, row_get):
-        from pyspark.sql.datasource import (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            In,
-            IsNotNull,
-            IsNull,
-            LessThan,
-            LessThanOrEqual,
-        )
 
-        for f in self._pushed:
-            v = row_get(f.attribute[0])
-            if isinstance(v, float) and v != v:
-                # NaN: Spark's comparison ordering (NaN greatest, NaN = NaN
-                # true) differs from Python's (all comparisons false) — a
-                # Python-side drop here would lose rows SQL keeps.  Defer to
-                # Spark's re-applied copy of the filter.
-                continue
-            try:
-                if isinstance(f, IsNull):
-                    if v is not None:
-                        return False
-                elif isinstance(f, IsNotNull):
-                    if v is None:
-                        return False
-                elif v is None:
-                    return False  # comparisons with NULL are never true
-                elif isinstance(f, EqualTo):
-                    if not v == f.value:
-                        return False
-                elif isinstance(f, GreaterThan):
-                    if not v > f.value:
-                        return False
-                elif isinstance(f, GreaterThanOrEqual):
-                    if not v >= f.value:
-                        return False
-                elif isinstance(f, LessThan):
-                    if not v < f.value:
-                        return False
-                elif isinstance(f, LessThanOrEqual):
-                    if not v <= f.value:
-                        return False
-                elif isinstance(f, In):
-                    if v not in f.value:
-                        return False
-            except TypeError:
-                # incomparable Python types (e.g. naive datetime vs tz-aware
-                # literal): keep the row — Spark's re-applied copy of this
-                # filter decides with SQL semantics
-                continue
-        return True
+#: The pushed comparisons the reader evaluates, by filter class.
+_COMPARISONS = {
+    EqualTo: pc.equal,
+    GreaterThan: pc.greater,
+    GreaterThanOrEqual: pc.greater_equal,
+    LessThan: pc.less,
+    LessThanOrEqual: pc.less_equal,
+}
+
+
+def _pushed_mask(batch, filters):
+    """The rows of ``batch`` that may pass every pushed filter, as a
+    boolean Arrow array evaluated with ``pyarrow.compute``.
+
+    Spark re-applies every pushed filter after the scan, so the mask may
+    keep rows the filter drops but never the reverse:
+    - comparisons and ``In`` drop NULL values, as SQL's three-valued logic
+      does;
+    - a NaN value is kept: Spark orders NaN above every double and has
+      ``NaN = NaN`` true, where IEEE comparisons are all false;
+    - a filter whose literal does not convert to the column's Arrow type
+      (a float against a timestamp, a naive datetime) is skipped.
+    """
+    keep = pa.array([True] * batch.num_rows)
+    for f in filters:
+        col = batch.column(f.attribute[0])
+        try:
+            if isinstance(f, (IsNull, IsNotNull)):
+                mask = pc.is_null(col) if isinstance(f, IsNull) else pc.is_valid(col)
+            else:
+                if isinstance(f, In):
+                    values = pa.array([_literal(v, col.type) for v in f.value], col.type)
+                    mask = pc.and_(pc.is_in(col, value_set=values), pc.is_valid(col))
+                else:
+                    literal = pa.scalar(_literal(f.value, col.type), col.type)
+                    mask = _COMPARISONS[type(f)](col, literal)
+                mask = pc.fill_null(mask, False)
+                if pa.types.is_floating(col.type):
+                    mask = pc.or_(mask, pc.fill_null(pc.is_nan(col), False))
+        except (pa.ArrowException, TypeError, ValueError):
+            continue
+        keep = pc.and_(keep, mask)
+    return keep
+
+
+def _literal(value, arrow_type):
+    """A pushed filter's literal as a Python value of ``arrow_type``.
+
+    Timestamp columns hold ``TimestampType.toInternal`` instants
+    (``frame.arrow_columns``); only a zone-aware literal names an instant
+    without guessing a zone, so any other value raises ``TypeError``."""
+    if pa.types.is_timestamp(arrow_type):
+        if not isinstance(value, datetime.datetime) or value.tzinfo is None:
+            raise TypeError(f"no instant for timestamp literal {value!r}")
+        return T.TimestampType().toInternal(value)
+    return value
+
+
+def _has_nan_literal(f) -> bool:
+    """A NaN LITERAL flips comparison truth between IEEE (all false) and
+    SQL (NaN is greatest, NaN = NaN true): ``val < NaN`` is TRUE in SQL for
+    every non-NaN value but false in Arrow, so evaluating it in the reader
+    would drop rows Spark's re-applied copy can never resurrect."""
+    vals = getattr(f, "value", None)
+    vals = vals if isinstance(vals, (list, tuple, set)) else [vals]
+    return any(isinstance(v, float) and v != v for v in vals)
 
 
 class StarTablePushdownReader(StarTableReader):
-    """StarTableReader + row-level filter pushdown.  A separate class
+    """StarTableReader + per-batch filter pushdown.  A separate class
     because Spark REJECTS any reader that merely defines pushFilters()
     unless ``spark.sql.python.filterPushdown.enabled`` is true — the
-    DataSource hands this subclass out only when the session conf is on."""
+    DataSource hands this subclass out only to Spark's pushdown planner."""
 
     def pushFilters(self, filters):
-        """Row-level pushdown: supported comparison/membership/null filters
-        evaluate inside the per-file parser task, so most filtered rows
-        never serialize to the JVM.  EVERY filter — consumed or not — is
-        yielded back, so Spark re-applies it after the scan: Python
-        comparison semantics (NaN ordering, naive-vs-aware datetimes) are
-        not provably identical to SQL's, and re-application turns any
-        divergence into a lost optimization instead of silently dropped
-        rows.  (A filter this reader DIDN'T yield would otherwise be
-        trusted as fully applied.)"""
-        from pyspark.sql.datasource import (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            In,
-            IsNotNull,
-            IsNull,
-            LessThan,
-            LessThanOrEqual,
-        )
-
-        supported = (
-            EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual,
-            In, IsNull, IsNotNull,
-        )
-
-        def nan_literal(f):
-            # a NaN LITERAL flips comparison truth between Python (all
-            # false) and SQL (NaN is greatest, NaN = NaN true): e.g.
-            # `val < NaN` is TRUE in SQL for every non-NaN value but false
-            # in Python — evaluating it here would drop rows Spark's
-            # re-applied copy can never resurrect.  Leave such filters
-            # entirely to Spark.
-            vals = getattr(f, "value", None)
-            vals = vals if isinstance(vals, (list, tuple, set)) else [vals]
-            return any(isinstance(v, float) and v != v for v in vals)
-
+        """Supported comparison/membership/null filters without a NaN
+        literal evaluate on each parsed Arrow batch inside the reader task
+        (:func:`_pushed_mask`), so most filtered rows never reach the JVM.
+        EVERY filter — consumed or not — is yielded back, so Spark
+        re-applies it after the scan, and any divergence between the mask
+        and SQL can only lose an optimization, never rows.  (A filter this
+        reader DIDN'T yield would otherwise be trusted as fully applied.)"""
+        supported = (*_COMPARISONS, In, IsNull, IsNotNull)
         for f in filters:
-            if isinstance(f, supported) and len(f.attribute) == 1 and not nan_literal(f):
+            if isinstance(f, supported) and len(f.attribute) == 1 and not _has_nan_literal(f):
                 self._pushed.append(f)
             yield f
 
@@ -357,7 +292,7 @@ class StarTableStreamReader(SimpleDataSourceStreamReader):
 
     def __init__(self, dir_path, schema, table, sep, permissive):
         self.dir = dir_path
-        self.schema_names = [f.name for f in schema.fields]
+        self.schema = schema
         self.table = table
         self.sep = sep
         self.permissive = permissive
@@ -365,36 +300,29 @@ class StarTableStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"seen": "[]"}
 
-    def _rows_of(self, files):
-        for path in files:
-            with open(path) as f:
-                for parsed in _parse_named_tables_lines(
-                    f, self.table, self.sep, self.permissive
-                ):
-                    cols = _align_to_schema(
-                        parsed, self.schema_names, self.table, self.permissive,
-                        path,
-                    )
-                    yield from zip(*cols)
+    def _batches_of(self, files):
+        return [
+            batch
+            for path in files
+            for batch, _ in _table_batches(
+                path, self.table, self.sep, self.permissive, self.schema
+            )
+        ]
 
     def read(self, start: dict):
-        import json as _json
-
-        seen = set(_json.loads(start["seen"]))
+        seen = set(json.loads(start["seen"]))
         present = sorted(
             os.path.join(self.dir, f)
             for f in os.listdir(self.dir)
             if f.endswith(".csv")
         )
         new = [p for p in present if p not in seen]
-        end = {"seen": _json.dumps(sorted(seen | set(new)))}
-        return iter(list(self._rows_of(new))), end
+        end = {"seen": json.dumps(sorted(seen | set(new)))}
+        return iter(self._batches_of(new)), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        import json as _json
-
-        delta = sorted(set(_json.loads(end["seen"])) - set(_json.loads(start["seen"])))
-        return iter(list(self._rows_of(delta)))
+        delta = sorted(set(json.loads(end["seen"])) - set(json.loads(start["seen"])))
+        return iter(self._batches_of(delta))
 
     def commit(self, end: dict) -> None:
         pass

@@ -688,13 +688,6 @@ def _write_manifest(
     _promote_sidecar(spark, mdir, "_write_manifest")
 
 
-def file_manifest(spark: SparkSession, path: str) -> DataFrame:
-    """The persisted manifest as a frame (``file``, ``generation``) —
-    raises the usual path-not-found if :func:`write_file_manifest` has
-    never run for this lake."""
-    return spark.read.parquet(_manifest_dir(path))
-
-
 def _manifest_snapshot(spark: SparkSession, path: str):
     """``(normalized file set, generation)`` from the manifest, or
     ``None`` when the lake has no manifest (readers then fall back to

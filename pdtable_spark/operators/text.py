@@ -538,18 +538,6 @@ def pack_budget(
     )
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Convenience: attach the full stat block to a document DataFrame."""
-    t = F.col(text_col)
-    return (
-        df.withColumn("n_tokens", token_count(t))
-        .withColumn("n_bpe_ish", bpe_ish_token_count(t))
-        .withColumn("lang_pred", lang_id(t))
-        .withColumn("quality", quality_score(t))
-        .withColumn("fingerprint", fingerprint(text_col))
-    )
-
-
 def length_bucket(n_tokens: Column) -> Column:
     """Log2 length bucket: floor(log2(n_tokens + 1)).
 

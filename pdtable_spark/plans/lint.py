@@ -70,7 +70,7 @@ _PATTERN_CHECKS = [
     (
         "python-arrow-eval",
         "info",
-        r"ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas",
+        r"ArrowEvalPython|FlatMapGroupsInPandas|MapInPandas|MapInArrow",
         "Arrow-batched Python stage: the sanctioned UDF path, but still "
         "off-JVM — keep it out of the hottest scan if an expression "
         "spelling exists",

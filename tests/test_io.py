@@ -1,6 +1,7 @@
 """CSV / JSON I/O tests: golden-string writes, round-trips, distributed scan."""
 
 import io
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -140,15 +141,26 @@ def test_scan_csv_file_size_bound(spark, tmp_path):
         t.count()
 
 
-def test_scan_csv_batch_rows_chunking(spark, tmp_path):
-    """Small Arrow batches (batch_rows) must not change the parsed result —
-    a file larger than the batch bound parses across several batches."""
-    (tmp_path / "chunks.csv").write_text(
+def test_scan_csv_batch_rows_chunking(spark, tmp_path, monkeypatch):
+    """A table longer than one Arrow batch parses across several batches,
+    and batching does not change the parsed result."""
+    import pyarrow as pa
+
+    from pdtable_spark.frame import schema_for_units
+    from pdtable_spark.io import csv as csv_io
+
+    path = tmp_path / "chunks.csv"
+    path.write_text(
         "**m;\nall\nrun;value\n-;kg\n"
         + "".join(f"{j};{j}.5\n" for j in range(1000))
         + "\n"
     )
-    t = scan_csv(spark, str(tmp_path / "chunks.csv"), "m", batch_rows=64)
+    monkeypatch.setattr(csv_io, "BATCH_ROWS", 64)
+    schema = schema_for_units(["run", "value"], ["-", "kg"])
+    batches = [b for b, _ in csv_io._table_batches(str(path), "m", ";", False, schema)]
+    assert len(batches) == 16 and max(b.num_rows for b in batches) == 64
+    assert pa.Table.from_batches(batches).column("run").to_pylist() == [float(j) for j in range(1000)]
+    t = scan_csv(spark, str(path), "m")
     assert t.count() == 1000
     assert t.df.agg(F.sum("run")).collect()[0][0] == pytest.approx(sum(range(1000)))
 
@@ -259,6 +271,35 @@ def test_read_csv_datetime_matches_row_list_frame(spark, tz):
 
         assert table.df.collect() == row_list.collect()
         assert as_strings(table.df) == as_strings(row_list)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York", "Asia/Kolkata"])
+def test_executor_readers_datetime_match_read_csv(spark, tmp_path, tz):
+    """scan_csv and format("startable") read datetimes exactly as read_csv
+    does, under any session time zone: the same collected values and the
+    same string casts, a wall-clock time in New York's DST gap included."""
+    from pdtable_spark.io.datasource import register
+
+    register(spark)
+    path = tmp_path / "events.csv"
+    path.write_text(DATETIME_CSV)
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        (table,) = [b for k, b in read_csv(str(path)) if k == BlockType.TABLE]
+        scanned = scan_csv(spark, str(path), "events").df
+        sourced = spark.read.format("startable").option("table", "events").load(str(path))
+
+        def as_strings(df):
+            return df.select([F.col(c).cast("string") for c in df.columns]).collect()
+
+        expected = table.df.collect()
+        assert scanned.collect() == expected
+        assert sourced.collect() == expected
+        assert as_strings(scanned) == as_strings(table.df)
+        assert as_strings(sourced) == as_strings(table.df)
     finally:
         spark.conf.set("spark.sql.session.timeZone", old_tz)
 
@@ -375,6 +416,7 @@ def test_startable_datasource_filter_pushdown(spark, tmp_path):
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "false")
     assert sorted(r["val"] for r in out) == [3.0, 4.0, 5.0, 6.0]
     # reader-level semantics, standalone
+    import pyarrow as pa
     from pyspark.sql.datasource import GreaterThanOrEqual, LessThan
     from pdtable_spark.io.datasource import StarTablePushdownReader
 
@@ -383,8 +425,9 @@ def test_startable_datasource_filter_pushdown(spark, tmp_path):
     # every filter is yielded back so Spark re-applies it post-scan — the
     # reader's Python-side evaluation is an optimization, not the authority
     assert len(rest) == 2
-    got = list(r.read(r.partitions()[0]))
-    assert sorted(x[1] for x in got) == [3.0, 4.0, 5.0, 6.0]
+    batches = list(r.read(r.partitions()[0]))
+    assert all(isinstance(b, pa.RecordBatch) for b in batches)
+    assert sorted(v for b in batches for v in b.column("val").to_pylist()) == [3.0, 4.0, 5.0, 6.0]
 
 
 def test_startable_datasource_column_reorder(spark, tmp_path):
@@ -406,6 +449,71 @@ def test_startable_datasource_column_reorder(spark, tmp_path):
     )
     got = sorted((r["site"], r["temp"]) for r in df.collect())
     assert got == [("A", 21.0), ("B", 22.0)]
+
+
+def test_startable_pushdown_filters_inside_the_scan(spark, tmp_path):
+    """With filterPushdown on, the pushed filters reach the reader: the
+    scan itself emits only the matching rows (with it off, all of them)."""
+    from pdtable_spark.io.datasource import register
+
+    register(spark)
+    rows = "\n".join(f"s{i};{float(i)};" for i in range(10))
+    (tmp_path / "f.csv").write_text(f"**m;;\nall;;\nsensor;val;\ntext;-;\n{rows}\n\n")
+
+    def scan_rows(pushdown):
+        spark.conf.set("spark.sql.python.filterPushdown.enabled", pushdown)
+        try:
+            df = (
+                spark.read.format("startable").option("table", "m")
+                .load(str(tmp_path / "f.csv")).filter(F.col("val") >= 6.0)
+            )
+            assert len(df.collect()) == 4
+            nodes = [df._jdf.queryExecution().executedPlan()]
+            while nodes:
+                node = nodes.pop()
+                if node.nodeName().startswith("BatchScan"):
+                    return node.metrics().get("numOutputRows").get().value()
+                it = node.children().iterator()
+                while it.hasNext():
+                    nodes.append(it.next())
+        finally:
+            spark.conf.set("spark.sql.python.filterPushdown.enabled", "false")
+
+    assert scan_rows("false") == 10
+    assert scan_rows("true") == 4
+
+
+def test_uri_paths_bind_columns_by_name(spark, tmp_path):
+    """scan_csv and format("startable") read a file:// glob and a file://
+    directory, binding columns by name across files that list them in
+    different orders."""
+    from pdtable_spark.io.datasource import register
+
+    register(spark)
+    (tmp_path / "a.csv").write_text("**m;;\nall;;\nsite;temp;\ntext;degC;\nA;21.0;\n\n")
+    (tmp_path / "b.csv").write_text("**m;;\nall;;\ntemp;site;\ndegC;text;\n22.0;B;\n\n")
+    for spec in (f"file://{tmp_path}/*.csv", f"file://{tmp_path}"):
+        scanned = scan_csv(spark, spec, "m").df
+        sourced = spark.read.format("startable").option("table", "m").load(spec)
+        for df in (scanned, sourced):
+            got = sorted((r["site"], r["temp"]) for r in df.collect())
+            assert got == [("A", 21.0), ("B", 22.0)], spec
+
+
+def test_startable_datasource_reads_write_csv_distributed_dir(spark, tmp_path):
+    """format("startable") lists a write_csv_distributed output directory
+    as scan_csv does: part files only, no _SUCCESS marker or .crc files."""
+    from pdtable_spark.io.csv import write_csv_distributed
+    from pdtable_spark.io.datasource import register
+
+    register(spark)
+    src = TableBundle(read_csv(io.StringIO(CSV)))["places"]
+    out = str(tmp_path / "places_csv")
+    write_csv_distributed(src, out)
+    sourced = spark.read.format("startable").option("table", "places").load(out)
+    scanned = scan_csv(spark, out, "places").df
+    assert sorted(map(tuple, sourced.collect())) == sorted(map(tuple, scanned.collect()))
+    assert sourced.count() == 3
 
 
 def test_startable_datasource_missing_column(spark, tmp_path):
@@ -505,36 +613,42 @@ def test_startable_pushdown_null_and_datetime_safe(spark, tmp_path):
     assert sorted(r["site"] for r in got_ts) == ["B", "C"]
 
 
-def test_startable_pushdown_defers_nan_and_type_mismatch(tmp_path):
-    """Reader-level guard semantics: a NaN value or an incomparable filter
+def test_startable_pushdown_defers_nan_and_type_mismatch():
+    """Per-batch mask semantics: a NaN value or an incomparable filter
     literal keeps the row (Spark's re-applied filter decides); NULLs drop."""
     import datetime
-    import math
 
-    from pyspark.sql import types as T
+    import pyarrow as pa
     from pyspark.sql.datasource import GreaterThan
-    from pdtable_spark.io.datasource import StarTablePushdownReader
+    from pdtable_spark.io.datasource import _pushed_mask
 
-    schema = T.StructType([T.StructField("val", T.DoubleType())])
-    r = StarTablePushdownReader([], schema, "m", ";", False)
-    list(r.pushFilters([GreaterThan(("val",), 0.0)]))
-    assert r._keep(lambda c: math.nan)  # NaN → defer to Spark
-    assert r._keep(lambda c: 1.0)
-    assert not r._keep(lambda c: -1.0)
-    assert not r._keep(lambda c: None)  # NULL comparison: never true
-    # incomparable types (e.g. datetime vs float literal): defer to Spark
-    assert r._keep(lambda c: datetime.datetime(2024, 1, 1))
+    vals = pa.record_batch({"val": pa.array([math.nan, 1.0, -1.0, None])})
+    assert _pushed_mask(vals, [GreaterThan(("val",), 0.0)]).to_pylist() == [
+        True,  # NaN → defer to Spark
+        True,
+        False,
+        False,  # NULL comparison: never true
+    ]
+    # incomparable types (a timestamp column against a float literal, or
+    # against a naive datetime): defer to Spark
+    when = pa.record_batch(
+        {"when": pa.array([1_704_067_200_000_000], pa.timestamp("us", tz="UTC"))}
+    )
+    assert _pushed_mask(when, [GreaterThan(("when",), 0.0)]).to_pylist() == [True]
+    naive = GreaterThan(("when",), datetime.datetime(2030, 1, 1))
+    assert _pushed_mask(when, [naive]).to_pylist() == [True]
+    aware = GreaterThan(("when",), datetime.datetime(2030, 1, 1, tzinfo=datetime.timezone.utc))
+    assert _pushed_mask(when, [aware]).to_pylist() == [False]
 
 
-def test_startable_pushdown_nan_literal_not_consumed(tmp_path):
+def test_startable_pushdown_nan_literal_not_consumed():
     """A filter whose LITERAL is NaN must not be evaluated reader-side:
-    Python would drop rows SQL keeps (SQL: val < NaN is true for all
+    Arrow would drop rows SQL keeps (SQL: val < NaN is true for all
     non-NaN)."""
-    import math
-
+    import pyarrow as pa
     from pyspark.sql import types as T
     from pyspark.sql.datasource import GreaterThan, In, LessThan
-    from pdtable_spark.io.datasource import StarTablePushdownReader
+    from pdtable_spark.io.datasource import StarTablePushdownReader, _pushed_mask
 
     schema = T.StructType([T.StructField("val", T.DoubleType())])
     r = StarTablePushdownReader([], schema, "m", ";", False)
@@ -545,7 +659,9 @@ def test_startable_pushdown_nan_literal_not_consumed(tmp_path):
     ]))
     assert len(back) == 3  # every filter yielded back for Spark
     assert r._pushed == [back[2]]  # only the NaN-free filter is consumed
-    assert r._keep(lambda c: -5.0) is False  # the consumed one still works
+    # the consumed one still works
+    batch = pa.record_batch({"val": pa.array([-5.0, 5.0])})
+    assert _pushed_mask(batch, r._pushed).to_pylist() == [False, True]
 
 
 def test_orc_round_trip_with_units(spark, tmp_path):

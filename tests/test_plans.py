@@ -879,6 +879,7 @@ def test_plan_lint_detects_each_smell(spark, tmp_path):
     arrow = a.select(fast("id"))
     assert "python-arrow-eval" in codes(arrow)
     assert_clean(arrow)  # info does not gate
+    assert "python-arrow-eval" in codes(a.mapInArrow(lambda batches: batches, a.schema))
 
     # unpushed filter: predicate on a computed column over parquet
     p = str(tmp_path / "t")
@@ -1015,15 +1016,16 @@ def test_startable_driver_frames_are_local_scans(spark, tmp_path):
 
 
 def test_scan_csv_path_frame_has_no_exchange(spark, tmp_path):
-    """scan_csv parses straight off its path frame: no shuffle sits below
-    MapInPandas, and the files still spread over min_partitions tasks."""
+    """scan_csv parses straight off its path frame: no shuffle and no
+    Python RDD sit below MapInArrow, and the files still spread over
+    min_partitions tasks."""
     from pdtable_spark.io.csv import scan_csv
 
     for i in range(5):
         (tmp_path / f"f{i}.csv").write_text(STARTABLE_CSV)
     t = scan_csv(spark, f"{tmp_path}/f*.csv", "m", min_partitions=3)
     plan = t.df._jdf.queryExecution().executedPlan().toString()
-    below = plan[plan.index("MapInPandas"):]
+    below = plan[plan.index("MapInArrow"):]
     assert "Exchange" not in below, plan
     assert "ExistingRDD" not in below, plan
     assert t.df.rdd.getNumPartitions() == 3

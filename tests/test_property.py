@@ -13,7 +13,7 @@ so these run fast (no SparkSession) and shrink well.
 import io
 import math
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from pdtable_spark.io.csv import read_csv
 from pdtable_spark.parsers.blocks import BlockType
@@ -739,3 +739,104 @@ def test_num_literal_equals_lit(spark, v):
     assert df.schema["a"].dataType == df.schema["b"].dataType
     a, b = df.collect()[0]
     assert a == b or (math.isnan(a) and math.isnan(b))
+
+
+# -- format("startable") filter pushdown -------------------------------------------
+
+_PUSH_VALS = [-1.5, 0.0, 2.0, 3.25]
+_PUSH_TIMES = ["2020-03-08 02:30:00", "2021-06-15 12:00:05", "2024-01-01 00:00:00"]
+_PUSH_LITERALS = {
+    "site": st.sampled_from(["a", "b", "c"]),
+    "val": st.sampled_from(_PUSH_VALS + [1.0, math.nan]),
+    "when": st.sampled_from(_PUSH_TIMES + ["2022-01-01 00:00:00"]),
+}
+
+
+@st.composite
+def pushdown_predicates(draw):
+    """``(column, op, literal)``; ``in`` takes a list of literals."""
+    col = draw(st.sampled_from(sorted(_PUSH_LITERALS)))
+    op = draw(st.sampled_from(["=", "<", "<=", ">", ">=", "in", "is null", "is not null"]))
+    if op in ("is null", "is not null"):
+        return col, op, None
+    pool = _PUSH_LITERALS[col]
+    return col, op, draw(st.lists(pool, min_size=1, max_size=3) if op == "in" else pool)
+
+
+_PUSH_EDGE_ROWS = [
+    ("a", math.nan, None),
+    ("b", 2.0, "2021-06-15 12:00:05"),
+    ("a", None, "2020-03-08 02:30:00"),
+]
+
+
+@settings(max_examples=6, deadline=None)
+@example(rows=_PUSH_EDGE_ROWS, preds=[("val", ">", 0.0)])  # NaN is greatest
+@example(rows=_PUSH_EDGE_ROWS, preds=[("val", "<", math.nan)])  # 2.0 < NaN
+@example(
+    rows=_PUSH_EDGE_ROWS,
+    preds=[("when", ">=", "2021-01-01 00:00:00"), ("val", "in", [2.0, math.nan])],
+)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.sampled_from(["a", "b"]),
+            st.one_of(st.none(), st.just(math.nan), st.sampled_from(_PUSH_VALS)),
+            st.one_of(st.none(), st.sampled_from(_PUSH_TIMES)),
+        ),
+        min_size=1,
+        max_size=12,
+    ),
+    preds=st.lists(pushdown_predicates(), min_size=1, max_size=3),
+)
+def test_startable_pushdown_matches_spark_filter_property(spark, tmp_path_factory, rows, preds):
+    """A format("startable") read with filter pushdown on returns the rows
+    of the read with pushdown off filtered in Spark: NaN and NULL values,
+    timestamps and NaN literals included."""
+    import datetime
+    import functools
+
+    from pyspark.sql import functions as F
+
+    from pdtable_spark.io.datasource import register
+
+    def cell(v):
+        if v is None:
+            return "-"
+        return "+nan" if isinstance(v, float) and math.isnan(v) else str(v)
+
+    def literal(col, v):
+        if col == "when":
+            return F.lit(datetime.datetime.fromisoformat(v))
+        return F.lit(v)
+
+    def condition(col, op, v):
+        c = F.col(col)
+        if op == "is null":
+            return c.isNull()
+        if op == "is not null":
+            return c.isNotNull()
+        if op == "in":
+            return c.isin([literal(col, x) for x in v])
+        x = literal(col, v)
+        return {"=": c == x, "<": c < x, "<=": c <= x, ">": c > x, ">=": c >= x}[op]
+
+    register(spark)
+    path = tmp_path_factory.mktemp("pushdown") / "f.csv"
+    path.write_text(
+        "**m;;\nall;;\nsite;val;when\ntext;-;datetime\n"
+        + "".join(f"{s};{cell(v)};{cell(w)}\n" for s, v, w in rows)
+        + "\n"
+    )
+    cond = functools.reduce(lambda a, b: a & b, (condition(*p) for p in preds))
+
+    def read():
+        df = spark.read.format("startable").option("table", "m").load(str(path))
+        return sorted(tuple(map(repr, r)) for r in df.filter(cond).collect())
+
+    expected = read()
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    try:
+        assert read() == expected
+    finally:
+        spark.conf.set("spark.sql.python.filterPushdown.enabled", "false")
