@@ -30,6 +30,7 @@ from typing import Callable, Iterable, List, Optional, TextIO, Union
 
 from pdtable_spark.auxiliary import CSV_SEP
 from pdtable_spark.io._represent import represent_col_elements, represent_row_elements
+from pdtable_spark.io.fs import filesystem, list_files, should_hide, uri_prefix
 from pdtable_spark.model.origin import (
     FilesystemLocationFile,
     InputIssueTracker,
@@ -149,7 +150,7 @@ def scan_csv(
         for ids in id_batches:
             for i in ids.column(0).to_pylist():
                 path = files[i]
-                fs, inner = _filesystem(path)
+                fs, inner = filesystem(path)
                 size = fs.get_file_info(inner).size
                 if size > max_file_bytes:
                     raise ValueError(
@@ -236,17 +237,8 @@ def _probe_schema(files, table: str, sep: str, permissive: bool):
 
 
 def _open_text(path: str):
-    fs, inner = _filesystem(path)
+    fs, inner = filesystem(path)
     return io.TextIOWrapper(fs.open_input_stream(inner), encoding="utf-8")
-
-
-def _filesystem(path: str):
-    """``(pyarrow filesystem, path inside it)`` for a local path or a URI."""
-    from pyarrow import fs as pafs
-
-    if "://" in path or path.startswith("file:"):
-        return pafs.FileSystem.from_uri(path)
-    return pafs.LocalFileSystem(), os.path.abspath(path)
 
 
 def _expand_paths(paths) -> List[str]:
@@ -255,10 +247,11 @@ def _expand_paths(paths) -> List[str]:
 
     ``paths`` is one string (comma-joined parts allowed) or an iterable.
     Each part is a file, a directory or a glob, local or a URI.  A
-    directory lists its files, skipping names that start with ``_`` or
-    ``.`` (Spark's file-index rule: a job output directory reads without
-    its ``_SUCCESS`` marker and ``.crc`` files).  A glob matches path
-    components as Python's ``glob`` does, and a matched directory lists as
+    directory lists like Spark's file index (:func:`list_files`:
+    recursive, without the names :func:`should_hide` hides, such as a job's
+    ``_SUCCESS`` marker, ``.crc`` files and ``*._COPYING_`` in-flight
+    copies).  A glob matches path components as Python's ``glob`` does,
+    skips hidden names the same way, and a matched directory lists as
     above.  Local files come back as absolute paths, remote ones as URIs.
     """
     from pyarrow import fs as pafs
@@ -271,8 +264,8 @@ def _expand_paths(paths) -> List[str]:
         comps = part.split("/")
         magic = next((i for i, c in enumerate(comps) if _GLOB_MAGIC.search(c)), len(comps))
         base = "/".join(comps[:magic]) or ("/" if part.startswith("/") else ".")
-        fs, inner = _filesystem(base)
-        prefix = "" if isinstance(fs, pafs.LocalFileSystem) else base[: len(base) - len(inner)]
+        fs, inner = filesystem(base)
+        prefix = uri_prefix(base, fs, inner)
 
         def listing(d):
             return sorted(fs.get_file_info(pafs.FileSelector(d.path)), key=lambda i: i.path)
@@ -283,15 +276,11 @@ def _expand_paths(paths) -> List[str]:
         for pattern in comps[magic:]:
             found = [
                 i for d in found if d.type == directory for i in listing(d)
-                if fnmatch.fnmatchcase(i.base_name, pattern)
-                and (pattern.startswith(".") or not i.base_name.startswith("."))
+                if fnmatch.fnmatchcase(i.base_name, pattern) and not should_hide(i.base_name)
             ]
         for info in found:
             if info.type == directory:
-                out += [
-                    prefix + i.path for i in listing(info)
-                    if i.type == file and not i.base_name.startswith(("_", "."))
-                ]
+                out += list_files(prefix + info.path)
             elif info.type == file:
                 out.append(prefix + info.path)
     return out

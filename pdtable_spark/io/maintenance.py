@@ -18,17 +18,26 @@ between query rounds:
   bucket key, one range shuffle, so EVERY clustered column gets tight
   per-file min/max stats (the plain-parquet ``OPTIMIZE ZORDER BY``),
   with :func:`clustering_stats` as the pruning certificate.
+
+The certificates read metadata before data, like the StarTable reader's
+early block filter: per-file row counts and min/max come from the parquet
+footers, read on the driver, and Spark scans a column only where a footer
+holds no usable statistics for it.  Every driver-side listing, footer read
+and sidecar read or write goes through ``pyarrow.fs`` (:mod:`.fs`), so a
+local path and a remote URI take one route; the only Hadoop filesystem
+calls left are the checked renames of :func:`_promote_sidecar`.
 """
 
 from __future__ import annotations
 
-import os
 from typing import List, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pdtable_spark.frame import local_frame
+from pdtable_spark.io.fs import exists, filesystem, list_files
 
 
 def upsert_parquet(
@@ -65,16 +74,13 @@ def compact_parquet(
 ) -> str:
     """Rewrite a many-small-files dataset into ~``target_file_bytes`` files.
 
-    File count = ceil(on-disk bytes / target); coalesce-style repartition
-    (round-robin) balances rows.  Run it on a partition directory after
-    each streaming-ingest window, not on the whole lake.
+    File count = ceil(data-file bytes / target), the bytes of the files
+    Spark reads (:func:`~pdtable_spark.io.fs.list_files`, so sidecars do not
+    count); coalesce-style repartition (round-robin) balances rows.  Run it
+    on a partition directory after each streaming-ingest window, not on the
+    whole lake.
     """
-    size = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet") or f.startswith("part-")
-    )
+    size = sum(list_files(path).values())
     n_files = max(1, -(-size // target_file_bytes))
     out = out_path or path.rstrip("/") + ".compacted"
     spark.read.parquet(path).repartition(n_files).write.mode("overwrite").parquet(out)
@@ -322,12 +328,7 @@ def optimize_zorder(
     curve.  ``curve="hilbert"`` (2-D only) rides through to the write —
     the adjacency-preserving layout with the same one-copy cost.
     """
-    size = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet") or f.startswith("part-")
-    )
+    size = sum(list_files(path).values())
     n_files = max(1, -(-size // target_file_bytes))
     out = out_path or path.rstrip("/") + ".zordered"
     got = write_zordered_parquet(
@@ -345,10 +346,11 @@ def optimize_zorder(
 def clustering_stats(
     spark: SparkSession, path: str, cols: Sequence[str]
 ) -> DataFrame:
-    """The pruning certificate for a clustered layout: per part-file
-    min/max of ``cols`` — exactly the footer stats a reader prunes on —
-    via the ``_metadata.file_path`` hidden column (one scan of just those
-    columns, one file-count-bounded aggregate).
+    """The pruning certificate for a clustered layout: per data file,
+    ``file``, ``n_rows`` and the min/max of ``cols`` (``min_c``, ``max_c``)
+    — exactly the footer stats a reader prunes on, read from those footers
+    on the driver (:func:`_file_stats`), so the frame costs no Spark job
+    unless a column has no usable footer statistics.
 
     A predicate ``c BETWEEN a AND b`` can skip every file whose
     ``[min_c, max_c]`` misses ``[a, b]``, so
@@ -356,14 +358,122 @@ def clustering_stats(
     in files.  Tests assert the Z-ordered layout beats a linear sort on
     the non-leading column and beats round-robin on every column.
     """
+    # an Arrow table plans as a LocalTableScan, like frame.local_frame
+    return spark.createDataFrame(_file_stats(spark, path, list(list_files(path)), cols))
+
+
+def _read_footer(file: str):
+    """The parquet footer (``FileMetaData``) of one data file."""
+    import pyarrow.parquet as pq
+
+    fs, inner = filesystem(file)
+    return pq.read_metadata(inner, filesystem=fs)
+
+
+def _spark_schema(meta) -> Optional[T.StructType]:
+    """The schema Spark wrote into a data file's footer, or ``None`` for a
+    file another writer made.  Spark infers a lake's schema from one such
+    footer, so a relation given this schema reads the same columns without
+    the inference job."""
+    import json
+
+    stored = (meta.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    return T.StructType.fromJson(json.loads(stored)) if stored else None
+
+
+#: Spark types whose parquet footer min/max equal Spark's ``min``/``max``
+#: whatever wrote the file (``tests/test_property.py`` checks them against
+#: Spark); other columns take theirs from Spark.  Float and double are
+#: left out: writers disagree on NaN (Arrow's writer leaves NaN out of the
+#: statistics, where Spark's ``max`` returns it), and a footer cannot show
+#: whether its chunk held one.
+_FOOTER_TYPES = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.StringType, T.DateType,
+)
+
+
+def _chunk_bounds(chunks, usable: bool):
+    """``(min, max)`` over one column's row-group statistics (``(None,
+    None)`` when every chunk is all NULL), or ``None`` when a chunk may
+    hold non-NULL values but has no usable min/max."""
+    lo = hi = None
+    for s in chunks:
+        if s is not None and s.has_min_max and usable:
+            lo = s.min if lo is None else min(lo, s.min)
+            hi = s.max if hi is None else max(hi, s.max)
+        elif s is None or not s.has_null_count or s.num_values > 0:
+            return None
+    return lo, hi
+
+
+def _file_stats(spark: SparkSession, path: str, files: List[str], cols: Sequence[str]):
+    """The :func:`clustering_stats` rows of ``files`` (data files of the
+    lake at ``path``), in file order, as an Arrow table.
+
+    Each row comes from the file's parquet footer: ``n_rows`` is its row
+    count and each bound combines the row groups' statistics.  A zero-row
+    file gets ``n_rows = 0`` and NULL bounds, an all-NULL column NULL
+    bounds.  Where a row group may hold non-NULL values without usable
+    footer min/max (Spark's INT96 timestamps, writers that skip
+    statistics, types outside ``_FOOTER_TYPES``), just those files and
+    columns take Spark's ``min``/``max`` from one scan.  Column types come
+    from the first file's footer, as Spark infers them.
+    """
+    import pyarrow as pa
+    from urllib.parse import unquote
+
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from pdtable_spark.frame import arrow_columns
+
     cols = list(cols)
-    df = spark.read.parquet(path).select(
-        F.col("_metadata.file_path").alias("file"), *cols
+    if not files:
+        raise ValueError(f"no data files under {path!r}")
+    metas = [_read_footer(f) for f in files]
+    lake = _spark_schema(metas[0]) or from_arrow_schema(metas[0].schema.to_arrow_schema())
+    missing = [c for c in cols if c not in lake.names]
+    if missing:
+        raise ValueError(f"{missing} are not data columns of the parquet lake at {path!r}")
+    rows, redo = {}, {}
+    for f, meta in zip(files, metas):
+        row = {"file": f, "n_rows": meta.num_rows}
+        index = {meta.schema.column(j).path: j for j in range(meta.num_columns)}
+        groups = [meta.row_group(g) for g in range(meta.num_row_groups)]
+        for c in cols:
+            chunks = [
+                g.column(index[c]).statistics for g in groups if c in index and g.num_rows
+            ]
+            bounds = _chunk_bounds(chunks, isinstance(lake[c].dataType, _FOOTER_TYPES))
+            if bounds is None:
+                redo.setdefault(f, []).append(c)
+                bounds = (None, None)
+            row[f"min_{c}"], row[f"max_{c}"] = bounds
+        rows[f] = row
+    if redo:
+        redo_cols = [c for c in cols if any(c in cs for cs in redo.values())]
+        scan = (
+            _scan(spark, path, list(redo), files)
+            .groupBy(F.col("_metadata.file_path").alias("file"))
+            .agg(
+                *[F.min(c).alias(f"min_{c}") for c in redo_cols],
+                *[F.max(c).alias(f"max_{c}") for c in redo_cols],
+            )
+        )
+        # _metadata.file_path is a percent-encoded URI; a file the scan
+        # finds no row for keeps NULL bounds, which never prune
+        got = {_norm_file(unquote(r["file"])): r for r in scan.collect()}
+        for f, file_cols in redo.items():
+            hit = got.get(_norm_file(f))
+            if hit is not None:
+                rows[f].update({k: hit[k] for c in file_cols for k in (f"min_{c}", f"max_{c}")})
+    schema = T.StructType(
+        [T.StructField("file", T.StringType()), T.StructField("n_rows", T.LongType())]
+        + [T.StructField(f"{b}_{c}", lake[c].dataType) for b in ("min", "max") for c in cols]
     )
-    return df.groupBy("file").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        *[F.min(c).alias(f"min_{c}") for c in cols],
-        *[F.max(c).alias(f"max_{c}") for c in cols],
+    return pa.table(
+        arrow_columns(schema, [[r[n] for r in rows.values()] for n in schema.names]),
+        names=schema.names,
     )
 
 
@@ -395,54 +505,39 @@ def _zone_map_dir(path: str) -> str:
 
 
 def write_zone_map(spark: SparkSession, path: str, cols: Sequence[str]) -> int:
-    """Persist the pruning certificate: compute :func:`clustering_stats`
-    for ``cols`` ONCE at write/optimize time and store the per-file
-    min/max rows as a sidecar under ``{path}/_zone_map`` — the plain-
-    parquet spelling of an Iceberg/Delta stats manifest.  Repeated
-    :func:`pruned_read` / :func:`pruned_semi_read` calls then consult
-    the KB-sized sidecar instead of re-scanning the predicate columns
-    of the whole lake (which, on a 100 TB dataset read many times,
-    would spend the pruning win on building the certificate).
+    """Persist the pruning certificate: the :func:`clustering_stats` rows
+    for ``cols``, read from the data files' parquet footers, stored as a
+    one-file parquet sidecar under ``{path}/_zone_map`` — the plain-
+    parquet spelling of an Iceberg/Delta stats manifest.  Both the footer
+    reads and the sidecar write run on the driver, so the build starts no
+    Spark job unless a column lacks footer statistics.  Repeated
+    :func:`pruned_read` / :func:`pruned_semi_read` calls then consult the
+    KB-sized sidecar instead of opening every footer of the lake again.
 
-    Returns the number of files covered.  Re-run (or
-    :func:`refresh_zone_map`) after appends/compactions — readers
-    validate coverage and fail loudly on a stale sidecar rather than
-    silently pruning against it.
+    Returns the number of files covered (zero-row files included, with
+    ``n_rows = 0`` and NULL stats).  Re-run (or :func:`refresh_zone_map`)
+    after appends/compactions — readers validate coverage and fail loudly
+    on a stale sidecar rather than silently pruning against it.
     """
-    cols = list(cols)
-    zdir = _zone_map_dir(path)
-    stats = clustering_stats(spark, path, cols)
-    # write the distributed frame directly: rows the cluster already
-    # holds need no collect and no driver-built frame
-    covered = _observed_sidecar_write(stats, zdir + ".new", coalesce=True)
-    current = _data_files(spark, path)
-    n_cov, n_add = _append_empty_file_rows(
-        spark,
-        zdir + ".new",
-        current,
-        {"n_rows": 0},
-        schema=stats.schema,
-        covered=covered,
-    )
-    _promote_sidecar(spark, zdir, "write_zone_map")
-    _advance_manifest_if_present(spark, path, current)
-    return n_cov + n_add
+    files = list(list_files(path))
+    table = _file_stats(spark, path, files, cols)
+    _write_sidecar(spark, _zone_map_dir(path), table, "write_zone_map")
+    _advance_manifest_if_present(spark, path, set(files))
+    return table.num_rows
 
 
-def _observed_sidecar_write(df: DataFrame, new_dir: str, coalesce: bool = False):
-    """Write a sidecar frame to ``new_dir`` while collecting its DISTINCT
-    ``file`` values inside the SAME job (``Observation`` +
-    ``collect_set`` — an aggregate whose state is file-count-bounded,
-    the same bound the read-back census relied on).  Returns the covered
-    file list, sparing every sidecar writer one read-back job over the
-    artifact it just wrote (r14, guide §1.2 fewer passes)."""
+def _observed_sidecar_write(df: DataFrame, new_dir: str):
+    """Write a Bloom sidecar frame to ``new_dir`` while collecting its
+    DISTINCT ``file`` values inside the SAME job (``Observation`` +
+    ``collect_set`` — an aggregate whose state is file-count-bounded).
+    Returns the covered file list, sparing the writer one read-back job
+    over the artifact it just wrote."""
     from pyspark.sql import Observation
 
     obs = Observation()
-    out = df.observe(obs, F.collect_set("file").alias("files"))
-    if coalesce:
-        out = out.coalesce(1)
-    out.write.mode("overwrite").parquet(new_dir)
+    df.observe(obs, F.collect_set("file").alias("files")).write.mode(
+        "overwrite"
+    ).parquet(new_dir)
     return obs.get["files"]
 
 
@@ -455,96 +550,39 @@ def _norm_file(f: str) -> str:
     return re.sub("^file:/+", "/", f)
 
 
-def _is_local_path(path: str) -> bool:
-    """True when ``path`` is served by the local filesystem — a bare path
-    or an explicit ``file:`` URI.  Gates the driver-side fast paths below
-    (``os.scandir`` listings, pyarrow sidecar reads): on remote schemes
-    (hdfs/s3/...) everything falls back to the Hadoop-FS / Spark
-    spellings unchanged."""
-    return "://" not in path or path.startswith("file:")
+def _data_files(path: str) -> set:
+    """The lake's current data-file set: the files ``spark.read.parquet``
+    reads under ``path``, as :func:`~pdtable_spark.io.fs.list_files` lists
+    them (recursive, Spark's hiding rule, so ``_zone_map``/``_manifest``/
+    ``_SUCCESS`` style entries are excluded; local paths absolute, remote
+    ones with their URI prefix)."""
+    return set(list_files(path))
 
 
-def _should_hide(name: str) -> bool:
-    """Spark's ``shouldFilterOutPathName`` hiding rule, mirrored exactly
-    (ADVICE r14): underscore-prefixed names are hidden ONLY when they
-    carry no ``=`` (so partition-style ``_foo=1`` directories stay
-    visible, as they are to ``spark.read``), dot-prefixed names and
-    ``*._COPYING_`` temp files are always hidden.  The hand-rolled
-    ``startswith('_')`` rule diverged on both counts, so the sidecar
-    census could disagree with what Spark actually scans."""
-    return (
-        (name.startswith("_") and "=" not in name)
-        or name.startswith(".")
-        or name.endswith("._COPYING_")
-    )
+def _read_sidecar(sidecar_dir: str):
+    """A file-count-bounded sidecar (zone map, manifest) read on the
+    driver as an Arrow table, or ``None`` when there is none.  Every call
+    re-reads the persisted bytes; nothing is cached.  Not for the Bloom
+    sidecar, whose row count grows with key positions, not files."""
+    import pyarrow.parquet as pq
 
-
-def _data_files(spark: SparkSession, path: str) -> set:
-    """The lake's current data-file set, normalized via :func:`_norm_file`.
-
-    Recursive listing with Spark's FileIndex hiding rule
-    (:func:`_should_hide`, so ``_zone_map``/``_manifest``/``_SUCCESS``
-    style entries are excluded) — the same file set
-    ``spark.read.parquet(path).inputFiles()`` returns (equivalence
-    measured on the 64-dir lifecycle lakes), minus that spelling's
-    per-call relation build + parquet footer/schema read (r14, guide
-    §6).  Local paths walk via ``os.scandir`` — the Hadoop-FS spelling
-    costs ~4 py4j round-trips per directory entry, measured ~0.9 s for
-    a 16-file lifecycle lake vs ~1 ms here (r15, guide §7.3 driver
-    work); remote schemes keep the Hadoop-FS walk."""
-    if _is_local_path(path):
-        root = _norm_file(path)
-        out = set()
-        stack = [root]
-        while stack:
-            p = stack.pop()
-            with os.scandir(p) as entries:
-                for e in entries:
-                    if _should_hide(e.name):
-                        continue
-                    if e.is_dir(follow_symlinks=True):
-                        stack.append(e.path)
-                    else:
-                        out.add(e.path)
-        return out
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    out = set()
-    stack = [jpath]
-    while stack:
-        p = stack.pop()
-        for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if _should_hide(name):
-                continue
-            if st.isDirectory():
-                stack.append(st.getPath())
-            else:
-                out.add(_norm_file(st.getPath().toString()))
-    return out
-
-
-def _local_sidecar_rows(spark: SparkSession, sidecar_dir: str):
-    """Driver-side read of a FILE-COUNT-BOUNDED local sidecar (zone map /
-    manifest — one row per data file by construction) as a list of
-    ``{column: value}`` dicts, or ``None`` when the fast path does not
-    apply (remote scheme, pyarrow missing/failed — callers then run the
-    usual Spark collect).  A KB-sized artifact does not need a Spark
-    job to reach the driver: the collect it replaces cost a relation
-    build (footer/schema inference) plus 1-2 scheduler round-trips per
-    certificate read (r15, guide §7.3 driver work).  Values are read
-    from the SAME parquet bytes the Spark collect would scan — nothing
-    is cached; every call re-reads the artifact.  NOT for the Bloom
-    sidecar, whose row count is position-, not file-bounded."""
-    if not _is_local_path(sidecar_dir):
+    if not exists(sidecar_dir):
         return None
-    try:
-        import pyarrow.parquet as pq
+    fs, inner = filesystem(sidecar_dir)
+    return pq.read_table(inner, filesystem=fs)
 
-        return pq.read_table(_norm_file(sidecar_dir)).to_pylist()
-    except Exception:
-        return None
+
+def _write_sidecar(spark: SparkSession, live_dir: str, table, fn_name: str) -> None:
+    """Write the Arrow ``table`` on the driver as the one part file of
+    ``{live_dir}.new`` (cleared first: a crashed build may have left it)
+    and promote it with :func:`_promote_sidecar`."""
+    import pyarrow.parquet as pq
+
+    fs, inner = filesystem(live_dir + ".new")
+    fs.delete_dir_contents(inner, missing_dir_ok=True)
+    fs.create_dir(inner)
+    pq.write_table(table, inner + "/part-00000.parquet", filesystem=fs)
+    _promote_sidecar(spark, live_dir, fn_name)
 
 
 def _norm_file_col(c: Column) -> Column:
@@ -571,8 +609,8 @@ def _snapshot_frame(spark: SparkSession, values, name: str, dtype) -> DataFrame:
 def _keep_covered_rows(
     spark: SparkSession, sidecar: DataFrame, current: set
 ) -> DataFrame:
-    """Sidecar rows whose data file still exists — the kept-file filter
-    both incremental refreshes share, spelled as a broadcast LEFT SEMI
+    """Bloom sidecar rows whose data file still exists — the kept-file
+    filter of :func:`refresh_bloom_sidecar`, spelled as a broadcast LEFT SEMI
     join against the :func:`_snapshot_frame` of the current listing so
     the plan carries ONE small relation instead of a per-file ``In``
     literal (file lists are inherently driver-sized in Spark — the
@@ -627,7 +665,7 @@ def write_file_manifest(spark: SparkSession, path: str) -> dict:
     served.  Returns ``{"generation", "n_files", "n_added",
     "n_removed"}`` (the diff vs the previous generation).
     """
-    current = _data_files(spark, path)
+    current = _data_files(path)
     prev = _manifest_snapshot(spark, path)
     prev_files, prev_gen = prev if prev is not None else (set(), -1)
     gen = prev_gen + 1
@@ -644,77 +682,32 @@ def _write_manifest(
     spark: SparkSession, path: str, files: set, generation: int
 ) -> None:
     """The one manifest write path (shared by :func:`write_file_manifest`
-    and the maintenance-op advance, so the two can never drift): build
-    the snapshot frame, stamp the generation, land under ``.new`` and
-    promote via the crash-safe swap.
+    and the maintenance-op advance, so the two can never drift): the
+    sorted file set stamped with its generation (``file`` string,
+    ``generation`` long), written on the driver and promoted via the
+    crash-safe ``.new`` → swap (:func:`_write_sidecar`)."""
+    import pyarrow as pa
 
-    Local lakes write the KB-sized artifact driver-side through pyarrow
-    (identical columns/types: ``file`` string, ``generation`` long,
-    rows sorted like the frame spelling) — a Spark write job for a
-    driver-held file list is pure scheduler latency (r15, guide §7.3);
-    the crash-safe ``.new`` → swap is byte-for-byte the same.  Remote
-    schemes keep the Spark write."""
-    mdir = _manifest_dir(path)
-    if _is_local_path(mdir):
-        try:
-            import shutil
-
-            import pyarrow as pa
-            import pyarrow.parquet as pq
-
-            new_dir = _norm_file(mdir) + ".new"
-            shutil.rmtree(new_dir, ignore_errors=True)
-            os.makedirs(new_dir, exist_ok=True)
-            ordered = sorted(files)
-            table = pa.table(
-                {
-                    "file": pa.array(ordered, pa.string()),
-                    "generation": pa.array(
-                        [int(generation)] * len(ordered), pa.int64()
-                    ),
-                }
-            )
-            pq.write_table(table, os.path.join(new_dir, "part-00000.parquet"))
-            _promote_sidecar(spark, mdir, "_write_manifest")
-            return
-        except ImportError:
-            pass  # no pyarrow: fall through to the Spark write
-    from pyspark.sql.types import StringType
-
-    frame = _snapshot_frame(
-        spark, sorted(files), "file", StringType()
-    ).withColumn("generation", F.lit(generation).cast("long"))
-    frame.coalesce(1).write.mode("overwrite").parquet(mdir + ".new")
-    _promote_sidecar(spark, mdir, "_write_manifest")
+    ordered = sorted(files)
+    table = pa.table(
+        {
+            "file": pa.array(ordered, pa.string()),
+            "generation": pa.array([int(generation)] * len(ordered), pa.int64()),
+        }
+    )
+    _write_sidecar(spark, _manifest_dir(path), table, "_write_manifest")
 
 
 def _manifest_snapshot(spark: SparkSession, path: str):
     """``(normalized file set, generation)`` from the manifest, or
     ``None`` when the lake has no manifest (readers then fall back to
-    the live listing).
-
-    Local manifests read driver-side (pyarrow — the artifact is
-    file-count-bounded KBs; the Spark collect it replaces cost a
-    relation build + 1-2 jobs per certificate read, r15 guide §7.3);
-    remote schemes keep the Spark read.  Either way every call re-reads
-    the persisted artifact — no snapshot is cached."""
-    mdir = _manifest_dir(path)
-    if _is_local_path(mdir):
-        if not os.path.isdir(_norm_file(mdir)):
-            return None
-        rows = _local_sidecar_rows(spark, mdir)
-        if rows is not None:
-            files = {_norm_file(r["file"]) for r in rows}
-            gen = max((r["generation"] for r in rows), default=-1)
-            return files, int(gen)
-    jvm = spark._jvm
-    mpath = jvm.org.apache.hadoop.fs.Path(mdir)
-    fs = mpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(mpath):
+    the live listing).  Read on the driver (:func:`_read_sidecar`); every
+    call re-reads the persisted artifact — no snapshot is cached."""
+    table = _read_sidecar(_manifest_dir(path))
+    if table is None:
         return None
-    rows = spark.read.parquet(mdir).collect()
-    files = {_norm_file(r["file"]) for r in rows}
-    gen = max((r["generation"] for r in rows), default=-1)
+    files = {_norm_file(f) for f in table.column("file").to_pylist()}
+    gen = max(table.column("generation").to_pylist(), default=-1)
     return files, int(gen)
 
 
@@ -728,7 +721,7 @@ def _validation_snapshot(spark: SparkSession, path: str) -> tuple:
     if snap is not None:
         files, gen = snap
         return files, f"manifest generation {gen}"
-    return _data_files(spark, path), "live listing"
+    return _data_files(path), "live listing"
 
 
 def _advance_manifest_if_present(
@@ -801,47 +794,22 @@ def _append_empty_file_rows(
     new_dir: str,
     current: set,
     fill: dict,
-    schema=None,
-    covered=None,
+    schema: T.StructType,
+    covered,
 ) -> tuple:
-    """Record data files the stats/positions pass could not see — a
+    """Record data files the Bloom positions pass could not see — a
     ZERO-ROW part-file (e.g. written by an empty-frame overwrite)
-    appears in the FileIndex listing but yields no aggregate row, so
-    without a sentinel the coverage validation in :func:`zone_map` /
-    :func:`bloom_pruned_read` would report STALE forever and no refresh
-    could repair it.  Appends one row per uncovered file to the
-    pre-promotion ``.new`` sidecar: ``fill`` gives the non-file column
-    values (NULL stats / NULL position — conservative for range pruning,
-    never-matching for Bloom probes, correct either way for a file that
-    holds no rows).  Returns ``(n_covered, n_added)`` so callers reuse
-    this scan as their file count instead of re-reading the sidecar; the
-    driver-side sentinel frame is bounded by the count of EMPTY files
-    (normally zero, so the common case adds no extra write job).
-
-    ``schema``: every caller just WROTE ``new_dir`` and holds its frame,
-    so passing that frame's schema skips the footer/schema-inference
-    step of the relation build here (~100 ms per maintenance op at
-    local scale — r14, guide §6 file-listing/driver costs).
-
-    ``covered``: the caller can hand over the covered-file list it
-    already collected DURING the write job via ``Observation`` +
-    ``collect_set(file)`` (see the four sidecar writers) — then this
-    helper launches NO job at all in the common no-missing-files case
-    (was: one read-back job over the just-written sidecar, ~0.25 s per
-    maintenance op at local scale — r14, guide §1.2 fewer passes).  The
-    set is file-count-bounded either way: the read-back path distincts
-    before collecting for exactly that reason."""
-    if covered is None:
-        rd = spark.read.schema(schema) if schema is not None else spark.read
-        sidecar = rd.parquet(new_dir)
-        schema = sidecar.schema
-        # distinct BEFORE the collect: the Bloom sidecar holds one row
-        # per (file, position) — collecting the raw column would pull
-        # the whole position relation to the driver, not the
-        # file-count-bounded list
-        covered = [
-            r["file"] for r in sidecar.select("file").distinct().collect()
-        ]
+    appears in the listing but yields no position row, so without a
+    sentinel the coverage validation in :func:`bloom_pruned_read` would
+    report STALE forever and no refresh could repair it.  Appends one row
+    per file of ``current`` missing from ``covered`` (the file list the
+    write job collected, see :func:`_observed_sidecar_write`) to the
+    pre-promotion ``.new`` sidecar of ``schema``: ``fill`` gives the
+    non-file column values (NULL position, never matching a probe).
+    Returns ``(n_covered, n_added)``; the sentinel frame is bounded by the
+    count of EMPTY files, normally zero, so the common case adds no job.
+    The zone map needs none of this: its rows come from footers, and a
+    zero-row file's footer gives its row."""
     covered = {_norm_file(f) for f in covered}
     missing = sorted(current - covered)
     if missing:
@@ -856,67 +824,37 @@ def _append_empty_file_rows(
 
 
 def refresh_zone_map(spark: SparkSession, path: str, cols: Sequence[str]) -> dict:
-    """Incremental sidecar maintenance: stat ONLY files the sidecar does
-    not cover yet (appends), drop rows for files that no longer exist
-    (compaction/vacuum), keep everything else untouched — so keeping
-    the certificate fresh costs one scan of the NEW data, not the lake.
-    Builds from scratch when no sidecar exists.  Returns
-    ``{"n_added", "n_removed", "n_files"}``.
+    """Incremental sidecar maintenance: read the footers of ONLY the files
+    the sidecar does not cover yet (appends), drop rows for files that no
+    longer exist (compaction/vacuum), keep every other row as it is — so
+    keeping the certificate fresh costs one footer read per NEW file, not
+    a pass over the lake.  Builds from scratch when no sidecar exists.
+    Returns ``{"n_added", "n_removed", "n_files"}``.
     """
-    cols = list(cols)
+    import pyarrow as pa
+
     zdir = _zone_map_dir(path)
-    current = _data_files(spark, path)
-    jvm = spark._jvm
-    zpath = jvm.org.apache.hadoop.fs.Path(zdir)
-    fs = zpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(zpath):
+    old = _read_sidecar(zdir)
+    if old is None:
         n = write_zone_map(spark, path, cols)
         return {"n_added": n, "n_removed": 0, "n_files": n}
-    sidecar = spark.read.parquet(zdir)  # ONE relation: reused below
-    # file census driver-side on local lakes (file-count-bounded rows;
-    # replaces a collect job per refresh — r15, guide §7.3)
-    _rows = _local_sidecar_rows(spark, zdir)
-    if _rows is None:
-        _rows = sidecar.select("file").collect()
-    old_files = [r["file"] for r in _rows]
-    keep_files = [f for f in old_files if _norm_file(f) in current]
-    known = {_norm_file(f) for f in keep_files}
-    new_files = sorted(current - known)
-    # kept rows via the shared broadcast-semi-join spelling: both sides
-    # stay JVM lineages AND the plan stays O(1) in the file count
-    # (see _keep_covered_rows)
-    merged = _keep_covered_rows(spark, sidecar, current)
-    if new_files:
-        added = (
-            spark.read.option("basePath", path)
-            .parquet(*new_files)
-            .select(F.col("_metadata.file_path").alias("file"), *cols)
-            .groupBy("file")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                *[F.min(c).alias(f"min_{c}") for c in cols],
-                *[F.max(c).alias(f"max_{c}") for c in cols],
-            )
-        )
-        merged = merged.unionByName(added)
-    covered = _observed_sidecar_write(merged, zdir + ".new", coalesce=True)
-    # zero-row appends never produce a stats row — sentinel them so the
-    # coverage validation in zone_map() stays exact (see helper)
-    n_cov, n_add = _append_empty_file_rows(
-        spark,
-        zdir + ".new",
-        current,
-        {"n_rows": 0},
-        schema=merged.schema,
-        covered=covered,
+    files = list(list_files(path))
+    current = set(files)
+    kept = old.filter(
+        pa.array([_norm_file(f) in current for f in old.column("file").to_pylist()])
     )
-    _promote_sidecar(spark, zdir, "refresh_zone_map")
+    known = {_norm_file(f) for f in kept.column("file").to_pylist()}
+    new_files = [f for f in files if f not in known]
+    table = kept
+    if new_files:
+        added = _file_stats(spark, path, new_files, cols)
+        table = pa.concat_tables([kept.cast(added.schema), added])
+    _write_sidecar(spark, zdir, table, "refresh_zone_map")
     _advance_manifest_if_present(spark, path, current)
-    n_total = n_cov + n_add
     return {
-        "n_added": n_total - len(keep_files),
-        "n_removed": len(old_files) - len(keep_files),
-        "n_files": n_total,
+        "n_added": len(new_files),
+        "n_removed": old.num_rows - kept.num_rows,
+        "n_files": table.num_rows,
     }
 
 
@@ -930,28 +868,25 @@ def zone_map(spark: SparkSession, path: str, cols: Sequence[str]) -> DataFrame:
     (post-append) or names vanished ones (post-compaction) raises
     loudly with the refresh instruction — pruning against stale stats
     would silently skip files that now contain matches.
+
+    The sidecar is read on the driver and returned as a driver-held
+    frame of exactly the rows validated (a ``LocalTableScan``: loading
+    and collecting it start no Spark job).
     """
-    cols = list(cols)
     zdir = _zone_map_dir(path)
-    stats = spark.read.parquet(zdir)
-    missing = [c for c in cols if f"min_{c}" not in stats.columns]
+    table = _read_sidecar(zdir)
+    if table is None:
+        raise FileNotFoundError(
+            f"zone_map: no sidecar at {zdir!r} — build it with "
+            "write_zone_map(spark, path, cols)"
+        )
+    missing = [c for c in cols if f"min_{c}" not in table.column_names]
     if missing:
         raise ValueError(
             f"zone_map: sidecar at {zdir!r} has no stats for {missing} — "
             "rebuild with write_zone_map(spark, path, cols)"
         )
-    # the sidecar is file-count-bounded by construction, so its rows are
-    # pulled ONCE here (driver-side pyarrow on local lakes, a collect
-    # otherwise), validate coverage, and ride the returned frame as
-    # ``_pdtable_stats_rows`` — pruned_read/pruned_semi_read reuse them
-    # instead of re-collecting the same artifact (r15, guide §1.2 fewer
-    # passes: one certificate read used to cost two collects plus this
-    # validation's own).  The lazy parquet relation is still what is
-    # returned, so any other consumer sees the unchanged frame.
-    rows = _local_sidecar_rows(spark, zdir)
-    if rows is None:
-        rows = stats.collect()
-    covered = {_norm_file(r["file"]) for r in rows}
+    covered = {_norm_file(f) for f in table.column("file").to_pylist()}
     current, source = _validation_snapshot(spark, path)
     if covered != current:
         raise ValueError(
@@ -960,8 +895,7 @@ def zone_map(spark: SparkSession, path: str, cols: Sequence[str]) -> DataFrame:
             f"{len(covered - current)} vanished) — run "
             "refresh_zone_map(spark, path, cols) first"
         )
-    stats._pdtable_stats_rows = rows
-    return stats
+    return spark.createDataFrame(table)
 
 
 def write_bloom_sidecar(
@@ -994,7 +928,7 @@ def write_bloom_sidecar(
     out = _bloom_dir(path, key_col)
     pos = _bloom_position_rows(spark, path, None, key_col, num_hashes, num_bits)
     covered = _observed_sidecar_write(pos, out + ".new")
-    current = _data_files(spark, path)
+    current = _data_files(path)
     n_cov, n_add = _append_empty_file_rows(
         spark,
         out + ".new",
@@ -1069,11 +1003,8 @@ def refresh_bloom_sidecar(
     Returns ``{"n_added_files", "n_removed_files", "n_files"}``.
     """
     out = _bloom_dir(path, key_col)
-    current = _data_files(spark, path)
-    jvm = spark._jvm
-    bpath = jvm.org.apache.hadoop.fs.Path(out)
-    fs = bpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(bpath):
+    current = _data_files(path)
+    if not exists(out):
         n = write_bloom_sidecar(spark, path, key_col, num_hashes, num_bits)
         return {"n_added_files": n, "n_removed_files": 0, "n_files": n}
     sidecar = spark.read.parquet(out)
@@ -1269,10 +1200,7 @@ def bloom_pruned_read(
         "n_files_skipped": len(all_files) - len(keep),
         "n_keys": len(keys),
     }
-    if not keep:
-        df = spark.read.parquet(path).where(F.lit(False))
-    else:
-        df = spark.read.option("basePath", path).parquet(*keep)
+    df = _scan(spark, path, keep, sorted(all_files))
     # residual filter from the COLLECTED key snapshot — frozen at call
     # time either way, so a mutable/non-deterministic keys_df cannot
     # diverge from the file set this call pruned on.  Small sets stay an
@@ -1306,13 +1234,24 @@ def _residual_key_filter(
     return df.join(F.broadcast(kframe), key_col, "left_semi").select(*df.columns)
 
 
+def _scan(spark: SparkSession, path: str, keep: List[str], files: List[str]) -> DataFrame:
+    """The lake at ``path`` read from just the ``keep`` files (an empty
+    frame when there are none) — the scan every pruned read returns.
+    When the footer of one of ``files`` holds Spark's schema, the relation
+    takes it, so building the frame starts no schema-inference job."""
+    rd = spark.read.option("basePath", path)
+    schema = _spark_schema(_read_footer((keep or files)[0])) if files else None
+    if schema is not None:
+        rd = rd.schema(schema)
+    return rd.parquet(*keep) if keep else rd.parquet(path).where(F.lit(False))
+
+
 def _stats_row_intersects(row, predicates: dict) -> bool:
     """Driver-side spelling of :func:`prunable_files`'s keep test for ONE
     collected stats row — same conservative NULL handling (a file whose
-    min/max is unknown cannot be ruled out).  Exists because a
-    Python-local DataFrame round-trip just to reuse the column spelling
-    costs a Python worker per task (see ``write_zone_map``); parity
-    with ``prunable_files`` is pinned in pytest."""
+    min/max is unknown cannot be ruled out).  Exists because the rows
+    are already on the driver, where filtering them in Spark would cost a
+    job; parity with ``prunable_files`` is pinned in pytest."""
     for c, (lo, hi) in predicates.items():
         mn, mx = row[f"min_{c}"], row[f"max_{c}"]
         # SQL three-valued parity: a KNOWN bound can prove a miss even
@@ -1335,9 +1274,9 @@ def pruned_read(
     ``predicates`` (``{col: (lo, hi)}``), then apply the exact predicate
     as the residual filter — the plain-parquet spelling of a
     Delta/Iceberg data-skipping read, where the stats manifest (here:
-    one :func:`clustering_stats` pass) decides file membership BEFORE
-    the scan instead of relying on per-row-group footer checks inside
-    an open-every-file scan.
+    the footer stats of :func:`clustering_stats`) decides file membership
+    BEFORE the scan instead of relying on per-row-group footer checks
+    inside an open-every-file scan.
 
     Returns ``(df, report)``: ``df`` is the filtered frame (plus
     ``columns`` pruning when given), ``report`` is ``{"n_files_total",
@@ -1347,25 +1286,22 @@ def pruned_read(
     Z-ordered layout with a selective predicate ``n_files_skipped > 0``
     is the whole point.
 
-    Scale posture: the stats pass reads just the predicate columns and
-    aggregates to ONE ROW PER FILE, and only that file-count-bounded
-    frame is collected (run per partition directory at 100 TB, like
-    every maintenance op here).  On a lake read MANY times, pass
+    Scale posture: without ``stats`` the certificate is one footer read
+    per data file on the driver — no Spark job, and no data page read to
+    decide the file set (run per partition directory at 100 TB, like every
+    maintenance op here).  On a lake read MANY times, pass
     ``stats=zone_map(spark, path, cols)`` — the persisted sidecar from
-    :func:`write_zone_map` — and no data column is scanned at all to
-    decide the file set.  The keep test is
+    :func:`write_zone_map` — and the decision reads one KB-sized sidecar
+    instead of every footer.  The returned frame is typed from one data
+    file's footer (:func:`_scan`), so building it starts no job either.
+    The keep test is
     :func:`_stats_row_intersects`, the driver-side spelling of
     :func:`prunable_files`, with pytest pinning the two to identical
     answers.
     """
     if stats is None:
         stats = clustering_stats(spark, path, list(predicates))
-    # zone_map() already pulled the file-count-bounded rows while
-    # validating coverage — reuse them instead of a second collect of
-    # the same artifact (r15); any other stats frame collects as before
-    rows = getattr(stats, "_pdtable_stats_rows", None)
-    if rows is None:
-        rows = stats.collect()
+    rows = stats.collect()
     keep = [
         r["file"] for r in rows if _stats_row_intersects(r, predicates)
     ]
@@ -1374,10 +1310,7 @@ def pruned_read(
         "n_files_read": len(keep),
         "n_files_skipped": len(rows) - len(keep),
     }
-    if not keep:
-        df = spark.read.parquet(path).where(F.lit(False))
-    else:
-        df = spark.read.option("basePath", path).parquet(*keep)
+    df = _scan(spark, path, keep, [r["file"] for r in rows])
     for c, (lo, hi) in predicates.items():
         df = df.filter(F.col(c).between(F.lit(lo), F.lit(hi)))
     if columns is not None:
@@ -1425,9 +1358,7 @@ def pruned_semi_read(
     keys = sorted(r[0] for r in rows if r[0] is not None)
     if stats is None:
         stats = clustering_stats(spark, path, [key_col])
-    # reuse zone_map()'s already-pulled rows (see pruned_read)
-    cached = getattr(stats, "_pdtable_stats_rows", None)
-    stats = cached if cached is not None else stats.collect()
+    stats = stats.collect()
     import bisect
 
     keep = []
@@ -1445,10 +1376,7 @@ def pruned_semi_read(
         "n_files_skipped": len(stats) - len(keep),
         "n_keys": len(keys),
     }
-    if not keep:
-        df = spark.read.parquet(path).where(F.lit(False))
-    else:
-        df = spark.read.option("basePath", path).parquet(*keep)
+    df = _scan(spark, path, keep, [r["file"] for r in stats])
     # residual from the COLLECTED key snapshot (frozen at call time, so
     # a mutable or non-deterministic keys_df cannot diverge from the
     # file set this call pruned on): In literal up to isin_threshold,
@@ -1477,33 +1405,31 @@ def lake_report(
     extremes, and how many files sit under ``small_file_bytes`` (the
     scan-overhead population :func:`compact_parquet` exists to retire).
 
-    Reads only the ``_metadata`` hidden columns plus nothing from the
-    data pages (column-pruned scan; row counts come from a per-file
-    aggregate of the same scan).  At 100 TB run it per partition
+    Sizes come from the listing and row counts from the parquet footers,
+    both on the driver: no data page is read and no Spark job runs.
+    Zero-row files count as files.  At 100 TB run it per partition
     directory like the other maintenance ops — the output is one row
     either way.
     """
-    per_file = (
-        spark.read.parquet(path)
-        .select(
-            F.col("_metadata.file_path").alias("file"),
-            F.col("_metadata.file_size").alias("bytes"),
-        )
-        .groupBy("file", "bytes")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
+    files = list_files(path)
+    sizes = list(files.values())
+    rows = [_read_footer(f).num_rows for f in files]
+    schema = T.StructType.fromDDL(
+        "n_files long, total_bytes long, total_rows long, min_file_bytes long, "
+        "max_file_bytes long, n_small_files long, min_file_rows long, "
+        "max_file_rows long"
     )
-    return per_file.agg(
-        F.count(F.lit(1)).cast("long").alias("n_files"),
-        F.sum("bytes").cast("long").alias("total_bytes"),
-        F.sum("n_rows").cast("long").alias("total_rows"),
-        F.min("bytes").cast("long").alias("min_file_bytes"),
-        F.max("bytes").cast("long").alias("max_file_bytes"),
-        F.sum(F.when(F.col("bytes") < small_file_bytes, 1).otherwise(0))
-        .cast("long")
-        .alias("n_small_files"),
-        F.min("n_rows").cast("long").alias("min_file_rows"),
-        F.max("n_rows").cast("long").alias("max_file_rows"),
-    )
+    values = [
+        len(sizes),
+        sum(sizes),
+        sum(rows),
+        min(sizes, default=None),
+        max(sizes, default=None),
+        sum(s < small_file_bytes for s in sizes),
+        min(rows, default=None),
+        max(rows, default=None),
+    ]
+    return local_frame(spark, schema, [[v] for v in values])
 
 
 def diff_snapshots(
@@ -1603,8 +1529,8 @@ def write_training_shards(
     ``n_tokens`` column exists) counts for deterministic epoch planning.
     It is computed from the written files — one read-back scan of
     corpus-local metadata — and saved next to the data as
-    ``_shard_manifest.json`` (local paths via ``open``; remote schemes via
-    the Hadoop FileSystem API, same exact filename either way).
+    ``_shard_manifest.json`` through ``pyarrow.fs`` (local paths and URIs
+    alike).
 
     Determinism note (``assignment="range"``, the default): the
     row→shard-file PERMUTATION is reproducible (it follows the
@@ -1675,25 +1601,9 @@ def write_training_shards(
         .orderBy("shard")
     )
     rows = [r.asDict() for r in manifest.collect()]
-    payload = _json.dumps(rows, indent=1, default=int)
-    if "://" in path:
-        # object-store / HDFS destination: the local open() below would
-        # write to a bogus local path — write the documented EXACT filename
-        # through the Hadoop FileSystem API (driver-sized payload), so
-        # consumers find `_shard_manifest.json`, not a directory of part
-        # files
-        spark = df.sparkSession
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path, "_shard_manifest.json")
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        stream = fs.create(jpath, True)
-        try:
-            stream.write(bytearray(payload.encode("utf-8")))
-        finally:
-            stream.close()
-    else:
-        with open(os.path.join(path, "_shard_manifest.json"), "w") as f:
-            f.write(payload)
+    fs, inner = filesystem(path)
+    with fs.open_output_stream(inner.rstrip("/") + "/_shard_manifest.json") as f:
+        f.write(_json.dumps(rows, indent=1, default=int).encode("utf-8"))
     return manifest
 
 

@@ -340,7 +340,7 @@ def dedup_normalized(spark, sf_dir):
 _SPAN_WORDS = 8
 
 _SQL_SPAN_DEDUP = f"""
-    WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\s+'), w -> w <> '') AS ws FROM documents),
+    WITH t AS (SELECT doc_id, list_filter(regexp_split_to_array(trim(text), '\\s+'), w -> w <> '') AS ws FROM documents),
     w AS (
       SELECT doc_id,
              unnest(ws) AS word,

@@ -31,6 +31,116 @@ def _sql_interleave2(b1: str, b2: str, bits: int) -> str:
 
 _ZBITS = 6  # 64 buckets/column -> 4096-key curve, 64 cells after >> 6
 
+
+def _sql_bucket(x: str, lo: str, hi: str) -> str:
+    """``maintenance.int_bucket`` as DuckDB SQL: ``x`` bucketed into
+    ``2^_ZBITS`` edges over ``[lo, hi]``, clamped."""
+    return (
+        f"LEAST({(1 << _ZBITS) - 1}, GREATEST(0,\n"
+        f"               CAST(FLOOR((({x} - {lo}) * {1 << _ZBITS}) / ({hi} - {lo} + 1.0))\n"
+        "                    AS BIGINT)))"
+    )
+
+
+#: The oracles' ``p`` CTE: the predicate band of :func:`_z_orders`.
+_SQL_BAND = """p AS (
+      SELECT lo1 + CAST(FLOOR((hi1 - lo1) * 30 / 100.0) AS BIGINT) AS ck_lo,
+             lo1 + CAST(FLOOR((hi1 - lo1) * 45 / 100.0) AS BIGINT) AS ck_hi,
+             lo2 + CAST(FLOOR((hi2 - lo2) * 40 / 100.0) AS BIGINT) AS ce_lo,
+             lo2 + CAST(FLOOR((hi2 - lo2) * 60 / 100.0) AS BIGINT) AS ce_hi
+      FROM b
+    ),"""
+
+
+def _orders(spark, sf_dir, *names):
+    """``orders`` as the lake builders' columns, in the order named:
+    ``okey`` (o_orderkey), ``ck`` (o_custkey), ``cents`` (o_totalprice in
+    integer cents — integral, so the curve keys reproduce in DuckDB) and
+    ``phase`` (o_orderkey % 2, the two writes of the append lifecycles)."""
+    spelled = {
+        "okey": F.col("o_orderkey"),
+        "ck": F.col("o_custkey"),
+        "cents": F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long"),
+        "phase": F.col("o_orderkey") % 2,
+    }
+    return load(spark, sf_dir, "orders").select(*[spelled[n].alias(n) for n in names])
+
+
+def _bounds(df, *cols):
+    """``[lo, hi]`` of each of ``cols``, flattened, from one bounded
+    min/max aggregate (the persistable bounds artifact)."""
+    row = df.agg(*[agg(c) for c in cols for agg in (F.min, F.max)]).collect()[0]
+    return [int(v) for v in row]
+
+
+def _buckets(bounds):
+    """``ck`` and ``cents`` bucketed into ``2^_ZBITS`` edges over
+    ``bounds = (lo1, hi1, lo2, hi2)``: the two curve inputs."""
+    from pdtable_spark.io import maintenance as mnt
+
+    lo1, hi1, lo2, hi2 = bounds
+    return [
+        mnt.int_bucket(F.col("ck"), lo1, hi1, _ZBITS),
+        mnt.int_bucket(F.col("cents"), lo2, hi2, _ZBITS),
+    ]
+
+
+def _z_orders(spark, sf_dir, *extra):
+    """The Z-clustered ``orders`` lake the zone-map builders certify, as
+    ``(keyed, preds)``: ``keyed`` holds ``ck``, ``cents``, the ``extra``
+    columns and ``z_file``, the coarse Z-curve cell (``zkey >> _ZBITS``,
+    one file per cell through :func:`_write_cells`); ``preds`` is the
+    conjunctive band every reader answers, 30–45 % of the ``ck`` range
+    and 40–60 % of the ``cents`` range (the oracles' ``p`` CTE)."""
+    from pdtable_spark.io import maintenance as mnt
+
+    o = _orders(spark, sf_dir, "ck", "cents", *extra)
+    lo1, hi1, lo2, hi2 = bounds = _bounds(o, "ck", "cents")
+    z = mnt.zorder_key(_buckets(bounds), _ZBITS)
+    preds = {
+        "ck": (lo1 + (hi1 - lo1) * 30 // 100, lo1 + (hi1 - lo1) * 45 // 100),
+        "cents": (lo2 + (hi2 - lo2) * 40 // 100, lo2 + (hi2 - lo2) * 60 // 100),
+    }
+    return o.withColumn("z_file", F.shiftright(z, _ZBITS)), preds
+
+
+def _write_cells(df, d, cell, mode="overwrite", n_cells=1 << _ZBITS):
+    """Write ``df`` to ``d`` as one file per value of ``cell``: each cell
+    hashes to one task, then ``partitionBy`` splits on it — a file layout
+    deterministic by construction, so the oracle can restate per-file
+    footer stats as per-cell arithmetic."""
+    df.repartition(n_cells, cell).write.mode(mode).partitionBy(cell).parquet(d)
+
+
+def _customer_keys(spark, sf_dir, lo):
+    """The dimension side of the pruned joins: customer keys from ``lo``
+    up, as ``ck``."""
+    return (
+        load(spark, sf_dir, "customer")
+        .filter(F.col("c_custkey") >= lo)
+        .select(F.col("c_custkey").alias("ck"))
+    )
+
+
+def _file_counts(rep):
+    """The file accounting of a pruned read's report."""
+    return {k: rep[k] for k in ("n_files_total", "n_files_read", "n_files_skipped")}
+
+
+def _answer(df, **counts):
+    """The oracled row of a lake builder: ``counts`` as long columns, in
+    order, then ``(n_orders, sum_cents)`` over ``df`` — the residual-
+    filtered answer, which is wrong if pruning dropped a file it should
+    have read."""
+    return df.agg(
+        F.count(F.lit(1)).cast("long").alias("n_orders"),
+        F.sum("cents").cast("long").alias("sum_cents"),
+    ).select(
+        *[F.lit(v).cast("long").alias(k) for k, v in counts.items()],
+        "n_orders",
+        "sum_cents",
+    )
+
 _SQL_LAKE_ZORDER = f"""
     WITH o AS (
       SELECT o_custkey AS ck,
@@ -43,12 +153,8 @@ _SQL_LAKE_ZORDER = f"""
       FROM o
     ),
     k AS (
-      SELECT LEAST({(1 << _ZBITS) - 1}, GREATEST(0,
-               CAST(FLOOR(((ck - lo1) * {1 << _ZBITS}) / (hi1 - lo1 + 1.0))
-                    AS BIGINT))) AS b1,
-             LEAST({(1 << _ZBITS) - 1}, GREATEST(0,
-               CAST(FLOOR(((cents - lo2) * {1 << _ZBITS}) / (hi2 - lo2 + 1.0))
-                    AS BIGINT))) AS b2,
+      SELECT {_sql_bucket('ck', 'lo1', 'hi1')} AS b1,
+             {_sql_bucket('cents', 'lo2', 'hi2')} AS b2,
              cents
       FROM o CROSS JOIN b
     ),
@@ -77,24 +183,11 @@ def lake_zorder_cells(spark, sf_dir):
     bounds artifact), then one scan + codegen bit arithmetic + one
     64-group aggregate — the profiling pass is strictly cheaper than the
     layout job it certifies (which adds only the range shuffle)."""
+
     from pdtable_spark.io import maintenance as mnt
 
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("ck"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    row = o.agg(
-        F.min("ck"), F.max("ck"), F.min("cents"), F.max("cents")
-    ).collect()[0]
-    z = mnt.zorder_key(
-        [
-            mnt.int_bucket(F.col("ck"), int(row[0]), int(row[1]), _ZBITS),
-            mnt.int_bucket(F.col("cents"), int(row[2]), int(row[3]), _ZBITS),
-        ],
-        _ZBITS,
-    )
+    o = _orders(spark, sf_dir, "ck", "cents")
+    z = mnt.zorder_key(_buckets(_bounds(o, "ck", "cents")), _ZBITS)
     return (
         o.withColumn("zkey", z)
         .groupBy(F.shiftright(F.col("zkey"), _ZBITS).alias("z_cell"))
@@ -130,12 +223,8 @@ _SQL_LAKE_PRUNED_READ = f"""
     ),
     k AS (
       SELECT ck, cents,
-             LEAST({(1 << _ZBITS) - 1}, GREATEST(0,
-               CAST(FLOOR(((ck - lo1) * {1 << _ZBITS}) / (hi1 - lo1 + 1.0))
-                    AS BIGINT))) AS b1,
-             LEAST({(1 << _ZBITS) - 1}, GREATEST(0,
-               CAST(FLOOR(((cents - lo2) * {1 << _ZBITS}) / (hi2 - lo2 + 1.0))
-                    AS BIGINT))) AS b2
+             {_sql_bucket('ck', 'lo1', 'hi1')} AS b1,
+             {_sql_bucket('cents', 'lo2', 'hi2')} AS b2
       FROM o CROSS JOIN b
     ),
     z AS (
@@ -143,13 +232,7 @@ _SQL_LAKE_PRUNED_READ = f"""
              ({_sql_interleave2('b1', 'b2', _ZBITS)}) >> {_ZBITS} AS z_file
       FROM k
     ),
-    p AS (
-      SELECT lo1 + CAST(FLOOR((hi1 - lo1) * 30 / 100.0) AS BIGINT) AS ck_lo,
-             lo1 + CAST(FLOOR((hi1 - lo1) * 45 / 100.0) AS BIGINT) AS ck_hi,
-             lo2 + CAST(FLOOR((hi2 - lo2) * 40 / 100.0) AS BIGINT) AS ce_lo,
-             lo2 + CAST(FLOOR((hi2 - lo2) * 60 / 100.0) AS BIGINT) AS ce_hi
-      FROM b
-    ),
+    {_SQL_BAND}
     fstats AS (
       SELECT z_file, MIN(ck) AS min_ck, MAX(ck) AS max_ck,
              MIN(cents) AS min_ce, MAX(cents) AS max_ce
@@ -195,42 +278,17 @@ def lake_pruned_read(spark, sf_dir):
     aggregate is wrong and the value oracle catches it.
 
     Scale shape: one bounded min/max aggregate, one clustered write
-    (the lake being certified), one file-count-bounded stats pass, then
-    a scan that opens ONLY intersecting files — the 100 TB story where
+    (the lake being certified), one footer read per file for the
+    certificate (no Spark job), then a scan that opens ONLY intersecting
+    files — the 100 TB story where
     a selective predicate touches a handful of files, not the lake.
     """
 
     from pdtable_spark.io import maintenance as mnt
 
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("ck"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    row = o.agg(
-        F.min("ck"), F.max("ck"), F.min("cents"), F.max("cents")
-    ).collect()[0]
-    lo1, hi1, lo2, hi2 = (int(v) for v in row)
-    z = mnt.zorder_key(
-        [
-            mnt.int_bucket(F.col("ck"), lo1, hi1, _ZBITS),
-            mnt.int_bucket(F.col("cents"), lo2, hi2, _ZBITS),
-        ],
-        _ZBITS,
-    )
-    keyed = o.withColumn("z_file", F.shiftright(z, _ZBITS))
+    keyed, preds = _z_orders(spark, sf_dir)
     d = scratch_dir("lakeread")
-    (
-        keyed.repartition(1 << _ZBITS, "z_file")
-        .write.mode("overwrite")
-        .partitionBy("z_file")
-        .parquet(d)
-    )
-    preds = {
-        "ck": (lo1 + (hi1 - lo1) * 30 // 100, lo1 + (hi1 - lo1) * 45 // 100),
-        "cents": (lo2 + (hi2 - lo2) * 40 // 100, lo2 + (hi2 - lo2) * 60 // 100),
-    }
+    _write_cells(keyed, d, "z_file")
     # the full manifest path: persist the certificate as the hidden
     # zone-map sidecar, load it VALIDATED, and prune from it — the read
     # decides its file set without scanning a single data column
@@ -238,16 +296,7 @@ def lake_pruned_read(spark, sf_dir):
     pruned, rep = mnt.pruned_read(
         spark, d, preds, stats=mnt.zone_map(spark, d, ["ck", "cents"])
     )
-    return pruned.agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum("cents").cast("long").alias("sum_cents"),
-    ).select(
-        F.lit(rep["n_files_total"]).cast("long").alias("n_files_total"),
-        F.lit(rep["n_files_read"]).cast("long").alias("n_files_read"),
-        F.lit(rep["n_files_skipped"]).cast("long").alias("n_files_skipped"),
-        "n_orders",
-        "sum_cents",
-    )
+    return _answer(pruned, **_file_counts(rep))
 
 
 # ---------------------------------------------------------------------------
@@ -296,12 +345,8 @@ _SQL_LAKE_HILBERT = f"""
       FROM o
     ),
     k AS (
-      SELECT LEAST({(1 << _ZBITS) - 1}, GREATEST(0,
-               CAST(FLOOR(((ck - lo1) * {1 << _ZBITS}) / (hi1 - lo1 + 1.0))
-                    AS BIGINT))) AS b1,
-             LEAST({(1 << _ZBITS) - 1}, GREATEST(0,
-               CAST(FLOOR(((cents - lo2) * {1 << _ZBITS}) / (hi2 - lo2 + 1.0))
-                    AS BIGINT))) AS b2,
+      SELECT {_sql_bucket('ck', 'lo1', 'hi1')} AS b1,
+             {_sql_bucket('cents', 'lo2', 'hi2')} AS b2,
              cents
       FROM o CROSS JOIN b
     ),
@@ -330,24 +375,12 @@ def lake_hilbert_cells(spark, sf_dir):
 
     Plan shape: one bounded min/max aggregate, one scan + codegen fold
     + one 64-group aggregate — same as the Z sibling."""
-    from pdtable_spark.io import maintenance as mnt
 
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("ck"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    row = o.agg(
-        F.min("ck"), F.max("ck"), F.min("cents"), F.max("cents")
-    ).collect()[0]
-    hk = mnt.hilbert_key(
-        mnt.int_bucket(F.col("ck"), int(row[0]), int(row[1]), _ZBITS),
-        mnt.int_bucket(F.col("cents"), int(row[2]), int(row[3]), _ZBITS),
-        _ZBITS,
-    )
+    from pdtable_spark.io import maintenance as mnt
     from pdtable_spark.operators.scanfan import fanout_small_scan
 
+    o = _orders(spark, sf_dir, "ck", "cents")
+    hk = mnt.hilbert_key(*_buckets(_bounds(o, "ck", "cents")), _ZBITS)
     return (
         fanout_small_scan(o).withColumn("hkey", hk)
         .groupBy(F.shiftright(F.col("hkey"), _ZBITS).alias("h_cell"))
@@ -375,9 +408,7 @@ _SQL_LAKE_PRUNED_SEMI = f"""
     b AS (SELECT MIN(ck) AS lo1, MAX(ck) AS hi1 FROM o),
     f AS (
       SELECT ck, cents,
-             LEAST({(1 << _ZBITS) - 1}, GREATEST(0,
-               CAST(FLOOR(((ck - lo1) * {1 << _ZBITS}) / (hi1 - lo1 + 1.0))
-                    AS BIGINT))) AS k_file
+             {_sql_bucket('ck', 'lo1', 'hi1')} AS k_file
       FROM o CROSS JOIN b
     ),
     keys AS (
@@ -423,47 +454,19 @@ def lake_pruned_semi_read(spark, sf_dir):
     bucket arithmetic.
 
     Scale shape: one bounded min/max aggregate, one clustered write,
-    one file-count-bounded stats pass, a driver-side bisect over ≤
+    one footer read per file for the stats, a driver-side bisect over ≤
     |dim| keys, then a scan of ONLY matching files into a broadcast
     semi join — the DPP story without a transactional table format."""
 
     from pdtable_spark.io import maintenance as mnt
 
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("ck"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    row = o.agg(F.min("ck"), F.max("ck")).collect()[0]
-    lo1, hi1 = int(row[0]), int(row[1])
-    keyed = o.withColumn(
-        "k_file", mnt.int_bucket(F.col("ck"), lo1, hi1, _ZBITS)
-    )
+    o = _orders(spark, sf_dir, "ck", "cents")
+    lo1, hi1 = _bounds(o, "ck")
     d = scratch_dir("lakesemi")
-    (
-        keyed.repartition(1 << _ZBITS, "k_file")
-        .write.mode("overwrite")
-        .partitionBy("k_file")
-        .parquet(d)
-    )
-    keys = (
-        load(spark, sf_dir, "customer")
-        .filter(F.col("c_custkey") >= hi1 - (hi1 - lo1) * 5 // 100)
-        .select(F.col("c_custkey").alias("ck"))
-    )
+    _write_cells(o.withColumn("k_file", mnt.int_bucket(F.col("ck"), lo1, hi1, _ZBITS)), d, "k_file")
+    keys = _customer_keys(spark, sf_dir, hi1 - (hi1 - lo1) * 5 // 100)
     semi, rep = mnt.pruned_semi_read(spark, d, "ck", keys)
-    return semi.agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum("cents").cast("long").alias("sum_cents"),
-    ).select(
-        F.lit(rep["n_files_total"]).cast("long").alias("n_files_total"),
-        F.lit(rep["n_files_read"]).cast("long").alias("n_files_read"),
-        F.lit(rep["n_files_skipped"]).cast("long").alias("n_files_skipped"),
-        F.lit(rep["n_keys"]).cast("long").alias("n_keys"),
-        "n_orders",
-        "sum_cents",
-    )
+    return _answer(semi, **_file_counts(rep), n_keys=rep["n_keys"])
 
 
 # ---------------------------------------------------------------------------
@@ -489,9 +492,7 @@ _SQL_LAKE_BLOOM_PRUNED = f"""
     ),
     f AS (
       SELECT okey, ck, cents,
-             LEAST({(1 << _ZBITS) - 1}, GREATEST(0,
-               CAST(FLOOR(((okey - lo_k) * {1 << _ZBITS}) / (hi_k - lo_k + 1.0))
-                    AS BIGINT))) AS b_file
+             {_sql_bucket('okey', 'lo_k', 'hi_k')} AS b_file
       FROM o CROSS JOIN b
     ),
     keys AS (
@@ -562,53 +563,19 @@ def lake_bloom_pruned_read(spark, sf_dir):
 
     from pdtable_spark.io import maintenance as mnt
 
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("okey"),
-        F.col("o_custkey").alias("ck"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    row = o.agg(
-        F.min("okey"), F.max("okey"), F.min("ck"), F.max("ck")
-    ).collect()[0]
-    lo_k, hi_k, lo_c, hi_c = (int(v) for v in row)
-    keyed = o.withColumn(
-        "b_file", mnt.int_bucket(F.col("okey"), lo_k, hi_k, _ZBITS)
-    )
+    o = _orders(spark, sf_dir, "okey", "ck", "cents")
+    lo_k, hi_k, lo_c, hi_c = _bounds(o, "okey", "ck")
     d = scratch_dir("lakebloom")
-    (
-        keyed.repartition(1 << _ZBITS, "b_file")
-        .write.mode("overwrite")
-        .partitionBy("b_file")
-        .parquet(d)
-    )
+    _write_cells(o.withColumn("b_file", mnt.int_bucket(F.col("okey"), lo_k, hi_k, _ZBITS)), d, "b_file")
     mnt.write_bloom_sidecar(
         spark, d, "ck", num_hashes=_BLOOM_K, num_bits=_BLOOM_M
     )
-    off = lo_c + (hi_c - lo_c) * 37 // 100
-    keys = (
-        load(spark, sf_dir, "customer")
-        .filter(F.col("c_custkey") >= off)
-        .select(F.col("c_custkey").alias("ck"))
-        .distinct()
-        .orderBy("ck")
-        .limit(5)
-    )
+    keys = _customer_keys(spark, sf_dir, lo_c + (hi_c - lo_c) * 37 // 100)
     got, rep = mnt.bloom_pruned_read(
-        spark, d, "ck", keys, num_hashes=_BLOOM_K, num_bits=_BLOOM_M
+        spark, d, "ck", keys.distinct().orderBy("ck").limit(5),
+        num_hashes=_BLOOM_K, num_bits=_BLOOM_M,
     )
-    return got.agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum("cents").cast("long").alias("sum_cents"),
-    ).select(
-        F.lit(rep["n_files_total"]).cast("long").alias("n_files_total"),
-        F.lit(rep["n_files_read"]).cast("long").alias("n_files_read"),
-        F.lit(rep["n_files_skipped"]).cast("long").alias("n_files_skipped"),
-        F.lit(rep["n_keys"]).cast("long").alias("n_keys"),
-        "n_orders",
-        "sum_cents",
-    )
+    return _answer(got, **_file_counts(rep), n_keys=rep["n_keys"])
 
 
 # ---------------------------------------------------------------------------
@@ -637,12 +604,8 @@ _SQL_LAKE_ZONE_REFRESH = f"""
     ),
     k AS (
       SELECT ck, cents, phase,
-             LEAST({(1 << _ZBITS) - 1}, GREATEST(0,
-               CAST(FLOOR(((ck - lo1) * {1 << _ZBITS}) / (hi1 - lo1 + 1.0))
-                    AS BIGINT))) AS b1,
-             LEAST({(1 << _ZBITS) - 1}, GREATEST(0,
-               CAST(FLOOR(((cents - lo2) * {1 << _ZBITS}) / (hi2 - lo2 + 1.0))
-                    AS BIGINT))) AS b2
+             {_sql_bucket('ck', 'lo1', 'hi1')} AS b1,
+             {_sql_bucket('cents', 'lo2', 'hi2')} AS b2
       FROM o CROSS JOIN b
     ),
     z AS (
@@ -650,13 +613,7 @@ _SQL_LAKE_ZONE_REFRESH = f"""
              ({_sql_interleave2('b1', 'b2', _ZBITS)}) >> {_ZBITS} AS z_file
       FROM k
     ),
-    p AS (
-      SELECT lo1 + CAST(FLOOR((hi1 - lo1) * 30 / 100.0) AS BIGINT) AS ck_lo,
-             lo1 + CAST(FLOOR((hi1 - lo1) * 45 / 100.0) AS BIGINT) AS ck_hi,
-             lo2 + CAST(FLOOR((hi2 - lo2) * 40 / 100.0) AS BIGINT) AS ce_lo,
-             lo2 + CAST(FLOOR((hi2 - lo2) * 60 / 100.0) AS BIGINT) AS ce_hi
-      FROM b
-    ),
+    {_SQL_BAND}
     fstats AS (
       SELECT z_file, phase, MIN(ck) AS min_ck, MAX(ck) AS max_ck,
              MIN(cents) AS min_ce, MAX(cents) AS max_ce
@@ -690,7 +647,7 @@ def lake_zone_refresh_read(spark, sf_dir):
     phase-0 orders land as the clustered lake and get the full
     certificate build (``write_zone_map``); phase-1 orders APPEND into
     the same cell directories (one new file per populated cell); then
-    ``refresh_zone_map`` stats ONLY the new files (n_added travels in
+    ``refresh_zone_map`` reads ONLY the new files' footers (n_added travels in
     the oracled row — a refresh that rescanned or missed files shows up
     as a wrong count), the refreshed sidecar loads VALIDATED, and
     ``pruned_read`` answers a conjunctive range predicate with
@@ -700,56 +657,17 @@ def lake_zone_refresh_read(spark, sf_dir):
 
     from pdtable_spark.io import maintenance as mnt
 
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("ck"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-        (F.col("o_orderkey") % 2).alias("phase"),
-    )
-    row = o.agg(
-        F.min("ck"), F.max("ck"), F.min("cents"), F.max("cents")
-    ).collect()[0]
-    lo1, hi1, lo2, hi2 = (int(v) for v in row)
-    z = mnt.zorder_key(
-        [
-            mnt.int_bucket(F.col("ck"), lo1, hi1, _ZBITS),
-            mnt.int_bucket(F.col("cents"), lo2, hi2, _ZBITS),
-        ],
-        _ZBITS,
-    )
-    keyed = o.withColumn("z_file", F.shiftright(z, _ZBITS))
+    keyed, preds = _z_orders(spark, sf_dir, "phase")
     d = scratch_dir("lakezref")
     for phase, mode in ((0, "overwrite"), (1, "append")):
-        (
-            keyed.filter(F.col("phase") == phase)
-            .drop("phase")
-            .repartition(1 << _ZBITS, "z_file")
-            .write.mode(mode)
-            .partitionBy("z_file")
-            .parquet(d)
-        )
+        _write_cells(keyed.filter(F.col("phase") == phase).drop("phase"), d, "z_file", mode)
         if phase == 0:
             mnt.write_zone_map(spark, d, ["ck", "cents"])
     rrep = mnt.refresh_zone_map(spark, d, ["ck", "cents"])
-    preds = {
-        "ck": (lo1 + (hi1 - lo1) * 30 // 100, lo1 + (hi1 - lo1) * 45 // 100),
-        "cents": (lo2 + (hi2 - lo2) * 40 // 100, lo2 + (hi2 - lo2) * 60 // 100),
-    }
     pruned, rep = mnt.pruned_read(
         spark, d, preds, stats=mnt.zone_map(spark, d, ["ck", "cents"])
     )
-    return pruned.agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum("cents").cast("long").alias("sum_cents"),
-    ).select(
-        F.lit(rep["n_files_total"]).cast("long").alias("n_files_total"),
-        F.lit(rep["n_files_read"]).cast("long").alias("n_files_read"),
-        F.lit(rep["n_files_skipped"]).cast("long").alias("n_files_skipped"),
-        F.lit(rrep["n_added"]).cast("long").alias("n_files_added"),
-        "n_orders",
-        "sum_cents",
-    )
+    return _answer(pruned, **_file_counts(rep), n_files_added=rrep["n_added"])
 
 
 _SQL_LAKE_BLOOM_REFRESH = f"""
@@ -766,9 +684,7 @@ _SQL_LAKE_BLOOM_REFRESH = f"""
     ),
     f AS (
       SELECT okey, ck, cents, phase,
-             LEAST({(1 << _ZBITS) - 1}, GREATEST(0,
-               CAST(FLOOR(((okey - lo_k) * {1 << _ZBITS}) / (hi_k - lo_k + 1.0))
-                    AS BIGINT))) AS b_file
+             {_sql_bucket('okey', 'lo_k', 'hi_k')} AS b_file
       FROM o CROSS JOIN b
     ),
     keys AS (
@@ -839,31 +755,12 @@ def lake_bloom_refresh_read(spark, sf_dir):
 
     from pdtable_spark.io import maintenance as mnt
 
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("okey"),
-        F.col("o_custkey").alias("ck"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-        (F.col("o_orderkey") % 2).alias("phase"),
-    )
-    row = o.agg(
-        F.min("okey"), F.max("okey"), F.min("ck"), F.max("ck")
-    ).collect()[0]
-    lo_k, hi_k, lo_c, hi_c = (int(v) for v in row)
-    keyed = o.withColumn(
-        "b_file", mnt.int_bucket(F.col("okey"), lo_k, hi_k, _ZBITS)
-    )
+    o = _orders(spark, sf_dir, "okey", "ck", "cents", "phase")
+    lo_k, hi_k, lo_c, hi_c = _bounds(o, "okey", "ck")
+    keyed = o.withColumn("b_file", mnt.int_bucket(F.col("okey"), lo_k, hi_k, _ZBITS))
     d = scratch_dir("lakebref")
     for phase, mode in ((0, "overwrite"), (1, "append")):
-        (
-            keyed.filter(F.col("phase") == phase)
-            .drop("phase")
-            .repartition(1 << _ZBITS, "b_file")
-            .write.mode(mode)
-            .partitionBy("b_file")
-            .parquet(d)
-        )
+        _write_cells(keyed.filter(F.col("phase") == phase).drop("phase"), d, "b_file", mode)
         if phase == 0:
             mnt.write_bloom_sidecar(
                 spark, d, "ck", num_hashes=_BLOOM_K, num_bits=_BLOOM_M
@@ -871,29 +768,13 @@ def lake_bloom_refresh_read(spark, sf_dir):
     rrep = mnt.refresh_bloom_sidecar(
         spark, d, "ck", num_hashes=_BLOOM_K, num_bits=_BLOOM_M
     )
-    off = lo_c + (hi_c - lo_c) * 37 // 100
-    keys = (
-        load(spark, sf_dir, "customer")
-        .filter(F.col("c_custkey") >= off)
-        .select(F.col("c_custkey").alias("ck"))
-        .distinct()
-        .orderBy("ck")
-        .limit(5)
-    )
+    keys = _customer_keys(spark, sf_dir, lo_c + (hi_c - lo_c) * 37 // 100)
     got, rep = mnt.bloom_pruned_read(
-        spark, d, "ck", keys, num_hashes=_BLOOM_K, num_bits=_BLOOM_M
+        spark, d, "ck", keys.distinct().orderBy("ck").limit(5),
+        num_hashes=_BLOOM_K, num_bits=_BLOOM_M,
     )
-    return got.agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum("cents").cast("long").alias("sum_cents"),
-    ).select(
-        F.lit(rep["n_files_total"]).cast("long").alias("n_files_total"),
-        F.lit(rep["n_files_read"]).cast("long").alias("n_files_read"),
-        F.lit(rep["n_files_skipped"]).cast("long").alias("n_files_skipped"),
-        F.lit(rrep["n_added_files"]).cast("long").alias("n_files_added"),
-        F.lit(rep["n_keys"]).cast("long").alias("n_keys"),
-        "n_orders",
-        "sum_cents",
+    return _answer(
+        got, **_file_counts(rep), n_files_added=rrep["n_added_files"], n_keys=rep["n_keys"]
     )
 
 
@@ -920,12 +801,8 @@ _SQL_LAKE_COMPACT_REFRESH = f"""
     ),
     k AS (
       SELECT ck, cents,
-             LEAST({(1 << _ZBITS) - 1}, GREATEST(0,
-               CAST(FLOOR(((ck - lo1) * {1 << _ZBITS}) / (hi1 - lo1 + 1.0))
-                    AS BIGINT))) AS b1,
-             LEAST({(1 << _ZBITS) - 1}, GREATEST(0,
-               CAST(FLOOR(((cents - lo2) * {1 << _ZBITS}) / (hi2 - lo2 + 1.0))
-                    AS BIGINT))) AS b2
+             {_sql_bucket('ck', 'lo1', 'hi1')} AS b1,
+             {_sql_bucket('cents', 'lo2', 'hi2')} AS b2
       FROM o CROSS JOIN b
     ),
     z AS (
@@ -934,13 +811,7 @@ _SQL_LAKE_COMPACT_REFRESH = f"""
       FROM k
     ),
     zc AS (SELECT ck, cents, {1 << _ZBITS} + (z_fine >> 2) AS z_file FROM z),
-    p AS (
-      SELECT lo1 + CAST(FLOOR((hi1 - lo1) * 30 / 100.0) AS BIGINT) AS ck_lo,
-             lo1 + CAST(FLOOR((hi1 - lo1) * 45 / 100.0) AS BIGINT) AS ck_hi,
-             lo2 + CAST(FLOOR((hi2 - lo2) * 40 / 100.0) AS BIGINT) AS ce_lo,
-             lo2 + CAST(FLOOR((hi2 - lo2) * 60 / 100.0) AS BIGINT) AS ce_hi
-      FROM b
-    ),
+    {_SQL_BAND}
     fstats AS (
       SELECT z_file, MIN(ck) AS min_ck, MAX(ck) AS max_ck,
              MIN(cents) AS min_ce, MAX(cents) AS max_ce
@@ -981,73 +852,35 @@ def lake_compact_refresh_read(spark, sf_dir):
     refreshed certificate answers the same predicate band exactly.  A
     refresh that kept a vanished row or missed a coarse file moves the
     accounting or the residual aggregate and fails the hash."""
+
+    import os
     import shutil
 
     from pdtable_spark.io import maintenance as mnt
 
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("ck"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    row = o.agg(
-        F.min("ck"), F.max("ck"), F.min("cents"), F.max("cents")
-    ).collect()[0]
-    lo1, hi1, lo2, hi2 = (int(v) for v in row)
-    z = mnt.zorder_key(
-        [
-            mnt.int_bucket(F.col("ck"), lo1, hi1, _ZBITS),
-            mnt.int_bucket(F.col("cents"), lo2, hi2, _ZBITS),
-        ],
-        _ZBITS,
-    )
-    fine = o.withColumn("z_file", F.shiftright(z, _ZBITS))
+    fine, preds = _z_orders(spark, sf_dir)
     d = scratch_dir("lakecompact")
-    (
-        fine.repartition(1 << _ZBITS, "z_file")
-        .write.mode("overwrite")
-        .partitionBy("z_file")
-        .parquet(d)
-    )
+    _write_cells(fine, d, "z_file")
     mnt.write_zone_map(spark, d, ["ck", "cents"])
     # compaction: rewrite the same rows into 16 coarse files (ids offset
     # past the fine domain), then drop the fine directories — the local
-    # spelling of a rewrite-then-swap OPTIMIZE; object stores go through
-    # the Hadoop FS API exactly like vacuum_versions
+    # spelling of a rewrite-then-swap OPTIMIZE
     coarse = fine.withColumn(
         "z_file", F.lit(1 << _ZBITS) + F.shiftright(F.col("z_file"), 2)
     )
-    (
-        coarse.repartition((1 << _ZBITS) >> 2, "z_file")
-        .write.mode("append")
-        .partitionBy("z_file")
-        .parquet(d)
-    )
-    import os as _os
-
-    for name in _os.listdir(d):
+    _write_cells(coarse, d, "z_file", "append", (1 << _ZBITS) >> 2)
+    for name in os.listdir(d):
         if name.startswith("z_file=") and int(name.split("=")[1]) < (1 << _ZBITS):
-            shutil.rmtree(_os.path.join(d, name))
+            shutil.rmtree(os.path.join(d, name))
     rrep = mnt.refresh_zone_map(spark, d, ["ck", "cents"])
-    preds = {
-        "ck": (lo1 + (hi1 - lo1) * 30 // 100, lo1 + (hi1 - lo1) * 45 // 100),
-        "cents": (lo2 + (hi2 - lo2) * 40 // 100, lo2 + (hi2 - lo2) * 60 // 100),
-    }
     pruned, rep = mnt.pruned_read(
         spark, d, preds, stats=mnt.zone_map(spark, d, ["ck", "cents"])
     )
-    return pruned.agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum("cents").cast("long").alias("sum_cents"),
-    ).select(
-        F.lit(rep["n_files_total"]).cast("long").alias("n_files_total"),
-        F.lit(rep["n_files_read"]).cast("long").alias("n_files_read"),
-        F.lit(rep["n_files_skipped"]).cast("long").alias("n_files_skipped"),
-        F.lit(rrep["n_removed"]).cast("long").alias("n_files_removed"),
-        F.lit(rrep["n_added"]).cast("long").alias("n_files_added"),
-        "n_orders",
-        "sum_cents",
+    return _answer(
+        pruned,
+        **_file_counts(rep),
+        n_files_removed=rrep["n_removed"],
+        n_files_added=rrep["n_added"],
     )
 
 
@@ -1076,12 +909,8 @@ _SQL_LAKE_MANIFEST = f"""
     ),
     k AS (
       SELECT ck, cents, phase,
-             LEAST({(1 << _ZBITS) - 1}, GREATEST(0,
-               CAST(FLOOR(((ck - lo1) * {1 << _ZBITS}) / (hi1 - lo1 + 1.0))
-                    AS BIGINT))) AS b1,
-             LEAST({(1 << _ZBITS) - 1}, GREATEST(0,
-               CAST(FLOOR(((cents - lo2) * {1 << _ZBITS}) / (hi2 - lo2 + 1.0))
-                    AS BIGINT))) AS b2
+             {_sql_bucket('ck', 'lo1', 'hi1')} AS b1,
+             {_sql_bucket('cents', 'lo2', 'hi2')} AS b2
       FROM o CROSS JOIN b
     ),
     z AS (
@@ -1089,13 +918,7 @@ _SQL_LAKE_MANIFEST = f"""
              ({_sql_interleave2('b1', 'b2', _ZBITS)}) >> {_ZBITS} AS z_file
       FROM k
     ),
-    p AS (
-      SELECT lo1 + CAST(FLOOR((hi1 - lo1) * 30 / 100.0) AS BIGINT) AS ck_lo,
-             lo1 + CAST(FLOOR((hi1 - lo1) * 45 / 100.0) AS BIGINT) AS ck_hi,
-             lo2 + CAST(FLOOR((hi2 - lo2) * 40 / 100.0) AS BIGINT) AS ce_lo,
-             lo2 + CAST(FLOOR((hi2 - lo2) * 60 / 100.0) AS BIGINT) AS ce_hi
-      FROM b
-    ),
+    {_SQL_BAND}
     fstats AS (
       SELECT z_file, phase, MIN(ck) AS min_ck, MAX(ck) AS max_ck,
              MIN(cents) AS min_ce, MAX(cents) AS max_ce
@@ -1153,38 +976,9 @@ def lake_manifest_read(spark, sf_dir):
 
     from pdtable_spark.io import maintenance as mnt
 
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("ck"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-        (F.col("o_orderkey") % 2).alias("phase"),
-    )
-    row = o.agg(
-        F.min("ck"), F.max("ck"), F.min("cents"), F.max("cents")
-    ).collect()[0]
-    lo1, hi1, lo2, hi2 = (int(v) for v in row)
-    z = mnt.zorder_key(
-        [
-            mnt.int_bucket(F.col("ck"), lo1, hi1, _ZBITS),
-            mnt.int_bucket(F.col("cents"), lo2, hi2, _ZBITS),
-        ],
-        _ZBITS,
-    )
-    keyed = o.withColumn("z_file", F.shiftright(z, _ZBITS))
+    keyed, preds = _z_orders(spark, sf_dir, "phase")
     d = scratch_dir("lakemanifest")
-    preds = {
-        "ck": (lo1 + (hi1 - lo1) * 30 // 100, lo1 + (hi1 - lo1) * 45 // 100),
-        "cents": (lo2 + (hi2 - lo2) * 40 // 100, lo2 + (hi2 - lo2) * 60 // 100),
-    }
-    (
-        keyed.filter(F.col("phase") == 0)
-        .drop("phase")
-        .repartition(1 << _ZBITS, "z_file")
-        .write.mode("overwrite")
-        .partitionBy("z_file")
-        .parquet(d)
-    )
+    _write_cells(keyed.filter(F.col("phase") == 0).drop("phase"), d, "z_file")
     mnt.write_zone_map(spark, d, ["ck", "cents"])
     mrep = mnt.write_file_manifest(spark, d)
     assert mrep["generation"] == 0
@@ -1192,14 +986,7 @@ def lake_manifest_read(spark, sf_dir):
         spark, d, preds, stats=mnt.zone_map(spark, d, ["ck", "cents"])
     )
     n0 = pruned0.count()
-    (
-        keyed.filter(F.col("phase") == 1)
-        .drop("phase")
-        .repartition(1 << _ZBITS, "z_file")
-        .write.mode("append")
-        .partitionBy("z_file")
-        .parquet(d)
-    )
+    _write_cells(keyed.filter(F.col("phase") == 1).drop("phase"), d, "z_file", "append")
     mnt.refresh_zone_map(spark, d, ["ck", "cents"])
     _, gen = mnt._manifest_snapshot(spark, d)
     pruned1, rep1 = mnt.pruned_read(
@@ -1241,9 +1028,7 @@ _SQL_MANIFEST_BLOOM = f"""
     ),
     f AS (
       SELECT okey, ck, cents,
-             LEAST({(1 << _ZBITS) - 1}, GREATEST(0,
-               CAST(FLOOR(((okey - lo_k) * {1 << _ZBITS}) / (hi_k - lo_k + 1.0))
-                    AS BIGINT))) AS b_file
+             {_sql_bucket('okey', 'lo_k', 'hi_k')} AS b_file
       FROM o CROSS JOIN b
     ),
     keys AS (
@@ -1310,55 +1095,21 @@ def lake_manifest_bloom_read(spark, sf_dir):
 
     from pdtable_spark.io import maintenance as mnt
 
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("okey"),
-        F.col("o_custkey").alias("ck"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    row = o.agg(
-        F.min("okey"), F.max("okey"), F.min("ck"), F.max("ck")
-    ).collect()[0]
-    lo_k, hi_k, lo_c, hi_c = (int(v) for v in row)
-    keyed = o.withColumn(
-        "b_file", mnt.int_bucket(F.col("okey"), lo_k, hi_k, _ZBITS)
-    )
+    o = _orders(spark, sf_dir, "okey", "ck", "cents")
+    lo_k, hi_k, lo_c, hi_c = _bounds(o, "okey", "ck")
     d = scratch_dir("lakembloom")
-    (
-        keyed.repartition(1 << _ZBITS, "b_file")
-        .write.mode("overwrite")
-        .partitionBy("b_file")
-        .parquet(d)
-    )
+    _write_cells(o.withColumn("b_file", mnt.int_bucket(F.col("okey"), lo_k, hi_k, _ZBITS)), d, "b_file")
     mnt.write_bloom_sidecar(
         spark, d, "ck", num_hashes=_BLOOM_K, num_bits=_BLOOM_M
     )
     mrep = mnt.write_file_manifest(spark, d)
-    off = lo_c + (hi_c - lo_c) * 23 // 100
-    keys = (
-        load(spark, sf_dir, "customer")
-        .filter(F.col("c_custkey") >= off)
-        .select(F.col("c_custkey").alias("ck"))
-        .distinct()
-        .orderBy("ck")
-        .limit(7)
-    )
+    keys = _customer_keys(spark, sf_dir, lo_c + (hi_c - lo_c) * 23 // 100)
     got, rep = mnt.bloom_pruned_read(
-        spark, d, "ck", keys,
+        spark, d, "ck", keys.distinct().orderBy("ck").limit(7),
         num_hashes=_BLOOM_K, num_bits=_BLOOM_M, isin_threshold=0,
     )
-    return got.agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum("cents").cast("long").alias("sum_cents"),
-    ).select(
-        F.lit(mrep["generation"]).cast("long").alias("generation"),
-        F.lit(rep["n_files_total"]).cast("long").alias("n_files_total"),
-        F.lit(rep["n_files_read"]).cast("long").alias("n_files_read"),
-        F.lit(rep["n_files_skipped"]).cast("long").alias("n_files_skipped"),
-        F.lit(rep["n_keys"]).cast("long").alias("n_keys"),
-        "n_orders",
-        "sum_cents",
+    return _answer(
+        got, generation=mrep["generation"], **_file_counts(rep), n_keys=rep["n_keys"]
     )
 
 
@@ -1379,9 +1130,7 @@ _SQL_SEMI_SNAPSHOT = f"""
     b AS (SELECT MIN(ck) AS lo1, MAX(ck) AS hi1 FROM o),
     f AS (
       SELECT ck, cents,
-             LEAST({(1 << _ZBITS) - 1}, GREATEST(0,
-               CAST(FLOOR(((ck - lo1) * {1 << _ZBITS}) / (hi1 - lo1 + 1.0))
-                    AS BIGINT))) AS k_file
+             {_sql_bucket('ck', 'lo1', 'hi1')} AS k_file
       FROM o CROSS JOIN b
     ),
     keys AS (
@@ -1425,41 +1174,13 @@ def lake_semi_snapshot_keys(spark, sf_dir):
 
     from pdtable_spark.io import maintenance as mnt
 
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_custkey").alias("ck"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    row = o.agg(F.min("ck"), F.max("ck")).collect()[0]
-    lo1, hi1 = int(row[0]), int(row[1])
-    keyed = o.withColumn(
-        "k_file", mnt.int_bucket(F.col("ck"), lo1, hi1, _ZBITS)
-    )
+    o = _orders(spark, sf_dir, "ck", "cents")
+    lo1, hi1 = _bounds(o, "ck")
     d = scratch_dir("lakesemisnap")
-    (
-        keyed.repartition(1 << _ZBITS, "k_file")
-        .write.mode("overwrite")
-        .partitionBy("k_file")
-        .parquet(d)
-    )
-    keys = (
-        load(spark, sf_dir, "customer")
-        .filter(F.col("c_custkey") >= hi1 - (hi1 - lo1) * 10 // 100)
-        .select(F.col("c_custkey").alias("ck"))
-    )
+    _write_cells(o.withColumn("k_file", mnt.int_bucket(F.col("ck"), lo1, hi1, _ZBITS)), d, "k_file")
+    keys = _customer_keys(spark, sf_dir, hi1 - (hi1 - lo1) * 10 // 100)
     semi, rep = mnt.pruned_semi_read(spark, d, "ck", keys, isin_threshold=0)
-    return semi.agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.sum("cents").cast("long").alias("sum_cents"),
-    ).select(
-        F.lit(rep["n_files_total"]).cast("long").alias("n_files_total"),
-        F.lit(rep["n_files_read"]).cast("long").alias("n_files_read"),
-        F.lit(rep["n_files_skipped"]).cast("long").alias("n_files_skipped"),
-        F.lit(rep["n_keys"]).cast("long").alias("n_keys"),
-        "n_orders",
-        "sum_cents",
-    )
+    return _answer(semi, **_file_counts(rep), n_keys=rep["n_keys"])
 
 
 # ---------------------------------------------------------------------------
@@ -1515,12 +1236,7 @@ def lake_manifest_diff(spark, sf_dir):
         .alias("cents"),
     )
     d = scratch_dir("lakemdiff")
-    (
-        c.repartition(8, "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(d)
-    )
+    _write_cells(c, d, "bucket", n_cells=8)
     m0 = mnt.write_file_manifest(spark, d)
     (
         c.filter((F.col("bucket") == 3) & (F.col("k") % 3 == 0))

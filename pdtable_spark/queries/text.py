@@ -590,7 +590,7 @@ def text_classifier_filter(spark, sf_dir):
 _NOVELTY_N = 3
 
 _SQL_NGRAM_NOVELTY = f"""
-    WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS ws
+    WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ws
                FROM documents),
     e AS (
       SELECT doc_id, ws,
@@ -683,8 +683,8 @@ _CDC_DIVISOR = 8
 _SQL_CDC_CHUNKS = f"""
     WITH w AS (
       SELECT doc_id,
-             unnest(regexp_split_to_array(trim(text), '\s+')) AS word,
-             unnest(generate_series(1, len(regexp_split_to_array(trim(text), '\s+')))) AS pos
+             unnest(regexp_split_to_array(trim(text), '\\s+')) AS word,
+             unnest(generate_series(1, len(regexp_split_to_array(trim(text), '\\s+')))) AS pos
       FROM documents
     ),
     g AS (

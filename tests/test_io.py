@@ -500,6 +500,24 @@ def test_uri_paths_bind_columns_by_name(spark, tmp_path):
             assert got == [("A", 21.0), ("B", 22.0)], spec
 
 
+def test_readers_skip_in_flight_copies(spark, tmp_path):
+    """A directory or a glob lists with Spark's hiding rule: an in-flight
+    ``*._COPYING_`` copy is read by neither scan_csv nor
+    format("startable")."""
+    from pdtable_spark.io.datasource import register
+
+    register(spark)
+    (tmp_path / "part-0.csv").write_text("**m;;\nall;;\nsite;temp;\ntext;degC;\nA;21.0;\n\n")
+    (tmp_path / "part-9.csv._COPYING_").write_text(
+        "**m;;\nall;;\nsite;temp;\ntext;degC;\nZ;99.0;\n\n"
+    )
+    for spec in (str(tmp_path), f"{tmp_path}/*"):
+        scanned = scan_csv(spark, spec, "m").df
+        sourced = spark.read.format("startable").option("table", "m").load(spec)
+        for df in (scanned, sourced):
+            assert [r["site"] for r in df.collect()] == ["A"], spec
+
+
 def test_startable_datasource_reads_write_csv_distributed_dir(spark, tmp_path):
     """format("startable") lists a write_csv_distributed output directory
     as scan_csv does: part files only, no _SUCCESS marker or .crc files."""

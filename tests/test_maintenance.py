@@ -38,6 +38,24 @@ def test_compact_reduces_file_count(spark, tmp_path):
     assert spark.read.parquet(out).count() == 10_000
 
 
+def test_compact_sizes_from_data_files_only(spark, tmp_path):
+    """compact_parquet sizes the output from the files Spark reads: a
+    file:// URI lake is listed like a bare path, and a hidden zone-map
+    sidecar does not count as data."""
+    frag = str(tmp_path / "frag")
+    spark.range(10_000).repartition(8).write.parquet(frag)
+    target = -(-sum(os.path.getsize(f) for f in _parts(frag)) // 3)
+    out = maintenance.compact_parquet(
+        spark, "file://" + frag, str(tmp_path / "c1"), target_file_bytes=target
+    )
+    assert len(_parts(out)) == 3
+    maintenance.write_zone_map(spark, frag, ["id"])
+    out = maintenance.compact_parquet(
+        spark, frag, str(tmp_path / "c2"), target_file_bytes=target
+    )
+    assert len(_parts(out)) == 3
+
+
 def test_sorted_write_gives_disjoint_file_ranges(spark, tmp_path):
     out = str(tmp_path / "sorted")
     df = spark.range(100_000).select(
@@ -161,8 +179,8 @@ def test_write_training_shards_manifest_and_determinism(spark, tmp_path):
 
 def test_write_training_shards_remote_manifest(spark, tmp_path):
     """A '://'-scheme destination gets the manifest under the documented
-    EXACT filename (written through the Hadoop FS API), not a directory of
-    Spark text part-files."""
+    EXACT filename (written through pyarrow.fs), not a directory of Spark
+    text part-files."""
     import json
 
     from pdtable_spark.io.maintenance import write_training_shards
@@ -1477,4 +1495,85 @@ def test_residual_key_filter_join_path_matches_isin(spark, tmp_path):
     )
     assert sorted(map(tuple, s_isin.collect())) == sorted(
         map(tuple, s_join.collect())
+    )
+
+
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs ``fn`` starts, counted under a job group.  A one-job
+    sentinel runs last: the status store applies listener events in
+    order, so once the sentinel shows, every earlier job shows too."""
+    import time
+
+    sc = spark.sparkContext
+    group = f"jobs-of-{fn.__name__}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+        sc.parallelize([1], 1).count()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    for _ in range(100):
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        if jobs:
+            break
+        time.sleep(0.05)
+    return len(jobs) - 1
+
+
+def test_zone_map_paths_start_no_spark_job(spark, tmp_path):
+    """On a long-column lake the zone-map certificate is footer metadata:
+    building, refreshing and reading it start no Spark job, and neither
+    does building the pruned frame.  The lake path holds a space, which
+    Spark's file URIs percent-encode and the listing does not."""
+    lake = str(tmp_path / "a lake")
+    df = spark.range(4000).select((F.col("id") % 97).alias("k"), F.col("id").alias("v"))
+    df.repartition(4).write.parquet(lake)
+
+    def build():
+        assert maintenance.write_zone_map(spark, lake, ["k"]) == 4
+
+    assert _jobs_started(spark, build) == 0
+    df.limit(10).write.mode("append").parquet(lake)
+
+    def refresh_and_read():
+        assert maintenance.refresh_zone_map(spark, lake, ["k"])["n_added"] == 1
+        maintenance.zone_map(spark, lake, ["k"]).collect()
+        maintenance.clustering_stats(spark, lake, ["k"]).collect()
+        _, rep = maintenance.pruned_read(spark, lake, {"k": (10, 20)})
+        assert rep["n_files_total"] == 5
+
+    assert _jobs_started(spark, refresh_and_read) == 0
+
+
+def test_file_uri_lake_certificate_lifecycle(spark, tmp_path):
+    """A file:// URI lake takes the same pyarrow.fs route as a bare path
+    through the zone-map lifecycle and the manifest, and the sidecars
+    land where a bare-path reader finds them."""
+    local = str(tmp_path / "lake")
+    uri = "file://" + local
+    df = spark.range(4000).select(
+        (F.col("id") % 100).alias("x"), F.col("id").alias("payload")
+    )
+    maintenance.write_sorted_parquet(df, uri, "x", partitions=4)
+    assert maintenance.write_zone_map(spark, uri, ["x"]) == 4
+    assert maintenance.write_file_manifest(spark, uri)["n_files"] == 4
+    preds = {"x": (10, 20)}
+    got, rep = maintenance.pruned_read(
+        spark, uri, preds, stats=maintenance.zone_map(spark, uri, ["x"])
+    )
+    assert rep["n_files_total"] == 4 and rep["n_files_skipped"] > 0
+    assert got.count() == df.filter(F.col("x").between(10, 20)).count()
+
+    df.limit(100).write.mode("append").parquet(uri)
+    rep = maintenance.refresh_zone_map(spark, uri, ["x"])
+    assert rep == {"n_added": 1, "n_removed": 0, "n_files": 5}
+    files, gen = maintenance._manifest_snapshot(spark, uri)
+    assert gen == 1 and len(files) == 5  # the refresh advanced the manifest
+    assert maintenance.zone_map(spark, local, ["x"]).count() == 5
+    got, rep = maintenance.pruned_read(
+        spark, local, preds, stats=maintenance.zone_map(spark, uri, ["x"])
+    )
+    assert got.count() == (
+        spark.read.parquet(uri).filter(F.col("x").between(10, 20)).count()
     )

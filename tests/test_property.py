@@ -10,6 +10,7 @@ Spark-free: parsing and writing are pure Python over ParsedTable payloads,
 so these run fast (no SparkSession) and shrink well.
 """
 
+import datetime
 import io
 import math
 
@@ -840,3 +841,90 @@ def test_startable_pushdown_matches_spark_filter_property(spark, tmp_path_factor
         assert read() == expected
     finally:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "false")
+
+
+# -- zone-map rows from parquet footers --------------------------------------
+
+_STATS_SCHEMA = (
+    "f int, b boolean, by tinyint, sh smallint, i int, l bigint, d double, "
+    "s string, dt date, ts timestamp"
+)
+_STATS_COLS = ["b", "by", "sh", "i", "l", "d", "s", "dt", "ts"]
+
+
+def _nullable(strategy):
+    return st.one_of(st.none(), strategy)
+
+
+_STATS_EDGE_ROWS = [
+    (0, True, 1, 1, 1, 1, -0.0, "é", datetime.date(2020, 1, 1), datetime.datetime(2020, 1, 1, 12)),
+    (0, False, -1, -1, -1, -1, 0.0, "a", datetime.date(1970, 1, 1), None),
+    # NaN only, every other column NULL
+    (1, None, None, None, None, None, math.nan, None, None, None),
+    # NaN beside numbers
+    (2, None, None, None, None, 7, math.nan, "日本", None, datetime.datetime(2024, 2, 29)),
+    (2, None, None, None, None, -7, 2.5, "z", None, None),
+]
+
+
+@settings(max_examples=5, deadline=None)
+@example(rows=_STATS_EDGE_ROWS, empty=True)
+@example(rows=[_STATS_EDGE_ROWS[2]], empty=False)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.integers(0, 2),
+            _nullable(st.booleans()),
+            _nullable(st.integers(-(2**7), 2**7 - 1)),
+            _nullable(st.integers(-(2**15), 2**15 - 1)),
+            _nullable(st.integers(-(2**31), 2**31 - 1)),
+            _nullable(st.integers(-(2**63), 2**63 - 1)),
+            _nullable(st.one_of(st.just(math.nan), st.just(-0.0), st.floats(allow_nan=False))),
+            _nullable(st.text(max_size=4)),
+            _nullable(st.dates(datetime.date(1900, 1, 1), datetime.date(2100, 1, 1))),
+            _nullable(
+                st.datetimes(datetime.datetime(1900, 1, 1), datetime.datetime(2100, 1, 1))
+            ),
+        ),
+        min_size=1,
+        max_size=10,
+    ),
+    empty=st.booleans(),
+)
+def test_footer_stats_match_spark_property(spark, tmp_path_factory, rows, empty):
+    """clustering_stats — parquet footer rows, with the Spark fallback for
+    doubles and INT96 timestamps — equals Spark's per-file count/min/max:
+    NaN and ±0.0, non-ASCII strings, dates, all-NULL and zero-row files."""
+    from urllib.parse import unquote
+
+    from pyspark.sql import functions as F
+
+    from pdtable_spark.io import maintenance
+
+    lake = str(tmp_path_factory.mktemp("footers") / "lake")
+    df = spark.createDataFrame(rows, _STATS_SCHEMA)
+    df.repartition(3, "f").write.partitionBy("f").parquet(lake)
+    if empty:  # a zero-row file in a partition of its own
+        df.drop("f").limit(0).write.parquet(lake + "/f=9")
+    truth = {
+        maintenance._norm_file(unquote(r["file"])): r
+        for r in spark.read.parquet(lake)
+        .groupBy(F.col("_metadata.file_path").alias("file"))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            *[F.min(c).alias(f"min_{c}") for c in _STATS_COLS],
+            *[F.max(c).alias(f"max_{c}") for c in _STATS_COLS],
+        )
+        .collect()
+    }
+    got = maintenance.clustering_stats(spark, lake, _STATS_COLS).collect()
+    assert set(truth) <= {r["file"] for r in got}
+    assert len(got) == len(set(truth)) + empty
+    for r in got:
+        want = truth.get(r["file"])  # None: a zero-row file
+        for k in ["n_rows"] + [f"{b}_{c}" for b in ("min", "max") for c in _STATS_COLS]:
+            expected = want[k] if want is not None else (0 if k == "n_rows" else None)
+            same = r[k] == expected or (
+                isinstance(expected, float) and math.isnan(expected) and math.isnan(r[k])
+            )
+            assert same, (r["file"], k, r[k], expected)

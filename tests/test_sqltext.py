@@ -22,3 +22,22 @@ def test_operators_quote_sql_only_through_sqltext():
             if RAW_IDENT.search(line) or RAW_DOUBLE.search(line):
                 offenders.append(f"{path.name}:{i}: {line.strip()}")
     assert not offenders, "quote via operators.sqltext (ident / num):\n" + "\n".join(offenders)
+
+
+def test_package_compiles_without_warnings():
+    """SQL text lives in Python string literals, where a regex escape such
+    as ``'\\s+'`` is an invalid Python escape: it compiles with a warning
+    today (an error in a later Python) and works only because unknown
+    escapes pass through.  Every module must compile with warnings as
+    errors."""
+    import warnings
+
+    failures = []
+    for path in sorted(OPERATORS.parent.rglob("*.py")):
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            try:
+                compile(path.read_text(), str(path), "exec")
+            except SyntaxError as e:  # a warning raised as an error
+                failures.append(f"{path.relative_to(OPERATORS.parent)}:{e.lineno}: {e.msg}")
+    assert not failures, "\n".join(failures)
