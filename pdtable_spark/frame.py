@@ -112,10 +112,15 @@ def attach_units(
 
 
 def local_frame(
-    spark: SparkSession, schema: T.StructType, columns: Sequence[Sequence]
+    spark: SparkSession,
+    schema: T.StructType,
+    columns: Optional[Sequence[Sequence]] = None,
+    *,
+    rows: Optional[Iterable[Sequence]] = None,
 ) -> DataFrame:
-    """A small driver-held frame from typed Python columns, one value
-    sequence per field of ``schema``.
+    """A small driver-held frame from typed Python values: either
+    ``columns``, one value sequence per field of ``schema``, or ``rows``,
+    one value tuple per row (an empty ``rows`` gives an empty frame).
 
     Driver-held rows of the StarTable surface (parsed tables, appended rows,
     lake snapshots) reach Spark through here, never as a pickled row list:
@@ -127,6 +132,8 @@ def local_frame(
     """
     import pyarrow as pa
 
+    if rows is not None:
+        columns = list(zip(*rows)) or [()] * len(schema.fields)
     return spark.createDataFrame(
         pa.table(arrow_columns(schema, columns), names=schema.names), schema=schema
     )

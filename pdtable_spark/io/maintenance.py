@@ -421,8 +421,6 @@ def _file_stats(spark: SparkSession, path: str, files: List[str], cols: Sequence
     from the first file's footer, as Spark infers them.
     """
     import pyarrow as pa
-    from urllib.parse import unquote
-
     from pyspark.sql.pandas.types import from_arrow_schema
 
     from pdtable_spark.frame import arrow_columns
@@ -454,17 +452,17 @@ def _file_stats(spark: SparkSession, path: str, files: List[str], cols: Sequence
         redo_cols = [c for c in cols if any(c in cs for cs in redo.values())]
         scan = (
             _scan(spark, path, list(redo), files)
-            .groupBy(F.col("_metadata.file_path").alias("file"))
+            .groupBy(_listed_file_col().alias("file"))
             .agg(
                 *[F.min(c).alias(f"min_{c}") for c in redo_cols],
                 *[F.max(c).alias(f"max_{c}") for c in redo_cols],
             )
         )
-        # _metadata.file_path is a percent-encoded URI; a file the scan
-        # finds no row for keeps NULL bounds, which never prune
-        got = {_norm_file(unquote(r["file"])): r for r in scan.collect()}
+        # a file the scan finds no row for keeps NULL bounds, which
+        # never prune
+        got = {r["file"]: r for r in scan.collect()}
         for f, file_cols in redo.items():
-            hit = got.get(_norm_file(f))
+            hit = got.get(f)
             if hit is not None:
                 rows[f].update({k: hit[k] for c in file_cols for k in (f"min_{c}", f"max_{c}")})
     schema = T.StructType(
@@ -590,6 +588,17 @@ def _norm_file_col(c: Column) -> Column:
     scheme/slash disagreement between ``inputFiles()`` and
     ``_metadata.file_path``), for JVM-side file-set joins."""
     return F.regexp_replace(c, "^file:/+", "/")
+
+
+def _listed_file_col() -> Column:
+    """The scanned row's data file, spelled as
+    :func:`~pdtable_spark.io.fs.list_files` lists it.  Spark's
+    ``_metadata.file_path`` is a percent-encoded URI (``file:/a%20b/c%25d``
+    for ``/a b/c%d``); ``url_decode`` reverses the encoding but also reads
+    ``+`` as a space, so a literal ``+`` is escaped to ``%2B`` first.  The
+    listing itself is never decoded: a ``%`` in a file name stays as is."""
+    encoded = F.regexp_replace(F.col("_metadata.file_path"), r"\+", "%2B")
+    return _norm_file_col(F.url_decode(encoded))
 
 
 def _snapshot_frame(spark: SparkSession, values, name: str, dtype) -> DataFrame:
@@ -959,12 +968,15 @@ def _bloom_position_rows(
     the lake when ``files`` is None): per-file DISTINCT positions plus
     the build-parameter stamp columns — a probe run with different k/m
     would compute positions in a different space and silently prune
-    files that hold true matches, so the reader validates the stamps."""
+    files that hold true matches, so the reader validates the stamps.
+    ``file`` is spelled as the lake listing spells it
+    (:func:`_listed_file_col`), the set every coverage check compares
+    with."""
     from pdtable_spark.operators.dedup import bloom_positions
 
     rd = spark.read.option("basePath", path)
     df = (rd.parquet(path) if files is None else rd.parquet(*files)).select(
-        F.col("_metadata.file_path").alias("file"),
+        _listed_file_col().alias("file"),
         F.col(key_col).cast("string").alias("__k"),
     )
     return (
@@ -1429,7 +1441,7 @@ def lake_report(
         min(rows, default=None),
         max(rows, default=None),
     ]
-    return local_frame(spark, schema, [[v] for v in values])
+    return local_frame(spark, schema, rows=[values])
 
 
 def diff_snapshots(
@@ -1830,7 +1842,7 @@ def forget_keys(
             StructType.fromDDL(
                 f"{partition_col or 'partition'} string, n_forgotten long, n_kept long"
             ),
-            [[None], [int(row["n_f"] or 0)], [int(row["n_k"] or 0)]],
+            rows=[(None, int(row["n_f"] or 0), int(row["n_k"] or 0))],
         )
     find_src = df
     if sidecar is not None:
@@ -1896,6 +1908,4 @@ def forget_keys(
         ).partitionBy(partition_col).parquet(out)
     finally:
         flagged.unpersist()
-    return local_frame(
-        spark, cert.schema, [[r[i] for r in cert_rows] for i in range(len(cert.columns))]
-    )
+    return local_frame(spark, cert.schema, rows=cert_rows)

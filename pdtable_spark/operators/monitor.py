@@ -20,6 +20,7 @@ from typing import List, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdtable_spark.frame import local_frame
 from pdtable_spark.operators.scanfan import fanout_small_scan
 from pdtable_spark.operators.sqltext import ident, num
 
@@ -998,11 +999,13 @@ def json_profile_diff(prof_old: DataFrame, prof_new: DataFrame) -> DataFrame:
             (key[0], key[1], n_old, n_new, share_old, share_new,
              share_new - share_old, status)
         )
-    return spark.createDataFrame(
-        out,
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(
         "path string, kind string, n_old long, n_new long, "
-        "share_old double, share_new double, delta double, status string",
+        "share_old double, share_new double, delta double, status string"
     )
+    return local_frame(spark, schema, rows=out)
 
 
 def json_infer_plan(

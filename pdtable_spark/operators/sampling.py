@@ -19,6 +19,7 @@ from typing import Dict, Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pdtable_spark.frame import local_frame
 from pdtable_spark.operators.dedup import md5_60
 
 
@@ -140,9 +141,13 @@ def apply_mixture(
     selection would need a per-source rank, i.e. a sort; at 100 TB the
     jitter is the right trade and is the standard practice.
     """
+    from pyspark.sql.types import DoubleType, StringType, StructType
+
     spark = df.sparkSession
-    tgt = spark.createDataFrame(
-        [(s, float(w)) for s, w in sorted(targets.items())], f"{source_col} string, __share double"
+    tgt = local_frame(
+        spark,
+        StructType().add(source_col, StringType()).add("__share", DoubleType()),
+        rows=[(s, float(w)) for s, w in sorted(targets.items())],
     )
     cnt = df.groupBy(source_col).agg(F.count(F.lit(1)).alias("__n"))
     j = cnt.join(F.broadcast(tgt), source_col)
@@ -394,30 +399,29 @@ def mixture_temperature_weights(
     ]
     schema = StructType(fields)
     total = sum(w for *_, w in counts)
-    if total == 0:
-        if counts and weight_col is not None:
-            # documents exist but their weights sum to zero (all-NULL /
-            # all-zero weight column) — shares are undefined; returning an
-            # empty frame here would make a downstream mixture silently
-            # sample NOTHING, so fail loudly instead
-            raise ValueError(
-                f"mixture_temperature_weights: corpus is non-empty but "
-                f"weight column {weight_col!r} sums to 0 across all sources"
-            )
-        return df.sparkSession.createDataFrame([], schema)
+    if counts and total == 0:
+        # documents exist but their weights sum to zero (all-NULL /
+        # all-zero weight column) — shares are undefined; returning an
+        # empty frame here would make a downstream mixture silently
+        # sample NOTHING, so fail loudly instead
+        raise ValueError(
+            f"mixture_temperature_weights: corpus is non-empty but "
+            f"weight column {weight_col!r} sums to 0 across all sources"
+        )
     rows = []
     for src, n, w in counts:
         share = float(w) / float(total)
         wq = int(math.floor(share**float(alpha) * 1e9 + 0.5))
         rows.append((src, n, w, share, wq))
     wtot = sum(wq for *_, wq in rows)
-    return df.sparkSession.createDataFrame(
-        [
+    return local_frame(
+        df.sparkSession,
+        schema,
+        rows=[
             (src, n, *((w,) if weight_col is not None else ()), share,
              float(wq) / 1e9, float(wq) / float(wtot))
             for src, n, w, share, wq in rows
         ],
-        schema,
     )
 
 
@@ -621,7 +625,7 @@ def epochs_plan(
             f"epochs_plan: targeted source(s) absent from the corpus: "
             f"{sorted(set(targets) - present)}"
         )
-    collected = df.sparkSession.createDataFrame(rows, per_src.schema)
+    collected = local_frame(df.sparkSession, per_src.schema, rows=rows)
     share = F.create_map(
         *[F.lit(x) for kv in targets.items() for x in kv]
     )[F.col("source")].cast("double")

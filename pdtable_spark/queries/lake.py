@@ -105,11 +105,17 @@ def _z_orders(spark, sf_dir, *extra):
 
 
 def _write_cells(df, d, cell, mode="overwrite", n_cells=1 << _ZBITS):
-    """Write ``df`` to ``d`` as one file per value of ``cell``: each cell
-    hashes to one task, then ``partitionBy`` splits on it — a file layout
-    deterministic by construction, so the oracle can restate per-file
-    footer stats as per-cell arithmetic."""
-    df.repartition(n_cells, cell).write.mode(mode).partitionBy(cell).parquet(d)
+    """Write ``df`` to ``d`` as one file per value of ``cell``: the
+    ``n_cells`` cells hash into at most one task per executor slot, each
+    cell into exactly one task, then ``partitionBy`` splits on it — a
+    file layout deterministic by construction, so the oracle can restate
+    per-file footer stats as per-cell arithmetic.  A write task's fixed
+    cost does not shrink with its rows, and these cells hold a few
+    hundred rows each, so a task per slot beats a task per cell.  The
+    count stays explicit: AQE may coalesce a count-less
+    ``repartition(cell)`` into one task."""
+    tasks = min(n_cells, df.sparkSession.sparkContext.defaultParallelism)
+    df.repartition(tasks, cell).write.mode(mode).partitionBy(cell).parquet(d)
 
 
 def _customer_keys(spark, sf_dir, lo):
@@ -263,7 +269,8 @@ def lake_pruned_read(spark, sf_dir):
     """End-to-end read-side pruning proof: orders are written as a
     clustered lake whose FILE layout is deterministic by construction —
     one file per coarse Z-curve cell (``zkey >> {bits}``), achieved by
-    hashing each cell id to one task and ``partitionBy``-ing on it, so
+    hashing the cell ids into one task per executor slot (each cell in
+    exactly one task) and ``partitionBy``-ing on them, so
     per-file min/max footer stats ARE per-cell min/max and the oracle
     can restate the whole certificate as curve arithmetic.  A
     conjunctive range predicate (a 15%x20% band of the bounds) then
@@ -278,9 +285,10 @@ def lake_pruned_read(spark, sf_dir):
     aggregate is wrong and the value oracle catches it.
 
     Scale shape: one bounded min/max aggregate, one clustered write
-    (the lake being certified), one footer read per file for the
-    certificate (no Spark job), then a scan that opens ONLY intersecting
-    files — the 100 TB story where
+    (the lake being certified; its tasks follow the executor slots, not
+    the cells, while its files follow the cells), one footer read per
+    file for the certificate (no Spark job), then a scan that opens ONLY
+    intersecting files — the 100 TB story where
     a selective predicate touches a handful of files, not the lake.
     """
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdtable_spark.streaming._await import await_or_raise
+from pdtable_spark.streaming.monitor import _ledger_exists
 
 from pdtable_spark.operators.dedup import (
     band_buckets,
@@ -67,33 +68,13 @@ def _curate_batch(
     # 3. incremental LSH dedup against the persisted index.  The batch's own
     #    ids are excluded from the loaded index so a RETRIED batch (whose
     #    previous attempt already appended) sees the same corpus state.
-    #    Index existence is probed by READING, not a local-fs stat — the
-    #    index lives wherever the lake does (s3/hdfs/dbfs paths included).
-    from pyspark.errors import AnalysisException
-
-    try:
-        idx = spark.read.parquet(index_dir)
-    except AnalysisException as e:
-        # ONLY a missing index (first batch) may be treated as empty; any
-        # other failure (transient FS error, corrupt footer, permissions)
-        # must fail the batch loudly — silently skipping the index would
-        # commit near-duplicates with no error surfaced.  Match the stable
-        # error CLASS first (message text varies across Spark versions and
-        # locales); the substring check is only the fallback for Spark
-        # builds whose exceptions carry no class.
-        err_class = None
-        for probe in ("getCondition", "getErrorClass"):
-            get_cls = getattr(e, probe, None)
-            if callable(get_cls):
-                err_class = get_cls()
-                if err_class is not None:
-                    break
-        if err_class is not None:
-            if err_class != "PATH_NOT_FOUND":
-                raise
-        elif "PATH_NOT_FOUND" not in str(e) and "does not exist" not in str(e):
-            raise
-        idx = None
+    #    A missing index (the first batch) is the one case read as empty;
+    #    it is probed through the same Hadoop filesystem that reads it, so
+    #    every scheme Spark reads (s3a/hdfs/dbfs included) works.  An index
+    #    that exists but cannot be read (transient FS error, corrupt
+    #    footer, permissions) fails the batch loudly: silently skipping it
+    #    would commit near-duplicates.
+    idx = spark.read.parquet(index_dir) if _ledger_exists(spark, index_dir) else None
     if idx is not None:
         idx = idx.join(passed.select("doc_id"), "doc_id", "left_anti")
         survivors = incremental_dedup(

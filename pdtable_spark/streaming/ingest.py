@@ -35,6 +35,7 @@ from typing import List, Optional, Sequence, Union
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pdtable_spark.frame import local_frame
 from pdtable_spark.streaming._await import await_or_raise
 from pdtable_spark.streaming.monitor import _ledger_exists
 
@@ -102,7 +103,7 @@ def _upsert_batch(
             )
         b = b.select(*cols)
 
-    prev = spark.createDataFrame([], b.schema)
+    prev = local_frame(spark, b.schema, rows=[])
     if _ledger_exists(spark, table_dir):
         all_prev = spark.read.parquet(table_dir).filter(
             F.col("batch_id") < batch_id

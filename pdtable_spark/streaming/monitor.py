@@ -15,6 +15,7 @@ from typing import List, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdtable_spark.frame import local_frame
 from pdtable_spark.operators.monitor import (
     corpus_drift_report_from_counts,
     drift_counts,
@@ -363,8 +364,8 @@ def _heavy_hitter_batch(
     # key's full_outer join to double (2^53 rounding) on batch 0
     from pyspark.sql import types as T
 
-    prev = spark.createDataFrame(
-        [],
+    prev = local_frame(
+        spark,
         T.StructType(
             [
                 led.schema[by],
@@ -374,6 +375,7 @@ def _heavy_hitter_batch(
                 T.StructField("floor_cum", T.LongType()),
             ]
         ),
+        rows=[],
     )
     if _ledger_exists(spark, ledger_dir):
         all_prev = spark.read.parquet(ledger_dir).filter(

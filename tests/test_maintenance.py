@@ -5,6 +5,7 @@ import os
 import re
 
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from pdtable_spark.io import maintenance
@@ -1498,27 +1499,34 @@ def test_residual_key_filter_join_path_matches_isin(spark, tmp_path):
     )
 
 
-def _jobs_started(spark, fn) -> int:
-    """Spark jobs ``fn`` starts, counted under a job group.  A one-job
-    sentinel runs last: the status store applies listener events in
-    order, so once the sentinel shows, every earlier job shows too."""
+def _group_jobs(spark, fn) -> list:
+    """The ids of the Spark jobs ``fn`` starts, in order, found under a
+    job group.  A one-job sentinel runs last in a group of its own: the
+    status store applies listener events in order, so once the sentinel
+    shows, every job of ``fn`` shows too, its stages finished."""
     import time
 
     sc = spark.sparkContext
+    tracker = sc.statusTracker()
     group = f"jobs-of-{fn.__name__}"
-    sc.setJobGroup(group, group)
     try:
+        sc.setJobGroup(group, group)
         fn()
+        sc.setJobGroup(group + "-sentinel", group)
         sc.parallelize([1], 1).count()
     finally:
         for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(prop, None)
-    for _ in range(100):
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
-        if jobs:
+    for _ in range(200):
+        if tracker.getJobIdsForGroup(group + "-sentinel"):
             break
         time.sleep(0.05)
-    return len(jobs) - 1
+    return sorted(tracker.getJobIdsForGroup(group))
+
+
+def _jobs_started(spark, fn) -> int:
+    """How many Spark jobs ``fn`` starts (:func:`_group_jobs`)."""
+    return len(_group_jobs(spark, fn))
 
 
 def test_zone_map_paths_start_no_spark_job(spark, tmp_path):
@@ -1577,3 +1585,107 @@ def test_file_uri_lake_certificate_lifecycle(spark, tmp_path):
     assert got.count() == (
         spark.read.parquet(uri).filter(F.col("x").between(10, 20)).count()
     )
+
+
+def test_cell_write_runs_one_task_per_slot(spark, tmp_path):
+    """The lake builders' 64-cell ``partitionBy`` write
+    (``queries/lake.py:_write_cells``) runs one write task per executor
+    slot, not one per cell, and still leaves exactly one parquet file per
+    cell holding that cell's rows."""
+    from pdtable_spark.queries.lake import _write_cells
+
+    out = str(tmp_path / "cells")
+    df = spark.range(6400).select(
+        (F.col("id") * 37 % 64).alias("cell"), F.col("id").alias("v")
+    )
+    slots = spark.sparkContext.defaultParallelism
+
+    def write():
+        _write_cells(df, out, "cell", n_cells=64)
+
+    tracker = spark.sparkContext.statusTracker()
+    jobs = _group_jobs(spark, write)
+    write_stage = max(tracker.getJobInfo(jobs[-1]).stageIds)
+    assert tracker.getStageInfo(write_stage).numTasks == min(64, slots)
+
+    cells = sorted(d for d in os.listdir(out) if d.startswith("cell="))
+    assert len(cells) == 64
+    for d in cells:
+        assert len(_parts(os.path.join(out, d))) == 1, d
+    per_file = {
+        int(d.split("=")[1]): pq.read_metadata(_parts(os.path.join(out, d))[0]).num_rows
+        for d in cells
+    }
+    want = {r["cell"]: r["count"] for r in df.groupBy("cell").count().collect()}
+    assert per_file == want
+
+
+#: ``write_training_shards(spark.range(3000) as doc_id, n_tokens = id % 5 + 1,
+#: num_shards=16, assignment="hash")``'s manifest: ``{shard: (n_docs, n_tokens)}``.
+_HASH_SHARDS_3000 = {
+    "0": (175, 577), "1": (165, 472), "2": (211, 621), "3": (178, 533),
+    "4": (205, 587), "5": (187, 561), "6": (184, 540), "7": (210, 606),
+    "8": (195, 598), "9": (174, 502), "10": (200, 580), "11": (193, 629),
+    "12": (179, 547), "13": (182, 561), "14": (196, 590), "15": (166, 496),
+}
+
+
+def test_training_shards_hash_one_file_per_shard(spark, tmp_path):
+    """The hash-assigned shard export, with more shards than executor
+    slots, writes one file per ``shard=N/`` directory, and its manifest
+    stays the pinned one for the same input."""
+    import json
+
+    df = spark.range(3000).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 5 + 1).alias("n_tokens")
+    )
+    out = str(tmp_path / "shards")
+    maintenance.write_training_shards(df, out, num_shards=16, assignment="hash")
+    shards = sorted(d for d in os.listdir(out) if d.startswith("shard="))
+    assert len(shards) == 16
+    for d in shards:
+        assert len(_parts(os.path.join(out, d))) == 1, d
+    man = json.load(open(os.path.join(out, "_shard_manifest.json")))
+    assert {r["shard"]: (r["n_docs"], r["n_tokens"]) for r in man} == _HASH_SHARDS_3000
+
+
+def test_bloom_sidecar_lifecycle_on_escaped_paths(spark, tmp_path):
+    """The Bloom sidecar keys its rows by the listing's spelling of each
+    file, not by Spark's percent-encoded ``_metadata.file_path``: on a
+    lake whose directory holds spaces and whose file names hold ``+`` and
+    ``%``, build → read → append and delete → refresh → read all see the
+    lake's real file count and answer like an unpruned semi join."""
+    import shutil
+
+    lake = str(tmp_path / "bloom space lake")
+    df = spark.range(3000).select(
+        F.col("id").alias("okey"), (F.col("id") * 7919 % 1009).alias("k")
+    )
+    df.repartition(3).write.parquet(lake)
+    names = ["part-0 a+b.parquet", "part-1 c%20d.parquet", "part-2 e%f+.parquet"]
+    for src, name in zip(sorted(_parts(lake)), names):
+        os.rename(src, os.path.join(lake, name))
+    keys = spark.createDataFrame([(5,), (77,), (1008,)], "k long")
+    bloom = {"num_hashes": 3, "num_bits": 1 << 16}
+
+    def read_and_check(n_files):
+        got, rep = maintenance.bloom_pruned_read(spark, lake, "k", keys, **bloom)
+        assert rep["n_files_total"] == n_files
+        truth = spark.read.parquet(lake).join(F.broadcast(keys), "k", "left_semi")
+        truth = truth.select(*got.columns)
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, truth.collect()))
+
+    assert maintenance.write_bloom_sidecar(spark, lake, "k", **bloom) == 3
+    read_and_check(3)
+
+    staged = str(tmp_path / "staged")
+    spark.range(3000, 3500).select(
+        F.col("id").alias("okey"), (F.col("id") % 1009).alias("k")
+    ).coalesce(1).write.parquet(staged)
+    shutil.move(_parts(staged)[0], os.path.join(lake, "part-3 g+%25h.parquet"))
+    os.remove(os.path.join(lake, names[0]))
+    with pytest.raises(ValueError, match="STALE"):
+        maintenance.bloom_pruned_read(spark, lake, "k", keys, **bloom)
+    rep = maintenance.refresh_bloom_sidecar(spark, lake, "k", **bloom)
+    assert rep == {"n_added_files": 1, "n_removed_files": 1, "n_files": 3}
+    read_and_check(3)

@@ -1089,11 +1089,19 @@ def test_bucketed_join_query_plan_no_exchange_on_join(spark):
         spark.sql("DROP TABLE IF EXISTS r13_bucketed_lineitem")
 
 
-def test_operator_driver_frames_are_local_scans(spark):
-    """Driver-held matrices, PQ codebooks and trained classifier weights
-    reach Spark as local relations: no Python-RDD scan in the plan."""
+def test_operator_driver_frames_are_local_scans(spark, tmp_path, monkeypatch):
+    """Driver-held matrices, PQ codebooks, trained classifier weights, the
+    mixture, epoch-plan and profile-diff frames, and the prior state of
+    the streaming ledger and upsert batches reach Spark as local
+    relations: no Python-RDD scan in any plan they return or write."""
+    from pyspark.sql import DataFrameWriter
+
+    from pdtable_spark.operators import monitor as M
+    from pdtable_spark.operators import sampling as Smp
     from pdtable_spark.operators import similarity as S
     from pdtable_spark.operators import text as T
+    from pdtable_spark.streaming import ingest
+    from pdtable_spark.streaming import monitor as SM
 
     base = spark.range(2).selectExpr("id", "array(1.0D, 2.0D) AS v")
     matrix = S._matrix_frame(base, "__m", [[1.0, 0.0], [0.0, 1.0]], 2)
@@ -1107,3 +1115,48 @@ def test_operator_driver_frames_are_local_scans(spark):
         assert "ExistingRDD" not in plan, plan
         assert "LocalTableScan" in plan, plan
     assert books.count() == 4 and weights.count() > 0
+
+    corpus = spark.range(40).selectExpr(
+        "id AS doc_id", "IF(id % 3 = 0, 'a', 'b') AS source", "'w w w' AS text"
+    )
+    targets = {"a": 0.5, "b": 0.5}
+    prof_old = M.json_profile(spark.range(3).selectExpr("'{\"a\": 1}' AS js"), "js")
+    prof_new = M.json_profile(spark.range(3).selectExpr("'{\"b\": [1]}' AS js"), "js")
+    frames = {
+        "apply_mixture": Smp.apply_mixture(corpus, targets),
+        "mixture_temperature_weights": Smp.mixture_temperature_weights(corpus),
+        "mixture_temperature_weights(empty)": Smp.mixture_temperature_weights(
+            corpus.filter("doc_id < 0")
+        ),
+        "epochs_plan": Smp.epochs_plan(corpus, targets, token_budget=100),
+        "json_profile_diff": M.json_profile_diff(prof_old, prof_new),
+    }
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def record(self, path, *args, **kwargs):
+        written.append((path, self._df))
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", record)
+    batch = spark.range(6).selectExpr("id % 3 AS k", "id AS v", "'s' AS source")
+    SM._heavy_hitter_batch(
+        spark, batch, 0, str(tmp_path / "ledger"), str(tmp_path / "hh"),
+        "k", "source", 4, 2,
+    )
+    ingest._upsert_batch(
+        spark, batch.select("k", "v").dropDuplicates(["k"]), 0,
+        str(tmp_path / "table"), str(tmp_path / "changes"), ["k"], ["v"], None,
+    )
+    assert len(written) >= 4
+    frames.update({f"write {path}": df for path, df in written})
+    for name, df in frames.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, (name, plan)
+    assert frames["mixture_temperature_weights"].count() == 2
+    assert frames["mixture_temperature_weights(empty)"].count() == 0
+    assert frames["epochs_plan"].count() == 2
+    assert {r["status"] for r in frames["json_profile_diff"].collect()} == {
+        "added", "removed", "stable"
+    }

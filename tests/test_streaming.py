@@ -381,6 +381,26 @@ def test_curate_stream_end_to_end(spark, tmp_path):
     assert idx_ids == {1, 3, 6}
 
 
+def test_curate_batch_fails_loudly_on_unreadable_index(spark, tmp_path):
+    """Only a missing index reads as empty: an index directory that
+    exists but cannot be read (here a corrupt part file) fails the
+    micro-batch instead of committing unchecked near-duplicates."""
+    from pdtable_spark.streaming.curate import _curate_batch
+
+    idx = tmp_path / "index"
+    idx.mkdir()
+    (idx / "part-00000.parquet").write_bytes(b"not a parquet file")
+    text = "the quick brown fox jumps over the lazy dog near the old river bank"
+    batch = spark.range(2).selectExpr("id AS doc_id", f"'{text}' AS text")
+    with pytest.raises(Exception):
+        _curate_batch(
+            batch, 0, str(tmp_path / "clean"), str(idx), min_words=6,
+            min_stopwords=0, num_hashes=16, bands=4, shingle_n=5,
+            hash_fn="xxhash64",
+        )
+    assert not (tmp_path / "clean").exists()
+
+
 def test_drift_monitor_stream(spark, tmp_path):
     """Per-micro-batch drift vs a pinned reference: two waves through one
     checkpoint produce batch-partitioned drift rows; a composition shift
